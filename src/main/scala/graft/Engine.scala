@@ -34,22 +34,7 @@ object Engine {
       .withExtensions(new functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // InferFiltersFromGenerate adds `size(e) > 0 AND isnotnull(e)` below
-      // every explode; predicate pushdown then substitutes e's FULL
-      // defining expression through the projections that had carefully
-      // materialized it. For an explode of a computed shingle array that
-      // re-runs tokenization inside every element_at of the filter's
-      // lambda — measured 26s vs 0.9s on llm_decontaminate at sf0.1. The
-      // rule only pre-prunes empty/null generator inputs, which Generate
-      // skips during execution anyway.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // Older testdata layouts stored events.ts as TIMESTAMP(NANOS), which
-      // the vectorized parquet reader rejects; session-wide legacy
-      // nanos-as-long keeps those files readable (Tables.events branches on
-      // the scanned type) without any reader mutating session state.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(semanticConf)
       // managed tables (SessionCatalogWarehouse) land in tmp, not the cwd;
       // per-process dir so a previous JVM's orphaned managed-table
       // locations (the in-memory catalog forgets them, the files persist)
@@ -65,9 +50,9 @@ object Engine {
     //     used to shrink execution memory (spark.memory.fraction) and
     //     partition counts so the SAME inventory runs through real
     //     ExternalSorter/UnsafeExternalSorter spill serialization;
-    //   SPARK_GRAFT_CHECKPOINT_DIR=<dir> sets a RELIABLE checkpoint
-    //     location; Ckpt.cut auto-upgrades every fixpoint's lineage cut
-    //     to a durable checkpoint when one is set (executor-loss-safe).
+    //   SPARK_GRAFT_CHECKPOINT_DIR=<dir> sets a durable checkpoint
+    //     location; every Ckpt.cut then writes a reliable checkpoint
+    //     there (executor-loss-safe).
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').iterator
       .map(_.trim).filter(_.nonEmpty).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)
@@ -103,12 +88,35 @@ object Engine {
     spark
   }
 
+  /** Settings that change query RESULTS, not speed. `local` and
+    * `clusterConf` both apply exactly this map, so cluster results
+    * cannot drift from the oracle-verified local behavior.
+    */
+  private val semanticConf: Map[String, String] = Map(
+    // DuckDB-oracle and reference timestamp semantics (see the header)
+    "spark.sql.session.timeZone" -> "UTC",
+    // InferFiltersFromGenerate adds `size(e) > 0 AND isnotnull(e)` below
+    // every explode; predicate pushdown then substitutes e's FULL
+    // defining expression through the projections that had carefully
+    // materialized it. For an explode of a computed shingle array that
+    // re-runs tokenization inside every element_at of the filter's
+    // lambda — measured 26s vs 0.9s on llm_decontaminate at sf0.1. The
+    // rule only pre-prunes empty/null generator inputs, which Generate
+    // skips during execution anyway.
+    "spark.sql.optimizer.excludedRules" ->
+      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    // Older testdata layouts stored events.ts as TIMESTAMP(NANOS), which
+    // the vectorized parquet reader rejects; session-wide legacy
+    // nanos-as-long keeps those files readable (Tables.events branches on
+    // the scanned type) without any reader mutating session state.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
   /** The cluster deployment profile — every setting the 100 TB design
     * notes scattered through this repo assume, codified so a deployment
-    * starts from the tuned profile instead of rediscovering it. Semantic
-    * settings (timezone, excluded rules, nanos) are shared with `local`
-    * via this map; `local` additionally pins shuffle partitions to the
-    * core count (on a cluster AQE coalescing owns that knob).
+    * starts from the tuned profile instead of rediscovering it: the
+    * scale knobs below plus [[semanticConf]]. `local` instead pins
+    * shuffle partitions to the core count (on a cluster AQE coalescing
+    * owns that knob).
     */
   def clusterConf: Map[String, String] = Map(
     // AQE family: runtime partition coalescing, skew-join splitting, and
@@ -128,25 +136,19 @@ object Engine {
     "spark.sql.files.maxPartitionBytes" -> "268435456",
     // Dims up to 64 MiB broadcast (region/nation/supplier-scale); the
     // scaling fact tables never qualify, AQE can still demote.
-    "spark.sql.autoBroadcastJoinThreshold" -> "67108864",
-    // Semantic settings — MUST match `local`, or cluster results drift
-    // from the oracle-verified behavior.
-    "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.optimizer.excludedRules" ->
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    "spark.sql.autoBroadcastJoinThreshold" -> "67108864") ++ semanticConf
 
   /** Builder for a cluster deployment: master/executor sizing stays with
     * spark-submit; `checkpointDir` (durable storage, e.g. an s3a/hdfs
-    * path) makes the iterative fixpoints executor-loss-safe — pass it
-    * and run `componentMinLabels(reliable = true)` paths; without it
-    * they fall back to localCheckpoint (fast, not fault-tolerant).
+    * path) makes every Ckpt.cut — so every iterative fixpoint —
+    * executor-loss-safe; without it cuts are local checkpoints (fast,
+    * not fault-tolerant).
     */
   def cluster(appName: String = "graft",
               checkpointDir: Option[String] = None): SparkSession.Builder = {
     val b = SparkSession.builder().appName(appName)
       .withExtensions(new functions.GraftExtensions)
-    clusterConf.foreach { case (k, v) => b.config(k, v) }
+      .config(clusterConf)
     checkpointDir.foreach(d => b.config("spark.checkpoint.dir", d))
     b
   }

@@ -61,16 +61,9 @@ object CorpusPipeline {
                   bands: Int = 8, rows: Int = 4, threshold: Double = 0.8,
                   shingleN: Int = 4,
                   alpha: Double = 0.5, targetFraction: Double = 0.5,
-                  budget: Long = 200L, nShards: Int = 8,
-                  reliable: Boolean = false): DataFrame = {
+                  budget: Long = 200L, nShards: Int = 8): DataFrame = {
     val bench = docs.filter(col("doc_id") % benchMod === 0)
     val corpus = docs.filter(col("doc_id") % benchMod =!= 0)
-    // one materialization per survivor-id relation; partitioned on the
-    // key every downstream join uses. `reliable = true` swaps every cut
-    // (here and in the component fixpoint) for a durable checkpoint —
-    // the executor-loss-safe mode a multi-hour 100 TB run selects.
-    def cutIds(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df.repartition(col("doc_id")), reliable)
 
     // stage 1: quality — structural Gopher rules + C4 blocklist rules +
     // length bounds (see the Scaladoc note on the punctuation toggles).
@@ -95,7 +88,7 @@ object CorpusPipeline {
     // survivor per cluster (portable signatures so the funnel replays)
     val losers = Dedup.componentMinLabels(
         Dedup.minHashNearDups(exact, "doc_id", "text", bands, rows,
-          threshold, portable = true), reliable = reliable)
+          threshold, portable = true))
       .filter(col("label") < col("node"))
       .select(col("node").as("doc_id"))
     val nearIds = cutIds(exIds.join(losers, Seq("doc_id"), "left_anti"))
@@ -125,17 +118,38 @@ object CorpusPipeline {
         .select("doc_id"))
     val fin = corpus.join(finIds, Seq("doc_id"), "left_semi")
 
-    // ONE funnel pass over the six (already materialized) id sets:
-    // membership flags -> reach -> explode the reach prefix -> per-stage
-    // integer aggregate.
-    val nt = size(TextFeatures.tokens(col("text"))).cast("long")
-    var ann = corpus.select(col("doc_id"), nt.as("nt"))
-    Seq(qIds, exIds, nearIds, cleanIds, mixIds, finIds).zipWithIndex
-      .foreach { case (ids, i) =>
-        ann = ann.join(ids.select(col("doc_id"), lit(1).as(s"f$i")),
+    val shardRows = Mixing.shardManifest(fin, "doc_id", "text", nShards)
+      .select(concat(lit("7_shard_"), col("shard_id").cast("string"))
+          .as("stage"),
+        col("n_docs"), col("n_tokens"))
+    funnel(corpus, Seq(qIds, exIds, nearIds, cleanIds, mixIds, finIds),
+      stageNames, shardRows)
+  }
+
+  /** One materialization per survivor-id relation, partitioned on the
+    * key every downstream join uses. */
+  private def cutIds(df: DataFrame): DataFrame =
+    graft.Ckpt.cut(df.repartition(col("doc_id")))
+
+  private def nTokens: Column =
+    size(TextFeatures.tokens(col("text"))).cast("long")
+
+  /** The funnel both presets end with: ONE pass over the (already
+    * materialized, nested) survivor-id sets of `base` — membership flags
+    * -> reach -> explode the reach prefix -> per-stage integer
+    * aggregate named by `names` — plus the preset's `extra` rows. The
+    * (tiny) result is materialized before the id cuts are released, so
+    * no per-call blocks linger (the cleanCorpus release discipline).
+    */
+  private def funnel(base: DataFrame, ids: Seq[DataFrame],
+                     names: Seq[String], extra: DataFrame): DataFrame = {
+    val ann = ids.zipWithIndex.foldLeft(
+        base.select(col("doc_id"), nTokens.as("nt"))) {
+      case (acc, (stage, i)) =>
+        acc.join(stage.select(col("doc_id"), lit(1).as(s"f$i")),
           Seq("doc_id"), "left")
-      }
-    val reach: Column = (0 until 6)
+    }
+    val reach: Column = ids.indices
       .map(i => coalesce(col(s"f$i"), lit(0)))
       .reduce(_ + _)
     val stageRows = ann
@@ -143,18 +157,11 @@ object CorpusPipeline {
       .groupBy(col("ord"))
       .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("n_tokens"))
       .select(
-        element_at(array(stageNames.map(lit): _*), col("ord") + 1)
+        element_at(array(names.map(lit): _*), col("ord") + 1)
           .as("stage"),
         col("n_docs"), col("n_tokens"))
-    val shardRows = Mixing.shardManifest(fin, "doc_id", "text", nShards)
-      .select(concat(lit("7_shard_"), col("shard_id").cast("string"))
-          .as("stage"),
-        col("n_docs"), col("n_tokens"))
-    // materialize the (tiny) funnel, then free the id checkpoints — the
-    // cleanCorpus release discipline, so no per-call blocks linger
-    val out = graft.Ckpt.cut(stageRows.unionByName(shardRows), reliable)
-    Seq(qIds, exIds, nearIds, cleanIds, mixIds, finIds)
-      .foreach(Dedup.releaseCheckpoint)
+    val out = graft.Ckpt.cut(stageRows.unionByName(extra))
+    ids.foreach(graft.Ckpt.release)
     out
   }
 
@@ -188,14 +195,11 @@ object CorpusPipeline {
                              benchMod: Long = 97L, batchMod: Long = 10L,
                              bands: Int = 8, rows: Int = 4,
                              threshold: Double = 0.8,
-                             shingleN: Int = 4,
-                             reliable: Boolean = false): DataFrame = {
+                             shingleN: Int = 4): DataFrame = {
     val bench = docs.filter(col("doc_id") % benchMod === 0)
     val nonBench = docs.filter(col("doc_id") % benchMod =!= 0)
     val corpus = nonBench.filter(col("doc_id") % batchMod =!= 0)
     val batch = nonBench.filter(col("doc_id") % batchMod === 0)
-    def cutIds(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df.repartition(col("doc_id")), reliable)
 
     // stage 1: the same structural quality gate as stageCounts — one
     // filtered scan via CorpusQuality.structuralPass (r14, see there)
@@ -232,32 +236,13 @@ object CorpusPipeline {
       Seq("doc_id"), "left_anti"))
     val fin = batch.join(cleanIds, Seq("doc_id"), "left_semi")
 
-    val nt = size(TextFeatures.tokens(col("text"))).cast("long")
-    var ann = batch.select(col("doc_id"), nt.as("nt"))
-    Seq(qIds, exIds, nearIds, cleanIds).zipWithIndex.foreach {
-      case (ids, i) =>
-        ann = ann.join(ids.select(col("doc_id"), lit(1).as(s"f$i")),
-          Seq("doc_id"), "left")
-    }
-    val reach: Column = (0 until 4)
-      .map(i => coalesce(col(s"f$i"), lit(0)))
-      .reduce(_ + _)
-    val stageRows = ann
-      .select(explode(sequence(lit(0), reach)).as("ord"), col("nt"))
-      .groupBy(col("ord"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("n_tokens"))
-      .select(
-        element_at(array(incrStageNames.map(lit): _*), col("ord") + 1)
-          .as("stage"),
-        col("n_docs"), col("n_tokens"))
     val appendRows = fin
-      .select(col("source"), nt.as("nt"))
+      .select(col("source"), nTokens.as("nt"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("n_tokens"))
       .select(concat(lit("5_append_"), col("source")).as("stage"),
         col("n_docs"), col("n_tokens"))
-    val out = graft.Ckpt.cut(stageRows.unionByName(appendRows), reliable)
-    Seq(qIds, exIds, nearIds, cleanIds).foreach(Dedup.releaseCheckpoint)
-    out
+    funnel(batch, Seq(qIds, exIds, nearIds, cleanIds), incrStageNames,
+      appendRows)
   }
 }

@@ -336,24 +336,6 @@ object Dedup {
       .filter(col("containment") >= threshold)
   }
 
-  /** Release the block-manager blocks behind every localCheckpoint'ed
-    * scan in the plan. `localCheckpoint` persists the query's internal
-    * RDD and wraps it in a LogicalRDD; without an explicit unpersist,
-    * every fixpoint round's blocks linger until the ContextCleaner
-    * happens to GC the RDD reference — on a 100 TB run that is rounds ×
-    * label-table bytes of dead storage. Traverses the plan (not just the
-    * root) so callers can pass a narrow projection over the checkpointed
-    * DF — componentMinLabels returns one. (This touches an RDD only for
-    * storage bookkeeping — no data ever moves to the driver.) No-op for
-    * non-checkpointed plans.
-    */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Component-minimum label for every node of the verified near-dup pair
     * graph: (node, label) where label is the smallest id reachable from
     * `node` over pair edges — the canonical one-survivor-per-cluster rule
@@ -364,33 +346,18 @@ object Dedup {
     * (label := label of one's label), so convergence is O(log diameter)
     * keyed join/agg rounds, not O(diameter) — a duplicate chain of length
     * 1000 converges in ~10 rounds. All state lives in DataFrames keyed by
-    * node id; per-round localCheckpoint truncates the plan lineage (the
-    * label table is O(nodes-in-dup-graph), far smaller than the corpus),
-    * and each round RELEASES the previous round's checkpoint blocks once
-    * the new round has materialized (localCheckpoint is eager), so peak
-    * block-manager footprint is two label tables + edges, not rounds×.
-    * The only driver-side work is the per-round convergence test — a
-    * keyed anti-join emptiness check, the same protocol as any iterative
-    * distributed graph algorithm short of GraphX.
-    *
-    * Fault-tolerance: by default rounds cut lineage with localCheckpoint
-    * — fast, but its blocks are NOT recoverable, so an executor loss
-    * mid-fixpoint fails the job. `reliable = true` swaps every round's
-    * checkpoint for a RELIABLE one written to `spark.checkpoint.dir`
-    * (set it to durable storage — see Engine.cluster(checkpointDir));
-    * the label table is O(dup-graph nodes), so the extra write is cheap
-    * insurance on a 100 TB run. Enable
-    * `spark.cleaner.referenceTracking.cleanCheckpoints` to reap old
-    * round files; the local form stays the default for the single-node
-    * bench profile.
+    * node id; every round is ONE Ckpt.cut (the label table is
+    * O(nodes-in-dup-graph), far smaller than the corpus), and each round
+    * RELEASES the previous round's cut once the new one has materialized
+    * (cuts are eager), so peak block-manager footprint is two label
+    * tables + edges, not rounds×. The only driver-side work is the
+    * per-round convergence test, which rides that cut's Observation.
+    * Durability follows Ckpt.cut: with a session checkpoint directory
+    * every round is executor-loss-safe.
     */
   def componentMinLabels(pairs: DataFrame, idA: String = "id_a",
                          idB: String = "id_b",
-                         maxRounds: Int = 50,
-                         reliable: Boolean = false,
-                         roundsPerCut: Int = 1): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
+                         maxRounds: Int = 50): DataFrame = {
     // Both edge directions from ONE evaluation of `pairs`: the union-of-
     // two-selects formulation scanned the pair subtree twice, and `pairs`
     // is typically the run's most expensive fragment (a banding join, a
@@ -403,13 +370,13 @@ object Dedup {
     // hash(src)-partitioned for every fixpoint round's join. The old
     // distinct()-then-repartition shape shuffled the full edge relation
     // twice (hash(src,dst), then hash(src)).
-    val edges = cut(pairs.select(explode(array(
+    val edges = graft.Ckpt.cut(pairs.select(explode(array(
         struct(col(idA).as("src"), col(idB).as("dst")),
         struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("src")) // rounds join on src: no re-shuffle
       .dropDuplicates(Seq("src", "dst")))
-    var labels = cut(edges.groupBy(col("src"))
+    var labels = graft.Ckpt.cut(edges.groupBy(col("src"))
       .agg(min(col("dst")).as("m"))
       .select(col("src").as("node"),
         least(col("src"), col("m")).as("label")))
@@ -437,35 +404,20 @@ object Dedup {
             .as("label"))
     }
     while (!converged && round < maxRounds) {
-      // `roundsPerCut` rounds compose into ONE materialized action.
-      // Convergence stays exact at any batch size — labels decrease
-      // monotonically, so "the batch's LAST round moved nothing" iff
-      // the fixpoint is reached. The r14 measurement kept the DEFAULT
-      // at 1: batch=2 ran every WCC consumer 10-40% SLOWER at sf0.1
-      // (llm_dup_clusters 1.73→1.95 s, llm_clean_corpus 2.43→3.07 s) —
-      // the deeper per-action plan costs more in optimizer/AQE overhead
-      // plus one wasted post-convergence round than the saved action
-      // latency. The knob remains for deployments whose driver-to-
-      // cluster round-trip genuinely dominates a round's compute.
-      // Convergence rides the checkpoint job via observe()
-      // (CollectMetrics completes with the localCheckpoint action):
-      // ONE action per batch, zero extra convergence jobs.
-      val steps = math.min(roundsPerCut, maxRounds - round)
-      var cur = labels
-      for (i <- 0 until steps) {
-        cur = step(cur)
-        if (i < steps - 1) cur = cur.select(col("node"), col("label"))
-      }
+      // Convergence rides the cut's action via observe() (CollectMetrics
+      // completes with the checkpoint job): ONE action per round, zero
+      // extra convergence jobs. Labels decrease monotonically, so "this
+      // round moved nothing" iff the fixpoint is reached.
       val obs = org.apache.spark.sql.Observation(s"cc_moved_r$round")
-      val next = cut(cur.observe(obs,
+      val next = graft.Ckpt.cut(step(labels).observe(obs,
         count(when(col("label") < col("olabel"), 1)).as("moved")))
       converged = obs.get("moved").asInstanceOf[Long] == 0L
-      releaseCheckpoint(labelsCk) // next is materialized; free the old round
+      graft.Ckpt.release(labelsCk) // next is materialized; free the old round
       labelsCk = next
       labels = next.select("node", "label")
-      round += steps
+      round += 1
     }
-    releaseCheckpoint(edges)
+    graft.Ckpt.release(edges)
     labels
   }
 
@@ -504,7 +456,7 @@ object Dedup {
     // subtree); the operator already materializes eagerly for the
     // component fixpoint, so it is persisted for the run — and
     // unpersisted before returning: the (small — ids, passthrough,
-    // lengths; no text) result is localCheckpoint'ed so the returned
+    // lengths; no text) result is cut (Ckpt.cut) so the returned
     // DataFrame neither re-reads the freed cache nor replays the
     // pipeline, and no session-lifetime cache entry leaks per call.
     val base = quality.join(exactSurvivors, Seq(idCol), "left_semi")
@@ -520,7 +472,7 @@ object Dedup {
         .select(col(idCol) +: passthrough.map(col) :+
           length(col(textCol)).cast("long").as("n_chars"): _*)
         .transform(graft.Ckpt.cut(_))
-      releaseCheckpoint(labels) // out is materialized; labels' blocks are dead
+      graft.Ckpt.release(labels) // out is materialized; labels' blocks are dead
       out
     } finally base.unpersist()
   }

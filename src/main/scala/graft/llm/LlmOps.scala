@@ -3036,7 +3036,7 @@ object LlmOps {
         .select(col("doc_id"), col("n_grams"), col("n_unique"),
           expr("n_unique * 1000000 div n_grams").as("novelty_ppm"))
         .transform(graft.Ckpt.cut(_))
-      graft.llm.Dedup.releaseCheckpoint(occ)
+      graft.Ckpt.release(occ)
       out
     },
 

@@ -302,7 +302,7 @@ object Mixing {
     * order-dependent. Deterministic under any input partitioning; equals
     * the naive global row_number, which is what the oracle replays.
     *
-    * The ranged frame is materialized ONCE (localCheckpoint) before the
+    * The ranged frame is materialized ONCE (Ckpt.cut) before the
     * offsets aggregate and the rank join are derived from it. Without
     * that, the two plan subtrees each re-execute the range exchange
     * independently; `repartitionByRange` samples its boundaries per
@@ -310,9 +310,9 @@ object Mixing {
     * partitioning the data rows never actually got — off-by-a-partition
     * ids whose probability GROWS with partition count and AQE activity
     * (observed as overlapping equi-depth buckets at sf0.01). Same
-    * materialize-the-fixpoint pattern as Dedup.componentMinLabels; on a
-    * cluster with `spark.checkpoint.dir` set, swap for reliable
-    * checkpoint to survive executor loss.
+    * materialize-the-fixpoint pattern as Dedup.componentMinLabels; with
+    * a session checkpoint directory the cut is durable and survives
+    * executor loss.
     */
   def assignContiguousIds(df: DataFrame, orderCol: Column,
                           numParts: Int = 0): DataFrame = {

@@ -1084,7 +1084,7 @@ object Similarity {
                       vecCol: String = "embedding", k: Int = 8,
                       iters: Int = 5): DataFrame = {
     val (cents, xq) = kmeansCore(embeddings, idCol, vecCol, k, iters)
-    Dedup.releaseCheckpoint(xq)
+    graft.Ckpt.release(xq)
     val spark = embeddings.sparkSession
     import spark.implicits._
     cents.indices.flatMap { kk =>
@@ -1136,7 +1136,7 @@ object Similarity {
       .agg(count(lit(1)).as("n"), sum(col("d2")).as("ss"))
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
-    Dedup.releaseCheckpoint(xq)
+    graft.Ckpt.release(xq)
     val s = (0 until k).map { i =>
       val (n, ss) = stats.getOrElse(i, (0L, 0L))
       if (n == 0L) 0.0 else math.sqrt(ss.toDouble / n)

@@ -120,7 +120,7 @@ object Topics {
     val dw = occ.select(col("doc_id"), col("tok"))
       .join(broadcast(words), "tok")
       .transform(graft.Ckpt.cut(_)) // feeds dfreq AND both sides of the pair join
-    Dedup.releaseCheckpoint(occ)
+    graft.Ckpt.release(occ)
     val dfreq = dw.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val prs = topw.select(col("z"), col("rank").as("ri"),
         col("tok").as("wi"))
@@ -144,7 +144,7 @@ object Topics {
           lit(0.0),
           (acc, x) => acc + x.getField("t")).as("coherence"))
       .transform(graft.Ckpt.cut(_))
-    Dedup.releaseCheckpoint(dw)
+    graft.Ckpt.release(dw)
     out
   }
 
@@ -153,11 +153,11 @@ object Topics {
     */
   def plsaTopics(docs: DataFrame, k: Int = 3, vocabSize: Int = 50,
                  rounds: Int = 2, topWords: Int = 10,
-                 idCol: String = "doc_id", textCol: String = "text",
-                 reliable: Boolean = false): DataFrame = {
+                 idCol: String = "doc_id",
+                 textCol: String = "text"): DataFrame = {
     val (topw, occ) = plsaTopicsWithPostings(docs, k, vocabSize, rounds,
-      topWords, idCol, textCol, reliable)
-    Dedup.releaseCheckpoint(occ)
+      topWords, idCol, textCol)
+    graft.Ckpt.release(occ)
     topw
   }
 
@@ -169,11 +169,9 @@ object Topics {
   def plsaTopicsWithPostings(
       docs: DataFrame, k: Int = 3, vocabSize: Int = 50,
       rounds: Int = 2, topWords: Int = 10,
-      idCol: String = "doc_id", textCol: String = "text",
-      reliable: Boolean = false): (DataFrame, DataFrame) = {
+      idCol: String = "doc_id",
+      textCol: String = "text"): (DataFrame, DataFrame) = {
     require(k >= 2 && vocabSize >= k && rounds >= 1 && topWords >= 1)
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
     val spark = docs.sparkSession
     // ONE corpus tokenization (r14): the raw postings are cut before
     // anything else reads them. The old shape evaluated occ0 (a full
@@ -182,12 +180,13 @@ object Topics {
     // initialization re-planned — because vocab/occ/phi each re-derived
     // it. vocab is cut too (≤ vocabSize rows) so its postings-wide
     // aggregate also runs once, not once per consumer.
-    val post = cut(docs
+    val post = graft.Ckpt.cut(docs
       .select(col(idCol).as("doc_id"),
         explode(TextFeatures.tokens(col(textCol))).as("tok"))
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("n")))
-    val vocab = cut(post.groupBy(col("tok")).agg(sum(col("n")).as("cn"))
+    val vocab = graft.Ckpt.cut(post.groupBy(col("tok"))
+      .agg(sum(col("n")).as("cn"))
       .orderBy(col("cn").desc, col("tok")).limit(vocabSize)
       .select(col("tok")))
     val occ0 = post
@@ -199,10 +198,10 @@ object Topics {
     // plans with NO exchange over the postings; only the k×vocab-sized
     // phi aggregate shuffles. The old hash(doc_id, tok) layout
     // re-exchanged the full postings relation every round.
-    val occ = cut(occ0.join(broadcast(vocab), "tok")
+    val occ = graft.Ckpt.cut(occ0.join(broadcast(vocab), "tok")
       .select(col("doc_id"), col("tok"), col("n"))
       .repartition(col("doc_id")))
-    Dedup.releaseCheckpoint(post) // occ is materialized; raw postings die
+    graft.Ckpt.release(post) // occ is materialized; raw postings die
     // k topic rows (a constant at any corpus scale): one partition — the
     // default 32-slice range layout drags 32-task stages through every
     // plan that inherits its partitioning (phi init measured 2.0 s of
@@ -237,12 +236,12 @@ object Topics {
         .join(broadcast(phi), Seq("tok", "z"))
         .select(col("doc_id"), col("tok"), col("z"), col("n"),
           (col("theta") * col("phi")).as("u"))
-      val c = cut(u
+      val c = graft.Ckpt.cut(u
         .withColumn("su", sum(col("u")).over(byDW))
         .withColumn("q", expr(s"$S * u div su"))
         .select(col("doc_id"), col("tok"), col("z"),
           (col("n") * col("q")).as("c")))
-      cPrev.foreach(Dedup.releaseCheckpoint)
+      cPrev.foreach(graft.Ckpt.release)
       cPrev = Some(c)
       phi = c.groupBy(col("z"), col("tok"))
         .agg(sum(col("c")).as("sc"))
@@ -263,8 +262,8 @@ object Topics {
       .select(col("z"), col("rank").cast("long").as("rank"),
         col("tok"), col("phi").as("phi_fx"))
       .transform(graft.Ckpt.cut(_))
-    cPrev.foreach(Dedup.releaseCheckpoint)
-    Dedup.releaseCheckpoint(vocab)
+    cPrev.foreach(graft.Ckpt.release)
+    graft.Ckpt.release(vocab)
     (out, occ)
   }
 

@@ -1364,7 +1364,7 @@ object Analytics {
         .groupBy(col("q_early"), col("q_late"))
         .agg(count(lit(1)).as("n_customers"))
         .transform(graft.Ckpt.cut(_))
-      graft.llm.Dedup.releaseCheckpoint(halves)
+      graft.Ckpt.release(halves)
       out
     },
 

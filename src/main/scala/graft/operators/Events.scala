@@ -1227,7 +1227,7 @@ object Events {
               col("nll")))),
             lit(0.0), (acc, x) => acc + x.getField("nll")).as("surprise"))
         .transform(graft.Ckpt.cut(_))
-      graft.llm.Dedup.releaseCheckpoint(steps)
+      graft.Ckpt.release(steps)
       out
     },
 

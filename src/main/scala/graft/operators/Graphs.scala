@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.{Op, Tables}
-import graft.llm.Dedup
+import graft.{Ckpt, Op, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,11 +24,10 @@ import org.apache.spark.sql.functions._
   * of ranks against the degree-annotated edge list (shuffle keyed on the
   * node id), one keyed SUM aggregate on the destination — both
   * partial-aggregated map-side. The edge list is checkpointed ONCE up
-  * front; ranks are checkpointed every `checkpointEvery` rounds (local
-  * by default, `reliable = true` for durable executor-loss-safe runs —
-  * pass Engine.cluster(checkpointDir)) and the previous generation's
-  * blocks are released as soon as the next is materialized, so the
-  * fixpoint holds at most two generations of O(nodes) state.
+  * front; ranks are cut every `checkpointEvery` rounds by Ckpt.iterate,
+  * which releases the previous generation's blocks as soon as the next
+  * is materialized, so the fixpoint holds at most two generations of
+  * O(nodes) state.
   */
 object Graphs {
 
@@ -45,13 +43,10 @@ object Graphs {
   def pageRank(edges: DataFrame, srcCol: String = "src",
                dstCol: String = "dst", iters: Int = 10,
                scale: Long = 1L << 40,
-               checkpointEvery: Int = 10,
-               reliable: Boolean = false): DataFrame = {
+               checkpointEvery: Int = 10): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
     require(scale >= 1000, s"scale too small for meaningful ranks: $scale")
     require(checkpointEvery >= 1, "checkpointEvery must be positive")
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
     // ONE full-edge exchange, not two (r13): repartition on src first,
     // then dedup — hash(src) clusters every (src, dst) group into one
     // partition, so the dedup aggregate AND the degree window both plan
@@ -72,45 +67,33 @@ object Graphs {
     // edges at a time WITH sort-spill — safe on hub nodes where a
     // collect_set-based one-shuffle variant would hold the whole
     // neighbor set on the heap.
-    val adj = cut(sym.withColumn("deg",
+    val adj = Ckpt.cut(sym.withColumn("deg",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("src")))))
     val n = adj.agg(count_distinct(col("src"))).head().getLong(0)
     require(n > 0, "edge relation spans no nodes")
     val tele = (scale * 15L / 100L) / n
-    var ranks = adj.select(col("src").as("node")).distinct()
+    val ranks0 = adj.select(col("src").as("node")).distinct()
       .select(col("node"), lit(scale / n).as("r"))
-    var ranksCk: Option[DataFrame] = None
-    var round = 0
-    while (round < iters) {
+    // Unlike the CC fixpoint (which must materialize each round to read
+    // its convergence observation), the round count is FIXED — so cuts
+    // exist only to bound plan depth, and per-action scheduling latency,
+    // not per-edge throughput, dominates a small-graph fixpoint: K
+    // rounds per cut measured 5.2 s (K=1), 4.2 s (K=5), 3.9 s (K=10) at
+    // sf0.1 — the remainder is the adjacency build and real edge work.
+    val ranks = Ckpt.iterate(ranks0, iters, checkpointEvery) { cur =>
       // shuffle-hash hint on the node-sized ranks side: sort-merge would
       // re-SORT the edge list every round; hashing the per-partition
       // slice of ranks streams the edges unsorted, and adj is already
       // hash-partitioned on src from its build join (LogicalRDD
       // preserves partitioning through the checkpoint)
-      val contrib = adj
-        .join(ranks.hint("shuffle_hash"), adj("src") === ranks("node"))
+      adj.join(cur.hint("shuffle_hash"), adj("src") === cur("node"))
         .select(col("dst"), expr("r div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      ranks = contrib.select(col("dst").as("node"),
-        (lit(tele) + expr("(85 * s) div 100")).as("r"))
-      round += 1
-      // Unlike the CC fixpoint (which must materialize each round to
-      // read its convergence observation), the round count is FIXED — so
-      // checkpoints exist only to bound plan depth. Cutting every K
-      // rounds turns K join+agg rounds into ONE action whose stages
-      // pipeline under a single AQE run; per-action scheduling latency,
-      // not per-edge throughput, dominates a small-graph fixpoint
-      // (measured at sf0.1: 5.2s with K=1, 4.2s with K=5, 3.9s with
-      // K=10 — the remainder is the adjacency build and real edge work).
-      if (round % checkpointEvery == 0 || round == iters) {
-        val cutRanks = cut(ranks)
-        ranksCk.foreach(Dedup.releaseCheckpoint)
-        ranksCk = Some(cutRanks)
-        ranks = cutRanks
-      }
+        .select(col("dst").as("node"),
+          (lit(tele) + expr("(85 * s) div 100")).as("r"))
     }
-    Dedup.releaseCheckpoint(adj)
+    Ckpt.release(adj)
     ranks
   }
 
@@ -128,11 +111,8 @@ object Graphs {
                            seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                            srcCol: String = "src", dstCol: String = "dst",
                            iters: Int = 10, scale: Long = 1L << 40,
-                           checkpointEvery: Int = 10,
-                           reliable: Boolean = false): DataFrame = {
+                           checkpointEvery: Int = 10): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
     // one full-edge exchange, not two — see pageRank's sym note (r13)
     val sym = edges.select(explode(array(
         struct(col(srcCol).as("src"), col(dstCol).as("dst")),
@@ -141,36 +121,26 @@ object Graphs {
       .filter(col("src") =!= col("dst"))
       .repartition(col("src"))
       .dropDuplicates(Seq("src", "dst"))
-    val adj = cut(sym.withColumn("deg",
+    val adj = Ckpt.cut(sym.withColumn("deg",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("src")))))
     val nS = adj.select(col("src")).distinct()
       .filter(seedPred(col("src"))).count()
     require(nS > 0, "seed predicate selects no graph nodes")
     val teleS = (scale * 15L / 100L) / nS
-    var ranks = adj.select(col("src").as("node")).distinct()
+    val ranks0 = adj.select(col("src").as("node")).distinct()
       .select(col("node"),
         when(seedPred(col("node")), lit(scale / nS)).otherwise(lit(0L))
           .as("r"))
-    var ranksCk: Option[DataFrame] = None
-    var round = 0
-    while (round < iters) {
-      val contrib = adj
-        .join(ranks.hint("shuffle_hash"), adj("src") === ranks("node"))
+    val ranks = Ckpt.iterate(ranks0, iters, checkpointEvery) { cur =>
+      adj.join(cur.hint("shuffle_hash"), adj("src") === cur("node"))
         .select(col("dst"), expr("r div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      ranks = contrib.select(col("dst").as("node"),
-        (when(seedPred(col("dst")), lit(teleS)).otherwise(lit(0L)) +
-          expr("(85 * s) div 100")).as("r"))
-      round += 1
-      if (round % checkpointEvery == 0 || round == iters) {
-        val cutRanks = cut(ranks)
-        ranksCk.foreach(Dedup.releaseCheckpoint)
-        ranksCk = Some(cutRanks)
-        ranks = cutRanks
-      }
+        .select(col("dst").as("node"),
+          (when(seedPred(col("dst")), lit(teleS)).otherwise(lit(0L)) +
+            expr("(85 * s) div 100")).as("r"))
     }
-    Dedup.releaseCheckpoint(adj)
+    Ckpt.release(adj)
     ranks
   }
 
@@ -226,7 +196,7 @@ object Graphs {
       when(aFirst, col("a")).otherwise(col("b")).as("src"),
       when(aFirst, col("b")).otherwise(col("a")).as("dst"),
       when(aFirst, col("db")).otherwise(col("da")).as("dd"))
-      .transform(graft.Ckpt.cut(_))
+      .transform(Ckpt.cut(_))
     val o1 = oriented.toDF("u", "v", "dv")
     val o2 = oriented.toDF("u", "w", "dw")
     val wedges = o1.join(o2, Seq("u"))
@@ -293,15 +263,12 @@ object Graphs {
     * Returns (node, deg): the k-core members with their in-core degrees.
     */
   def kCore(edges: DataFrame, k: Int, srcCol: String = "src",
-            dstCol: String = "dst", maxRounds: Int = 20,
-            reliable: Boolean = false): DataFrame = {
+            dstCol: String = "dst", maxRounds: Int = 20): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
     val W = org.apache.spark.sql.expressions.Window
     // one full-edge exchange in the build (see pageRank's sym note, r13),
     // leaving `cur` hash(src)-partitioned for round 0's src window
-    var cur = cut(edges.select(explode(array(
+    var cur = Ckpt.cut(edges.select(explode(array(
         struct(col(srcCol).as("src"), col(dstCol).as("dst")),
         struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
@@ -327,13 +294,13 @@ object Graphs {
         else cur
           .withColumn("dd", count(lit(1)).over(W.partitionBy(col("dst"))))
           .withColumn("ds", count(lit(1)).over(W.partitionBy(col("src"))))
-      val next = cut(withDegs
+      val next = Ckpt.cut(withDegs
         .observe(obs,
           count(when(col("ds") < k || col("dd") < k, 1)).as("removed"))
         .filter(col("ds") >= k && col("dd") >= k)
         .select(col("src"), col("dst")))
       converged = obs.get("removed").asInstanceOf[Long] == 0L
-      Dedup.releaseCheckpoint(cur)
+      Ckpt.release(cur)
       cur = next
       round += 1
     }
@@ -368,15 +335,12 @@ object Graphs {
     * kCore's contract).
     */
   def kTruss(edges: DataFrame, k: Int, srcCol: String = "src",
-             dstCol: String = "dst", maxRounds: Int = 30,
-             reliable: Boolean = false): DataFrame = {
+             dstCol: String = "dst", maxRounds: Int = 30): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
     val W = org.apache.spark.sql.expressions.Window
     // one exchange, hash(a)-partitioned (r13): the orientation build's
     // `a` window below then runs exchange-free (see pageRank's sym note)
-    var cur = cut(edges.select(
+    var cur = Ckpt.cut(edges.select(
         least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
@@ -389,7 +353,7 @@ object Graphs {
     // degrees each round bought nothing but two count windows and an
     // explode per round. The initial-degree order keeps the O(√m)
     // wedge bound on the round-0 graph; peeling only shrinks it.
-    val oriented0 = cut {
+    val oriented0 = Ckpt.cut {
       val sym0 = cur.select(explode(array(
           struct(col("a"), col("b")),
           struct(col("b").as("a"), col("a").as("b")))).as("e"))
@@ -410,7 +374,7 @@ object Graphs {
     while (!converged && round < maxRounds) {
       // surviving edges keep their frozen orientation: one keyed
       // semi-join against the current edge set per round
-      val oriented = cut(oriented0.join(cur, Seq("a", "b"), "left_semi"))
+      val oriented = Ckpt.cut(oriented0.join(cur, Seq("a", "b"), "left_semi"))
       val o1 = oriented.select(col("src").as("u"), col("dst").as("v"),
         col("dd").as("dv"))
       val o2 = oriented.select(col("src").as("u"), col("dst").as("w"),
@@ -431,19 +395,19 @@ object Graphs {
         .select(col("p.a").as("a"), col("p.b").as("b"))
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
       val obs = org.apache.spark.sql.Observation(s"ktruss_removed_r$round")
-      val kept = cut(cur.join(sup, Seq("a", "b"), "left")
+      val kept = Ckpt.cut(cur.join(sup, Seq("a", "b"), "left")
         .withColumn("support", coalesce(col("support"), lit(0L)))
         .observe(obs,
           count(when(col("support") < k - 2, 1)).as("removed"))
         .filter(col("support") >= k - 2))
-      Dedup.releaseCheckpoint(oriented)
-      Dedup.releaseCheckpoint(cur)
+      Ckpt.release(oriented)
+      Ckpt.release(cur)
       converged = obs.get("removed").asInstanceOf[Long] == 0L
       out = kept
       cur = kept.select(col("a"), col("b"))
       round += 1
     }
-    Dedup.releaseCheckpoint(oriented0)
+    Ckpt.release(oriented0)
     if (out == null) cur.select(col("a").as("src"), col("b").as("dst"),
       lit(0L).as("support")).filter(lit(false))
     else out.select(col("a").as("src"), col("b").as("dst"), col("support"))
@@ -471,11 +435,8 @@ object Graphs {
     */
   def labelPropagation(edges: DataFrame, srcCol: String = "src",
                        dstCol: String = "dst", iters: Int = 5,
-                       checkpointEvery: Int = 10,
-                       reliable: Boolean = false): DataFrame = {
+                       checkpointEvery: Int = 10): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
     // ONE full-edge exchange, not two (r13): self-loops are unioned in
     // WITH duplicates (one per incident raw edge — harmless, the dedup
     // collapses them) so the whole relation takes a single
@@ -488,30 +449,20 @@ object Graphs {
         struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .filter(col("src") =!= col("dst"))
-    val adj = cut(raw.unionByName(
+    val adj = Ckpt.cut(raw.unionByName(
         raw.select(col("src"), col("src").as("dst")))
       .repartition(col("src")) // rounds join on src: no re-shuffle
       .dropDuplicates(Seq("src", "dst")))
-    var labels = adj.select(col("src").as("node")).distinct()
+    val labels0 = adj.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    var labelsCk: Option[DataFrame] = None
-    var round = 0
-    while (round < iters) {
-      val votes = adj
-        .join(labels.hint("shuffle_hash"), adj("src") === labels("node"))
+    val labels = Ckpt.iterate(labels0, iters, checkpointEvery) { cur =>
+      adj.join(cur.hint("shuffle_hash"), adj("src") === cur("node"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
-      labels = votes.groupBy(col("dst"))
+        .groupBy(col("dst"))
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("dst").as("node"), (-col("m.nl")).as("label"))
-      round += 1
-      if (round % checkpointEvery == 0 || round == iters) {
-        val cutLabels = cut(labels)
-        labelsCk.foreach(Dedup.releaseCheckpoint)
-        labelsCk = Some(cutLabels)
-        labels = cutLabels
-      }
     }
-    Dedup.releaseCheckpoint(adj)
+    Ckpt.release(adj)
     labels
   }
 
@@ -533,8 +484,7 @@ object Graphs {
     * order-invariant multiset-sum combine instead of the sorted list).
     */
   def wlRefinement(edges: DataFrame, srcCol: String = "src",
-                   dstCol: String = "dst", rounds: Int = 3,
-                   reliable: Boolean = false): DataFrame = {
+                   dstCol: String = "dst", rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds must be positive, got $rounds")
     // one full-edge exchange, not two — see pageRank's sym note (r13)
     val sym = edges.select(explode(array(
@@ -544,7 +494,7 @@ object Graphs {
       .filter(col("src") =!= col("dst"))
       .repartition(col("src"))
       .dropDuplicates(Seq("src", "dst"))
-    val adj = graft.Ckpt.cut(sym, reliable)
+    val adj = Ckpt.cut(sym)
     var colors = adj.groupBy(col("src").as("node"))
       .agg(count(lit(1)).cast("string").as("color"))
     for (_ <- 1 to rounds) {
@@ -560,8 +510,8 @@ object Graphs {
     // materialize the final colors BEFORE releasing the adjacency blocks
     // (they are still in the colors lineage until this cut); partitioned
     // on color so the class-size window needs no further exchange
-    val cutColors = graft.Ckpt.cut(colors.repartition(col("color")), reliable)
-    Dedup.releaseCheckpoint(adj)
+    val cutColors = Ckpt.cut(colors.repartition(col("color")))
+    Ckpt.release(adj)
     cutColors.withColumn("class_size",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("color"))).cast("long"))
@@ -581,7 +531,7 @@ object Graphs {
     // and both endpoint joins of the edge census) — cut it ONCE or the
     // upstream pair derivation re-executes per consumer (measured 23 s
     // -> 8 s at sf1)
-    val e0 = graft.Ckpt.cut(edges)
+    val e0 = Ckpt.cut(edges)
     val sym = e0.select(explode(array(
         struct(col("src").as("u"), col("dst").as("v")),
         struct(col("dst").as("u"), col("src").as("v")))).as("e"))
@@ -704,7 +654,7 @@ object Graphs {
     * partial-aggregated), then a broadcast of the 1-row total — no
     * driver-side action inside the loop; the normalizer rides the plan as
     * a broadcast nested loop of one row. State is one generation of
-    * O(nodes) rows, checkpointed every `checkpointEvery` half-steps.
+    * O(nodes) rows, cut every half-step.
     *
     * Headroom & the ADAPTIVE scale (r12 — the sf10 probe's catch): with
     * L1 renormalization every half-step, total mass never exceeds
@@ -727,11 +677,8 @@ object Graphs {
     */
   def hits(edges: DataFrame, srcCol: String = "src",
            dstCol: String = "dst", iters: Int = 4,
-           scale: Long = 0L, checkpointEvery: Int = 1,
-           reliable: Boolean = false): DataFrame = {
+           scale: Long = 0L): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
     // both orientations materialized once, each partitioned on ITS round
     // join key - the standard store-both-directions trade (2x edge
     // storage buys zero edge shuffles across all 2*iters half-steps).
@@ -739,10 +686,10 @@ object Graphs {
     // repartition (see pageRank's sym note) and the backward one derives
     // from it — two full-edge exchanges + two cuts instead of three of
     // each (the old shape cut a distinct()'d `e` first).
-    val eF = cut(edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
+    val eF = Ckpt.cut(edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
       .repartition(col("s"))
       .dropDuplicates(Seq("s", "d")))
-    val eB = cut(eF.select(col("d").as("s"), col("s").as("d"))
+    val eB = Ckpt.cut(eF.select(col("d").as("s"), col("s").as("d"))
       .repartition(col("s")))
     val hubs = eF.select(col("s").as("node")).distinct()
     val nh = hubs.count()
@@ -755,11 +702,11 @@ object Graphs {
         "for graphs past 2^31 nodes.")
     var state = hubs.select(col("node"), lit(sc / nh).as("v"))
     var prev = state
-    // Every half-step materializes its raw sum aggregate ONCE (a cut,
-    // default checkpointEvery = 1): each half-step references that
-    // aggregate twice — the rows and the L1 normalizer built from them —
-    // so an uncut chain re-executes the prefix 2^steps times (measured:
-    // 34s vs ~1s for 8 half-steps at sf0.1). r13: the normalizer total
+    // Every half-step materializes its raw sum aggregate ONCE (a cut):
+    // each half-step references that aggregate twice — the rows and the
+    // L1 normalizer built from them — so an uncut chain re-executes the
+    // prefix 2^steps times (measured: 34s vs ~1s for 8 half-steps at
+    // sf0.1). r13: the normalizer total
     // now rides the SAME cut action as an Observation and is folded into
     // the projection as a LITERAL — the per-half-step scalar-aggregate
     // job and its broadcast exchange are gone (same exact integer
@@ -772,7 +719,7 @@ object Graphs {
       val forward = half % 2 == 0 // hubs feed authorities
       val dir = if (forward) eF else eB
       val obs = org.apache.spark.sql.Observation(s"hits_norm_$half")
-      val rawCut = cut(dir
+      val rawCut = Ckpt.cut(dir
         .join(state.hint("shuffle_hash"), col("s") === col("node"))
         .groupBy(col("d")).agg(sum(col("v")).as("raw_v"))
         .observe(obs, sum(col("raw_v")).as("S")))
@@ -784,18 +731,18 @@ object Graphs {
       state = rawCut.select(col("d").as("node"),
         expr(s"($sc * raw_v) div $sTot").as("v"))
       rawGens.enqueue(rawCut)
-      if (rawGens.size > 2) Dedup.releaseCheckpoint(rawGens.dequeue())
+      if (rawGens.size > 2) Ckpt.release(rawGens.dequeue())
       half += 1
     }
     // materialize the output BEFORE releasing the raw/edge checkpoints —
     // prev and state are lazy projections over the last two cuts
-    val out = cut(
+    val out = Ckpt.cut(
       prev.select(lit("auth").as("kind"), col("node"), col("v"))
         .unionByName(
           state.select(lit("hub").as("kind"), col("node"), col("v"))))
-    rawGens.foreach(Dedup.releaseCheckpoint)
-    Dedup.releaseCheckpoint(eF)
-    Dedup.releaseCheckpoint(eB)
+    rawGens.foreach(Ckpt.release)
+    Ckpt.release(eF)
+    Ckpt.release(eB)
     out
   }
 
@@ -811,11 +758,8 @@ object Graphs {
   def shortestHops(edges: DataFrame,
                    seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                    srcCol: String = "src", dstCol: String = "dst",
-                   iters: Int = 6, checkpointEvery: Int = 6,
-                   reliable: Boolean = false): DataFrame = {
+                   iters: Int = 6, checkpointEvery: Int = 6): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
     // ONE full-edge exchange, not two (r13): symmetrized edges (w=1,
     // with duplicates) and per-incident-edge self-loops (w=0) union
     // BEFORE the single repartition(src); the min-w aggregate then runs
@@ -827,29 +771,16 @@ object Graphs {
         struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .filter(col("src") =!= col("dst"))
-    val step = cut(raw.select(col("src"), col("dst"), lit(1L).as("w"))
+    val step = Ckpt.cut(raw.select(col("src"), col("dst"), lit(1L).as("w"))
       .unionByName(raw.select(col("src"), col("src").as("dst"),
         lit(0L).as("w")))
       .repartition(col("src")) // rounds join on src: no re-shuffle
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
     // exactly one w=0 self-loop row per node — the node set, for free
-    var d = step.filter(col("w") === 0L && seedPred(col("src")))
+    val d0 = step.filter(col("w") === 0L && seedPred(col("src")))
       .select(col("src").as("node"), lit(0L).as("dist"))
-    var dCk: Option[DataFrame] = None
-    var round = 0
-    while (round < iters) {
-      d = step.join(d.hint("shuffle_hash"), col("src") === col("node"))
-        .groupBy(col("dst")).agg(min(col("dist") + col("w")).as("dist"))
-        .withColumnRenamed("dst", "node")
-      round += 1
-      if (round % checkpointEvery == 0 || round == iters) {
-        val cutD = cut(d)
-        dCk.foreach(Dedup.releaseCheckpoint)
-        dCk = Some(cutD)
-        d = cutD
-      }
-    }
-    Dedup.releaseCheckpoint(step)
+    val d = Ckpt.iterate(d0, iters, checkpointEvery)(relaxHops(step, _))
+    Ckpt.release(step)
     d
   }
 
@@ -869,11 +800,8 @@ object Graphs {
                    seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                    srcCol: String = "src", dstCol: String = "dst",
                    wCol: String = "w",
-                   iters: Int = 6, checkpointEvery: Int = 6,
-                   reliable: Boolean = false): DataFrame = {
+                   iters: Int = 6, checkpointEvery: Int = 6): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
     // one full-edge exchange, not two — the shortestHops step-build
     // shape (r13): self-loops (w=0) union in pre-dedup, one
     // repartition(src), and the min-w aggregate collapses parallel
@@ -886,7 +814,7 @@ object Graphs {
       .select(col("e.src").as("src"), col("e.dst").as("dst"),
         col("e.w").as("w"))
       .filter(col("src") =!= col("dst"))
-    val step = cut(raw.unionByName(raw.select(col("src"),
+    val step = Ckpt.cut(raw.unionByName(raw.select(col("src"),
         col("src").as("dst"), lit(0L).as("w")))
       .repartition(col("src")) // rounds join on src: no re-shuffle
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
@@ -895,25 +823,20 @@ object Graphs {
     // removed them), NOT on w === 0: a zero-cost real edge in the input
     // must not inject duplicate seed rows (r14 guard; with positive
     // costs the two predicates select the same rows).
-    var d = step.filter(col("src") === col("dst") && seedPred(col("src")))
+    val d0 = step.filter(col("src") === col("dst") && seedPred(col("src")))
       .select(col("src").as("node"), lit(0L).as("dist"))
-    var dCk: Option[DataFrame] = None
-    var round = 0
-    while (round < iters) {
-      d = step.join(d.hint("shuffle_hash"), col("src") === col("node"))
-        .groupBy(col("dst")).agg(min(col("dist") + col("w")).as("dist"))
-        .withColumnRenamed("dst", "node")
-      round += 1
-      if (round % checkpointEvery == 0 || round == iters) {
-        val cutD = cut(d)
-        dCk.foreach(Dedup.releaseCheckpoint)
-        dCk = Some(cutD)
-        d = cutD
-      }
-    }
-    Dedup.releaseCheckpoint(step)
+    val d = Ckpt.iterate(d0, iters, checkpointEvery)(relaxHops(step, _))
+    Ckpt.release(step)
     d
   }
+
+  /** One relaxation round of [[shortestHops]] / [[weightedHops]]:
+    * dist'(v) = min over (u, v, w) in `step` of dist(u) + w. The 0-cost
+    * self-loops in `step` keep every reached node's current distance. */
+  private def relaxHops(step: DataFrame, d: DataFrame): DataFrame =
+    step.join(d.hint("shuffle_hash"), col("src") === col("node"))
+      .groupBy(col("dst")).agg(min(col("dist") + col("w")).as("dist"))
+      .withColumnRenamed("dst", "node")
 
   /** Per-source bounded BFS: [[shortestHops]] semantics with the state
     * keyed by (source, node) so every seed advances in the same keyed
@@ -959,13 +882,10 @@ object Graphs {
   def perSourceHops(edges: DataFrame,
                     seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                     srcCol: String = "src", dstCol: String = "dst",
-                    iters: Int = 6, checkpointEvery: Int = 6,
-                    reliable: Boolean = false): DataFrame = {
+                    iters: Int = 6): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
     // one full-edge exchange, not two — see pageRank's sym note (r13)
-    val sym = cut(edges.select(explode(array(
+    val sym = Ckpt.cut(edges.select(explode(array(
         struct(col(srcCol).as("src"), col(dstCol).as("dst")),
         struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
@@ -976,9 +896,9 @@ object Graphs {
       .filter(seedPred(col("node")))
     val out =
       if (seedFrame.limit(129).count() <= 128L)
-        maskHops(sym, seedFrame, iters, cut)
-      else pairHops(sym, seedFrame, iters, cut)
-    Dedup.releaseCheckpoint(sym)
+        maskHops(sym, seedFrame, iters)
+      else pairHops(sym, seedFrame, iters)
+    Ckpt.release(sym)
     out
   }
 
@@ -986,14 +906,14 @@ object Graphs {
     * seeds that reached the node THIS round. One full-outer merge of
     * the bit_or'd neighbor masks into the state per round, one action
     * per round (the fresh count rides the checkpoint via observe). */
-  private def maskHops(sym: DataFrame, seedFrame: DataFrame, iters: Int,
-                       cut: DataFrame => DataFrame): DataFrame = {
+  private def maskHops(sym: DataFrame, seedFrame: DataFrame,
+                       iters: Int): DataFrame = {
     val spark = sym.sparkSession
     import spark.implicits._
     val seeds = seedFrame.as[Long].collect().sorted // <= 128 by dispatch
     val bitMap = seeds.zipWithIndex.map { case (s, b) => (s, b) }
     val seedBits = bitMap.toSeq.toDF("s", "b")
-    var state = cut(seedBits
+    var state = Ckpt.cut(seedBits
       .select(col("s").as("node"),
         expr("IF(b < 64, shiftleft(1L, b), 0L)").as("m0"),
         expr("IF(b >= 64, shiftleft(1L, b - 64), 0L)").as("m1"))
@@ -1010,7 +930,7 @@ object Graphs {
         .groupBy(col("dst"))
         .agg(expr("bit_or(f0)").as("c0"), expr("bit_or(f1)").as("c1"))
       val obs = org.apache.spark.sql.Observation(s"mask_fresh_$round")
-      val next = cut(state.select(col("node"), col("m0"), col("m1"))
+      val next = Ckpt.cut(state.select(col("node"), col("m0"), col("m1"))
         .join(cand, col("node") === col("dst"), "full")
         .select(coalesce(col("node"), col("dst")).as("node"),
           coalesce(col("m0"), lit(0L)).as("m0"),
@@ -1050,9 +970,9 @@ object Graphs {
 
   /** Pair-state frontier path (seeds × reached rows) — the fallback
     * when the seed set exceeds 128 bits. */
-  private def pairHops(sym: DataFrame, seedFrame: DataFrame, iters: Int,
-                       cut: DataFrame => DataFrame): DataFrame = {
-    var settled = cut(seedFrame
+  private def pairHops(sym: DataFrame, seedFrame: DataFrame,
+                       iters: Int): DataFrame = {
+    var settled = Ckpt.cut(seedFrame
       .select(col("node").as("s"), col("node"), lit(0L).as("dist")))
     var frontier = settled
     var round = 1
@@ -1065,10 +985,10 @@ object Graphs {
           "left_anti")
         .select(col("s"), col("node"), lit(round.toLong).as("dist"))
       val obs = org.apache.spark.sql.Observation(s"hops_fresh_$round")
-      val next = cut(settled.unionByName(reached)
+      val next = Ckpt.cut(settled.unionByName(reached)
         .observe(obs, count(when(col("dist") === round, 1)).as("fresh")))
       exhausted = obs.get("fresh").asInstanceOf[Long] == 0L
-      Dedup.releaseCheckpoint(settled)
+      Ckpt.release(settled)
       settled = next
       frontier = next.filter(col("dist") === round)
       round += 1
@@ -1104,10 +1024,7 @@ object Graphs {
   def betweenness(edges: DataFrame,
                   seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                   srcCol: String = "src", dstCol: String = "dst",
-                  maxRounds: Int = 12,
-                  reliable: Boolean = false): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
+                  maxRounds: Int = 12): DataFrame = {
     // both passes keyed differently: forward probes by src, backward by
     // dst - one orientation each, partitioned on its own join key (the
     // HITS recipe), so neither pass ever re-shuffles the edge list.
@@ -1115,18 +1032,18 @@ object Graphs {
     // repartition (see pageRank's sym note) and the dst orientation
     // derives from it — two full-edge exchanges total instead of three,
     // and one fewer checkpoint action.
-    val sym = cut(edges.select(explode(array(
+    val sym = Ckpt.cut(edges.select(explode(array(
         struct(col(srcCol).as("src"), col(dstCol).as("dst")),
         struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .filter(col("src") =!= col("dst"))
       .repartition(col("src"))
       .dropDuplicates(Seq("src", "dst")))
-    val symB = cut(sym.repartition(col("dst")))
+    val symB = Ckpt.cut(sym.repartition(col("dst")))
     val seeds = sym.select(col("src").as("node")).distinct()
       .filter(seedPred(col("node")))
     // forward: settled (s, node, dist, sigma); frontier = last level
-    var info = cut(seeds.select(col("node").as("s"), col("node"),
+    var info = Ckpt.cut(seeds.select(col("node").as("s"), col("node"),
       lit(0L).as("dist"), lit(1L).as("sigma")))
     var frontier = info
     var maxDist = 0L
@@ -1139,25 +1056,25 @@ object Graphs {
         .select(col("s"), col("dst").as("node"),
           lit(maxDist + 1).as("dist"), col("sigma"))
       val obs = org.apache.spark.sql.Observation(s"bc_fwd_$maxDist")
-      val newly = cut(cand
+      val newly = Ckpt.cut(cand
         .join(info.select(col("s"), col("node")), Seq("s", "node"),
           "left_anti")
         .observe(obs, count(lit(1)).as("n")))
       if (obs.get("n").asInstanceOf[Long] == 0L) {
-        graft.llm.Dedup.releaseCheckpoint(newly)
+        Ckpt.release(newly)
         done = true
       } else {
-        val grown = cut(info.unionByName(newly))
-        graft.llm.Dedup.releaseCheckpoint(info)
-        graft.llm.Dedup.releaseCheckpoint(frontier)
+        val grown = Ckpt.cut(info.unionByName(newly))
+        Ckpt.release(info)
+        Ckpt.release(frontier)
         info = grown
         frontier = newly
         maxDist += 1
       }
     }
     // backward: level-descending dependency accumulation
-    var state = cut(info.withColumn("delta", lit(0.0)))
-    graft.llm.Dedup.releaseCheckpoint(info)
+    var state = Ckpt.cut(info.withColumn("delta", lit(0.0)))
+    Ckpt.release(info)
     var level = maxDist
     while (level >= 1) {
       val wside = state.filter(col("dist") === level)
@@ -1182,10 +1099,10 @@ object Graphs {
               (lit(1.0) + col("wd"))).as("t")))),
           lit(0.0), (acc, x) => acc + x.getField("t")).as("c"))
         .withColumnRenamed("vn", "node")
-      val next = cut(state.join(contrib, Seq("s", "node"), "left")
+      val next = Ckpt.cut(state.join(contrib, Seq("s", "node"), "left")
         .select(col("s"), col("node"), col("dist"), col("sigma"),
           (col("delta") + coalesce(col("c"), lit(0.0))).as("delta")))
-      graft.llm.Dedup.releaseCheckpoint(state)
+      Ckpt.release(state)
       state = next
       level -= 1
     }
@@ -1195,10 +1112,10 @@ object Graphs {
           array_sort(collect_list(struct(col("s"), col("delta")))),
           lit(0.0), (acc, x) => acc + x.getField("delta")).as("bc"),
         count(lit(1)).as("n_sources_reaching"))
-      .transform(graft.Ckpt.cut(_))
-    graft.llm.Dedup.releaseCheckpoint(state)
-    graft.llm.Dedup.releaseCheckpoint(sym)
-    graft.llm.Dedup.releaseCheckpoint(symB)
+      .transform(Ckpt.cut(_))
+    Ckpt.release(state)
+    Ckpt.release(sym)
+    Ckpt.release(symB)
     out
   }
 
@@ -1224,18 +1141,15 @@ object Graphs {
   def randomWalks(edges: DataFrame,
                   seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                   srcCol: String = "src", dstCol: String = "dst",
-                  steps: Int = 8,
-                  reliable: Boolean = false): DataFrame = {
+                  steps: Int = 8): DataFrame = {
     require(steps >= 1, s"steps must be positive, got $steps")
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
-    val sym = cut(edges.select(explode(array(
+    val sym = Ckpt.cut(edges.select(explode(array(
         struct(col(srcCol).as("src"), col(dstCol).as("dst")),
         struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct())
-    var state = cut(sym.select(col("src").as("node")).distinct()
+    var state = Ckpt.cut(sym.select(col("src").as("node")).distinct()
       .filter(seedPred(col("node")))
       .select(col("node").as("walk"), lit(0L).as("step"), col("node")))
     val frames = scala.collection.mutable.ArrayBuffer(state)
@@ -1244,7 +1158,7 @@ object Graphs {
       val hv = graft.functions.GraftFunctions.md5Bits(
         concat(lit("walk:"), col("walk").cast("string"), lit(":"),
           lit(t.toString), lit(":"), col("dst").cast("string")), 1, 8)
-      val next = cut(sym.join(broadcast(state), col("src") === col("node"))
+      val next = Ckpt.cut(sym.join(broadcast(state), col("src") === col("node"))
         .select(col("walk"), hv.as("hv"), col("dst"))
         .groupBy(col("walk"))
         .agg(min(struct(col("hv"), col("dst"))).as("p"))
@@ -1254,9 +1168,9 @@ object Graphs {
       state = next
       t += 1
     }
-    val out = cut(frames.reduce(_ unionByName _))
-    frames.foreach(Dedup.releaseCheckpoint)
-    Dedup.releaseCheckpoint(sym)
+    val out = Ckpt.cut(frames.reduce(_ unionByName _))
+    frames.foreach(Ckpt.release)
+    Ckpt.release(sym)
     out
   }
 
@@ -1288,18 +1202,15 @@ object Graphs {
     */
   def maxSpanningForest(edges: DataFrame, srcCol: String = "src",
                         dstCol: String = "dst", wCol: String = "w",
-                        maxRounds: Int = 20,
-                        reliable: Boolean = false): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
-    val base = cut(edges.select(
+                        maxRounds: Int = 20): DataFrame = {
+    val base = Ckpt.cut(edges.select(
         least(col(srcCol), col(dstCol)).as("src"),
         greatest(col(srcCol), col(dstCol)).as("dst"), col(wCol).as("w"))
       .filter(col("src") =!= col("dst"))
       .groupBy(col("src"), col("dst")).agg(max(col("w")).as("w")))
     // contracted working set: endpoints in component space, original
     // edge kept inside the min-struct; one row per component pair
-    var cur = cut(base.select(col("src").as("ca"), col("dst").as("cb"),
+    var cur = Ckpt.cut(base.select(col("src").as("ca"), col("dst").as("cb"),
       struct((-col("w")).as("nw"), col("src"), col("dst")).as("e")))
     val picks = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var round = 0
@@ -1313,7 +1224,7 @@ object Graphs {
       // map, and the FINAL distinct() below collapses the chosen set
       // once. Dropping it removes one exchange + one AQE stage per
       // Borůvka round.
-      val pick = cut(cur.select(
+      val pick = Ckpt.cut(cur.select(
           explode(array(col("ca"), col("cb"))).as("c"),
           struct(col("e").as("e"), col("ca"), col("cb")).as("p"))
         .groupBy(col("c")).agg(min(col("p")).as("p"))
@@ -1322,7 +1233,7 @@ object Graphs {
           col("p.cb").as("cb"))
         .observe(obs, count(lit(1)).as("n")))
       if (obs.get("n").asInstanceOf[Long] == 0L) {
-        graft.llm.Dedup.releaseCheckpoint(pick)
+        Ckpt.release(pick)
         done = true
       } else {
         // Defer the chosen-forest union to the end of the run (r13): the
@@ -1334,20 +1245,13 @@ object Graphs {
         // edges, bounded by the forest size.
         picks += pick
         // merge on the CONTRACTED graph: labels linked by chosen edges
-        // roundsPerCut stays 1 here too (r14 MEASURED, VERDICT r13 #6):
-        // batching two label-halving steps per action — the bounded
-        // pointer-doubling direction the oracle uses — ran graph_mst
-        // 9.9/10.3 s vs 7.9/10.2 s interleaved at sf0.1; the deeper
-        // per-action plan costs more in optimizer/AQE overhead than the
-        // saved driver actions, exactly as componentMinLabels' own
-        // roundsPerCut note records for the big WCC consumers.
         val merged = graft.llm.Dedup.componentMinLabels(
           pick.select(col("ca").as("id_a"), col("cb").as("id_b")))
         val relabel = merged.select(col("node").as("old"),
           col("label").as("nu"))
         // contract: relabel endpoints, drop intra edges, collapse
         // parallel edges to the per-pair min-struct
-        val nextCur = cut(cur
+        val nextCur = Ckpt.cut(cur
           .join(relabel.withColumnRenamed("old", "ca")
             .withColumnRenamed("nu", "na"), Seq("ca"), "left")
           .join(relabel.withColumnRenamed("old", "cb")
@@ -1358,22 +1262,22 @@ object Graphs {
           .select(least(col("a"), col("b")).as("ca"),
             greatest(col("a"), col("b")).as("cb"), col("e"))
           .groupBy(col("ca"), col("cb")).agg(min(col("e")).as("e")))
-        graft.llm.Dedup.releaseCheckpoint(cur)
-        graft.llm.Dedup.releaseCheckpoint(merged)
+        Ckpt.release(cur)
+        Ckpt.release(merged)
         cur = nextCur
         round += 1
       }
     }
-    graft.llm.Dedup.releaseCheckpoint(cur)
-    graft.llm.Dedup.releaseCheckpoint(base)
+    Ckpt.release(cur)
+    Ckpt.release(base)
     if (picks.isEmpty)
       base.filter(lit(false)).select(col("src"), col("dst"), col("w"))
     else {
       // one action collapses all rounds' picks (dupes from the dropped
       // per-round distinct included); only then release the pick blocks
-      val forest = cut(picks.reduce(_ unionByName _)
+      val forest = Ckpt.cut(picks.reduce(_ unionByName _)
         .select(col("src"), col("dst"), col("w")).distinct())
-      picks.foreach(graft.llm.Dedup.releaseCheckpoint)
+      picks.foreach(Ckpt.release)
       forest
     }
   }
@@ -1391,37 +1295,34 @@ object Graphs {
     * sequence). All integer; a fixed `rounds` replay hash-compares.
     */
   def coreness(edges: DataFrame, srcCol: String = "src",
-               dstCol: String = "dst", rounds: Int = 10,
-               reliable: Boolean = false): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      graft.Ckpt.cut(df, reliable)
+               dstCol: String = "dst", rounds: Int = 10): DataFrame = {
     // one full-edge exchange, not two — see pageRank's sym note (r13)
-    val sym = cut(edges.select(explode(array(
+    val sym = Ckpt.cut(edges.select(explode(array(
         struct(col(srcCol).as("src"), col(dstCol).as("dst")),
         struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .filter(col("src") =!= col("dst"))
       .repartition(col("dst")) // rounds join on dst: no re-shuffle
       .dropDuplicates(Seq("src", "dst")))
-    var c = cut(sym.groupBy(col("src"))
+    var c = Ckpt.cut(sym.groupBy(col("src"))
       .agg(count(lit(1)).cast("long").as("c"))
       .withColumnRenamed("src", "node"))
     val byV = org.apache.spark.sql.expressions.Window
       .partitionBy(col("v")).orderBy(col("c").desc)
     var r = 0
     while (r < rounds) {
-      val next = cut(sym.join(c.hint("shuffle_hash"),
+      val next = Ckpt.cut(sym.join(c.hint("shuffle_hash"),
           sym("dst") === c("node"))
         .select(sym("src").as("v"), col("c"))
         .withColumn("rn", row_number().over(byV).cast("long"))
         .groupBy(col("v"))
         .agg(max(least(col("rn"), col("c"))).as("c"))
         .withColumnRenamed("v", "node"))
-      graft.llm.Dedup.releaseCheckpoint(c)
+      Ckpt.release(c)
       c = next
       r += 1
     }
-    graft.llm.Dedup.releaseCheckpoint(sym)
+    Ckpt.release(sym)
     c
   }
 
@@ -1697,7 +1598,7 @@ object Graphs {
          |            THEN coalesce(tc.tri, 0) * 1000000
          |                 // (d.deg * (d.deg - 1) // 2) END AS cc_ppm
          |FROM deg d LEFT JOIN tc USING (node)""".stripMargin) { (s, d) =>
-      val edges = coSupplierEdges(Tables.lineitem(s, d)).transform(graft.Ckpt.cut(_))
+      val edges = coSupplierEdges(Tables.lineitem(s, d)).transform(Ckpt.cut(_))
       val deg = edges.select(explode(array(
           struct(col("src").as("node")),
           struct(col("dst").as("node")))).as("e"))
@@ -1719,7 +1620,7 @@ object Graphs {
     // audits, "is this network one economy or several"). Iterated
     // min-label propagation WITH pointer jumping (label := label's
     // label), so convergence is O(log diameter) keyed join/agg rounds —
-    // see Dedup.componentMinLabels for the per-round localCheckpoint /
+    // see Dedup.componentMinLabels for the per-round Ckpt.cut /
     // observe() convergence protocol (one action per round, state
     // bounded by the node table, never the edge multiplicity). The
     // oracle replays full transitive reachability with a recursive CTE
@@ -2270,7 +2171,7 @@ object Graphs {
          |         AS n_wedges,
          |       (SELECT CAST(coalesce(sum(w * (w - 1) // 2), 0) AS BIGINT)
          |        FROM pairs) AS n_butterflies""".stripMargin) { (s, d) =>
-      val e = graft.Ckpt.cut(Tables.orders(s, d)
+      val e = Ckpt.cut(Tables.orders(s, d)
         .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"), col("l_suppkey").as("p"))
         .distinct())
@@ -2417,7 +2318,7 @@ object Graphs {
           node => node < 100, iters = 6)
         .filter(col("dist") > 0)
         .groupBy(col("dist")).agg(count(lit(1)).as("n_pairs"))
-        .transform(graft.Ckpt.cut(_)) // ≤ iters rows; feeds cum AND total
+        .transform(Ckpt.cut(_)) // ≤ iters rows; feeds cum AND total
       val W = org.apache.spark.sql.expressions.Window
       val cum = W.orderBy(col("dist"))
         .rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -2609,7 +2510,7 @@ object Graphs {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-      .transform(graft.Ckpt.cut(_))
+      .transform(Ckpt.cut(_))
     val deg = sym.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
     val e = sym
@@ -2655,7 +2556,7 @@ object Graphs {
       // subtrees — the assignContiguousIds lesson (content here is
       // deterministic either way, but three re-executions of the
       // distinct would triple the dominant shuffle)
-      .transform(graft.Ckpt.cut(_))
+      .transform(Ckpt.cut(_))
     val canon = sym.filter(col("src") < col("dst"))
     val mDf = canon.agg(count(lit(1)).as("m"))
     val deg = sym.groupBy(col("src").as("node"))

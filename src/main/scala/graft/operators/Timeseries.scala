@@ -546,7 +546,7 @@ object Timeseries {
             sum(col("rk") * col("rk") / (col("n") - col("k"))
               .cast("double")).over(w)).as("q_stat"))
         .transform(graft.Ckpt.cut(_))
-      graft.llm.Dedup.releaseCheckpoint(dev)
+      graft.Ckpt.release(dev)
       out
     },
 

@@ -36,7 +36,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Lives under `org.apache.spark.sql` because `LogicalRDD`'s second
   * constructor list and `Dataset.ofRows` are `private[sql]`; the rewrap
   * reuses the SAME checkpointed RDD and the SAME output attribute ids,
-  * so downstream resolution and [[graft.llm.Dedup.releaseCheckpoint]]'s
+  * so downstream resolution and [[graft.Ckpt.release]]'s
   * unpersist-by-leaf both behave identically.
   */
 object CheckpointStats {

@@ -4,7 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-/** Pins the checkpoint-stats clamp (Ckpt / CheckpointStats).
+/** Pins Ckpt's invariants: the checkpoint-stats clamp (Ckpt /
+  * CheckpointStats), block release, the fixed-round loop, and the
+  * durability rule.
   *
   * Spark 4 preserves the child plan's estimated Statistics on a
   * checkpoint's LogicalRDD leaf; size-only estimation multiplies child
@@ -45,19 +47,56 @@ class CkptSpec extends SparkSpec {
     assert(cur.agg(sum(col("id"))).head().getLong(0) == 64L * 65 / 2)
   }
 
+  private def leafRdds(df: DataFrame) =
+    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+
+  private def persistedIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   test("the clamp rewrap preserves rows, schema, and the checkpointed " +
-       "RDD, so releaseCheckpoint still frees its blocks") {
+       "RDD, so Ckpt.release frees its blocks") {
     import spark.implicits._
     val src = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "s")
     val ck = Ckpt.cut(src.filter(col("id") > 10))
     assert(ck.schema == src.schema)
     assert(ck.count() == 90)
     assert(ck.agg(min(col("id"))).head().getLong(0) == 11L)
-    val rdds = ck.queryExecution.analyzed.collect {
-      case l: LogicalRDD => l.rdd
-    }
+    val rdds = leafRdds(ck)
     assert(rdds.size == 1, "exactly one checkpoint leaf")
-    llm.Dedup.releaseCheckpoint(ck) // must find the leaf and not throw
+    assert(persistedIds(rdds.head.id), "a local cut persists its leaf RDD")
+    // a narrow projection over the cut still reaches its leaf
+    Ckpt.release(ck.select(col("id")))
+    assert(!persistedIds(rdds.head.id), "release left the leaf persisted")
+  }
+
+  test("Ckpt.iterate equals the uncut fold, cuts after every K-th and " +
+       "the last round, and leaves one generation persisted") {
+    import spark.implicits._
+    val init = (1L to 50L).toDF("v")
+    def step(df: DataFrame): DataFrame =
+      df.select(((col("v") * 31 + 7) % 1000003).as("v"))
+    def values(df: DataFrame): Seq[Long] =
+      df.collect().map(_.getLong(0)).toSeq.sorted
+    val uncut = values((1 to 7).foldLeft(init)((df, _) => step(df)))
+
+    val before = persistedIds
+    // a round's input is a bare checkpoint leaf iff the previous round
+    // was cut
+    val leafInput = scala.collection.mutable.ArrayBuffer.empty[Boolean]
+    val out = Ckpt.iterate(init, rounds = 7, every = 3) { df =>
+      leafInput += df.queryExecution.analyzed.isInstanceOf[LogicalRDD]
+      step(df)
+    }
+    assert(values(out) == uncut)
+    // cuts after rounds 3, 6 and 7: rounds 4 and 7 start from a leaf
+    assert(leafInput.toSeq ==
+      Seq(false, false, false, true, false, false, true))
+    assert(out.queryExecution.analyzed.isInstanceOf[LogicalRDD],
+      "the final round is cut")
+    assert(persistedIds -- before == leafRdds(out).map(_.id).toSet,
+      "only the final generation may stay persisted")
+    Ckpt.release(out)
+    assert(persistedIds -- before == Set.empty[Int])
   }
 
   test("nested fixpoints terminate fast: Boruvka on a 2^8 chain (max " +
@@ -70,5 +109,23 @@ class CkptSpec extends SparkSpec {
       .toDF("src", "dst", "w")
     val forest = operators.Graphs.maxSpanningForest(edges)
     assert(forest.count() == 255) // a path's spanning forest is itself
+  }
+
+  // Runs last: a SparkContext cannot unset its checkpoint directory.
+  test("durability follows the session checkpoint directory: local cuts " +
+       "without one, reliable checkpoint files once it is set") {
+    import spark.implicits._
+    val src = (1L to 20L).toDF("id")
+    def checkpointFile(df: DataFrame): Option[String] =
+      leafRdds(df).head.getCheckpointFile
+    assert(spark.sparkContext.getCheckpointDir.isEmpty,
+      "suite session must start without a checkpoint dir")
+    assert(checkpointFile(Ckpt.cut(src)).isEmpty)
+    val dir = useDurableCuts("ckpt_durable")
+    val durable = Ckpt.cut(src)
+    assert(checkpointFile(durable).exists(
+      _.contains(dir.getFileName.toString)))
+    assert(durable.count() == 20L)
+    assert(wroteCheckpoints(dir))
   }
 }

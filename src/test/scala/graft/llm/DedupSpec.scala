@@ -371,16 +371,16 @@ class DedupSpec extends SparkSpec {
   test("componentMinLabels reliable mode: identical labels when rounds " +
        "checkpoint to durable storage instead of executor blocks") {
     import spark.implicits._
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("cc_reliable").toString)
     // a chain (forces pointer-jumping rounds) plus a separate pair
     val pairs = ((1L to 9L).map(i => (i, i + 1)) ++ Seq((100L, 101L)))
       .toDF("id_a", "id_b")
-    def labelsOf(reliable: Boolean) =
-      Dedup.componentMinLabels(pairs, reliable = reliable).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val rel = labelsOf(reliable = true)
-    assert(rel == labelsOf(reliable = false))
+    def labels() = Dedup.componentMinLabels(pairs).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val local = labels() // before any checkpoint dir exists
+    val dir = useDurableCuts("cc_durable")
+    val rel = labels()
+    assert(wroteCheckpoints(dir), "the durable run never wrote a cut")
+    assert(rel == local)
     assert(rel.filter(_._1 <= 10L).forall(_._2 == 1L))
     assert(rel.filter(_._1 >= 100L).forall(_._2 == 100L))
   }

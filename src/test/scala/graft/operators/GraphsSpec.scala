@@ -48,18 +48,17 @@ class GraphsSpec extends SparkSpec {
   test("reliable-checkpoint mode (the cluster path) produces identical " +
        "ranks to localCheckpoint, including mid-run cuts") {
     import spark.implicits._
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("pr_reliable").toString)
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L))
       .toDF("src", "dst")
-    def ranks(reliable: Boolean, every: Int) =
-      Graphs.pageRank(edges, iters = 6, checkpointEvery = every,
-          reliable = reliable)
+    def ranks(every: Int) =
+      Graphs.pageRank(edges, iters = 6, checkpointEvery = every)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val local = ranks(reliable = false, every = 6)
-    assert(ranks(reliable = true, every = 6) == local)
+    val local = ranks(every = 6) // before any checkpoint dir exists
+    val dir = useDurableCuts("pr_durable")
+    assert(ranks(every = 6) == local)
     // mid-run cuts (every=2) must not change the fixed-point arithmetic
-    assert(ranks(reliable = true, every = 2) == local)
+    assert(ranks(every = 2) == local)
+    assert(wroteCheckpoints(dir), "the durable run never wrote a cut")
   }
 
   test("triangles: K4 counts each node in 3 triangles; duplicate and " +
