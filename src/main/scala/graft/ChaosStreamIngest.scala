@@ -46,8 +46,7 @@ object ChaosStreamIngest {
 
   def main(args: Array[String]): Unit = {
     val (mode, dir) = (args(0), args(1))
-    val spark = Engine.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    val spark = Engine.local()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val src = s"$dir/src"

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** SparkSession factory with the engine's standard configuration.
   *
   * Design notes for scale (the library targets a 1000-executor cluster even
-  * though CI runs `local[32]`):
+  * though CI runs `local[n]`):
   *   - AQE is left ON (Spark 4 default): runtime coalescing of shuffle
   *     partitions, dynamic broadcast-join demotion/promotion, and skew-join
   *     splitting are the first line of defense at 100 TB.
@@ -17,7 +17,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     `%Y-%m-%d %H:%M:%S` timestamps without zone math).
   */
 object Engine {
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
+  /** Local-mode cores when a caller passes none: SPARK_GRAFT_CPUS if set,
+    * else every core this JVM may use.
+    */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def local(cores: Int = defaultCores,
+            appName: String = "graft"): SparkSession = {
     // Multi-JVM dress rehearsal hooks (tools/multijvm_sweep.sh):
     //   SPARK_GRAFT_MASTER=local-cluster[2,8,4096] runs the same mains
     //     against REAL executor JVMs — real closure/broadcast/Aggregator
@@ -62,29 +69,6 @@ object Engine {
     spark.sparkContext.setLogLevel("WARN")
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
       .foreach(spark.sparkContext.setCheckpointDir)
-    // SPARK_GRAFT_METRICS=1: print cumulative spill counters at
-    // application end — the evidence a forced-spill sweep needs to prove
-    // the spill paths actually executed (not just that memory was small).
-    if (sys.env.contains("SPARK_GRAFT_METRICS")) {
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd, SparkListenerTaskEnd}
-      import java.util.concurrent.atomic.AtomicLong
-      val mem = new AtomicLong; val disk = new AtomicLong
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            mem.addAndGet(m.memoryBytesSpilled)
-            disk.addAndGet(m.diskBytesSpilled)
-          }
-        }
-        override def onApplicationEnd(
-            e: SparkListenerApplicationEnd): Unit =
-          // scalastyle:off println
-          println(s"[graft-metrics] memoryBytesSpilled=${mem.get} " +
-            s"diskBytesSpilled=${disk.get}")
-          // scalastyle:on println
-      })
-    }
     spark
   }
 

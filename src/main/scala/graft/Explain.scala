@@ -16,7 +16,7 @@ object Explain {
     val name = args.headOption.getOrElse("all")
     val sfDir = args.drop(1).headOption.filterNot(_.startsWith("--"))
       .getOrElse("/root/testdata/sf0.01")
-    val spark = Engine.local(8)
+    val spark = Engine.local()
     if (args.contains("--no-broadcast")) {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.enabled", "false")

@@ -91,8 +91,7 @@ object FuzzGen {
   def main(args: Array[String]): Unit = {
     val (out, seed) = (args(0), args(1).toLong)
     val regime = (seed % 5).toInt
-    val spark = Engine.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    val spark = Engine.local()
     spark.sparkContext.setLogLevel("WARN")
 
     def write(name: String, schema: StructType, rows: Seq[Row]): Unit = {

@@ -42,7 +42,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val (src, out) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Engine.defaultCores
     val spark = Engine.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val cp = copies(spark, factor)

@@ -10,8 +10,7 @@ package graft.llm
 object QualityModelFreeze {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = graft.Engine.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    val spark = graft.Engine.local()
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.Tables.documents(spark, sfDir)
     val s = QualityModel.trainContrastive(docs, "doc_id", "text")

@@ -12,10 +12,13 @@ import org.apache.spark.sql.functions._
   */
 object OlistOps {
 
-  /** Scratch warehouse inside the build dir (kept out of git; absolute so
-    * the driver's working directory cannot redirect it).
+  /** Scratch warehouse of this JVM: under java.io.tmpdir, keyed by pid
+    * like Engine.local's `spark.sql.warehouse.dir`, so no run reads
+    * tables an earlier run (or an older build) left behind.
     */
-  private def scratch = "/root/repo/target/olist_wh"
+  private[olist] val scratch: String = java.nio.file.Paths.get(
+    System.getProperty("java.io.tmpdir"),
+    s"graft-olist-wh-${ProcessHandle.current().pid()}").toString
 
   val ops: Seq[Op] = Seq(
 

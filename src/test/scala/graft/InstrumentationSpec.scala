@@ -31,6 +31,25 @@ class InstrumentationSpec extends SparkSpec {
       s"map-only pipeline moved data: $noShuffle")
   }
 
+  test("job records: each action's jobs with bus timestamps, the " +
+       "submitting call site, executor CPU and the driver gap") {
+    import spark.implicits._
+    val df = (1L to 200000L).toDF("id").withColumn("k", col("id") % 97)
+    val (n, m) = Instrumentation.measure(spark) {
+      df.groupBy("k").count().count() + df.filter(col("k") === 3).count()
+    }
+    assert(n == 97L + df.filter(col("k") === 3).count())
+    assert(m.jobs.size >= 2, m.jobs)
+    assert(m.jobs.forall(j => j.endMs >= j.startMs), m.jobs)
+    assert(m.jobs.forall(_.site.contains("InstrumentationSpec.scala")),
+      m.jobs.map(_.site))
+    assert(m.jobs.forall(j => j.startMs >= m.startMs && j.endMs <= m.endMs))
+    assert(m.gapsMs.size == m.jobs.size && m.gapsMs.forall(_ >= 0))
+    assert(m.driverGapS >= 0.0 && m.driverGapS <= (m.endMs - m.startMs) / 1e3)
+    assert(m.smallJobs <= m.jobs.size)
+    assert(m.executorCpuS > 0.0, m)
+  }
+
   test("epochUpsample is runtime-map-side: the claimed no-shuffle shape " +
        "holds in task metrics, not just the plan") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")

@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
   * skips the stats clamp (a planner DoS at scale) and the durability
   * rule, and a hand-rolled LogicalRDD unpersist is a second release
   * policy. This scan fails on either outside Ckpt.scala and the
-  * CheckpointStats bridge. Comments are stripped first, so prose may
+  * CheckpointStats bridge. Likewise Instrumentation is the only code
+  * that listens to Spark. Comments are stripped first, so prose may
   * still name the calls.
   */
 class LineageOwnershipSpec extends AnyFunSuite {
@@ -20,14 +21,16 @@ class LineageOwnershipSpec extends AnyFunSuite {
       .replaceAll("(?s)/\\*.*?\\*/", "")
       .replaceAll("//[^\n]*", "")
 
-  private val sources: Seq[(Path, String)] = {
+  private val allSources: Seq[(Path, String)] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root: $root")
     scala.util.Using.resource(Files.walk(root))(_.iterator.asScala
       .filter(_.toString.endsWith(".scala"))
-      .filterNot(p => owners(p.getFileName.toString))
       .map(p => p -> code(p)).toList)
   }
+
+  private val sources =
+    allSources.filterNot(s => owners(s._1.getFileName.toString))
 
   test("no src/main file outside Ckpt calls .checkpoint( or " +
        ".localCheckpoint( directly") {
@@ -46,5 +49,15 @@ class LineageOwnershipSpec extends AnyFunSuite {
         p.toString
     }
     assert(offenders.isEmpty, s"release cuts through Ckpt.release: $offenders")
+  }
+
+  test("no src/main file outside Instrumentation adds a Spark listener") {
+    val offenders = allSources.collect {
+      case (p, c) if c.contains("addSparkListener(") &&
+          p.getFileName.toString != "Instrumentation.scala" => p.toString
+    }
+    assert(allSources.exists(_._1.endsWith("graft/Instrumentation.scala")),
+      "the scan missed the measurement core")
+    assert(offenders.isEmpty, s"measure through Instrumentation: $offenders")
   }
 }

@@ -23,6 +23,23 @@ class OlistPipelineSpec extends SparkSpec {
     assert(cat.warehouse.exists("olist_orders_dataset"))
   }
 
+  test("olist_tests_gate builds fct_orders into its own empty per-run " +
+       "scratch warehouse, never a table an earlier run left behind") {
+    val scratch = new java.io.File(OlistOps.scratch)
+    assert(scratch.getParentFile ==
+        new java.io.File(System.getProperty("java.io.tmpdir")) &&
+      scratch.getName.endsWith("-" + ProcessHandle.current().pid()),
+      s"scratch is not per-run: $scratch")
+    // this JVM owns the dir; start the gate from an empty one
+    org.apache.commons.io.FileUtils.deleteDirectory(scratch)
+    val rows = graft.SparkEntry.queries("olist_tests_gate")(spark, "")
+      .collect().map(r => r.getString(0) -> r.getString(2)).toMap
+    assert(new java.io.File(scratch, "fct_orders").isDirectory)
+    assert(rows.keySet == Pipeline.testQueries(
+      Models.catalog(spark, OlistOps.scratch)).map(_._1).toSet)
+    assert(rows.values.forall(_ == "pass"), rows)
+  }
+
   test("left joins preserve every order (J1/J2 row preservation)") {
     val nOrders = cat.ref("olist_orders_dataset").count()
     assert(cat.warehouse.load("fct_orders").count() == nOrders)

@@ -1,23 +1,23 @@
 #!/usr/bin/env python3
-"""Gated sf1 bench record (VERDICT r10 "Next round" #6): run graft.TimeOp
-batch mode over the heavy tier + the next-10 heaviest entries against the
-ScaleGen sf1 dataset and write BENCH_SF1.json in the same {"queries":
-{name: seconds}} shape BENCH_LOCAL.json uses, so
-tools/check_bench_regression.py can gate it:
+"""Gated sf1 bench record: run graft.Bench over the heavy tier + the
+next-10 heaviest entries against the ScaleGen sf1 dataset and write
+BENCH_SF1.json in the same {"queries": {name: seconds}} shape
+BENCH_LOCAL.json uses, so tools/check_bench_regression.py can gate it:
 
   sbt -batch compile package
   GRAFT_MAIN=graft.ScaleGen tools/run_verify.sh /root/testdata/sf0.1 /tmp/testdata/sf1 10
-  python3 tools/bench_sf1.py                  # ~10 min, local[32]
+  python3 tools/bench_sf1.py
   python3 tools/check_bench_regression.py BENCH_SF1.json  # vs HEAD's copy
 
-Times recorded are TimeOp's warm-min (one warm-up pass + min of 3), the
-same statistic SCALING.md's slope tables use.
+Times recorded are each query's min over Bench's timed passes
+(`detail.<q>.min`: one untimed warm-up pass, then SPARK_GRAFT_BENCH_PASSES,
+default 3, interleaved passes), the statistic SCALING.md's slope tables use.
 """
 import json
 import os
-import re
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF1 = sys.argv[1] if len(sys.argv) > 1 else "/tmp/testdata/sf1"
@@ -40,23 +40,26 @@ NAMES = [
 
 def main():
     env = dict(os.environ)
-    env.setdefault("SPARK_GRAFT_CPUS", "32")
     env.setdefault("SPARK_DRIVER_MEM", "48g")
-    env["GRAFT_MAIN"] = "graft.TimeOp"
+    env["GRAFT_MAIN"] = "graft.Bench"
     # GRAFT_BENCH_NAMES: comma-separated subset override (the sf10 probe
     # times only the top heavy tier — 10x data makes the full 24-name
     # batch a multi-hour run); GRAFT_BENCH_SF labels the record.
     names = (os.environ["GRAFT_BENCH_NAMES"].split(",")
              if os.environ.get("GRAFT_BENCH_NAMES") else NAMES)
-    r = subprocess.run(
-        [f"{REPO}/tools/run_verify.sh", ",".join(names), SF1],
-        capture_output=True, text=True, env=env,
-        timeout=int(os.environ.get("GRAFT_BENCH_TIMEOUT", "7200")))
-    qs = {}
-    for line in r.stdout.splitlines():
-        m = re.match(r"TIMEOP (\S+) warm-min=([0-9.]+) s", line)
-        if m:
-            qs[m.group(1)] = float(m.group(2))
+    env["SPARK_GRAFT_SF_DIR"] = SF1
+    env["SPARK_GRAFT_BENCH_ONLY"] = ",".join(names)
+    with tempfile.TemporaryDirectory() as tmp:
+        env["SPARK_GRAFT_BENCH_OUT"] = os.path.join(tmp, "bench.json")
+        r = subprocess.run(
+            [f"{REPO}/tools/run_verify.sh"],
+            capture_output=True, text=True, env=env,
+            timeout=int(os.environ.get("GRAFT_BENCH_TIMEOUT", "7200")))
+        detail = {}
+        if r.returncode == 0:
+            with open(env["SPARK_GRAFT_BENCH_OUT"]) as f:
+                detail = json.load(f)["detail"]
+    qs = {n: detail[n]["min"] for n in names if n in detail}
     missing = [n for n in names if n not in qs]
     if r.returncode != 0 or missing:
         print(r.stdout[-3000:])

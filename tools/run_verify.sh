@@ -8,7 +8,7 @@
 # Usage:
 #   tools/run_verify.sh <sfDir> <outDir> [queryName...]
 # Env:
-#   SPARK_GRAFT_CPUS    core count for local mode (default 8)
+#   SPARK_GRAFT_CPUS    core count for local mode (default: all cores)
 #   SPARK_GRAFT_MASTER  e.g. local-cluster[2,8,4096] (multi-JVM mode;
 #                       SPARK_SCALA_VERSION and SPARK_GRAFT_JARS are set
 #                       automatically for it)

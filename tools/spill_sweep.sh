@@ -10,9 +10,9 @@
 #   tools/spill_sweep.sh /root/testdata/sf0.01 /tmp/spill_tiny
 #   python3 tools/check_determinism.py /tmp/spill_local /tmp/spill_tiny
 #
-# The [graft-metrics] line this prints at application end is the evidence
-# that spills actually happened (memoryBytesSpilled > 0), not merely that
-# memory was configured small.
+# The [graft-metrics] line Verify prints last is the evidence that spills
+# actually happened (memoryBytesSpilled > 0), not merely that memory was
+# configured small.
 set -euo pipefail
 HERE="$(cd "$(dirname "$0")" && pwd)"
 SF="${1:-/root/testdata/sf0.01}"
@@ -25,7 +25,6 @@ export SPARK_GRAFT_MASTER="${SPARK_GRAFT_MASTER:-local-cluster[2,8,1200]}"
 # hash/sort state several times that. Both knobs exist ONLY to push the
 # runs through ExternalSorter/UnsafeExternalSorter serialization.
 export SPARK_GRAFT_CONF="${SPARK_GRAFT_CONF:-spark.memory.fraction=0.1;spark.sql.shuffle.partitions=4}"
-export SPARK_GRAFT_METRICS=1
 export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-8g}"
 
 exec "$HERE/run_verify.sh" "$SF" "$OUT" "$@"
