@@ -2,16 +2,37 @@ package graft.functions
 
 import java.security.MessageDigest
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+/** The input-type check of a kernel over a token or shingle array:
+  * analysis fails on any child type but array<string>.
+  */
+sealed trait StringArrayInput extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(e, _) if e == StringType => TypeCheckSuccess
+    case other => TypeCheckFailure(s"input must be array<string>, got $other")
+  }
+}
+
+/** The input-type check of a kernel over a document string: analysis
+  * fails on any child type but string.
+  */
+sealed trait StringInput extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckSuccess
+    else TypeCheckFailure(s"input must be string, got ${child.dataType}")
+}
+
 /** Native portable-minhash signature kernel.
   *
   * `minhash_md5(shingles, k)` computes the k-wide md5-sliced minhash
-  * signature of Dedup.minhashSignaturesPortable in ONE pass over the
+  * signature of the portable Dedup.minhashSignatures in ONE pass over the
   * shingle array: hash h of a shingle is the 4-hex-char slice h%8 of
   * md5("(h/8):shingle") and the signature entry is the minimum over
   * shingles (fixed-width lowercase hex, so string order == numeric
@@ -27,7 +48,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * DuckDB oracle replay is untouched.
   */
 case class MinhashMd5Sigs(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with StringArrayInput {
 
   require(k > 0, s"k must be positive, got $k")
 
@@ -39,14 +60,6 @@ case class MinhashMd5Sigs(child: Expression, k: Int)
   // Unreachable from shinglesOfTokens (it always emits one element), but
   // latent divergence if shingle generation ever changes.
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[ArrayType] &&
-      child.dataType.asInstanceOf[ArrayType].elementType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"input must be array<string>, got ${child.dataType}")
 
   override def nullSafeEval(a: Any): Any =
     MinhashMd5.compute(a.asInstanceOf[ArrayData], k)
@@ -72,24 +85,15 @@ case class MinhashMd5Sigs(child: Expression, k: Int)
   * exact Jaccard verify downstream keeps outputs exact regardless.
   */
 case class MinhashXxSigs(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with StringArrayInput {
 
   require(k > 0, s"k must be positive, got $k")
 
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
 
-  // same empty-array null contract as MinhashMd5Sigs (the fast path kept
-  // Long.MaxValue sentinels before — inconsistent with the md5 kernel)
+  // same empty-array null contract as MinhashMd5Sigs
   override def nullable: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[ArrayType] &&
-      child.dataType.asInstanceOf[ArrayType].elementType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"input must be array<string>, got ${child.dataType}")
 
   override def nullSafeEval(a: Any): Any =
     MinhashMd5.computeXx(a.asInstanceOf[ArrayData], k)
@@ -111,7 +115,7 @@ case class MinhashXxSigs(child: Expression, k: Int)
   * fast family), accumulate 64 ones-counts locally, and set signature bit
   * b iff ones(b)*2 > n (the +1/-1 sign test). Bit layout matches the
   * composed formulations exactly: portable bit b reads hex nibble b/4,
-  * bit b%4 LSB-first (== Dedup.simhashChunksPortable / packed), fast bit
+  * bit b%4 LSB-first (== the portable Dedup.simhash chunks), fast bit
   * b reads bit b of xxhash64(token) — so the DuckDB oracle replay of the
   * portable path is untouched.
   *
@@ -123,17 +127,9 @@ case class MinhashXxSigs(child: Expression, k: Int)
   * aggregate, no exchange, embarrassingly parallel at any corpus size.
   */
 case class SimhashSigs(child: Expression, portable: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with StringArrayInput {
 
   override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[ArrayType] &&
-      child.dataType.asInstanceOf[ArrayType].elementType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"input must be array<string>, got ${child.dataType}")
 
   override def nullSafeEval(a: Any): Any =
     MinhashMd5.computeSimhash(a.asInstanceOf[ArrayData], portable)
@@ -157,18 +153,11 @@ case class SimhashSigs(child: Expression, portable: Boolean)
   * byte-identical to the composed formulation the DuckDB oracle replays.
   */
 case class MinWindowMd5(child: Expression, window: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with StringInput {
 
   require(window > 0, s"window must be positive, got $window")
 
   override def dataType: DataType = StringType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"input must be string, got ${child.dataType}")
 
   override def nullSafeEval(a: Any): Any =
     MinhashMd5.computeMinWindow(a.asInstanceOf[UTF8String], window)
@@ -205,7 +194,7 @@ case class MinWindowMd5(child: Expression, window: Int)
   *     pipeline (windows are ~n x the corpus bytes).
   */
 case class WindowsWithPos(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with StringArrayInput {
 
   require(n > 0, s"n must be positive, got $n")
 
@@ -214,14 +203,6 @@ case class WindowsWithPos(child: Expression, n: Int)
       StructField("pos", IntegerType, nullable = false),
       StructField("w", StringType, nullable = false))),
     containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[ArrayType] &&
-      child.dataType.asInstanceOf[ArrayType].elementType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"input must be array<string>, got ${child.dataType}")
 
   override def nullSafeEval(a: Any): Any =
     MinhashMd5.computeWindowsWithPos(a.asInstanceOf[ArrayData], n)
@@ -262,7 +243,7 @@ case class WindowsWithPos(child: Expression, n: Int)
   * (no per-gram substring allocation).
   */
 case class WinnowFps(child: Expression, gram: Int, win: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with StringInput {
 
   require(gram > 0 && win > 0, s"need positive gram/win, got ($gram, $win)")
 
@@ -271,13 +252,6 @@ case class WinnowFps(child: Expression, gram: Int, win: Int)
       StructField("pos", LongType, nullable = false),
       StructField("fp", StringType, nullable = false))),
     containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"input must be string, got ${child.dataType}")
 
   override def nullSafeEval(a: Any): Any =
     MinhashMd5.computeWinnow(a.asInstanceOf[UTF8String], gram, win)
@@ -315,19 +289,11 @@ case class WinnowFps(child: Expression, gram: Int, win: Int)
   * byte-identical, so every DuckDB oracle replay is untouched.
   */
 case class TokenShingles(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with StringArrayInput {
 
   require(n > 0, s"n must be positive, got $n")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[ArrayType] &&
-      child.dataType.asInstanceOf[ArrayType].elementType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-      .TypeCheckFailure(s"input must be array<string>, got ${child.dataType}")
 
   override def nullSafeEval(a: Any): Any =
     MinhashMd5.computeShingles(a.asInstanceOf[ArrayData], n)

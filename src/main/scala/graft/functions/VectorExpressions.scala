@@ -614,8 +614,8 @@ object GraftFunctions {
     call_function("md5_bits", s,
       org.apache.spark.sql.functions.lit(start),
       org.apache.spark.sql.functions.lit(len))
-  def simhashMd5(tokens: Column): Column = call_function("simhash_md5", tokens)
-  def simhashXx(tokens: Column): Column = call_function("simhash_xx", tokens)
+  def simhash(tokens: Column, portable: Boolean): Column =
+    call_function(if (portable) "simhash_md5" else "simhash_xx", tokens)
   def bloomAgg(hashed: Column, estItems: Long, numBits: Long): Column =
     call_function("graft_bloom_agg", hashed,
       org.apache.spark.sql.functions.lit(estItems),

@@ -94,9 +94,9 @@ object Classify {
     // statistics, the smoothed ln probabilities, the token-ordered
     // per-class fold, and the argmax — the full train+predict cycle.
     Op("text_naive_bayes",
-       """WITH toks AS (
+       s"""WITH toks AS (
          |  SELECT doc_id,
-         |         string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ') AS toks
+         |         ${TextFeatures.toksSql} AS toks
          |  FROM documents),
          |ex AS (SELECT doc_id, unnest(toks) AS tok FROM toks),
          |vocab AS (

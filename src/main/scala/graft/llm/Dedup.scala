@@ -61,44 +61,28 @@ object Dedup {
     docs.select(col(idCol),
       shinglesOfTokens(TextFeatures.tokens(col(textCol)), n).as("sh"))
 
-  /** k minhashes per doc: each shingle is string-hashed ONCE (XXH64),
-    * and the k hash functions are splitmix64 remixes of the 8-byte base —
-    * all inside the NATIVE minhash_xx kernel
-    * (functions/MinhashExpressions.scala), so the string bytes are
-    * traversed once per shingle and the k remixes are plain JVM long
-    * arithmetic (the composed formulation ran k xxhash64 calls per
-    * shingle inside interpreted higher-order lambdas; splitmix's modular
-    * arithmetic is unexpressible in SQL under ANSI overflow checking). A
-    * single map-only projection chain: no explode, no shuffle,
-    * embarrassingly parallel at any corpus size.
+  /** (id, sig): k minhashes per doc, computed in one pass over the
+    * shingle array by a NATIVE kernel (functions/MinhashExpressions.scala)
+    * as a single map-only projection — no explode, no shuffle.
+    *   - fast (`portable = false`, minhash_xx): each shingle is XXH64'd
+    *     once and the k hashes are splitmix64 remixes of that base, an
+    *     array<bigint> (splitmix's modular arithmetic is unexpressible in
+    *     SQL under ANSI overflow checking).
+    *   - portable (minhash_md5): hash h of a shingle is the 4-hex-char
+    *     slice h%8 of md5("(h/8):shingle") and the entry is the
+    *     lexicographic min over shingles (fixed-width hex, so string
+    *     order == numeric order). Both engines md5 identical UTF-8 bytes
+    *     and compare ASCII hex identically, so the whole near-dup
+    *     pipeline — candidates included — replays in the DuckDB oracle
+    *     byte-for-byte.
     */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int = 64): DataFrame =
-    withShingles(docs, idCol, textCol)
-      .select(col(idCol),
-        graft.functions.GraftFunctions.minhashXx(col("sh"), k).as("sig"))
-
-  /** k minhashes per doc, PORTABLE mode: each md5 call yields EIGHT 16-bit
-    * hash values (the 4-hex-char slices of the digest), so hash h of a
-    * shingle is slice h%8 of md5("(h/8):shingle") and the signature entry
-    * is the lexicographic min over shingles (fixed-width hex, so string
-    * order == numeric order). Both engines md5 identical UTF-8 bytes and
-    * compare ASCII hex identically, so the whole near-dup pipeline —
-    * candidates included — replays in the DuckDB oracle byte-for-byte.
-    * The k-wide signature is computed by the NATIVE minhash_md5 kernel
-    * (functions/MinhashExpressions.scala) — one pass over the shingle
-    * array in tight JVM code. The previous composed formulation ran
-    * md5 + substring inside interpreted higher-order lambdas (~4x the
-    * digest cost; the explode + k-way min() aggregate alternative was
-    * worse still — its generated update path blows past JIT method
-    * limits). Same map-only plan shape as the fast path; use the xxhash64
-    * path when cross-engine reproducibility isn't needed.
-    */
-  def minhashSignaturesPortable(docs: DataFrame, idCol: String,
-                                textCol: String, k: Int = 64): DataFrame =
-    withShingles(docs, idCol, textCol)
-      .select(col(idCol), col("sh"),
-        graft.functions.GraftFunctions.minhashMd5(col("sh"), k).as("sig"))
+                        k: Int = 64, portable: Boolean = false): DataFrame = {
+    val sig =
+      if (portable) graft.functions.GraftFunctions.minhashMd5(col("sh"), k)
+      else graft.functions.GraftFunctions.minhashXx(col("sh"), k)
+    withShingles(docs, idCol, textCol).select(col(idCol), sig.as("sig"))
+  }
 
   /** (doc_id, band, band_sig) — one row per band of the signature array.
     * b bands of r rows, k = b * r; `sig` is a physical column here, so the
@@ -109,9 +93,7 @@ object Dedup {
   def lshBands(docs: DataFrame, idCol: String, textCol: String,
                bands: Int, rows: Int,
                portable: Boolean = false): DataFrame = {
-    val sigs =
-      if (portable) minhashSignaturesPortable(docs, idCol, textCol, bands * rows)
-      else minhashSignatures(docs, idCol, textCol, bands * rows)
+    val sigs = minhashSignatures(docs, idCol, textCol, bands * rows, portable)
     def bandSig(b: Column): Column = {
       val bandSlice = slice(col("sig"), b * rows + 1, lit(rows))
       if (portable) md5(concat_ws("|", bandSlice)) else xxhash64(bandSlice)
@@ -714,32 +696,36 @@ object Dedup {
       .agg(count(lit(1)).as("n_contaminated"))
   }
 
-  /** 64-bit SimHash of the token multiset: per bit, sum +1/-1 over token
-    * hashes; the sign picks the bit. Computed by the NATIVE simhash_xx
-    * kernel (functions/MinhashExpressions.scala) as ONE map-side
-    * expression over the token array — no explode, no 65-column
-    * aggregate, no shuffle (the previous composed form paid an exchange
-    * per consumer, twice in the near-dup self-join). Bit values are
-    * identical: the kernel's XXH64 matches Spark's xxhash64(token) and
-    * the 2*ones > n sign test equals the +1/-1 sum sign.
+  /** (id, simhash): the 64-bit SimHash of the token multiset — per bit,
+    * the sign of the +1/-1 sum over token hashes. Computed by the NATIVE
+    * SimhashSigs kernel (functions/MinhashExpressions.scala) as ONE
+    * map-side expression over the token array: no explode, no
+    * 65-column aggregate, no shuffle.
+    *   - fast (simhash_xx): bit b is bit b of xxhash64(token).
+    *   - portable (simhash_md5): bit b is bit b%4 (LSB first) of md5 hex
+    *     nibble b/4, so chunk c (bits 8c..8c+7) is the value the DuckDB
+    *     oracle derives from the same hex digits.
     */
   def simhash(docs: DataFrame, idCol: String = "doc_id",
-              textCol: String = "text"): DataFrame =
+              textCol: String = "text",
+              portable: Boolean = false): DataFrame =
     docs.select(col(idCol), TextFeatures.tokens(col(textCol)).as("toks"))
       .select(col(idCol),
-        graft.functions.GraftFunctions.simhashXx(col("toks")).as("simhash"))
+        graft.functions.GraftFunctions.simhash(col("toks"), portable)
+          .as("simhash"))
 
   /** SimHash near-dups: candidates share one of EIGHT 8-bit chunks
     * (equi-join on (chunk index, chunk value) — pigeonhole guarantees no
     * misses up to hamming distance 7, so the default maxHamming = 6 is
-    * lossless; the previous 4x16 chunking only covered distance <= 3),
-    * verified by exact popcount. Join formulation for the same straggler
-    * reason as minHashNearDups.
+    * lossless), verified by exact popcount. Join formulation for the same
+    * straggler reason as minHashNearDups. Only the token hash depends on
+    * `portable`; candidates and verify are the same plan either way.
     */
   def simHashNearDups(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text",
-                      maxHamming: Int = 6): DataFrame = {
-    val sig = simhash(docs, idCol, textCol)
+                      maxHamming: Int = 6,
+                      portable: Boolean = false): DataFrame = {
+    val sig = simhash(docs, idCol, textCol, portable)
     val chunked = sig.select(col(idCol), col("simhash"),
       posexplode(array((0 until 8).map(c =>
         shiftright(col("simhash"), c * 8).bitwiseAND(0xFFL)): _*))
@@ -750,62 +736,6 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** PORTABLE SimHash: the per-token hash is md5, with bit b of the
-    * first 64 signature bits read from hex nibble b/4 (bit b%4, LSB
-    * first). This builder returns the EIGHT 8-bit chunk VALUES — the
-    * cross-engine contract the DuckDB oracle derives from the same md5
-    * hex, so candidates AND verification replay exactly. The engine-side
-    * pipeline packs those chunks into one long (simhashPackedPortable —
-    * a Spark-internal, value-preserving layout choice the oracle never
-    * sees). Same plan shape as the fast path: map-side hashing, one
-    * partial+final aggregate per doc, chunk equi-join, popcount verify.
-    */
-  def simhashChunksPortable(docs: DataFrame, idCol: String = "doc_id",
-                            textCol: String = "text"): DataFrame =
-    simhashPackedPortable(docs, idCol, textCol)
-      .select(col(idCol),
-        array((0 until 8).map(c =>
-          shiftright(col("simhash"), c * 8).bitwiseAND(0xFFL).cast("int")): _*)
-          .as("chunks"))
-
-  /** The portable signature PACKED into one long (chunk c in bits
-    * 8c..8c+7, the same layout as the fast path) — computed by the
-    * NATIVE simhash_md5 kernel as one map-side expression over the token
-    * array: no explode, no 65-column aggregate, no shuffle. The packed
-    * long is also what the candidate join shuffles (one long per row)
-    * and what the verify popcounts in a single codegen'd bit_count(xor).
-    */
-  def simhashPackedPortable(docs: DataFrame, idCol: String = "doc_id",
-                            textCol: String = "text"): DataFrame =
-    docs.select(col(idCol), TextFeatures.tokens(col(textCol)).as("toks"))
-      .select(col(idCol),
-        graft.functions.GraftFunctions.simhashMd5(col("toks")).as("simhash"))
-
-  /** simHashNearDups over the portable signature — EXACTLY the fast
-    * path's join/verify shape (packed-long chunks, popcount verify);
-    * only the per-token hash family differs. Chunk values, candidates,
-    * and hamming distances are identical to the chunk-array formulation,
-    * so the DuckDB oracle replay is unchanged.
-    */
-  def simHashNearDupsPortable(docs: DataFrame, idCol: String = "doc_id",
-                              textCol: String = "text",
-                              maxHamming: Int = 6): DataFrame = {
-    val sig = simhashPackedPortable(docs, idCol, textCol)
-    val chunked = sig.select(col(idCol), col("simhash"),
-      posexplode(array((0 until 8).map(c =>
-        shiftright(col("simhash"), c * 8).bitwiseAND(0xFFL)): _*))
-        .as(Seq("chunk", "chunk_val")))
-    chunked.toDF("id_a", "sig_a", "chunk", "chunk_val")
-      .join(chunked.toDF("id_b", "sig_b", "chunk", "chunk_val"),
-        Seq("chunk", "chunk_val"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long")
-          .as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }

@@ -340,16 +340,9 @@ object Evals {
 
   // --- oracle SQL -----------------------------------------------------
 
-  // SCHEMA CONTRACT (ADVICE r11): documents.text is NON-NULL — declared
-  // nullable=false by every generator (driver testdata, FuzzGen,
-  // ScaleGen). The whole text tier's oracle parity leans on it: a NULL
-  // text would make Spark's legacy size(NULL) yield n_words = -1 while
-  // the DuckDB replay yields NULL, a silent hash divergence. If a real
-  // deployment ever feeds nullable text, coalesce(text, '') belongs at
-  // the INGEST boundary (Jsonl/Xml quarantine split), not per-operator.
-  private val toksSql =
-    "list_filter(string_split(regexp_replace(trim(lower(text)), " +
-      "'\\s+', ' ', 'g'), ' '), x -> x <> '')"
+  // Non-empty tokens of the shared normal form (documents.text is
+  // NON-NULL: see the schema contract at TextFeatures.normSql).
+  private val toksSql = s"list_filter(${TextFeatures.toksSql}, x -> x <> '')"
 
   val ops: Seq[Op] = Seq(
 

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{Op, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Driver-facing LLM-data-pipeline operators over the `documents` and
@@ -16,13 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object LlmOps {
 
-  // Shared SQL fragments for the oracle side (DuckDB dialect).
-  // SCHEMA CONTRACT: documents.text is NON-NULL (see the fuller note at
-  // Evals.toksSql — every generator declares it nullable=false, and the
-  // text tier's Spark-vs-DuckDB NULL conventions differ).
-  private val normSql =
-    "regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')"
-  private val toksSql = s"string_split($normSql, ' ')"
+  import TextFeatures.{normSql, toksSql}
 
   /** Recursive-CTE replay of [[Bpe.train]] — the TRAINING loop itself,
     * not just a frozen walk: the corpus word histogram (top `vocabWords`
@@ -161,23 +156,17 @@ object LlmOps {
        |  FROM (SELECT DISTINCT step, ma, mb FROM wtr WHERE step >= 1))"""
       .stripMargin
 
-  /** Viterbi DP + backtrack CTE group (the llm_unigram_encode_frozen
-    * machinery, generalized over its inputs): best segmentation of every
-    * word in `wordsRel(word, …)` under the piece scores of
-    * `modelRel(piece, lp)`. Emits `uus$sfx` (the DP recursion carrying
-    * score/backpointer/piece-count lists, advancing one position per
-    * step), `uok$sfx(word, bk)` (words that reached the end — every
-    * other word is unsegmentable, exactly viterbi's Nil), and
-    * `ubt$sfx(word, pos)` (the backpointer walk: the piece consumed at
-    * a row is `bk[pos + 1]`). With a FLOAT model the replay stays exact
-    * because every score is a fixed-order sum of ln values DuckDB and
-    * the JVM agree on bit-for-bit (java.lang.Math.log ≡ DuckDB ln — the
-    * ieee_ln precedent), so even `s == score(i)` ties replay.
+  /** The Viterbi DP recursion `name(word, i, sc, bk, np)`: one position
+    * per step, carrying score/backpointer/piece-count lists, over the
+    * words of `wordsRel` and the pieces of `model` (a relation aliased
+    * `m` with columns piece, lp). `zero` is the seed score literal, which
+    * fixes the score type (DOUBLE for trained models, BIGINT for the
+    * integer-valued frozen model).
     */
-  private def unigramViterbiCtes(sfx: String, wordsRel: String,
-                                 modelRel: String): String =
-    s"""uus$sfx(word, i, sc, bk, np) AS (
-       |  SELECT word, CAST(0 AS BIGINT), [CAST(0.0 AS DOUBLE)],
+  private def viterbiDpCte(name: String, wordsRel: String, model: String,
+                           zero: String): String =
+    s"""$name(word, i, sc, bk, np) AS (
+       |  SELECT word, CAST(0 AS BIGINT), [$zero],
        |         [CAST('' AS VARCHAR)], [CAST(0 AS BIGINT)]
        |  FROM $wordsRel
        |  UNION ALL
@@ -202,12 +191,30 @@ object LlmOps {
        |               substr(word,
        |                      CAST(i + 1 AS INT) - CAST(len AS INT) + 1,
        |                      CAST(len AS INT)) AS cand
-       |        FROM uus$sfx WHERE i < length(word)) s0
-       |      LEFT JOIN $modelRel m ON s0.len > 0 AND m.piece = s0.cand
+       |        FROM $name WHERE i < length(word)) s0
+       |      LEFT JOIN $model ON s0.len > 0 AND m.piece = s0.cand
        |      WHERE s0.len = 0
        |         OR (m.piece IS NOT NULL
        |             AND s0.sc[s0.i - s0.len + 1] IS NOT NULL)) c) z
-       |  WHERE z.rn = 1),
+       |  WHERE z.rn = 1)""".stripMargin
+
+  /** Viterbi DP + backtrack CTE group (the llm_unigram_encode_frozen
+    * machinery, generalized over its inputs): best segmentation of every
+    * word in `wordsRel(word, …)` under the piece scores of
+    * `modelRel(piece, lp)`. Emits `uus$sfx` (the DP recursion carrying
+    * score/backpointer/piece-count lists, advancing one position per
+    * step), `uok$sfx(word, bk)` (words that reached the end — every
+    * other word is unsegmentable, exactly viterbi's Nil), and
+    * `ubt$sfx(word, pos)` (the backpointer walk: the piece consumed at
+    * a row is `bk[pos + 1]`). With a FLOAT model the replay stays exact
+    * because every score is a fixed-order sum of ln values DuckDB and
+    * the JVM agree on bit-for-bit (java.lang.Math.log ≡ DuckDB ln — the
+    * ieee_ln precedent), so even `s == score(i)` ties replay.
+    */
+  private def unigramViterbiCtes(sfx: String, wordsRel: String,
+                                 modelRel: String): String =
+    s"""${viterbiDpCte(s"uus$sfx", wordsRel, s"$modelRel m",
+         "CAST(0.0 AS DOUBLE)")},
        |uok$sfx AS MATERIALIZED (
        |  SELECT word, bk FROM (
        |    SELECT word, i, sc, bk,
@@ -615,18 +622,17 @@ object LlmOps {
        |           / 1073741824.0 AS log_w
        |  FROM dbuck JOIN lam USING (bucket) GROUP BY 1)""".stripMargin
 
-  /** DuckDB replay of the PORTABLE MinHash near-dup pipeline (md5 string
-    * hashes — see Dedup.minhashSignaturesPortable). Generated, not
-    * hand-written: the k signature expressions mirror the Spark builder
-    * loop exactly, so the two can only drift if the parameters drift.
-    */
-  /** The toks/sh/sigs/bands CTE chain shared by the self-join and the
-    * incremental (new-batch-vs-index) MinHash oracles.
+  /** The toks/sh/sigs/bands CTE chain of the PORTABLE MinHash near-dup
+    * pipeline (md5 string hashes — see Dedup.minhashSignatures), shared
+    * by the self-join and the incremental (new-batch-vs-index) oracles.
+    * Generated, not hand-written: the k signature expressions mirror the
+    * Spark builder loop exactly, so the two can only drift if the
+    * parameters drift.
     */
   private def minhashBandsCtes(bands: Int, rows: Int, from: String): String = {
     val k = bands * rows
     // hash h = 4-hex-char slice h%8 of md5("(h/8):shingle"), mirroring
-    // minhashSignaturesPortable's md5-slicing exactly
+    // the portable minhashSignatures' md5-slicing exactly
     val sigArr = (0 until k).map { h =>
       s"list_aggregate(list_transform(sh, s -> " +
         s"substr(md5(concat('${h / 8}:', s)), ${(h % 8) * 4 + 1}, 4)), 'min')"
@@ -898,6 +904,58 @@ object LlmOps {
       |      WHERE km.iter < 5) p)
       |  GROUP BY iter, k, i)""".stripMargin
 
+  /** (n_true, n_found, recall) of the (query_id, neighbor_id) pairs in
+    * `found` against those in `truth` — the Spark side of recallTailSql.
+    */
+  private def recallOf(truth: DataFrame, found: DataFrame): DataFrame = {
+    def tagged(df: DataFrame, t: Int) =
+      df.select(col("query_id"), col("neighbor_id"),
+        lit(t).as("t"), lit(1 - t).as("f"))
+    tagged(truth, 1).unionByName(tagged(found, 0))
+      .groupBy(col("query_id"), col("neighbor_id"))
+      .agg(max(col("t")).as("t"), max(col("f")).as("f"))
+      .agg(sum(col("t")).as("n_true"),
+        sum(when(col("t") === 1 && col("f") === 1, 1).otherwise(0))
+          .as("n_found"))
+      .select(col("n_true"), col("n_found"),
+        (col("n_found").cast("double") / col("n_true").cast("double"))
+          .as("recall"))
+  }
+
+  /** The exact top-k neighbours of each of the first nQueries vectors
+    * under `order` (an ORDER BY key with its direction; ties break by
+    * vec_id), as (query_id, neighbor_id) rows.
+    */
+  private def topKPairsSql(order: String, nQueries: Int, k: Int): String =
+    s"""  SELECT query_id, neighbor_id FROM (
+       |    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+       |           row_number() OVER (PARTITION BY a.vec_id
+       |                              ORDER BY $order, b.vec_id) AS rank
+       |    FROM embeddings a, embeddings b
+       |    WHERE a.vec_id < $nQueries AND b.vec_id <> a.vec_id)
+       |  WHERE rank <= $k""".stripMargin
+
+  /** The tail of every kNN recall oracle: the exact `truth` top-k under
+    * `truthOrder`, the neighbours of relation `found` tagged against it,
+    * and the (n_true, n_found, recall) row.
+    */
+  private def recallTailSql(truthOrder: String, found: String,
+                            nQueries: Int, k: Int): String =
+    s"""truth AS (
+       |${topKPairsSql(truthOrder, nQueries, k)}),
+       |tagged AS (
+       |  SELECT query_id, neighbor_id, max(t) AS t, max(f) AS f FROM (
+       |    SELECT query_id, neighbor_id, 1 AS t, 0 AS f FROM truth
+       |    UNION ALL SELECT query_id, neighbor_id, 0, 1 FROM $found)
+       |  GROUP BY 1, 2)
+       |SELECT CAST(sum(t) AS BIGINT) AS n_true,
+       |       CAST(sum(CASE WHEN t = 1 AND f = 1 THEN 1 ELSE 0 END)
+       |            AS BIGINT) AS n_found,
+       |       CAST(sum(CASE WHEN t = 1 AND f = 1 THEN 1 ELSE 0 END)
+       |            AS DOUBLE)
+       |         / CAST(sum(t) AS DOUBLE) AS recall
+       |FROM tagged""".stripMargin
+
   /** DuckDB replay of the int8-quantization recall harness: quantized
     * codes per quantizeInt8's exact recipe, exact integer-dot top-k on
     * the codes, exact cosine top-k as truth, recall of the overlap.
@@ -936,27 +994,7 @@ object LlmOps {
        |    FROM q a, q b
        |    WHERE a.vec_id < $nQueries AND b.vec_id <> a.vec_id)
        |  WHERE rank <= $k),
-       |truth AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY a.vec_id
-       |                              ORDER BY ${cosineSql(dim)} DESC,
-       |                                       b.vec_id) AS rank
-       |    FROM embeddings a, embeddings b
-       |    WHERE a.vec_id < $nQueries AND b.vec_id <> a.vec_id)
-       |  WHERE rank <= $k),
-       |tagged AS (
-       |  SELECT query_id, neighbor_id, max(t) AS t, max(f) AS f FROM (
-       |    SELECT query_id, neighbor_id, 1 AS t, 0 AS f FROM truth
-       |    UNION ALL SELECT query_id, neighbor_id, 0, 1 FROM int8)
-       |  GROUP BY 1, 2)
-       |SELECT CAST(sum(t) AS BIGINT) AS n_true,
-       |       CAST(sum(CASE WHEN t = 1 AND f = 1 THEN 1 ELSE 0 END)
-       |            AS BIGINT) AS n_found,
-       |       CAST(sum(CASE WHEN t = 1 AND f = 1 THEN 1 ELSE 0 END)
-       |            AS DOUBLE)
-       |         / CAST(sum(t) AS DOUBLE) AS recall
-       |FROM tagged""".stripMargin
+       |${recallTailSql(s"${cosineSql(dim)} DESC", "int8", nQueries, k)}""".stripMargin
   }
 
   private def ivfRecallOracleSql(nCents: Int, nprobe: Int, k: Int,
@@ -999,27 +1037,7 @@ object LlmOps {
        |      JOIN embeddings a ON a.vec_id = p.query_id
        |      JOIN embeddings b ON b.vec_id = n.vec_id) s)
        |  WHERE rank <= $k),
-       |truth AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY a.vec_id
-       |                              ORDER BY ${cosineSql(dim)} DESC,
-       |                                       b.vec_id) AS rank
-       |    FROM embeddings a, embeddings b
-       |    WHERE a.vec_id < $nQueries AND b.vec_id <> a.vec_id)
-       |  WHERE rank <= $k),
-       |tagged AS (
-       |  SELECT query_id, neighbor_id, max(t) AS t, max(f) AS f FROM (
-       |    SELECT query_id, neighbor_id, 1 AS t, 0 AS f FROM truth
-       |    UNION ALL SELECT query_id, neighbor_id, 0, 1 FROM ivf)
-       |  GROUP BY 1, 2)
-       |SELECT CAST(sum(t) AS BIGINT) AS n_true,
-       |       CAST(sum(CASE WHEN t = 1 AND f = 1 THEN 1 ELSE 0 END)
-       |            AS BIGINT) AS n_found,
-       |       CAST(sum(CASE WHEN t = 1 AND f = 1 THEN 1 ELSE 0 END)
-       |            AS DOUBLE)
-       |         / CAST(sum(t) AS DOUBLE) AS recall
-       |FROM tagged""".stripMargin
+       |${recallTailSql(s"${cosineSql(dim)} DESC", "ivf", nQueries, k)}""".stripMargin
   }
 
   /** DuckDB replay of the PINNED-CODEBOOK PQ-ADC pipeline plus its recall
@@ -1078,30 +1096,11 @@ object LlmOps {
        |                              ORDER BY d ASC, vid) AS rank
        |    FROM adc)
        |  WHERE rank <= $k),
-       |truth AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |           row_number() OVER (PARTITION BY a.vec_id
-       |                              ORDER BY $exactSq ASC, b.vec_id) AS rank
-       |    FROM embeddings a, embeddings b
-       |    WHERE a.vec_id < $nQueries AND b.vec_id <> a.vec_id)
-       |  WHERE rank <= $k),
-       |tagged AS (
-       |  SELECT query_id, neighbor_id, max(t) AS t, max(f) AS f FROM (
-       |    SELECT query_id, neighbor_id, 1 AS t, 0 AS f FROM truth
-       |    UNION ALL SELECT query_id, neighbor_id, 0, 1 FROM pq)
-       |  GROUP BY 1, 2)
-       |SELECT CAST(sum(t) AS BIGINT) AS n_true,
-       |       CAST(sum(CASE WHEN t = 1 AND f = 1 THEN 1 ELSE 0 END)
-       |            AS BIGINT) AS n_found,
-       |       CAST(sum(CASE WHEN t = 1 AND f = 1 THEN 1 ELSE 0 END)
-       |            AS DOUBLE)
-       |         / CAST(sum(t) AS DOUBLE) AS recall
-       |FROM tagged""".stripMargin
+       |${recallTailSql(s"$exactSq ASC", "pq", nQueries, k)}""".stripMargin
   }
 
   /** DuckDB replay of the PORTABLE SimHash near-dup pipeline (md5 nibble
-    * bits, 8x8-bit chunk signature — see Dedup.simhashChunksPortable).
+    * bits, 8x8-bit chunk signature — see Dedup.simhash).
     */
   private def simhashOracleSql(maxHamming: Int): String = {
     val bitSums = (0 until 64).map { b =>
@@ -1455,14 +1454,9 @@ object LlmOps {
     },
 
     // MinHash-LSH near-dup pairs (banding join, no cross join anywhere in
-    // the plan). The driver entry runs the PORTABLE md5 signature mode so
-    // candidate generation itself replays in DuckDB and the whole pipeline
-    // hash-matches; the xxhash64 fast path keeps the same plan shape and is
-    // covered by DedupSpec (planted near-dups, recall vs exact Jaccard).
-    // 8 bands x 4 rows for the portable entry: the oracle replays candidate
-    // generation identically, so the hash-match is insensitive to LSH
-    // recall and the smaller k halves the (md5-heavy) signature cost; the
-    // fast path keeps the 16x4 default.
+    // the plan) in the PORTABLE md5 hash family, so candidate generation
+    // itself replays in DuckDB and the whole pipeline hash-matches at any
+    // LSH recall. 8 bands x 4 rows, like dedup_minhash_fast.
     Op("dedup_minhash", minhashOracleSql(bands = 8, rows = 4,
         threshold = 0.8)) { (s, d) =>
       Dedup.minHashNearDups(Tables.documents(s, d), bands = 8, rows = 4,
@@ -1470,17 +1464,14 @@ object LlmOps {
     },
 
     // SimHash near-dup pairs (8-bit chunk pigeonhole join, lossless to
-    // hamming <= 7 + exact popcount verify). Portable md5-nibble mode for
-    // the oracle; xxhash64 fast path tested in DedupSpec.
+    // hamming <= 7 + exact popcount verify) in the portable md5-nibble
+    // family. The oracle's hamming is BIGINT, so the entry widens it.
     Op("dedup_simhash", simhashOracleSql(maxHamming = 6)) { (s, d) =>
-      Dedup.simHashNearDupsPortable(Tables.documents(s, d), maxHamming = 6)
+      Dedup.simHashNearDups(Tables.documents(s, d), maxHamming = 6,
+          portable = true)
+        .withColumn("hamming", col("hamming").cast("long"))
     },
 
-    // PRODUCTION hash paths of the two near-dup operators: same plan
-    // shapes and verify stages, xxhash64 signatures (hash-family-specific
-    // candidates -> no DuckDB replay; pair semantics asserted in
-    // DedupSpec). These are the numbers a real corpus run pays — the
-    // md5-portable entries above exist for the oracle's sake.
     // Incremental ingest dedup: the newest tenth of the corpus (doc_id %
     // 10 = 0) banded and joined against the band INDEX of the other nine
     // tenths — the stored-index shape a growing corpus runs daily. Same
@@ -1497,6 +1488,10 @@ object LlmOps {
         bands = 8, rows = 4, threshold = 0.8, portable = true)
     },
 
+    // The `_fast` twins: the same bodies in the xxhash64 family, the one
+    // a production corpus run pays. Their candidates depend on the hash
+    // family, so they are rows-only; DedupSpec asserts that both families
+    // find the same pairs on planted fixtures.
     Op.noOracle("dedup_minhash_fast") { (s, d) =>
       Dedup.minHashNearDups(Tables.documents(s, d), bands = 8, rows = 4,
         threshold = 0.8)
@@ -2438,21 +2433,9 @@ object LlmOps {
         k = 10, nQueries = 20, dim = 64)) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val truth = Similarity.bruteForceKnn(emb)
-        .select(col("query_id"), col("neighbor_id"),
-          lit(1).as("t"), lit(0).as("f"))
       val ivf = Similarity.ivfKnn(emb, nprobe = 4, k = 10,
           centroidVecIds = 0L until 16L, nQueries = 20)
-        .select(col("query_id"), col("neighbor_id"),
-          lit(0).as("t"), lit(1).as("f"))
-      truth.unionByName(ivf)
-        .groupBy(col("query_id"), col("neighbor_id"))
-        .agg(max(col("t")).as("t"), max(col("f")).as("f"))
-        .agg(sum(col("t")).as("n_true"),
-          sum(when(col("t") === 1 && col("f") === 1, 1).otherwise(0))
-            .as("n_found"))
-        .select(col("n_true"), col("n_found"),
-          (col("n_found").cast("double") / col("n_true").cast("double"))
-            .as("recall"))
+      recallOf(truth, ivf)
     },
 
     // PQ recall, ORACLE-MEASURED: pinned-codebook PQ-ADC (subspace
@@ -2476,20 +2459,8 @@ object LlmOps {
           vecs.join(broadcast(queries), col("vid") =!= col("query_id"))
             .select(col("query_id"), col("vid"), (-sq).as("sim")),
           "query_id", "vid", "sim", 10)
-        .select(col("query_id"), col("neighbor_id"),
-          lit(1).as("t"), lit(0).as("f"))
       val found = Similarity.pqKnn(emb, codebookVecIds = 20L until 52L)
-        .select(col("query_id"), col("neighbor_id"),
-          lit(0).as("t"), lit(1).as("f"))
-      truth.unionByName(found)
-        .groupBy(col("query_id"), col("neighbor_id"))
-        .agg(max(col("t")).as("t"), max(col("f")).as("f"))
-        .agg(sum(col("t")).as("n_true"),
-          sum(when(col("t") === 1 && col("f") === 1, 1).otherwise(0))
-            .as("n_found"))
-        .select(col("n_true"), col("n_found"),
-          (col("n_found").cast("double") / col("n_true").cast("double"))
-            .as("recall"))
+      recallOf(truth, found)
     },
 
     // Embedding-cosine near-dup pairs via random-hyperplane buckets
@@ -2685,20 +2656,8 @@ object LlmOps {
         dim = 64)) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val truth = Similarity.bruteForceKnn(emb)
-        .select(col("query_id"), col("neighbor_id"),
-          lit(1).as("t"), lit(0).as("f"))
       val found = Similarity.int8Knn(emb)
-        .select(col("query_id"), col("neighbor_id"),
-          lit(0).as("t"), lit(1).as("f"))
-      truth.unionByName(found)
-        .groupBy(col("query_id"), col("neighbor_id"))
-        .agg(max(col("t")).as("t"), max(col("f")).as("f"))
-        .agg(sum(col("t")).as("n_true"),
-          sum(when(col("t") === 1 && col("f") === 1, 1).otherwise(0))
-            .as("n_found"))
-        .select(col("n_true"), col("n_found"),
-          (col("n_found").cast("double") / col("n_true").cast("double"))
-            .as("recall"))
+      recallOf(truth, found)
     },
 
     // Matryoshka truncation recall (Kusupati et al. 2022, MRL): rank by
@@ -2713,53 +2672,14 @@ object LlmOps {
     // both rankings are the broadcast nested-loop knn_cosine shape.
     Op("embed_mrl_recall",
        s"""WITH trunc AS (
-          |  SELECT query_id, neighbor_id FROM (
-          |    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-          |           row_number() OVER (PARTITION BY a.vec_id
-          |                              ORDER BY ${cosineSql(32)} DESC,
-          |                                       b.vec_id) AS rank
-          |    FROM embeddings a, embeddings b
-          |    WHERE a.vec_id < 20 AND b.vec_id <> a.vec_id)
-          |  WHERE rank <= 10),
-          |truth AS (
-          |  SELECT query_id, neighbor_id FROM (
-          |    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-          |           row_number() OVER (PARTITION BY a.vec_id
-          |                              ORDER BY ${cosineSql(64)} DESC,
-          |                                       b.vec_id) AS rank
-          |    FROM embeddings a, embeddings b
-          |    WHERE a.vec_id < 20 AND b.vec_id <> a.vec_id)
-          |  WHERE rank <= 10),
-          |tagged AS (
-          |  SELECT query_id, neighbor_id, max(t) AS t, max(f) AS f FROM (
-          |    SELECT query_id, neighbor_id, 1 AS t, 0 AS f FROM truth
-          |    UNION ALL SELECT query_id, neighbor_id, 0, 1 FROM trunc)
-          |  GROUP BY 1, 2)
-          |SELECT CAST(sum(t) AS BIGINT) AS n_true,
-          |       CAST(sum(CASE WHEN t = 1 AND f = 1 THEN 1 ELSE 0 END)
-          |            AS BIGINT) AS n_found,
-          |       CAST(sum(CASE WHEN t = 1 AND f = 1 THEN 1 ELSE 0 END)
-          |            AS DOUBLE)
-          |         / CAST(sum(t) AS DOUBLE) AS recall
-          |FROM tagged""".stripMargin) { (s, d) =>
+          |${topKPairsSql(s"${cosineSql(32)} DESC", 20, 10)}),
+          |${recallTailSql(s"${cosineSql(64)} DESC", "trunc", 20, 10)}""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val truncated = emb.select(col("vec_id"),
         slice(col("embedding"), 1, 32).as("embedding"))
       val truth = Similarity.bruteForceKnn(emb)
-        .select(col("query_id"), col("neighbor_id"),
-          lit(1).as("t"), lit(0).as("f"))
       val found = Similarity.bruteForceKnn(truncated)
-        .select(col("query_id"), col("neighbor_id"),
-          lit(0).as("t"), lit(1).as("f"))
-      truth.unionByName(found)
-        .groupBy(col("query_id"), col("neighbor_id"))
-        .agg(max(col("t")).as("t"), max(col("f")).as("f"))
-        .agg(sum(col("t")).as("n_true"),
-          sum(when(col("t") === 1 && col("f") === 1, 1).otherwise(0))
-            .as("n_found"))
-        .select(col("n_true"), col("n_found"),
-          (col("n_found").cast("double") / col("n_true").cast("double"))
-            .as("recall"))
+      recallOf(truth, found)
     },
 
     // Hard-negative mining (DPR/SimCSE-style contrastive data prep):
@@ -5443,38 +5363,7 @@ object LlmOps {
          |               toks[wpos+1] AS word
          |        FROM tk WHERE toks[wpos+1] <> ''),
          |wd AS (SELECT DISTINCT word FROM tk2),
-         |us(word, i, sc, bk, np) AS (
-         |  SELECT word, CAST(0 AS BIGINT), [CAST(0 AS BIGINT)],
-         |         [CAST('' AS VARCHAR)], [CAST(0 AS BIGINT)]
-         |  FROM wd
-         |  UNION ALL
-         |  SELECT word, i, list_append(sc, s), list_append(bk, piece),
-         |         list_append(np, k)
-         |  FROM (
-         |    SELECT c.word, c.i, c.sc, c.bk, c.np, c.s, c.piece, c.k,
-         |           row_number() OVER (PARTITION BY c.word ORDER BY
-         |             (CASE WHEN c.s IS NULL THEN 1 ELSE 0 END),
-         |             c.s DESC, c.k ASC, c.piece ASC) AS rn
-         |    FROM (
-         |      SELECT s0.word, s0.i, s0.sc, s0.bk, s0.np,
-         |             CASE WHEN s0.len = 0 THEN NULL
-         |                  ELSE s0.sc[s0.i - s0.len + 1] + m.lp END AS s,
-         |             CASE WHEN s0.len = 0 THEN NULL
-         |                  ELSE m.piece END AS piece,
-         |             CASE WHEN s0.len = 0 THEN NULL
-         |                  ELSE s0.np[s0.i - s0.len + 1] + 1 END AS k
-         |      FROM (
-         |        SELECT word, i + 1 AS i, sc, bk, np,
-         |               unnest(range(0, least(6, i + 1) + 1)) AS len,
-         |               substr(word,
-         |                      CAST(i + 1 AS INT) - CAST(len AS INT) + 1,
-         |                      CAST(len AS INT)) AS cand
-         |        FROM us WHERE i < length(word)) s0
-         |      LEFT JOIN m ON s0.len > 0 AND m.piece = s0.cand
-         |      WHERE s0.len = 0
-         |         OR (m.piece IS NOT NULL
-         |             AND s0.sc[s0.i - s0.len + 1] IS NOT NULL)) c) z
-         |  WHERE z.rn = 1),
+         |${viterbiDpCte("us", "wd", "m", "CAST(0 AS BIGINT)")},
          |fin AS (
          |  SELECT word, sc, bk FROM (
          |    SELECT word, i, sc, bk,

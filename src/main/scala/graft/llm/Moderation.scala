@@ -62,7 +62,7 @@ object Moderation {
        s"""WITH pats AS (SELECT unnest($blSql) AS pat),
           |norm AS (
           |  SELECT doc_id,
-          |         regexp_replace(trim(lower(text)), '\\s+', ' ', 'g') AS t
+          |         ${TextFeatures.normSql} AS t
           |  FROM documents)
           |SELECT n.doc_id, p.pat
           |FROM norm n JOIN pats p ON contains(n.t, p.pat)""".stripMargin) {
@@ -70,9 +70,9 @@ object Moderation {
     },
 
     Op("text_kwic",
-       """WITH toks AS (
+       s"""WITH toks AS (
          |  SELECT doc_id,
-         |         string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ') AS toks
+         |         ${TextFeatures.toksSql} AS toks
          |  FROM documents),
          |pos AS (
          |  SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS i

@@ -36,21 +36,21 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
-  /** Top-k documents by BM25 score for one bag-of-terms query.
-    * Returns (doc_id, rank, score) — rank 1 = best, ties broken by id.
+  import TextFeatures.toksSql
+
+  /** The inputs of BM25 scoring: postings (id, dl, tok, tf) of `terms`
+    * ONLY — the isin filter sits behind the explode, so non-matching
+    * tokens die map-side before any shuffle — their document frequencies
+    * (tok, df), and the 1-row corpus stats (n_docs, total_len).
     */
-  def bm25TopK(docs: DataFrame, terms: Seq[String], k: Int = 10,
-               k1: Double = 1.2, b: Double = 0.75,
-               idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    require(terms.nonEmpty, "query needs at least one term")
-    require(k >= 1, s"k must be positive, got $k")
+  private def bm25Postings(docs: DataFrame, terms: Seq[String],
+                           idCol: String, textCol: String)
+      : (DataFrame, DataFrame, DataFrame) = {
     val toks = docs.select(col(idCol),
       TextFeatures.tokens(col(textCol)).as("toks"))
     val lens = toks.select(col(idCol), size(col("toks")).as("dl"))
     val stats = lens.agg(count(lit(1)).as("n_docs"),
       sum(col("dl")).as("total_len"))
-    // postings of the query terms ONLY — the isin filter sits behind the
-    // explode, so non-matching tokens die map-side before any shuffle
     val tf = toks
       .select(col(idCol), size(col("toks")).as("dl"),
         explode(col("toks")).as("tok"))
@@ -58,6 +58,13 @@ object Retrieval {
       .groupBy(col(idCol), col("dl"), col("tok"))
       .agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+    (tf, dfreq, stats)
+  }
+
+  /** BM25 weight idf(df) * tf-saturation(tf, dl) of one posting joined
+    * with its df and the corpus stats — the Spark side of bm25TermScore.
+    */
+  private def bm25Weight(k1: Double, b: Double): Column = {
     val avgdl: Column =
       col("total_len").cast("double") / col("n_docs").cast("double")
     val idf: Column = ieeeLn(lit(1.0) +
@@ -68,9 +75,21 @@ object Retrieval {
         (col("tf").cast("double") +
           lit(k1) * (lit(1.0) - lit(b) +
             lit(b) * (col("dl").cast("double") / avgdl)))
+    idf * tfWeight
+  }
+
+  /** Top-k documents by BM25 score for one bag-of-terms query.
+    * Returns (doc_id, rank, score) — rank 1 = best, ties broken by id.
+    */
+  def bm25TopK(docs: DataFrame, terms: Seq[String], k: Int = 10,
+               k1: Double = 1.2, b: Double = 0.75,
+               idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    require(terms.nonEmpty, "query needs at least one term")
+    require(k >= 1, s"k must be positive, got $k")
+    val (tf, dfreq, stats) = bm25Postings(docs, terms, idCol, textCol)
     val perTerm = tf.join(broadcast(dfreq), "tok")
       .crossJoin(broadcast(stats)) // 1-row scalar attachment
-      .select(col(idCol), col("tok"), (idf * tfWeight).as("s"))
+      .select(col(idCol), col("tok"), bm25Weight(k1, b).as("s"))
     val scored = perTerm.groupBy(col(idCol))
       .agg(aggregate(
         sort_array(collect_list(struct(col("tok"), col("s")))),
@@ -107,33 +126,12 @@ object Retrieval {
     val queryTerms = queries
       .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
       .toDF("query_id", "tok")
-    val toks = docs.select(col(idCol),
-      TextFeatures.tokens(col(textCol)).as("toks"))
-    val lens = toks.select(col(idCol), size(col("toks")).as("dl"))
-    val stats = lens.agg(count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("total_len"))
-    val tf = toks
-      .select(col(idCol), size(col("toks")).as("dl"),
-        explode(col("toks")).as("tok"))
-      .filter(col("tok").isin(allTerms: _*))
-      .groupBy(col(idCol), col("dl"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val avgdl: Column =
-      col("total_len").cast("double") / col("n_docs").cast("double")
-    val idf: Column = ieeeLn(lit(1.0) +
-      ((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
-        (col("df").cast("double") + lit(0.5)))
-    val tfWeight: Column =
-      (col("tf").cast("double") * (lit(k1) + lit(1.0))) /
-        (col("tf").cast("double") +
-          lit(k1) * (lit(1.0) - lit(b) +
-            lit(b) * (col("dl").cast("double") / avgdl)))
+    val (tf, dfreq, stats) = bm25Postings(docs, allTerms, idCol, textCol)
     val perTerm = tf.join(broadcast(dfreq), "tok")
       .join(broadcast(queryTerms), "tok")
       .crossJoin(broadcast(stats)) // 1-row scalar attachment
       .select(col("query_id"), col(idCol), col("tok"),
-        (idf * tfWeight).as("s"))
+        bm25Weight(k1, b).as("s"))
     val scored = perTerm.groupBy(col("query_id"), col(idCol))
       .agg(aggregate(
         sort_array(collect_list(struct(col("tok"), col("s")))),
@@ -300,31 +298,54 @@ object Retrieval {
     1L -> Seq("data", "table", "join"),
     2L -> Seq("stream", "batch", "spark"))
 
-  /** BM25 scoring CTE chain (tf/dfreq/per_term/scored, optionally
-    * suffixed) with a pluggable postings filter — ONE definition of the
-    * scoring text shared by every oracle entry (single-query, batch
-    * fan-out differs, and the PRF second round) so the formula cannot
-    * drift between them.
+  /** The BM25 weight of one posting (tf, dl) joined with its df and the
+    * corpus stats (n_docs, total_len), as column `s` — ONE definition of
+    * the formula for every oracle entry, so it cannot drift between them.
     */
-  private def bm25ScoreCtes(sfx: String, tfFilter: String): String =
+  private val bm25TermScore =
+    """ln(1.0 + (CAST(n_docs - df AS DOUBLE) + 0.5)
+      |                  / (CAST(df AS DOUBLE) + 0.5))
+      |         * ((CAST(tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + 1.0))
+      |            / (CAST(tf AS DOUBLE)
+      |               + 1.2 * (1.0 - 0.75
+      |                        + 0.75 * (CAST(dl AS DOUBLE)
+      |                                  / (CAST(total_len AS DOUBLE)
+      |                                     / CAST(n_docs AS DOUBLE))))))
+      |           AS s""".stripMargin
+
+  /** `toks` (the shared token normal form) and the 1-row corpus `stats`
+    * (n_docs, total_len) every BM25 oracle starts from.
+    */
+  private val bm25CorpusCtes =
+    s"""toks AS (
+       |  SELECT doc_id,
+       |         $toksSql AS toks
+       |  FROM documents),
+       |stats AS (
+       |  SELECT count(*) AS n_docs, CAST(sum(len(toks)) AS BIGINT) AS total_len
+       |  FROM toks)""".stripMargin
+
+  /** Postings `tf$sfx(doc_id, dl, tok, tf)` of the tokens `tfFilter`
+    * admits, and their document frequencies `dfreq$sfx(tok, df)`.
+    */
+  private def bm25TfCtes(sfx: String, tfFilter: String): String =
     s"""tf$sfx AS (
        |  SELECT doc_id, dl, tok, count(*) AS tf
        |  FROM (SELECT doc_id, len(toks) AS dl, unnest(toks) AS tok FROM toks)
        |  WHERE $tfFilter
        |  GROUP BY 1, 2, 3),
-       |dfreq$sfx AS (SELECT tok, count(*) AS df FROM tf$sfx GROUP BY 1),
+       |dfreq$sfx AS (SELECT tok, count(*) AS df FROM tf$sfx GROUP BY 1)""".stripMargin
+
+  /** BM25 scoring CTE chain (tf/dfreq/per_term/scored, optionally
+    * suffixed) with a pluggable postings filter, shared by the
+    * single-query entries and the PRF second round.
+    */
+  private def bm25ScoreCtes(sfx: String, tfFilter: String): String =
+    s"""${bm25TfCtes(sfx, tfFilter)},
        |per_term$sfx AS (
        |  SELECT doc_id,
        |         tok,
-       |         ln(1.0 + (CAST(n_docs - df AS DOUBLE) + 0.5)
-       |                  / (CAST(df AS DOUBLE) + 0.5))
-       |         * ((CAST(tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + 1.0))
-       |            / (CAST(tf AS DOUBLE)
-       |               + 1.2 * (1.0 - 0.75
-       |                        + 0.75 * (CAST(dl AS DOUBLE)
-       |                                  / (CAST(total_len AS DOUBLE)
-       |                                     / CAST(n_docs AS DOUBLE))))))
-       |           AS s
+       |         $bm25TermScore
        |  FROM tf$sfx JOIN dfreq$sfx USING (tok), stats),
        |scored$sfx AS (
        |  SELECT doc_id,
@@ -332,17 +353,31 @@ object Retrieval {
        |                     (a, b) -> a + b) AS score
        |  FROM per_term$sfx GROUP BY doc_id)""".stripMargin
 
+  /** The batch oracles' shared prefix: corpus CTEs, the (query_id, tok)
+    * table `qt`, union-term postings, and `per_term` — one BM25 weight per
+    * (query, doc, term). The fan-out to queries through `qt` is the only
+    * difference from bm25ScoreCtes.
+    */
+  private val bm25BatchCtes: String = {
+    val allTerms = BatchQueries.flatMap(_._2).distinct
+      .map(t => s"'$t'").mkString("[", ", ", "]")
+    val qvals = BatchQueries
+      .flatMap { case (q, ts) => ts.distinct.map(t => s"($q, '$t')") }
+      .mkString(", ")
+    s"""$bm25CorpusCtes,
+       |qt(query_id, tok) AS (VALUES $qvals),
+       |${bm25TfCtes("", s"list_contains($allTerms, tok)")},
+       |per_term AS (
+       |  SELECT q.query_id, t.doc_id, t.tok,
+       |         $bm25TermScore
+       |  FROM tf t JOIN dfreq USING (tok) JOIN qt q USING (tok), stats)""".stripMargin
+  }
+
   /** BM25 ranking CTEs (DuckDB dialect) for the pinned query set. Yields
     * a relation `lexranked(doc_id, score, rank)` over all matching docs.
     */
   private def bm25Cte: String =
-    s"""toks AS (
-       |  SELECT doc_id,
-       |         string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ') AS toks
-       |  FROM documents),
-       |stats AS (
-       |  SELECT count(*) AS n_docs, CAST(sum(len(toks)) AS BIGINT) AS total_len
-       |  FROM toks),
+    s"""$bm25CorpusCtes,
        |${bm25ScoreCtes("", s"list_contains($termsSql, tok)")},
        |lexranked AS (
        |  SELECT doc_id, score,
@@ -396,37 +431,7 @@ object Retrieval {
     // postings, per-term scores, (query_id, term) fan-out, token-ordered
     // fold, and per-query ranking.
     Op("text_bm25_batch", {
-      val allTerms = BatchQueries.flatMap(_._2).distinct
-        .map(t => s"'$t'").mkString("[", ", ", "]")
-      val qvals = BatchQueries
-        .flatMap { case (q, ts) => ts.distinct.map(t => s"($q, '$t')") }
-        .mkString(", ")
-      s"""WITH toks AS (
-         |  SELECT doc_id,
-         |         string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ') AS toks
-         |  FROM documents),
-         |stats AS (
-         |  SELECT count(*) AS n_docs, CAST(sum(len(toks)) AS BIGINT) AS total_len
-         |  FROM toks),
-         |qt(query_id, tok) AS (VALUES $qvals),
-         |tf AS (
-         |  SELECT doc_id, dl, tok, count(*) AS tf
-         |  FROM (SELECT doc_id, len(toks) AS dl, unnest(toks) AS tok FROM toks)
-         |  WHERE list_contains($allTerms, tok)
-         |  GROUP BY 1, 2, 3),
-         |dfreq AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-         |per_term AS (
-         |  SELECT q.query_id, t.doc_id, t.tok,
-         |         ln(1.0 + (CAST(n_docs - df AS DOUBLE) + 0.5)
-         |                  / (CAST(df AS DOUBLE) + 0.5))
-         |         * ((CAST(tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + 1.0))
-         |            / (CAST(tf AS DOUBLE)
-         |               + 1.2 * (1.0 - 0.75
-         |                        + 0.75 * (CAST(dl AS DOUBLE)
-         |                                  / (CAST(total_len AS DOUBLE)
-         |                                     / CAST(n_docs AS DOUBLE))))))
-         |           AS s
-         |  FROM tf t JOIN dfreq USING (tok) JOIN qt q USING (tok), stats),
+      s"""WITH $bm25BatchCtes,
          |scored AS (
          |  SELECT query_id, doc_id,
          |         list_reduce(list_prepend(0.0, list(s ORDER BY tok)),
@@ -451,37 +456,7 @@ object Retrieval {
     // metric — with rank-ordered folds and ieee_ln'd log2, so the
     // hash match proves the evaluation arithmetic end to end.
     Op("retrieval_eval", {
-      val allTerms = BatchQueries.flatMap(_._2).distinct
-        .map(t => s"'$t'").mkString("[", ", ", "]")
-      val qvals = BatchQueries
-        .flatMap { case (q, ts) => ts.distinct.map(t => s"($q, '$t')") }
-        .mkString(", ")
-      s"""WITH toks AS (
-         |  SELECT doc_id,
-         |         string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ') AS toks
-         |  FROM documents),
-         |stats AS (
-         |  SELECT count(*) AS n_docs, CAST(sum(len(toks)) AS BIGINT) AS total_len
-         |  FROM toks),
-         |qt(query_id, tok) AS (VALUES $qvals),
-         |tf AS (
-         |  SELECT doc_id, dl, tok, count(*) AS tf
-         |  FROM (SELECT doc_id, len(toks) AS dl, unnest(toks) AS tok FROM toks)
-         |  WHERE list_contains($allTerms, tok)
-         |  GROUP BY 1, 2, 3),
-         |dfreq AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-         |per_term AS (
-         |  SELECT q.query_id, t.doc_id, t.tok,
-         |         ln(1.0 + (CAST(n_docs - df AS DOUBLE) + 0.5)
-         |                  / (CAST(df AS DOUBLE) + 0.5))
-         |         * ((CAST(tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + 1.0))
-         |            / (CAST(tf AS DOUBLE)
-         |               + 1.2 * (1.0 - 0.75
-         |                        + 0.75 * (CAST(dl AS DOUBLE)
-         |                                  / (CAST(total_len AS DOUBLE)
-         |                                     / CAST(n_docs AS DOUBLE))))))
-         |           AS s
-         |  FROM tf t JOIN dfreq USING (tok) JOIN qt q USING (tok), stats),
+      s"""WITH $bm25BatchCtes,
          |scored AS (
          |  SELECT query_id, doc_id,
          |         list_reduce(list_prepend(0.0, list(s ORDER BY tok)),
@@ -552,38 +527,8 @@ object Retrieval {
     // 0..2 (query_id == vec_id here), fusion per (query, doc). The
     // oracle recomputes every stage for all queries at once.
     Op("hybrid_rrf_batch", {
-      val allTerms = BatchQueries.flatMap(_._2).distinct
-        .map(t => s"'$t'").mkString("[", ", ", "]")
-      val qvals = BatchQueries
-        .flatMap { case (q, ts) => ts.distinct.map(t => s"($q, '$t')") }
-        .mkString(", ")
       val qids = BatchQueries.map(_._1).mkString(", ")
-      s"""WITH toks AS (
-         |  SELECT doc_id,
-         |         string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ') AS toks
-         |  FROM documents),
-         |stats AS (
-         |  SELECT count(*) AS n_docs, CAST(sum(len(toks)) AS BIGINT) AS total_len
-         |  FROM toks),
-         |qt(query_id, tok) AS (VALUES $qvals),
-         |tf AS (
-         |  SELECT doc_id, dl, tok, count(*) AS tf
-         |  FROM (SELECT doc_id, len(toks) AS dl, unnest(toks) AS tok FROM toks)
-         |  WHERE list_contains($allTerms, tok)
-         |  GROUP BY 1, 2, 3),
-         |dfreq AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-         |per_term AS (
-         |  SELECT q.query_id, t.doc_id, t.tok,
-         |         ln(1.0 + (CAST(n_docs - df AS DOUBLE) + 0.5)
-         |                  / (CAST(df AS DOUBLE) + 0.5))
-         |         * ((CAST(tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + 1.0))
-         |            / (CAST(tf AS DOUBLE)
-         |               + 1.2 * (1.0 - 0.75
-         |                        + 0.75 * (CAST(dl AS DOUBLE)
-         |                                  / (CAST(total_len AS DOUBLE)
-         |                                     / CAST(n_docs AS DOUBLE))))))
-         |           AS s
-         |  FROM tf t JOIN dfreq USING (tok) JOIN qt q USING (tok), stats),
+      s"""WITH $bm25BatchCtes,
          |lex AS (
          |  SELECT query_id, doc_id, rank AS r_lex FROM (
          |    SELECT query_id, doc_id,
@@ -676,7 +621,7 @@ object Retrieval {
     Op("text_qld_topk",
        s"""WITH toks AS (
           |  SELECT doc_id,
-          |         string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ') AS toks
+          |         $toksSql AS toks
           |  FROM documents),
           |stats AS (SELECT CAST(sum(len(toks)) AS BIGINT) AS total FROM toks),
           |post AS (

@@ -22,6 +22,19 @@ object TextFeatures {
   def tokens(text: Column): Column =
     split(normalized(text), " ")
 
+  // DuckDB replays of `normalized` and `tokens` over the `text` column —
+  // the one text normal form of every oracle (LineageOwnershipSpec fails
+  // on any other spelling in src/main).
+  // SCHEMA CONTRACT: documents.text is NON-NULL, declared nullable=false
+  // by every generator (driver testdata, FuzzGen, ScaleGen). The text
+  // tier's oracle parity leans on it: a NULL text would make Spark's
+  // legacy size(NULL) yield n_words = -1 while DuckDB yields NULL, a
+  // silent hash divergence. Nullable text needs coalesce(text, '') at
+  // the INGEST boundary (Jsonl/Xml quarantine split), not per operator.
+  val normSql: String =
+    "regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')"
+  val toksSql: String = s"string_split($normSql, ' ')"
+
   /** Per-script codepoint counts (BMP ranges, where Spark's UTF-16
     * `length` and DuckDB's codepoint `length` agree 1:1) — the
     * script-detection census that precedes language ID at corpus scale:

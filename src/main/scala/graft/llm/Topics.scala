@@ -49,9 +49,7 @@ object Topics {
 
   private val S = 1048576L
 
-  private val normSql =
-    "regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')"
-  private val toksSql = s"string_split($normSql, ' ')"
+  import TextFeatures.toksSql
 
   val ops: Seq[Op] = Seq(
     // K = 3 topics, top-50 vocabulary, two unrolled EM rounds: the

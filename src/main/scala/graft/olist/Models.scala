@@ -76,7 +76,7 @@ object Models {
 
   /** Full registry: 6 seeds + 3 staging views + 1 mart table (D1). */
   def catalog(spark: SparkSession, warehouseDir: String,
-              seedsDir: String = Seeds.referenceSeedsDir,
+              seedsDir: String = Seeds.fixturesDir,
               synthDir: Option[String] = None): Catalog = {
     val wh = new Warehouse(spark, warehouseDir)
     def seed(name: String, dir: => String): Model =

@@ -4,7 +4,7 @@ import graft.Op
 import org.apache.spark.sql.functions._
 
 /** Driver-facing entries for the Olist pipeline. The pipeline runs over the
-  * reference seed CSVs plus synthesized stripped seeds — tables the driver's
+  * committed seed fixtures plus synthesized stripped seeds — tables the driver's
   * DuckDB oracle does not have — so these are rows-only (`noOracle`) checks;
   * value-level conformance for the same logic is covered by the ScalaTest
   * suite and, structurally, by the TPC-H-shaped oracle ops (j2_fct_orders is
@@ -47,8 +47,8 @@ object OlistOps {
         .toDF("test_name", "failures", "status")
     },
 
-    // S1 visible in isolation: the three real reference CSVs through the
-    // declared-schema ingest (BOM header, quoted zips, null sentinels).
+    // S1 visible in isolation: the three committed seed fixtures through
+    // the declared-schema ingest (BOM header, quoted zips, null sentinels).
     // ORACLE-EXACT since r12 (VERDICT r11 #6): every CELL of all three
     // seeds round-trips as a (tbl, k, col, val) long-format row and
     // hash-compares against DuckDB's read_csv with the same declared
@@ -61,7 +61,7 @@ object OlistOps {
     // summary.
     Op("olist_seed_ingest", {
       def rc(file: String, cols: Seq[(String, String)]): String =
-        s"""read_csv('${Seeds.referenceSeedsDir}/$file.csv',
+        s"""read_csv('${Seeds.fixturesDir}/$file.csv',
            |  header=true, nullstr='',
            |  columns={${cols.map { case (c, t) => s"'$c': '$t'" }
                           .mkString(", ")}})""".stripMargin
@@ -97,11 +97,11 @@ object OlistOps {
          |${unpivot("translation", "tr", "product_category_name", tCols)}"""
         .stripMargin
     }) { (s, _) =>
-      val products = Seeds.readCsv(s, Seeds.referenceSeedsDir,
+      val products = Seeds.readCsv(s, Seeds.fixturesDir,
         "olist_products_dataset")
-      val sellers = Seeds.readCsv(s, Seeds.referenceSeedsDir,
+      val sellers = Seeds.readCsv(s, Seeds.fixturesDir,
         "olist_sellers_dataset")
-      val xlat = Seeds.readCsv(s, Seeds.referenceSeedsDir,
+      val xlat = Seeds.readCsv(s, Seeds.fixturesDir,
         "product_category_name_translation")
       def unpivot(tbl: String, df: org.apache.spark.sql.DataFrame,
                   k: String): org.apache.spark.sql.DataFrame = {

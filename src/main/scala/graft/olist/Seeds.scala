@@ -1,19 +1,25 @@
 package graft.olist
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** S1: seed CSV ingest, plus deterministic synthesis of the three seeds the
   * reference stripped as large blobs (reference: .MISSING_LARGE_BLOBS:5-10 —
-  * customers, orders, order_items; the other three CSVs are present in
-  * reference/seeds/).
+  * customers, orders, order_items). The other three seeds (products,
+  * sellers, category translation) are small committed fixtures in the
+  * repo's `seeds/` dir that keep the real files' ingest quirks.
   *
   * Ingest semantics mirror dbt's seed materialization (reference:
   * dbt/include/global_project/macros/materializations/seeds/seed.sql:12,27-34)
   * with the agate inference ladder replaced by declared schemas (Schemas.scala):
-  *   - header row, quoted fields, empty string and literal "null" as NULL
-  *     sentinels (agate_helper.py's ("null","") null set),
+  *   - header row, quoted fields, and the empty string as the one NULL
+  *     sentinel (agate's set also holds literal "null"; SURVEY §7.4(1)
+  *     keeps only "", so a "null" cell stays the string "null"),
   *   - UTF-8 BOM tolerated (product_category_name_translation.csv:1 starts
   *     with one),
   *   - timestamps parsed as `%Y-%m-%d %H:%M:%S` in the session (UTC) zone.
@@ -24,7 +30,23 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Seeds {
 
-  val referenceSeedsDir = "/root/reference/seeds"
+  /** The committed seed fixtures: the nearest `seeds/` dir holding them,
+    * searched upward from the working dir and then from the compiled
+    * classes; `seeds` under the working dir when neither has one. Never
+    * throws, because every oracle string names this dir and is built
+    * eagerly, also in builds that ship without the fixtures.
+    */
+  val fixturesDir: String = {
+    def upward(p: Path): Seq[Path] =
+      Iterator.iterate(p)(_.getParent).takeWhile(_ != null).toSeq
+    val cwd = Paths.get("").toAbsolutePath
+    val classes = Try(Paths.get(getClass.getProtectionDomain.getCodeSource
+      .getLocation.toURI)).toOption
+    (upward(cwd) ++ classes.toSeq.flatMap(upward))
+      .map(_.resolve("seeds"))
+      .find(d => Files.isRegularFile(d.resolve("olist_sellers_dataset.csv")))
+      .getOrElse(cwd.resolve("seeds")).toString
+  }
 
   /** Read one seed CSV with its declared schema (S1). */
   def readCsv(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -126,7 +148,7 @@ object Seeds {
   /** Write the synthesized seeds as real CSVs (header, empty-string nulls)
     * and read them back through `readCsv`, so the missing tables exercise the
     * same S1 ingest path — null sentinels, quoting, timestamp parse — as the
-    * three reference CSVs.
+    * three committed fixtures.
     */
   def synthesizeCsv(spark: SparkSession, dir: String,
                     nOrders: Long = 2000L): Unit = {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Op, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -33,6 +33,121 @@ object Analytics {
     }
   }
 
+  /** Poisson bootstrap of the mean order value: 32 replicates, each row
+    * weighted by a Poisson(1) draw per replicate (inverse CDF over
+    * `poissonCuts`), summed per replicate into one exact integer pair and
+    * a single division. Only the 32-bit draw `hv` per (replicate, row)
+    * depends on the hash family:
+    *   - portable: the md5_slices32 kernel's four 32-bit slices of
+    *     md5("boot:g:orderkey") feed replicates 4g..4g+3 (8 digests per
+    *     row), byte-equal to the conv(substring(md5)) slices the oracle
+    *     replays (Md5DrawParitySpec);
+    *   - fast: xxhash64("boot", b, orderkey) masked to 32 bits, one
+    *     codegen'd long hash per (replicate, row).
+    */
+  private def bootstrapCi(s: SparkSession, d: String,
+                          portable: Boolean): DataFrame = {
+    val o = Tables.orders(s, d)
+      .select(col("o_orderkey"),
+        (col("o_totalprice").cast(dec) * 100).cast("long").as("cents"))
+    val fan =
+      if (portable)
+        o.select(col("o_orderkey"), col("cents"),
+            explode(sequence(lit(0), lit(7))).as("g"))
+          .select(col("cents"), col("g"),
+            graft.functions.GraftFunctions.md5Slices32(
+              concat(lit("boot:"), col("g").cast("string"), lit(":"),
+                col("o_orderkey").cast("string"))).as("hs"))
+          .select(col("cents"), col("g"),
+            posexplode(col("hs")).as(Seq("j", "hv")))
+          .select((col("g") * 4 + col("j")).as("b"), col("cents"),
+            col("hv"))
+      else
+        o.select(col("o_orderkey"), col("cents"),
+            explode(sequence(lit(0), lit(31))).as("b"))
+          .select(col("b"), col("cents"),
+            (xxhash64(lit("boot"), col("b"), col("o_orderkey"))
+              .bitwiseAND(lit(4294967295L))).as("hv"))
+    val w = poissonCuts.zipWithIndex.reverse
+      .foldLeft(lit(6): Column) {
+        case (acc, (c, j)) => when(col("hv") < c, lit(j)).otherwise(acc)
+      }
+    fan.select(col("b"), col("cents"), w.cast("long").as("w"))
+      .groupBy(col("b"))
+      .agg(sum(col("w")).as("n_eff"),
+        sum(col("w") * col("cents")).as("num"))
+      .select(col("b").cast("int").as("b"), col("n_eff"), col("num"),
+        (col("num").cast("double") / col("n_eff").cast("double"))
+          .as("mean_cents"))
+  }
+
+  /** Bernoulli-relabel randomization test of the urgent-vs-rest gap in
+    * mean order value: each replicate redraws every row's group with the
+    * observed rate, by the integer compare hv * n < 2^32 * n1 on a 32-bit
+    * draw `hv`. Only the draw and the replicate count depend on the hash
+    * family:
+    *   - portable: 32 replicates from the md5_slices32 slices of
+    *     md5("perm:g:orderkey"), bit-equal to the oracle's
+    *     conv(substring(md5)) slices (Md5DrawParitySpec);
+    *   - fast: 64 replicates from xxhash64("perm", b, orderkey) masked to
+    *     32 bits.
+    */
+  private def permutationTest(s: SparkSession, d: String,
+                              portable: Boolean): DataFrame = {
+    val o = Tables.orders(s, d)
+      .select(col("o_orderkey"),
+        (col("o_totalprice").cast(dec) * 100).cast("long").as("cents"),
+        when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)
+          .as("g"))
+    val tot = o.agg(count(lit(1)).as("n"), sum(col("g")).as("n1"),
+        sum(when(col("g") === 1, col("cents")).otherwise(0L)).as("s1"),
+        sum(when(col("g") === 0, col("cents")).otherwise(0L)).as("s0"))
+      .transform(graft.Ckpt.cut(_)) // 1 row; feeds obs AND the fanout
+    val obs = tot.select(col("n"), col("n1"), (col("n") - col("n1"))
+        .as("n0"),
+      (expr("s1 * 1000 div n1") - expr("s0 * 1000 div (n - n1)"))
+        .as("d_obs"))
+    def drawn(hv: Column): Column =
+      (hv * col("n") < lit(4294967296L) * col("n1")).cast("long").as("gb")
+    val withRate = o.crossJoin(broadcast(tot.select(col("n"), col("n1"))))
+    val fan =
+      if (portable)
+        withRate
+          .select(col("o_orderkey"), col("cents"), col("n"), col("n1"),
+            explode(sequence(lit(0), lit(7))).as("g"))
+          .select(col("cents"), col("n"), col("n1"), col("g"),
+            graft.functions.GraftFunctions.md5Slices32(
+              concat(lit("perm:"), col("g").cast("string"), lit(":"),
+                col("o_orderkey").cast("string"))).as("hs"))
+          .select(col("cents"), col("n"), col("n1"), col("g"),
+            posexplode(col("hs")).as(Seq("j", "hv")))
+          .select((col("g") * 4 + col("j")).as("b"), col("cents"),
+            drawn(col("hv")))
+      else
+        withRate
+          .select(col("cents"), col("n"), col("n1"),
+            explode(sequence(lit(0), lit(63))).as("b"),
+            col("o_orderkey"))
+          .select(col("b"), col("cents"),
+            drawn(xxhash64(lit("perm"), col("b"), col("o_orderkey"))
+              .bitwiseAND(lit(4294967295L))))
+    val reps = fan.groupBy(col("b"))
+      .agg(sum(col("gb")).as("m1"),
+        (count(lit(1)) - sum(col("gb"))).as("m0"),
+        sum(when(col("gb") === 1, col("cents")).otherwise(0L)).as("t1"),
+        sum(when(col("gb") === 0, col("cents")).otherwise(0L)).as("t0"))
+    val ex = reps.filter(col("m1") > 0 && col("m0") > 0)
+      .crossJoin(broadcast(obs.select(col("d_obs").as("d_o"))))
+      .agg(count(lit(1)).as("n_valid"),
+        sum(when(abs(expr("t1 * 1000 div m1") -
+          expr("t0 * 1000 div m0")) >= abs(col("d_o")), 1L)
+          .otherwise(0L)).as("n_exceed"))
+    obs.crossJoin(broadcast(ex))
+      .select(col("n"), col("n1"), col("n0"), col("d_obs"),
+        col("n_valid"), col("n_exceed"),
+        expr("n_exceed * 1000000 div n_valid").as("p_ppm"))
+  }
+
   val ops: Seq[Op] = Seq(
 
     // Poisson bootstrap CI machinery (the resampling scheme that works
@@ -52,9 +167,8 @@ object Analytics {
     // Draw economics: md5 yields 128 bits = FOUR independent 32-bit
     // draws, so replicate b reads hex slice (b mod 4) of the hash keyed
     // by group b div 4 — 8 md5 calls per row for 32 replicates instead
-    // of 32 (measured 6.2 s → see commit; the hash build dominates this
-    // whole op). Both engines slice the identical hex string, so the
-    // draws stay portable.
+    // of 32 (the digest dominates this op's cost). Both engines slice
+    // the identical hex string, so the draws stay portable.
     Op("f_bootstrap_ci", {
       val cutSql = poissonCuts.zipWithIndex
         .map { case (c, j) => s"WHEN hv < $c THEN $j" }
@@ -77,67 +191,13 @@ object Analytics {
          |       CAST(sum(w * cents) AS DOUBLE) / CAST(sum(w) AS DOUBLE)
          |         AS mean_cents
          |FROM w GROUP BY 1""".stripMargin
-    }) { (s, d) =>
-      val o = Tables.orders(s, d)
-        .select(col("o_orderkey"),
-          (col("o_totalprice").cast(dec) * 100).cast("long").as("cents"))
-      // draws via the native md5_slices32 kernel — element j is
-      // byte-equal to the conv(substring(md5, 1+j*8, 8)) slice the
-      // oracle SQL replays (Md5DrawParitySpec), minus the hex-string
-      // build + substring + conv parse per (row, replicate)
-      val fan = o.select(col("o_orderkey"), col("cents"),
-          explode(sequence(lit(0), lit(7))).as("g"))
-        .select(col("cents"), col("g"),
-          graft.functions.GraftFunctions.md5Slices32(
-            concat(lit("boot:"), col("g").cast("string"), lit(":"),
-              col("o_orderkey").cast("string"))).as("hs"))
-        .select(col("cents"), col("g"),
-          posexplode(col("hs")).as(Seq("j", "hv")))
-        .select((col("g") * 4 + col("j")).as("b"), col("cents"),
-          col("hv"))
-      val w = poissonCuts.zipWithIndex.reverse
-        .foldLeft(lit(6): org.apache.spark.sql.Column) {
-          case (acc, (c, j)) => when(col("hv") < c, lit(j)).otherwise(acc)
-        }
-      fan.select(col("b"), col("cents"), w.cast("long").as("w"))
-        .groupBy(col("b"))
-        .agg(sum(col("w")).as("n_eff"),
-          sum(col("w") * col("cents")).as("num"))
-        .select(col("b").cast("int").as("b"), col("n_eff"), col("num"),
-          (col("num").cast("double") / col("n_eff").cast("double"))
-            .as("mean_cents"))
-    },
+    })((s, d) => bootstrapCi(s, d, portable = true)),
 
-    // The 100 TB fast path of the same Poisson bootstrap: draws come
-    // from xxhash64 (one codegen'd long hash per (replicate, row) —
-    // no md5 string build, the dedup_minhash_fast convention) masked
-    // to the same 32-bit domain and cut by the same Poisson(1)
-    // inverse-CDF table, so the statistics are distributionally
-    // identical to f_bootstrap_ci's portable-md5 draws while the hash
-    // cost drops by ~an order of magnitude. No DuckDB xxhash64, so the
-    // entry is rows-only; AnalyticsSpec pins n_eff concentration and
-    // replicate-mean dispersion against the md5 path.
-    Op.noOracle("f_bootstrap_ci_fast") { (s, d) =>
-      val o = Tables.orders(s, d)
-        .select(col("o_orderkey"),
-          (col("o_totalprice").cast(dec) * 100).cast("long").as("cents"))
-      val fan = o.select(col("o_orderkey"), col("cents"),
-          explode(sequence(lit(0), lit(31))).as("b"))
-        .select(col("b"), col("cents"),
-          (xxhash64(lit("boot"), col("b"), col("o_orderkey"))
-            .bitwiseAND(lit(4294967295L))).as("hv"))
-      val w = poissonCuts.zipWithIndex.reverse
-        .foldLeft(lit(6): org.apache.spark.sql.Column) {
-          case (acc, (c, j)) => when(col("hv") < c, lit(j)).otherwise(acc)
-        }
-      fan.select(col("b"), col("cents"), w.cast("long").as("w"))
-        .groupBy(col("b"))
-        .agg(sum(col("w")).as("n_eff"),
-          sum(col("w") * col("cents")).as("num"))
-        .select(col("b").cast("int").as("b"), col("n_eff"), col("num"),
-          (col("num").cast("double") / col("n_eff").cast("double"))
-            .as("mean_cents"))
-    },
+    // The same Poisson bootstrap in the xxhash64 hash family (see
+    // bootstrapCi). No DuckDB xxhash64, so the entry is rows-only;
+    // AnalyticsSpec pins n_eff concentration and replicate-mean
+    // dispersion against the md5 family.
+    Op.noOracle("f_bootstrap_ci_fast")(bootstrapCi(_, _, portable = false)),
 
     // Randomization (permutation) test for the urgent-vs-rest gap in
     // mean order value (Fisher 1935; the Bernoulli-relabel variant is
@@ -200,95 +260,15 @@ object Analytics {
          |  FROM reps WHERE m1 > 0 AND m0 > 0)
          |SELECT o.n, o.n1, o.n0, o.d_obs, e.n_valid, e.n_exceed,
          |       e.n_exceed * 1000000 // e.n_valid AS p_ppm
-         |FROM obs o, ex e""".stripMargin) { (s, d) =>
-      val o = Tables.orders(s, d)
-        .select(col("o_orderkey"),
-          (col("o_totalprice").cast(dec) * 100).cast("long").as("cents"),
-          when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)
-            .as("g"))
-      val tot = o.agg(count(lit(1)).as("n"), sum(col("g")).as("n1"),
-          sum(when(col("g") === 1, col("cents")).otherwise(0L)).as("s1"),
-          sum(when(col("g") === 0, col("cents")).otherwise(0L)).as("s0"))
-        .transform(graft.Ckpt.cut(_)) // 1 row; feeds obs AND the fanout
-      val obs = tot.select(col("n"), col("n1"), (col("n") - col("n1"))
-          .as("n0"),
-        (expr("s1 * 1000 div n1") - expr("s0 * 1000 div (n - n1)"))
-          .as("d_obs"))
-      // same md5_slices32 routing as f_bootstrap_ci: draws bit-equal
-      // to the oracle's conv(substring(md5)) slices (Md5DrawParitySpec)
-      val fan = o.crossJoin(broadcast(tot.select(col("n"), col("n1"))))
-        .select(col("o_orderkey"), col("cents"), col("n"), col("n1"),
-          explode(sequence(lit(0), lit(7))).as("g"))
-        .select(col("cents"), col("n"), col("n1"), col("g"),
-          graft.functions.GraftFunctions.md5Slices32(
-            concat(lit("perm:"), col("g").cast("string"), lit(":"),
-              col("o_orderkey").cast("string"))).as("hs"))
-        .select(col("cents"), col("n"), col("n1"), col("g"),
-          posexplode(col("hs")).as(Seq("j", "hv")))
-        .select((col("g") * 4 + col("j")).as("b"), col("cents"),
-          (col("hv") * col("n") <
-            lit(4294967296L) * col("n1")).cast("long").as("gb"))
-      val reps = fan.groupBy(col("b"))
-        .agg(sum(col("gb")).as("m1"),
-          (count(lit(1)) - sum(col("gb"))).as("m0"),
-          sum(when(col("gb") === 1, col("cents")).otherwise(0L)).as("t1"),
-          sum(when(col("gb") === 0, col("cents")).otherwise(0L)).as("t0"))
-      val ex = reps.filter(col("m1") > 0 && col("m0") > 0)
-        .crossJoin(broadcast(obs.select(col("d_obs").as("d_o"))))
-        .agg(count(lit(1)).as("n_valid"),
-          sum(when(abs(expr("t1 * 1000 div m1") -
-            expr("t0 * 1000 div m0")) >= abs(col("d_o")), 1L)
-            .otherwise(0L)).as("n_exceed"))
-      obs.crossJoin(broadcast(ex))
-        .select(col("n"), col("n1"), col("n0"), col("d_obs"),
-          col("n_valid"), col("n_exceed"),
-          expr("n_exceed * 1000000 div n_valid").as("p_ppm"))
-    },
+         |FROM obs o, ex e""".stripMargin)(
+      permutationTest(_, _, portable = true)),
 
-    // The 100 TB fast path of the randomization test: 64 replicates
-    // drawn from one codegen'd xxhash64 per (replicate, row) masked to
-    // the same 32-bit domain — the f_bootstrap_ci_fast convention. No
-    // DuckDB xxhash64, so rows-only; AnalyticsSpec pins the observed
-    // statistic to the portable path's and the p-value to the same
-    // order of magnitude.
-    Op.noOracle("f_permutation_test_fast") { (s, d) =>
-      val o = Tables.orders(s, d)
-        .select(col("o_orderkey"),
-          (col("o_totalprice").cast(dec) * 100).cast("long").as("cents"),
-          when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)
-            .as("g"))
-      val tot = o.agg(count(lit(1)).as("n"), sum(col("g")).as("n1"),
-          sum(when(col("g") === 1, col("cents")).otherwise(0L)).as("s1"),
-          sum(when(col("g") === 0, col("cents")).otherwise(0L)).as("s0"))
-        .transform(graft.Ckpt.cut(_))
-      val obs = tot.select(col("n"), col("n1"), (col("n") - col("n1"))
-          .as("n0"),
-        (expr("s1 * 1000 div n1") - expr("s0 * 1000 div (n - n1)"))
-          .as("d_obs"))
-      val fan = o.crossJoin(broadcast(tot.select(col("n"), col("n1"))))
-        .select(col("cents"), col("n"), col("n1"),
-          explode(sequence(lit(0), lit(63))).as("b"),
-          col("o_orderkey"))
-        .select(col("b"), col("cents"),
-          ((xxhash64(lit("perm"), col("b"), col("o_orderkey"))
-            .bitwiseAND(lit(4294967295L))) * col("n") <
-            lit(4294967296L) * col("n1")).cast("long").as("gb"))
-      val reps = fan.groupBy(col("b"))
-        .agg(sum(col("gb")).as("m1"),
-          (count(lit(1)) - sum(col("gb"))).as("m0"),
-          sum(when(col("gb") === 1, col("cents")).otherwise(0L)).as("t1"),
-          sum(when(col("gb") === 0, col("cents")).otherwise(0L)).as("t0"))
-      val ex = reps.filter(col("m1") > 0 && col("m0") > 0)
-        .crossJoin(broadcast(obs.select(col("d_obs").as("d_o"))))
-        .agg(count(lit(1)).as("n_valid"),
-          sum(when(abs(expr("t1 * 1000 div m1") -
-            expr("t0 * 1000 div m0")) >= abs(col("d_o")), 1L)
-            .otherwise(0L)).as("n_exceed"))
-      obs.crossJoin(broadcast(ex))
-        .select(col("n"), col("n1"), col("n0"), col("d_obs"),
-          col("n_valid"), col("n_exceed"),
-          expr("n_exceed * 1000000 div n_valid").as("p_ppm"))
-    },
+    // The same randomization test in the xxhash64 hash family with 64
+    // replicates (see permutationTest). No DuckDB xxhash64, so rows-only;
+    // AnalyticsSpec pins the observed statistic to the md5 family's and
+    // the p-value to the same order of magnitude.
+    Op.noOracle("f_permutation_test_fast")(
+      permutationTest(_, _, portable = false)),
 
     // Relative-position windows: percent_rank (min-max normalized rank)
     // and cume_dist (empirical CDF value) per priority group — the two

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Op, Tables}
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -362,6 +362,74 @@ object Sketches {
     (0.7213 / (1.0 + 1.079 / m)) * m * m * 562949953421312.0
   }
 
+  /** KMV sketch width of the distinct-count entries. */
+  private val kmvK = 256
+
+  /** The KMV estimate over the sketch `sk` of 60-bit hashes: the exact
+    * count below k distinct hashes, else (k-1)/u with u the k-th
+    * smallest hash as a fraction of 2^60 — two IEEE double ops in the
+    * same order as the oracle's kmvColsSql.
+    */
+  private val kmvEstimate =
+    when(size(col("sk")) < kmvK, size(col("sk")).cast("double"))
+      .otherwise(lit((kmvK - 1).toDouble) /
+        (element_at(col("sk"), kmvK).cast("double")
+          / lit(1152921504606846976.0)))
+      .as("kmv_estimate")
+
+  /** Per-group KMV distinct estimate of l_partkey next to the exact count.
+    * Only the 60-bit hash depends on the hash family: the portable md5
+    * prefix (`md5_bits`, the oracle's '0x' || substr(md5, 1, 15) cast) or
+    * the fast xxhash64 shifted right by 4.
+    */
+  private def kmvDistinct(s: SparkSession, d: String,
+                          portable: Boolean): DataFrame = {
+    val kmv = udaf(new Kmv(kmvK), Encoders.scalaLong)
+    val hv =
+      if (portable)
+        graft.functions.GraftFunctions.md5Bits(
+          col("l_partkey").cast("string"), 1, 15)
+      else shiftrightunsigned(xxhash64(col("l_partkey")), 4)
+    Tables.lineitem(s, d)
+      .select(col("l_returnflag"), col("l_partkey"), hv.as("hv"))
+      .groupBy(col("l_returnflag"))
+      .agg(kmv(col("hv")).as("sk"),
+        countDistinct(col("l_partkey")).as("n_exact"))
+      .select(col("l_returnflag"), col("n_exact"),
+        element_at(col("sk"), size(col("sk"))).as("kmv_kth"), kmvEstimate)
+  }
+
+  /** The oracle's KMV CTE chain: md5-prefix hash `h`, distinct hashes per
+    * group `d`, and `r` ranking them with the group's distinct count nd.
+    */
+  private val kmvRankCtes =
+    """h AS (
+      |  SELECT l_returnflag,
+      |         CAST('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1, 15)
+      |              AS BIGINT) AS hv
+      |  FROM lineitem),
+      |d AS (SELECT DISTINCT l_returnflag, hv FROM h),
+      |r AS (
+      |  SELECT l_returnflag, hv,
+      |         row_number() OVER (PARTITION BY l_returnflag
+      |                            ORDER BY hv) AS rn,
+      |         count(*) OVER (PARTITION BY l_returnflag) AS nd
+      |  FROM d)""".stripMargin
+
+  /** kmv_kth and kmv_estimate over `r` (column qualifier `q`, "" or
+    * "r."), read at the row kmvPickSql keeps.
+    */
+  private def kmvColsSql(q: String): String =
+    s"""CAST(${q}hv AS BIGINT) AS kmv_kth,
+       |       CASE WHEN ${q}nd < $kmvK THEN CAST(${q}nd AS DOUBLE)
+       |            ELSE ${kmvK - 1}.0
+       |                 / (CAST(${q}hv AS DOUBLE) / 1152921504606846976.0)
+       |       END AS kmv_estimate""".stripMargin
+
+  /** The k-th smallest hash's row, or the largest when nd < k. */
+  private def kmvPickSql(q: String): String =
+    s"${q}rn = CASE WHEN ${q}nd < $kmvK THEN ${q}nd ELSE $kmvK END"
+
   val ops: Seq[Op] = Seq(
     // Per-source frequent tokens via the sketch, reduced to the top-5 by
     // estimate. Estimates are partition-order dependent by construction
@@ -415,8 +483,7 @@ object Sketches {
     Op("f_cms_freq",
        s"""WITH occ AS (
           |  SELECT source,
-          |         unnest(string_split(regexp_replace(trim(lower(text)),
-          |           '\\s+', ' ', 'g'), ' ')) AS tok
+          |         unnest(${graft.llm.TextFeatures.toksSql}) AS tok
           |  FROM documents),
           |rows_i AS (SELECT unnest(range($cmsDepth)) AS i),
           |cells AS (
@@ -466,50 +533,17 @@ object Sketches {
     // row_number pick, and the estimate is two IEEE double ops in the
     // same order on both engines — so sketch content AND estimate
     // hash-match exactly.
-    Op("f_kmv_distinct", {
-      val k = 256
-      s"""WITH h AS (
-         |  SELECT l_returnflag,
-         |         CAST('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1, 15)
-         |              AS BIGINT) AS hv
-         |  FROM lineitem),
-         |d AS (SELECT DISTINCT l_returnflag, hv FROM h),
-         |r AS (
-         |  SELECT l_returnflag, hv,
-         |         row_number() OVER (PARTITION BY l_returnflag
-         |                            ORDER BY hv) AS rn,
-         |         count(*) OVER (PARTITION BY l_returnflag) AS nd
-         |  FROM d),
-         |ex AS (
-         |  SELECT l_returnflag,
-         |         CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_exact
-         |  FROM lineitem GROUP BY 1)
-         |SELECT r.l_returnflag, ex.n_exact,
-         |       CAST(r.hv AS BIGINT) AS kmv_kth,
-         |       CASE WHEN r.nd < $k THEN CAST(r.nd AS DOUBLE)
-         |            ELSE ${k - 1}.0
-         |                 / (CAST(r.hv AS DOUBLE) / 1152921504606846976.0)
-         |       END AS kmv_estimate
-         |FROM r JOIN ex ON ex.l_returnflag = r.l_returnflag
-         |WHERE r.rn = CASE WHEN r.nd < $k THEN r.nd ELSE $k END""".stripMargin
-    }) { (s, d) =>
-      val k = 256
-      val kmv = udaf(new Kmv(k), Encoders.scalaLong)
-      val hv = graft.functions.GraftFunctions.md5Bits(
-        col("l_partkey").cast("string"), 1, 15)
-      Tables.lineitem(s, d)
-        .select(col("l_returnflag"), col("l_partkey"), hv.as("hv"))
-        .groupBy(col("l_returnflag"))
-        .agg(kmv(col("hv")).as("sk"),
-          countDistinct(col("l_partkey")).as("n_exact"))
-        .select(col("l_returnflag"), col("n_exact"),
-          element_at(col("sk"), size(col("sk"))).as("kmv_kth"),
-          when(size(col("sk")) < k, size(col("sk")).cast("double"))
-            .otherwise(lit((k - 1).toDouble) /
-              (element_at(col("sk"), k).cast("double")
-                / lit(1152921504606846976.0)))
-            .as("kmv_estimate"))
-    },
+    Op("f_kmv_distinct",
+       s"""WITH $kmvRankCtes,
+          |ex AS (
+          |  SELECT l_returnflag,
+          |         CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_exact
+          |  FROM lineitem GROUP BY 1)
+          |SELECT r.l_returnflag, ex.n_exact,
+          |       ${kmvColsSql("r.")}
+          |FROM r JOIN ex ON ex.l_returnflag = r.l_returnflag
+          |WHERE ${kmvPickSql("r.")}""".stripMargin)(
+      kmvDistinct(_, _, portable = true)),
 
     // Incremental distinct-count maintenance: "yesterday's" stored KMV
     // states absorb a delta batch by EXPLODING the survivor hashes back
@@ -519,31 +553,13 @@ object Sketches {
     // EVERYTHING: hash equality PROVES merge(state, delta) == re-sketch,
     // the sketch analog of ivm_merge_agg. At 100 TB the state is k longs
     // per group — the only thing the nightly merge ever shuffles.
-    Op("ivm_merge_distinct", {
-      val k = 256
-      s"""WITH h AS (
-         |  SELECT l_returnflag,
-         |         CAST('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1, 15)
-         |              AS BIGINT) AS hv
-         |  FROM lineitem),
-         |d AS (SELECT DISTINCT l_returnflag, hv FROM h),
-         |r AS (
-         |  SELECT l_returnflag, hv,
-         |         row_number() OVER (PARTITION BY l_returnflag
-         |                            ORDER BY hv) AS rn,
-         |         count(*) OVER (PARTITION BY l_returnflag) AS nd
-         |  FROM d)
-         |SELECT l_returnflag,
-         |       CAST(hv AS BIGINT) AS kmv_kth,
-         |       CASE WHEN nd < $k THEN CAST(nd AS DOUBLE)
-         |            ELSE ${k - 1}.0
-         |                 / (CAST(hv AS DOUBLE) / 1152921504606846976.0)
-         |       END AS kmv_estimate
-         |FROM r
-         |WHERE rn = CASE WHEN nd < $k THEN nd ELSE $k END""".stripMargin
-    }) { (s, d) =>
-      val k = 256
-      val kmv = udaf(new Kmv(k), Encoders.scalaLong)
+    Op("ivm_merge_distinct",
+       s"""WITH $kmvRankCtes
+          |SELECT l_returnflag,
+          |       ${kmvColsSql("")}
+          |FROM r
+          |WHERE ${kmvPickSql("")}""".stripMargin) { (s, d) =>
+      val kmv = udaf(new Kmv(kmvK), Encoders.scalaLong)
       val hv = graft.functions.GraftFunctions.md5Bits(
         col("l_partkey").cast("string"), 1, 15)
       val li = Tables.lineitem(s, d)
@@ -556,35 +572,15 @@ object Sketches {
         .unionByName(deltaHashes)
         .groupBy(col("l_returnflag")).agg(kmv(col("hv")).as("sk"))
         .select(col("l_returnflag"),
-          element_at(col("sk"), size(col("sk"))).as("kmv_kth"),
-          when(size(col("sk")) < k, size(col("sk")).cast("double"))
-            .otherwise(lit((k - 1).toDouble) /
-              (element_at(col("sk"), k).cast("double")
-                / lit(1152921504606846976.0)))
-            .as("kmv_estimate"))
+          element_at(col("sk"), size(col("sk"))).as("kmv_kth"), kmvEstimate)
     },
 
-    // The PRODUCTION kmv path: xxhash64 instead of the md5-portable hash
-    // (same fast/portable pairing as dedup_minhash_fast) — one codegen'd
-    // long hash per row instead of an md5 hex string + conv. Shifted to
-    // 60 unsigned bits so the same (k-1)/u estimator applies. Hash-family
-    // -specific values -> rows-only; the sketch semantics are the
-    // oracle-checked f_kmv_distinct's, asserted shared in SketchesSpec.
+    // The same KMV sketch in the xxhash64 hash family (see kmvDistinct),
+    // without kmv_kth. Hash-family-specific values, so rows-only;
+    // SketchesSpec asserts the two families agree on groups and n_exact
+    // and that both estimates sit within the KMV error bound.
     Op.noOracle("f_kmv_distinct_fast") { (s, d) =>
-      val k = 256
-      val kmv = udaf(new Kmv(k), Encoders.scalaLong)
-      Tables.lineitem(s, d)
-        .select(col("l_returnflag"), col("l_partkey"),
-          shiftrightunsigned(xxhash64(col("l_partkey")), 4).as("hv"))
-        .groupBy(col("l_returnflag"))
-        .agg(kmv(col("hv")).as("sk"),
-          countDistinct(col("l_partkey")).as("n_exact"))
-        .select(col("l_returnflag"), col("n_exact"),
-          when(size(col("sk")) < k, size(col("sk")).cast("double"))
-            .otherwise(lit((k - 1).toDouble) /
-              (element_at(col("sk"), k).cast("double")
-                / lit(1152921504606846976.0)))
-            .as("kmv_estimate"))
+      kmvDistinct(s, d, portable = false).drop("kmv_kth")
     },
 
     // KMV SET OPERATIONS (Beyer et al., SIGMOD'07 "On synopses for

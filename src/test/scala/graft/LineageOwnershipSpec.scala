@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
   * rule, and a hand-rolled LogicalRDD unpersist is a second release
   * policy. This scan fails on either outside Ckpt.scala and the
   * CheckpointStats bridge. Likewise Instrumentation is the only code
-  * that listens to Spark. Comments are stripped first, so prose may
-  * still name the calls.
+  * that listens to Spark, and TextFeatures the only code that spells
+  * the oracles' text normal form. Comments are stripped first, so prose
+  * may still name the calls.
   */
 class LineageOwnershipSpec extends AnyFunSuite {
 
@@ -59,5 +60,17 @@ class LineageOwnershipSpec extends AnyFunSuite {
     assert(allSources.exists(_._1.endsWith("graft/Instrumentation.scala")),
       "the scan missed the measurement core")
     assert(offenders.isEmpty, s"measure through Instrumentation: $offenders")
+  }
+
+  test("no src/main file outside TextFeatures spells the text normal " +
+       "form regexp_replace(trim(lower(") {
+    val offenders = allSources.collect {
+      case (p, c) if c.contains("regexp_replace(trim(lower(") &&
+          p.getFileName.toString != "TextFeatures.scala" => p.toString
+    }
+    assert(allSources.exists(_._1.endsWith("llm/TextFeatures.scala")),
+      "the scan missed the normal form's owner")
+    assert(offenders.isEmpty,
+      s"use TextFeatures.normSql/toksSql: $offenders")
   }
 }

@@ -28,6 +28,18 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(r.getString(1).length == 32 && r.getString(2).length == 4)
   }
 
+  test("the token-array and string kernels reject a wrong-typed input " +
+       "at analysis") {
+    Seq("minhash_md5(array(1, 2), 8)", "minhash_xx(array(1, 2), 8)",
+      "simhash_md5(array(1, 2))", "simhash_xx('a b')",
+      "token_shingles(array(1L), 3)", "windows_with_pos('a b', 2)",
+      "minwindow_md5(array('a'), 8)", "winnow_fps(42, 4, 3)").foreach { e =>
+      val err = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $e").collect())
+      assert(err.getMessage.contains("input must be"), s"$e: ${err.getMessage}")
+    }
+  }
+
   test("native vec_cosine is bit-identical to the composed fold form") {
     val a = vecs.toDF("ida", "va")
     val b = vecs.toDF("idb", "vb")

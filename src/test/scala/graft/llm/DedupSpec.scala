@@ -132,14 +132,30 @@ class DedupSpec extends SparkSpec {
        "[0, 255]") {
     val big = (1 to 300).map(i => s"tok$i").mkString(" ")
     val d = docs(1L -> big, 2L -> big, 3L -> unrelated)
-    val chunks = Dedup.simhashChunksPortable(d).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    val chunks = Dedup.simhash(d, portable = true)
+      .select(col("doc_id"), array((0 until 8).map(c =>
+        shiftright(col("simhash"), c * 8).bitwiseAND(0xFFL).cast("int")): _*))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(chunks.values.forall(_.forall(v => v >= 0 && v <= 255)))
     assert(chunks(1L) == chunks(2L))
     assert(chunks(1L) != chunks(3L))
-    val pairs = Dedup.simHashNearDupsPortable(d, maxHamming = 0).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val pairs = Dedup.simHashNearDups(d, maxHamming = 0, portable = true)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2).toLong))
+      .toSet
     assert(pairs == Set((1L, 2L, 0L)))
+  }
+
+  test("simhash: both hash families pair exactly the planted copies at " +
+       "hamming 0") {
+    val big = (1 to 300).map(i => s"tok$i").mkString(" ")
+    val d = docs(1L -> big, 2L -> big, 3L -> unrelated, 4L -> nearDup,
+      5L -> big)
+    def pairs(portable: Boolean) =
+      Dedup.simHashNearDups(d, maxHamming = 0, portable = portable)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val md5 = pairs(portable = true)
+    assert(md5 == Set((1L, 2L, 0), (1L, 5L, 0), (2L, 5L, 0)))
+    assert(pairs(portable = false) == md5)
   }
 
   test("cleanCorpus drops low-quality docs, exact copies, and near-dups; " +

@@ -139,6 +139,29 @@ class SketchesSpec extends SparkSpec {
       s"estimate $est vs true $n")
   }
 
+  test("kmv: the md5 and xxhash64 entries agree on groups and n_exact, " +
+       "and each estimate is within the KMV error bound") {
+    val sf = "/root/testdata/sf0.01"
+    def run(name: String) = graft.SparkEntry.queries(name)(spark, sf)
+      .collect().map(r => r.getAs[String]("l_returnflag") ->
+        (r.getAs[Long]("n_exact"), r.getAs[Double]("kmv_estimate"))).toMap
+    val md5 = run("f_kmv_distinct")
+    val fast = run("f_kmv_distinct_fast")
+    assert(md5.nonEmpty)
+    assert(md5.keySet == fast.keySet)
+    assert(md5.map { case (g, (n, _)) => g -> n } ==
+      fast.map { case (g, (n, _)) => g -> n })
+    val k = 256
+    (md5.values ++ fast.values).foreach { case (n, est) =>
+      // exact below k; above it the "exact below k" test's 4-sigma bound
+      if (n < k) assert(est == n.toDouble, s"estimate $est vs exact $n")
+      else assert(math.abs(est - n) < 4 * n / math.sqrt(k - 2.0),
+        s"estimate $est vs true $n")
+    }
+    assert(md5.values.exists(_._1 >= k), "sf0.01 must exercise the k-th " +
+      "smallest hash branch")
+  }
+
   test("kmv jaccard: union survivors estimate overlap within theory " +
        "error; driver entry's exact columns match ground truth") {
     import spark.implicits._
