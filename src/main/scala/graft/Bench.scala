@@ -80,6 +80,7 @@ object Bench {
         s""""jobs":${m.jobs.size},"small_jobs":${m.smallJobs},""" +
         s""""driver_gap_s":${fmt(m.driverGapS)},""" +
         s""""executor_cpu_s":${fmt(m.executorCpuS)},""" +
+        s""""codegen_compiles":${m.codegenCompiles},""" +
         s""""shuffle_read_bytes":${m.shuffleReadBytes},""" +
         s""""shuffle_write_bytes":${m.shuffleWriteBytes},""" +
         s""""disk_spill_bytes":${m.diskSpillBytes},""" +

@@ -40,7 +40,7 @@ object Engine {
       .appName(appName)
       .withExtensions(new functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
+      .config(adaptiveConf)
       .config(semanticConf)
       // managed tables (SessionCatalogWarehouse) land in tmp, not the cwd;
       // per-process dir so a previous JVM's orphaned managed-table
@@ -72,6 +72,12 @@ object Engine {
     spark
   }
 
+  /** AQE on (see the header): a speed setting, not a semantic one, that
+    * `local` and `clusterConf` both apply.
+    */
+  private val adaptiveConf: Map[String, String] =
+    Map("spark.sql.adaptive.enabled" -> "true")
+
   /** Settings that change query RESULTS, not speed. `local` and
     * `clusterConf` both apply exactly this map, so cluster results
     * cannot drift from the oracle-verified local behavior.
@@ -98,14 +104,14 @@ object Engine {
   /** The cluster deployment profile — every setting the 100 TB design
     * notes scattered through this repo assume, codified so a deployment
     * starts from the tuned profile instead of rediscovering it: the
-    * scale knobs below plus [[semanticConf]]. `local` instead pins
-    * shuffle partitions to the core count (on a cluster AQE coalescing
-    * owns that knob).
+    * scale knobs below plus [[adaptiveConf]] and [[semanticConf]].
+    * `local` instead pins shuffle partitions to the core count (on a
+    * cluster AQE coalescing owns that knob).
     */
   def clusterConf: Map[String, String] = Map(
-    // AQE family: runtime partition coalescing, skew-join splitting, and
-    // join-strategy demotion are the first line of defense at 100 TB.
-    "spark.sql.adaptive.enabled" -> "true",
+    // AQE family (on via adaptiveConf): runtime partition coalescing,
+    // skew-join splitting, and join-strategy demotion are the first line
+    // of defense at 100 TB.
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     // Start wide, let AQE coalesce down: at 100 TB a shuffle stage's
@@ -120,7 +126,8 @@ object Engine {
     "spark.sql.files.maxPartitionBytes" -> "268435456",
     // Dims up to 64 MiB broadcast (region/nation/supplier-scale); the
     // scaling fact tables never qualify, AQE can still demote.
-    "spark.sql.autoBroadcastJoinThreshold" -> "67108864") ++ semanticConf
+    "spark.sql.autoBroadcastJoinThreshold" -> "67108864") ++
+    adaptiveConf ++ semanticConf
 
   /** Builder for a cluster deployment: master/executor sizing stays with
     * spark-submit; `checkpointDir` (durable storage, e.g. an s3a/hdfs
@@ -138,14 +145,72 @@ object Engine {
   }
 }
 
-/** Readers for the driver-generated TPC-H-ish parquet tables
-  * (see /root/repo/TESTDATA.md). One method per table so call sites stay
-  * typo-proof; all reads are plain parquet scans that Catalyst can prune
-  * and push filters into.
+/** Readers of parquet table dirs. [[parquet]] is the one reader of a
+  * table dir in the engine; the per-table methods read the
+  * driver-generated TPC-H-ish tables (see TESTDATA.md) through it, one
+  * method per table so call sites stay typo-proof.
+  *
+  * Memo invariant: at most one entry per qualified path, holding the
+  * `HadoopFsRelation` that `spark.read.parquet` resolved under its key:
+  * the session, the session's SQL conf and the dir's recursive listing
+  * (file paths, sizes, mtimes). Every call re-lists the dir and reuses
+  * the relation only when all three match, so a write that adds, drops
+  * or rewrites a file (each written part file has a fresh UUID name; a
+  * new `ingest_batch` partition adds files), another session, or a conf
+  * that changes inference (say `spark.sql.parquet.binaryAsString`)
+  * re-resolves. The first read of each table per session still runs the
+  * schema-inference job; later reads run no job and skip the relation
+  * build. Each call wraps the relation in a new `LogicalRelation` with
+  * fresh attribute ids, so two reads of one table self-join
+  * unambiguously, and the scan is the same plain parquet scan Catalyst
+  * prunes and pushes filters into. A missing or empty dir raises what
+  * `spark.read.parquet` raises and is never memoized.
   */
 object Tables {
+  import org.apache.hadoop.fs.{FileSystem, Path}
+  import org.apache.spark.sql.execution.datasources.LogicalRelation
+  import org.apache.spark.sql.sources.BaseRelation
+
+  private final case class Resolved(session: SparkSession,
+                                    conf: Map[String, String],
+                                    listing: Seq[(String, Long, Long)],
+                                    relation: BaseRelation)
+
+  private val memo =
+    new java.util.concurrent.ConcurrentHashMap[String, Resolved]()
+
+  private def listing(fs: FileSystem, p: Path): Vector[(String, Long, Long)] =
+    fs.listStatus(p).toVector.flatMap { s =>
+      if (s.isDirectory) listing(fs, s.getPath)
+      else Vector((s.getPath.toString, s.getLen, s.getModificationTime))
+    }
+
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = fs.makeQualified(p).toString
+    val files =
+      try listing(fs, p).sortBy(_._1)
+      catch { case _: java.io.FileNotFoundException => Vector.empty }
+    val conf = spark.conf.getAll
+    Option(memo.get(key)).filter(r =>
+        (r.session eq spark) && r.conf == conf && r.listing == files) match {
+      case Some(r) => spark.baseRelationToDataFrame(r.relation)
+      case None =>
+        // entries of stopped sessions can never hit again
+        memo.values.removeIf(_.session.sparkContext.isStopped)
+        val df = spark.read.parquet(path)
+        df.queryExecution.analyzed match {
+          case l: LogicalRelation if files.nonEmpty =>
+            memo.put(key, Resolved(spark, conf, files, l.relation))
+          case _ =>
+        }
+        df
+    }
+  }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

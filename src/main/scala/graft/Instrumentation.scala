@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted,
   SparkListenerTaskEnd}
@@ -48,7 +49,8 @@ object Instrumentation {
       outputRows: Long,
       startMs: Long,
       endMs: Long,
-      jobs: Seq[Job]) {
+      jobs: Seq[Job],
+      codegenCompiles: Long) {
     /** Max single-task share of shuffle write — the skew signal: ~1/p for
       * a balanced p-partition stage, ~1.0 when one task carries the key.
       */
@@ -82,7 +84,9 @@ object Instrumentation {
     * The listener bus is drained before the listener is added and before
     * it is read, so events of earlier actions cannot leak in and every
     * event of this one has landed. Re-entrant: a nested `measure` sees its
-    * own jobs, and the enclosing one sees them too.
+    * own jobs, and the enclosing one sees them too. `codegenCompiles`
+    * counts the Janino compiles of generated code in the window: a
+    * JVM-wide counter, so it includes other threads' compiles.
     */
   def measure[T](spark: SparkSession)(action: => T): (T, RunMetrics) = {
     val sc = spark.sparkContext
@@ -144,14 +148,16 @@ object Instrumentation {
     ListenerBus.drain(sc)
     sc.addSparkListener(listener)
     try {
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val startMs = System.currentTimeMillis()
       val result = action
       val endMs = System.currentTimeMillis()
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles
       ListenerBus.drain(sc)
       lock.synchronized {
         val js = jobs.values.toSeq.sortBy(j => (j.startMs, j.id))
         (result, RunMetrics(tasks, stages, sRead, sWrite, dSpill, mSpill,
-          peakW, inRec, outRows, startMs, endMs, js))
+          peakW, inRec, outRows, startMs, endMs, js, compiled))
       }
     } finally sc.removeSparkListener(listener)
   }

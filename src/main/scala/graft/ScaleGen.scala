@@ -59,7 +59,7 @@ object ScaleGen {
       // row SETS are unchanged so every consumer is unaffected.
       df.repartition(cpus).write.mode("overwrite")
         .parquet(s"$out/$name.parquet")
-      println(s"[scalegen] $name -> ${spark.read.parquet(s"$out/$name.parquet").count()} rows")
+      println(s"[scalegen] $name -> ${Tables.parquet(spark, s"$out/$name.parquet").count()} rows")
     }
 
     // fixed-size dimensions pass through untouched

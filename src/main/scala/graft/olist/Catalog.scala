@@ -335,8 +335,14 @@ final class Warehouse(spark: SparkSession, val dir: String) extends TableStore {
                       partitionBy: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionBy: _*)
       .parquet(path(name).toString)
+  /** Read through [[graft.Tables.parquet]]: the relation is resolved
+    * once per session, keyed by the conf and the table dir's file
+    * listing, so a `save`/`replace` (new part files) re-resolves and the
+    * first load after each write still runs the inference job. Each load
+    * has fresh attribute ids.
+    */
   def load(name: String): DataFrame =
-    spark.read.parquet(path(name).toString)
+    graft.Tables.parquet(spark, path(name).toString)
   def exists(name: String): Boolean = {
     val p = path(name)
     fs(p).exists(p)

@@ -249,7 +249,7 @@ object Layout {
       val probe = Await.result(probeF, Duration.Inf)
       def readCount(dir: String): (Long, Long) = {
         val (n, m) = graft.Instrumentation.measure(s) {
-          s.read.parquet(dir).filter(col("l_orderkey") === probe).count()
+          Tables.parquet(s, dir).filter(col("l_orderkey") === probe).count()
         }
         (n, m.inputRecords)
       }

@@ -122,7 +122,7 @@ class SummaryRouting(spark: SparkSession) extends Rule[LogicalPlan] {
           case Some(outs) =>
             // analyzed scan of the summary relation
             val summaryPlan =
-              spark.read.parquet(summary.summaryLocation)
+              graft.Tables.parquet(spark, summary.summaryLocation)
                 .queryExecution.analyzed
             val byName: Map[String, Attribute] =
               summaryPlan.output.map(a => a.name -> a).toMap

@@ -512,10 +512,10 @@ object StreamOps {
           val cross =
             if (!haveCorpus) None
             else {
-              val corpus = spark.read.parquet(corpusDir)
+              val corpus = graft.Tables.parquet(spark, corpusDir)
                 .filter(col("ingest_batch") < batchId)
                 .select("doc_id", "text")
-              val index = spark.read.parquet(indexDir)
+              val index = graft.Tables.parquet(spark, indexDir)
                 .filter(col("ingest_batch") < batchId)
                 .select("doc_id", "band", "band_sig")
               Some(Dedup.incrementalNearDups(intraKept, corpus, index,
@@ -613,10 +613,10 @@ object StreamOps {
           val crossRejects =
             if (!haveCorpus) None
             else {
-              val corpus = spark.read.parquet(corpusDir)
+              val corpus = graft.Tables.parquet(spark, corpusDir)
                 .filter(col("ingest_batch") < batchId)
                 .select("vec_id", "embedding")
-              val index = spark.read.parquet(indexDir)
+              val index = graft.Tables.parquet(spark, indexDir)
                 .filter(col("ingest_batch") < batchId)
                 .select("vid", "table", "bucket")
               Some(Similarity.incrementalSemanticDedup(intraKept, corpus,

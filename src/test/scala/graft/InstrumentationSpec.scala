@@ -50,6 +50,18 @@ class InstrumentationSpec extends SparkSpec {
     assert(m.executorCpuS > 0.0, m)
   }
 
+  test("codegen compiles: an action over a new projection counts at " +
+       "least one") {
+    // a fresh literal makes the generated code text new, so the codegen
+    // cache cannot serve it
+    val k = System.nanoTime()
+    val (_, m) = Instrumentation.measure(spark) {
+      spark.range(10).select((col("id") * lit(k) + lit(k % 7)).as("x"))
+        .collect()
+    }
+    assert(m.codegenCompiles >= 1, m)
+  }
+
   test("epochUpsample is runtime-map-side: the claimed no-shuffle shape " +
        "holds in task metrics, not just the plan") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")

@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
   * rule, and a hand-rolled LogicalRDD unpersist is a second release
   * policy. This scan fails on either outside Ckpt.scala and the
   * CheckpointStats bridge. Likewise Instrumentation is the only code
-  * that listens to Spark, and TextFeatures the only code that spells
-  * the oracles' text normal form. Comments are stripped first, so prose
+  * that listens to Spark, TextFeatures the only code that spells
+  * the oracles' text normal form, and Tables.parquet the only reader of
+  * a table dir (it memoizes the resolved relation). Comments are stripped first, so prose
   * may still name the calls.
   */
 class LineageOwnershipSpec extends AnyFunSuite {
@@ -72,5 +73,16 @@ class LineageOwnershipSpec extends AnyFunSuite {
       "the scan missed the normal form's owner")
     assert(offenders.isEmpty,
       s"use TextFeatures.normSql/toksSql: $offenders")
+  }
+
+  test("no src/main file outside Engine (Tables.parquet) reads a table " +
+       "dir with read.parquet(") {
+    val offenders = allSources.collect {
+      case (p, c) if c.contains("read.parquet(") &&
+          p.getFileName.toString != "Engine.scala" => p.toString
+    }
+    assert(allSources.exists(_._1.endsWith("graft/Engine.scala")),
+      "the scan missed the table reader's owner")
+    assert(offenders.isEmpty, s"read table dirs with Tables.parquet: $offenders")
   }
 }
