@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.SparkEnv
+import org.apache.spark.serializer.Serializer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SparkSession factory with the engine's standard configuration.
@@ -15,6 +17,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     DuckDB oracle and the reference's TIMESTAMP_NTZ behavior
   *     (reference: models/staging/stg_olist_orders.sql:9-13 renames raw
   *     `%Y-%m-%d %H:%M:%S` timestamps without zone math).
+  *   - In local mode the driver and the in-JVM executor run under one
+  *     context class loader. Spark 4 keys its codegen cache by loader and
+  *     source, so each generated class is then compiled once per JVM: the
+  *     driver's validation compile is the one every task reuses. Threads
+  *     created after [[local]] inherit that loader. A thread created
+  *     before it, or a session from a raw builder, still gives correct
+  *     results but compiles every stage twice.
   */
 object Engine {
   /** Local-mode cores when a caller passes none: SPARK_GRAFT_CPUS if set,
@@ -23,6 +32,12 @@ object Engine {
   def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** The engine's session: `local[cores]`, or `SPARK_GRAFT_MASTER`. In
+    * local mode it also hands the calling thread the executor's default
+    * class loader (see the header), so planning and tasks share one
+    * codegen cache entry per class. A `local-cluster` master's executors
+    * run in other JVMs and keep their own loaders and caches.
+    */
   def local(cores: Int = defaultCores,
             appName: String = "graft"): SparkSession = {
     // Multi-JVM dress rehearsal hooks (tools/multijvm_sweep.sh):
@@ -50,6 +65,10 @@ object Engine {
         s"${System.getProperty("java.io.tmpdir")}/graft-spark-warehouse-" +
           ProcessHandle.current().pid())
       .config("spark.ui.enabled", "false")
+      // SQL tasks run under the executor's default loader rather than a
+      // per-session one; the engine adds no session artifacts, so only
+      // the loader changes
+      .config("spark.sql.artifact.isolation.enabled", "false")
     sys.env.get("SPARK_GRAFT_JARS").foreach(j =>
       builder.config("spark.jars", j))
     // Stress-regime hooks (tools/spill_sweep.sh, tools/chaos_kill.sh):
@@ -66,11 +85,21 @@ object Engine {
         builder.config(k, v)
       })
     val spark = builder.getOrCreate()
+    if (spark.sparkContext.isLocal) shareExecutorLoader()
     spark.sparkContext.setLogLevel("WARN")
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
       .foreach(spark.sparkContext.setCheckpointDir)
     spark
   }
+
+  /** Run the calling thread under the loader the local executor runs its
+    * tasks under: the one it installed as the serializer's default
+    * (Scala-protected, public in bytecode, so read without a Spark job).
+    */
+  private def shareExecutorLoader(): Unit =
+    classOf[Serializer].getMethod("defaultClassLoader")
+      .invoke(SparkEnv.get.serializer).asInstanceOf[Option[ClassLoader]]
+      .foreach(Thread.currentThread.setContextClassLoader)
 
   /** AQE on (see the header): a speed setting, not a semantic one, that
     * `local` and `clusterConf` both apply.

@@ -40,4 +40,19 @@ class EngineSpec extends SparkSpec {
     // and the shared test session was not touched
     assert(spark.conf.get("spark.sql.shuffle.partitions") != "8192")
   }
+
+  test("local mode: the caller, RDD tasks and SQL tasks run under one " +
+       "class loader, so a generated class compiles once per JVM") {
+    import spark.implicits._
+    def loaderId: Int =
+      System.identityHashCode(Thread.currentThread.getContextClassLoader)
+    val caller = Thread.currentThread.getContextClassLoader
+    val rdd = spark.sparkContext.parallelize(1 to 4, 4)
+      .map(_ => loaderId).collect().toSet
+    val sql = spark.range(0, 8, 1, 4).map(_ => loaderId).collect().toSet
+    assert(rdd == Set(System.identityHashCode(caller)), s"$caller vs RDD tasks")
+    assert(sql == Set(System.identityHashCode(caller)), s"$caller vs SQL tasks")
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    assert(!Engine.clusterConf.contains("spark.sql.artifact.isolation.enabled"))
+  }
 }

@@ -62,6 +62,25 @@ class InstrumentationSpec extends SparkSpec {
     assert(m.codegenCompiles >= 1, m)
   }
 
+  test("codegen compiles: a new query's class compiles once, not once " +
+       "on the driver and again in its tasks") {
+    // each query first runs with other literals, which caches the classes
+    // that hold none; the measured run's literals are new, so exactly the
+    // one class that holds them is new to the cache
+    def project(k: Long) =
+      spark.range(0, 100, 1, 4).select(col("id") * lit(k)).collect()
+    def aggregate(k: Long) =
+      spark.range(0, 100, 1, 4).groupBy(col("id") % lit(k % 1000 + 2))
+        .agg(sum(col("id") * lit(k))).collect()
+    val k = System.nanoTime()
+    project(k + 1)
+    val (_, oneStage) = Instrumentation.measure(spark)(project(k))
+    assert(oneStage.codegenCompiles == 1, oneStage)
+    aggregate(k + 1)
+    val (_, twoStages) = Instrumentation.measure(spark)(aggregate(k))
+    assert(twoStages.stages >= 2 && twoStages.codegenCompiles == 1, twoStages)
+  }
+
   test("epochUpsample is runtime-map-side: the claimed no-shuffle shape " +
        "holds in task metrics, not just the plan") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")

@@ -11,7 +11,8 @@ import scala.jdk.CollectionConverters._
   * CheckpointStats bridge. Likewise Instrumentation is the only code
   * that listens to Spark, TextFeatures the only code that spells
   * the oracles' text normal form, and Tables.parquet the only reader of
-  * a table dir (it memoizes the resolved relation). Comments are stripped first, so prose
+  * a table dir (it memoizes the resolved relation), and Engine the only
+  * code that builds a session. Comments are stripped first, so prose
   * may still name the calls.
   */
 class LineageOwnershipSpec extends AnyFunSuite {
@@ -84,5 +85,17 @@ class LineageOwnershipSpec extends AnyFunSuite {
     assert(allSources.exists(_._1.endsWith("graft/Engine.scala")),
       "the scan missed the table reader's owner")
     assert(offenders.isEmpty, s"read table dirs with Tables.parquet: $offenders")
+  }
+
+  test("no src/main file outside Engine builds a session") {
+    // every local session must pass through Engine.local's loader hand-off
+    val build = """SparkSession\s*\.\s*builder|\.getOrCreate\(""".r
+    val offenders = allSources.collect {
+      case (p, c) if build.findFirstIn(c).isDefined &&
+          p.getFileName.toString != "Engine.scala" => p.toString
+    }
+    assert(allSources.exists(c => c._1.endsWith("graft/Engine.scala") &&
+      build.findFirstIn(c._2).isDefined), "the scan missed the factory")
+    assert(offenders.isEmpty, s"create sessions with Engine.local: $offenders")
   }
 }
