@@ -2,6 +2,7 @@ package graft.functions
 
 import java.security.MessageDigest
 
+import com.ibm.icu.lang.UCharacter
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -306,6 +307,53 @@ case class TokenShingles(child: Expression, n: Int)
     copy(child = newChild)
 
   override def prettyName: String = "token_shingles"
+}
+
+/** `icu_lower(s)` / `icu_upper(s)` — Spark's `lower`/`upper` on a plain
+  * (UTF8_BINARY) string, byte for byte: [[IcuCaseMap.map]] makes exactly
+  * the calls Spark 4.1's ICU case mapping makes (ASCII fast path, else
+  * ICU's full-string mapping of the valid-UTF-8 rendering), so final
+  * sigma, `İ`, `ß`, title-case digraphs and invalid UTF-8 come out as
+  * they do from `lower`/`upper`.
+  *
+  * Why a kernel: Spark routes `lower`/`upper` through
+  * `CollationAwareUTF8String`, whose static initializer builds a
+  * title-case table for all 1,114,112 code points (about 3 CPU-s in a
+  * C1-only JVM on a 4-core VM, paid by the first case mapping in every
+  * JVM) that neither function reads. This kernel never loads that class.
+  */
+case class IcuCase(child: Expression, upper: Boolean)
+    extends UnaryExpression with StringInput {
+
+  override def dataType: DataType = StringType
+
+  override def nullIntolerant: Boolean = true
+
+  override def nullSafeEval(a: Any): Any =
+    IcuCaseMap.map(a.asInstanceOf[UTF8String], upper)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.IcuCaseMap.map($c, $upper)")
+
+  override protected def withNewChildInternal(newChild: Expression): IcuCase =
+    copy(child = newChild)
+
+  override def prettyName: String = if (upper) "icu_upper" else "icu_lower"
+}
+
+object IcuCaseMap {
+
+  /** The body of `CollationAwareUTF8String.toLowerCase`/`toUpperCase`
+    * (spark-unsafe 4.1), without that class's static initializer.
+    */
+  def map(s: UTF8String, upper: Boolean): UTF8String =
+    if (s.isFullAscii) {
+      if (upper) s.toUpperCaseAscii else s.toLowerCaseAscii
+    } else {
+      val v = s.toValidString
+      UTF8String.fromString(
+        if (upper) UCharacter.toUpperCase(v) else UCharacter.toLowerCase(v))
+    }
 }
 
 object MinhashMd5 {

@@ -499,6 +499,12 @@ object GraftFunctions {
       new ExpressionInfo(classOf[TokenShingles].getName, "token_shingles"),
       (children: Seq[Expression]) => TokenShingles(children(0),
         children(1).eval().asInstanceOf[Number].intValue())),
+    (FunctionIdentifier("icu_lower"),
+      new ExpressionInfo(classOf[IcuCase].getName, "icu_lower"),
+      (children: Seq[Expression]) => IcuCase(children(0), upper = false)),
+    (FunctionIdentifier("icu_upper"),
+      new ExpressionInfo(classOf[IcuCase].getName, "icu_upper"),
+      (children: Seq[Expression]) => IcuCase(children(0), upper = true)),
     (FunctionIdentifier("winnow_fps"),
       new ExpressionInfo(classOf[WinnowFps].getName, "winnow_fps"),
       (children: Seq[Expression]) => WinnowFps(children(0),
@@ -593,6 +599,8 @@ object GraftFunctions {
   def minWindowMd5(s: Column, window: Int): Column =
     call_function("minwindow_md5", s,
       org.apache.spark.sql.functions.lit(window))
+  def icuLower(s: Column): Column = call_function("icu_lower", s)
+  def icuUpper(s: Column): Column = call_function("icu_upper", s)
   def winnowFps(s: Column, gram: Int, win: Int): Column =
     call_function("winnow_fps", s,
       org.apache.spark.sql.functions.lit(gram),

@@ -222,7 +222,7 @@ object Bpe {
     val ranks = merges.zipWithIndex.toMap
     val toks: Dataset[(Long, Seq[String])] = docs
       .select(col(idCol).cast("long"),
-        TextFeatures.tokens(col(textCol)))
+        TextFeatures.tokens(col(textCol)).as("toks"))
       .as[(Long, Seq[String])]
     toks.map { case (id, ws) =>
       (id, ws.length.toLong,

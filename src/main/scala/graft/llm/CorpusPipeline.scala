@@ -67,11 +67,10 @@ object CorpusPipeline {
 
     // stage 1: quality — structural Gopher rules + C4 blocklist rules +
     // length bounds (see the Scaladoc note on the punctuation toggles).
-    // ONE filtered scan (r14): the flag frames are pure projections, so
-    // the old gopherRules ⋈ c4Rules ⋈ corpus composition paid two extra
-    // corpus scans plus two doc_id joins for a predicate a single
-    // map-side select evaluates; CorpusQuality.structuralPass is built
-    // from the same flag expressions, so the survivor set is identical.
+    // ONE filtered scan: CorpusQuality.structuralPass is built from the
+    // same flag expressions as gopherRules and c4Rules, so its survivors
+    // equal gopherRules ⋈ c4Rules ⋈ corpus without two extra corpus scans
+    // and two doc_id joins.
     val qIds = cutIds(
       corpus.filter(CorpusQuality.structuralPass(col("text"),
           col("n_chars"), 100L, 50000L))
@@ -109,7 +108,7 @@ object CorpusPipeline {
     // each stage's id set is a subset of the previous stage's, so the
     // text re-attachment is ONE corpus ⋉ ids semi-join, not the join
     // chain corpus ⋉ cleanIds ⋉ mixIds (⋉ finIds) — same rows, one scan
-    // and one join fewer per stage (r14)
+    // and one join fewer per stage
     val mixed = corpus.join(mixIds, Seq("doc_id"), "left_semi")
 
     // stage 6: per-source token budget in md5-draw order
@@ -202,7 +201,7 @@ object CorpusPipeline {
     val batch = nonBench.filter(col("doc_id") % batchMod === 0)
 
     // stage 1: the same structural quality gate as stageCounts — one
-    // filtered scan via CorpusQuality.structuralPass (r14, see there)
+    // filtered scan via CorpusQuality.structuralPass (see there)
     val qIds = cutIds(
       batch.filter(CorpusQuality.structuralPass(col("text"),
           col("n_chars"), 100L, 50000L))

@@ -216,7 +216,7 @@ object CorpusQuality {
     */
   private def c4Flags(text: Column):
       (Column, Column, Column, Column, Column, Column) = {
-    val lt = lower(text)
+    val lt = graft.functions.GraftFunctions.icuLower(text)
     val lines = split(text, "\n")
     val kept = filter(lines, l =>
       substring(trim(l), -1, 1).isin(".", "!", "?", "\"") &&
@@ -251,10 +251,10 @@ object CorpusQuality {
     * ONE Column over (text, n_chars). Built from the same
     * [[gopherFlags]]/[[c4Flags]] expressions the flag frames expose, so
     * `structuralPass` ⇔ `g_wc = 1 AND … AND c4_no_js = 1 AND bounds` by
-    * construction. Exists so the gate is one filtered scan instead of
-    * three scans joined on doc_id (r14; the flag frames are pure
-    * projections — joining them re-reads and re-shuffles the corpus
-    * twice for columns a single select computes).
+    * construction. The gate is one filtered scan, not three scans joined
+    * on doc_id: the flag frames are pure projections, so joining them
+    * would re-read and re-shuffle the corpus twice for columns a single
+    * select computes.
     */
   def structuralPass(text: Column, nChars: Column,
                      minChars: Long = 100L,
@@ -270,13 +270,12 @@ object CorpusQuality {
     * one row per document saying whether it survives and exactly which
     * rule families rejected it (bit 0 = Gopher, bit 1 = C4,
     * bit 2 = length bounds on n_chars). Both rule families' flags are
-    * computed in ONE map-side pass over the scan (r14; the previous
-    * composition joined the [[gopherRules]] and [[c4Rules]] frames on
-    * doc_id — two extra scans plus two joins for columns a single
-    * select computes; same expressions via [[gopherFlags]]/[[c4Flags]],
-    * so the verdict is bit-identical). keep = reasons == 0. The bitmask
-    * is what drives drop-rate dashboards and per-rule ablations without
-    * re-running the filters.
+    * computed in ONE map-side pass over the scan, from the same
+    * [[gopherFlags]]/[[c4Flags]] expressions as the [[gopherRules]] and
+    * [[c4Rules]] frames, so the verdict equals the doc_id join of those
+    * frames without its two extra scans and two joins. keep =
+    * reasons == 0. The bitmask is what drives drop-rate dashboards and
+    * per-rule ablations without re-running the filters.
     */
   def docVerdict(docs: DataFrame, idCol: String = "doc_id",
                  textCol: String = "text",

@@ -96,7 +96,7 @@ object QualityModel {
     */
   def corrupt(text: Column): Column =
     regexp_replace(
-      regexp_replace(lower(text),
+      regexp_replace(graft.functions.GraftFunctions.icuLower(text),
         "\\b(" + TextFeatures.stopwords.mkString("|") + ")\\b", ""),
       "[aeiou]", "#")
 

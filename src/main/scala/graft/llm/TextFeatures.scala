@@ -4,19 +4,25 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.icuLower
+
 /** Text-analysis column builders for a training-data pipeline: tokenization,
   * token-count estimation, quality scoring, language ID, fingerprinting.
   *
-  * All of these are pure Spark SQL expressions (whole-stage-codegen'd — no
-  * UDFs anywhere), so they stream through a 100 TB scan at full columnar
-  * speed and push no work onto the driver. Each has an exact DuckDB oracle
-  * counterpart in LlmOps.
+  * All of these are Catalyst expressions with no UDFs: Spark built-ins
+  * plus the native kernels of `graft.functions` (case mapping is
+  * `icu_lower`, never Spark's `lower`). They run map-side and push no work
+  * onto the driver; the higher-order-function lambdas (`filter`,
+  * `transform`, `aggregate`) are interpreted per element, the rest is
+  * code-generated. Each has an exact DuckDB oracle counterpart in LlmOps.
   */
 object TextFeatures {
 
-  /** Lower-cased, whitespace-collapsed normal form. */
+  /** Lower-cased (Spark's ICU mapping, via `icu_lower`),
+    * whitespace-collapsed normal form.
+    */
   def normalized(text: Column): Column =
-    regexp_replace(trim(lower(text)), "\\s+", " ")
+    regexp_replace(trim(icuLower(text)), "\\s+", " ")
 
   /** Whitespace tokens of the normal form. */
   def tokens(text: Column): Column =
@@ -71,14 +77,14 @@ object TextFeatures {
     * pre-tokenizer regex shape used by byte-pair encoders.
     */
   def bpeTokenCount(text: Column): Column =
-    size(regexp_extract_all(lower(text), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0)))
+    size(regexp_extract_all(icuLower(text), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0)))
 
   /** Share of non-alphanumeric, non-space characters. NULL for the empty
     * string (undefined share, and ANSI-mode Spark would otherwise abort
     * the whole job on the division — fuzz `minimal` regime).
     */
   def punctRatio(text: Column): Column =
-    length(regexp_replace(lower(text), "[a-z0-9\\s]", "")).cast("double") /
+    length(regexp_replace(icuLower(text), "[a-z0-9\\s]", "")).cast("double") /
       when(length(text) =!= 0, length(text))
 
   val stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is")
@@ -108,7 +114,7 @@ object TextFeatures {
     val stopScore = when(stopwordRatio(text) > 0.02, 1.0).otherwise(0.7)
     // No rounding: the constant arithmetic is the same IEEE sequence on the
     // Spark and oracle sides, and round() tie-handling differs between
-    // engines (the r01 lesson).
+    // engines.
     lenScore * 0.5 + punctScore * 0.25 + stopScore * 0.25
   }
 

@@ -216,7 +216,7 @@ object Wordpiece {
     import spark.implicits._
     val toks: Dataset[(Long, Seq[String])] = docs
       .select(col(idCol).cast("long"),
-        TextFeatures.tokens(col(textCol)))
+        TextFeatures.tokens(col(textCol)).as("toks"))
       .as[(Long, Seq[String])]
     toks.map { case (id, ws) =>
       val encoded = ws.map(w => encodeWord(w, vocab))

@@ -300,10 +300,9 @@ object Analytics {
     // ever materializes — the same substrate f_equidepth_hist ranks on,
     // which is what makes an "ORDER BY the whole fact table" statistic
     // 100 TB-viable. The rank-weighted sums run in 128-bit integers on
-    // both engines (DECIMAL(38,0) / HUGEINT) — the r10 sf1 stress caught
-    // the BIGINT formulation overflowing at just 1.5M orders (Σ rank·
-    // cents ≈ 2×10^19 > 2^63); num/den present as DOUBLE of the exact
-    // integers, and the float is one division.
+    // both engines (DECIMAL(38,0) / HUGEINT): a BIGINT sum overflows at
+    // 1.5M orders (Σ rank·cents ≈ 2×10^19 > 2^63); num/den present as
+    // DOUBLE of the exact integers, and the float is one division.
     Op("m_gini",
        """WITH o AS (
          |  SELECT o_orderkey,
@@ -356,8 +355,8 @@ object Analytics {
     // Analytic window: running order count + running spend per customer.
     // The accumulator is exact decimal (order-independent across
     // partitionings/retries); the result is presented as DOUBLE — see the
-    // Relational.scala numeric-determinism note (DECIMAL output columns were
-    // the r01 hash-fail signature).
+    // Relational.scala numeric-determinism note (a DECIMAL output column
+    // fails the oracle hash compare).
     Op("w2_running_total",
        """SELECT o_custkey AS customer_id, o_orderkey AS order_id,
          |       count(*) OVER w AS orders_so_far,
@@ -522,7 +521,7 @@ object Analytics {
          |FROM customer""".stripMargin) { (s, d) =>
       Tables.customer(s, d).select(
         col("c_custkey").as("customer_id"),
-        upper(col("c_name")).as("name_upper"),
+        graft.functions.GraftFunctions.icuUpper(col("c_name")).as("name_upper"),
         substring(col("c_name"), 1, 8).as("name_prefix"),
         concat(col("c_mktsegment"), lit("#"), col("c_name")).as("tagged"),
         length(col("c_name")).as("name_len"))
@@ -1625,7 +1624,7 @@ object Analytics {
     * notes). Ties order by id, which cannot change the sum.
     *
     * Σ rank·cents brushes 2^63 already around sf1 (1.5M orders × 2×10^7
-    * cents → ~2×10^19 — caught by the r10 full-inventory sf1 stress), so
+    * cents → ~2×10^19), so
     * the rank-weighted accumulation runs in DECIMAL(38,0) — exact to
     * 10^38, i.e. headroom past 10^12 rows — and num/den are PRESENTED as
     * DOUBLE (exact integers cast identically on both engines; a DECIMAL

@@ -12,8 +12,10 @@ import scala.jdk.CollectionConverters._
   * that listens to Spark, TextFeatures the only code that spells
   * the oracles' text normal form, and Tables.parquet the only reader of
   * a table dir (it memoizes the resolved relation), and Engine the only
-  * code that builds a session. Comments are stripped first, so prose
-  * may still name the calls.
+  * code that builds a session. No code case-maps through Spark's
+  * `lower`/`upper`/`initcap` (the native `icu_lower`/`icu_upper` give
+  * the same bytes without Spark's 1.1M-code-point title-case table).
+  * Comments are stripped first, so prose may still name the calls.
   */
 class LineageOwnershipSpec extends AnyFunSuite {
 
@@ -74,6 +76,22 @@ class LineageOwnershipSpec extends AnyFunSuite {
       "the scan missed the normal form's owner")
     assert(offenders.isEmpty,
       s"use TextFeatures.normSql/toksSql: $offenders")
+  }
+
+  test("no src/main code calls Spark's lower(, upper( or initcap(") {
+    // string literals hold the DuckDB oracle SQL, which keeps lower()
+    val tripleQuoted = "(?s)\"{3}.*?\"{3,}"
+    val quoted = "\"(?:\\\\.|[^\"\\\\\n])*\""
+    val literal = s"$tripleQuoted|$quoted".r
+    val call = """\b(lower|upper|initcap)\(""".r
+    val offenders = allSources.collect {
+      case (p, c) if call.findFirstIn(literal.replaceAllIn(c, "\"\"")).isDefined =>
+        p.toString
+    }
+    assert(allSources.exists(c => c._1.endsWith("llm/LlmOps.scala") &&
+      call.findFirstIn(c._2).isDefined), "the scan missed the oracle SQL")
+    assert(offenders.isEmpty,
+      s"case-map with GraftFunctions.icuLower/icuUpper: $offenders")
   }
 
   test("no src/main file outside Engine (Tables.parquet) reads a table " +

@@ -15,7 +15,8 @@ class VectorExpressionsSpec extends SparkSpec {
   test("the whole native family is registered by the session extension " +
        "and callable from SQL") {
     Seq("vec_cosine", "vec_dot", "vec_norm", "minhash_md5", "minhash_xx",
-      "minwindow_md5", "simhash_md5", "simhash_xx").foreach { f =>
+      "minwindow_md5", "simhash_md5", "simhash_xx", "icu_lower",
+      "icu_upper").foreach { f =>
       assert(spark.catalog.functionExists(f), f)
     }
     // SQL-surface smoke: a consumer with only the SQL API can use them
@@ -33,7 +34,8 @@ class VectorExpressionsSpec extends SparkSpec {
     Seq("minhash_md5(array(1, 2), 8)", "minhash_xx(array(1, 2), 8)",
       "simhash_md5(array(1, 2))", "simhash_xx('a b')",
       "token_shingles(array(1L), 3)", "windows_with_pos('a b', 2)",
-      "minwindow_md5(array('a'), 8)", "winnow_fps(42, 4, 3)").foreach { e =>
+      "minwindow_md5(array('a'), 8)", "winnow_fps(42, 4, 3)",
+      "icu_lower(42)", "icu_upper(array('a'))").foreach { e =>
       val err = intercept[org.apache.spark.sql.AnalysisException](
         spark.sql(s"SELECT $e").collect())
       assert(err.getMessage.contains("input must be"), s"$e: ${err.getMessage}")

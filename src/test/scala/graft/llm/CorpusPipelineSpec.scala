@@ -1,6 +1,8 @@
 package graft.llm
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 
 /** CorpusPipeline.stageCounts — the one-entry funnel preset. The DuckDB
@@ -94,6 +96,31 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(appends.map(_._2).sum == stages.last._2 &&
       appends.map(_._3).sum == stages.last._3)
     assert(appends.forall(_._2 > 0))
+  }
+
+  test("neither preset reaches Spark's case mapping: no Lower, Upper or " +
+       "InitCap in any plan the optimizer sees") {
+    // Spark's lower/upper initialize CollationAwareUTF8String, whose
+    // 1.1M-code-point title-case table is the presets' largest cold cost;
+    // cut stages are optimized before the final plan exists, so every
+    // plan is recorded as it passes the optimizer, not just the last one.
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val recorder = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        plan.foreachWithSubqueries(_.expressions.foreach(
+          _.foreach(e => seen.add(e.nodeName))))
+        plan
+      }
+    }
+    val docs = Tables.documents(spark, sf)
+    spark.experimental.extraOptimizations = Seq(recorder)
+    try {
+      CorpusPipeline.stageCounts(docs).collect()
+      CorpusPipeline.incrementalStageCounts(docs).collect()
+    } finally spark.experimental.extraOptimizations = Nil
+    val sparkCaseMaps = Set("Lower", "Upper", "InitCap")
+    assert(!sparkCaseMaps.exists(seen.contains), seen)
+    assert(seen.contains("IcuCase"), "the quality gate's plan was not seen")
   }
 
   // Note: on (near-)empty inputs the driver log may show a swallowed
