@@ -1,6 +1,6 @@
 package graft.olist
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** D1–D3: model registry, DAG scheduling, and `--select` semantics.
@@ -966,136 +966,101 @@ final class Catalog(
           warehouse.replace(name, kept.unionByName(batch), Seq(pcol))
         }
       case Materialization.Snapshot(key, updatedAt, hardDeletes, snapAt) =>
-        import Materialization.HardDeletes
-        val newRec = hardDeletes == HardDeletes.NewRecord
-        val fresh = builtFor(m)
-        val toType = fresh.schema(updatedAt).dataType
-        val nullTo = org.apache.spark.sql.functions.lit(null).cast(toType)
-        val freshSnap0 = fresh
-          .withColumn("valid_from", col(updatedAt))
-          .withColumn("valid_to", nullTo)
-        // new_record mode: every live row carries the tombstone flag
-        val freshSnap =
-          if (!newRec) freshSnap0
-          else freshSnap0.withColumn("dbt_is_deleted",
-            org.apache.spark.sql.functions.lit(false))
-        if (!warehouse.exists(name)) warehouse.save(name, freshSnap)
-        else {
-          val stored = warehouse.load(name)
-          val current = stored.filter(col("valid_to").isNull)
-          val history = stored.filter(col("valid_to").isNotNull)
-          // a key's incoming row supersedes its current version iff newer
-          val curKeys = current
-            .select(col(key).as("__k"), col("valid_from").as("__cur_from"))
-          val incoming = freshSnap
-            .join(curKeys, col(key) === col("__k"), "left")
-            .filter(col("__k").isNull || col(updatedAt) > col("__cur_from"))
-            .drop("__k", "__cur_from")
-          val superseded = incoming
-            .select(col(key).as("__k"), col("valid_from").as("__new_from"))
-          val closed = current.join(superseded, col(key) === col("__k"))
-            .withColumn("valid_to", col("__new_from"))
-            .drop("__k", "__new_from")
-          val untouched = current
-            .join(superseded, col(key) === col("__k"), "left_anti")
-          // hard_deletes: keys gone from the source close at the RUN's
-          // timestamp (Invalidate), optionally also appending an open
-          // tombstone row flagged dbt_is_deleted (NewRecord)
-          val (deleted, kept) =
-            if (hardDeletes == HardDeletes.Ignore) (None, untouched)
-            else {
-              val at = org.apache.spark.sql.functions.lit(snapAt())
-                .cast(toType)
-              val batchKeys = fresh.select(col(key)).distinct()
-              val gone = untouched
-                .join(batchKeys, Seq(key), "left_anti")
-                .withColumn("valid_to", at)
-              val keep = untouched.join(batchKeys, Seq(key), "left_semi")
-              if (!newRec) (Some(gone), keep)
-              else {
-                val tomb = gone
-                  .withColumn("valid_from", at)
-                  .withColumn("valid_to", nullTo)
-                  .withColumn("dbt_is_deleted",
-                    org.apache.spark.sql.functions.lit(true))
-                (Some(gone.unionByName(tomb)), keep)
-              }
-            }
-          val merged = history.unionByName(closed).unionByName(kept)
-            .unionByName(incoming)
-          warehouse.replace(name,
-            deleted.fold(merged)(merged.unionByName))
-        }
+        // a key's incoming row supersedes its current version iff newer
+        mergeSnapshot(name, builtFor(m), key, Some(updatedAt),
+          Seq("valid_from"), hardDeletes, snapAt)(
+          col("valid_from") > col("__cur_valid_from"))
       case Materialization.SnapshotCheck(key, checkCols, snapshotAt,
                                          hardDeletes) =>
-        import Materialization.HardDeletes
-        val newRec = hardDeletes == HardDeletes.NewRecord
         val fresh = builtFor(m)
-        val at = org.apache.spark.sql.functions.lit(snapshotAt())
-        val freshSnap0 = fresh
-          .withColumn("valid_from", at)
-          .withColumn("valid_to",
-            org.apache.spark.sql.functions.lit(null).cast("timestamp"))
-        val freshSnap =
-          if (!newRec) freshSnap0
-          else freshSnap0.withColumn("dbt_is_deleted",
-            org.apache.spark.sql.functions.lit(false))
-        if (!warehouse.exists(name)) warehouse.save(name, freshSnap)
-        else {
-          val stored = warehouse.load(name)
-          val current = stored.filter(col("valid_to").isNull)
-          val history = stored.filter(col("valid_to").isNotNull)
-          // check_cols: all = every column of the build's output. In
-          // new_record mode the tombstone flag joins the watched set, so
-          // a key REAPPEARING after deletion registers as changed (its
-          // current version is the flag=true tombstone, the incoming row
-          // carries false) and a fresh live version opens.
-          val cols = (if (checkCols.nonEmpty) checkCols
-            else fresh.columns.toSeq) ++
-            (if (newRec) Seq("dbt_is_deleted") else Nil)
-          val cur = current.select(col(key).as("__k") +:
-            cols.map(c => col(c).as(s"__cur_$c")): _*)
-          // changed iff new key OR any watched column differs null-safely
-          // (dbt's column_changed_expression is the null-aware inequality)
-          val changed = cols.map(c => !(col(c) <=> col(s"__cur_$c")))
-            .reduce(_ || _)
-          val incoming = freshSnap
-            .join(cur, col(key) === col("__k"), "left")
-            .filter(col("__k").isNull || changed)
-            .drop("__k" +: cols.map(c => s"__cur_$c"): _*)
-          val superseded = incoming.select(col(key).as("__k"))
-          val closed = current.join(superseded, col(key) === col("__k"))
-            .withColumn("valid_to", at)
-            .drop("__k")
-          val untouched = current
-            .join(superseded, col(key) === col("__k"), "left_anti")
-          // hard_deletes, like the timestamp strategy
-          val (deleted, kept) =
-            if (hardDeletes == HardDeletes.Ignore) (None, untouched)
-            else {
-              val batchKeys = fresh.select(col(key)).distinct()
-              val gone = untouched
-                .join(batchKeys, Seq(key), "left_anti")
-                .withColumn("valid_to", at)
-              val keep = untouched.join(batchKeys, Seq(key), "left_semi")
-              if (!newRec) (Some(gone), keep)
-              else {
-                val tomb = gone
-                  .withColumn("valid_from", at)
-                  .withColumn("valid_to",
-                    org.apache.spark.sql.functions.lit(null).cast("timestamp"))
-                  .withColumn("dbt_is_deleted",
-                    org.apache.spark.sql.functions.lit(true))
-                (Some(gone.unionByName(tomb)), keep)
-              }
-            }
-          val merged = history.unionByName(closed).unionByName(kept)
-            .unionByName(incoming)
-          warehouse.replace(name,
-            deleted.fold(merged)(merged.unionByName))
-        }
+        // check_cols: all = every column of the build's output. In
+        // new_record mode the tombstone flag joins the watched set, so
+        // a key REAPPEARING after deletion registers as changed (its
+        // current version is the flag=true tombstone, the incoming row
+        // carries false) and a fresh live version opens.
+        val cols = (if (checkCols.nonEmpty) checkCols
+          else fresh.columns.toSeq) ++
+          (if (hardDeletes == Materialization.HardDeletes.NewRecord)
+            Seq("dbt_is_deleted") else Nil)
+        // changed iff any watched column differs null-safely (dbt's
+        // column_changed_expression is the null-aware inequality)
+        mergeSnapshot(name, fresh, key, None, cols, hardDeletes,
+          snapshotAt)(
+          cols.map(c => !(col(c) <=> col(s"__cur_$c"))).reduce(_ || _))
       case _ =>
         warehouse.save(name, builtFor(m))
+    }
+  }
+
+  /** dbt's SCD2 snapshot merge, for both strategies. A version opens at
+    * `updatedAt`'s value (timestamp strategy) or at the run's timestamp
+    * `runAt` (check strategy, `updatedAt` = None), and stays current
+    * (valid_to NULL) until an incoming row for its key is new or
+    * `changed`; the superseded version then closes at the new one's
+    * valid_from. `changed` compares each incoming row's `watched`
+    * columns with the current version's, read as `__cur_<column>`.
+    * hard_deletes: keys gone from the source close at the run's
+    * timestamp (Invalidate), optionally also appending an open
+    * tombstone row flagged dbt_is_deleted (NewRecord). `runAt` is
+    * called at most once.
+    */
+  private def mergeSnapshot(name: String, fresh: DataFrame, key: String,
+      updatedAt: Option[String], watched: Seq[String],
+      hardDeletes: Materialization.HardDeletes,
+      runAt: () => java.sql.Timestamp)(changed: Column): Unit = {
+    import Materialization.HardDeletes
+    import org.apache.spark.sql.functions.lit
+    val newRec = hardDeletes == HardDeletes.NewRecord
+    lazy val runTs = lit(runAt())
+    val validFrom = updatedAt.fold(runTs)(col)
+    val fromType = fresh.select(validFrom).schema.head.dataType
+    lazy val at = runTs.cast(fromType)
+    val nullTo = lit(null).cast(fromType)
+    val freshSnap0 = fresh
+      .withColumn("valid_from", validFrom)
+      .withColumn("valid_to", nullTo)
+    // new_record mode: every live row carries the tombstone flag
+    val freshSnap =
+      if (!newRec) freshSnap0
+      else freshSnap0.withColumn("dbt_is_deleted", lit(false))
+    if (!warehouse.exists(name)) warehouse.save(name, freshSnap)
+    else {
+      val stored = warehouse.load(name)
+      val current = stored.filter(col("valid_to").isNull)
+      val history = stored.filter(col("valid_to").isNotNull)
+      val cur = current.select(col(key).as("__k") +:
+        watched.map(c => col(c).as(s"__cur_$c")): _*)
+      val incoming = freshSnap
+        .join(cur, col(key) === col("__k"), "left")
+        .filter(col("__k").isNull || changed)
+        .drop("__k" +: watched.map(c => s"__cur_$c"): _*)
+      val superseded = incoming
+        .select(col(key).as("__k"), col("valid_from").as("__new_from"))
+      val closed = current.join(superseded, col(key) === col("__k"))
+        .withColumn("valid_to", col("__new_from"))
+        .drop("__k", "__new_from")
+      val untouched = current
+        .join(superseded, col(key) === col("__k"), "left_anti")
+      val (deleted, kept) =
+        if (hardDeletes == HardDeletes.Ignore) (None, untouched)
+        else {
+          val batchKeys = fresh.select(col(key)).distinct()
+          val gone = untouched
+            .join(batchKeys, Seq(key), "left_anti")
+            .withColumn("valid_to", at)
+          val keep = untouched.join(batchKeys, Seq(key), "left_semi")
+          if (!newRec) (Some(gone), keep)
+          else {
+            val tomb = gone
+              .withColumn("valid_from", at)
+              .withColumn("valid_to", nullTo)
+              .withColumn("dbt_is_deleted", lit(true))
+            (Some(gone.unionByName(tomb)), keep)
+          }
+        }
+      val merged = history.unionByName(closed).unionByName(kept)
+        .unionByName(incoming)
+      warehouse.replace(name, deleted.fold(merged)(merged.unionByName))
     }
   }
 

@@ -446,10 +446,9 @@ object Events {
     // AFTER the integer moments, never a per-row float sum (those are
     // partitioning-dependent).
     Op("e_ab_welch",
-       """WITH u AS (
+       s"""WITH u AS (
          |  SELECT user_id, user_id % 2 AS variant,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
+         |         ${Timeseries.centsSql} AS cents
          |  FROM events GROUP BY 1, 2),
          |g AS (
          |  SELECT variant, CAST(count(*) AS BIGINT) AS n,

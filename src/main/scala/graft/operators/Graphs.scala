@@ -31,6 +31,31 @@ import org.apache.spark.sql.functions._
   */
 object Graphs {
 
+  /** Both orientations of every edge of `edges` as (src, dst), self-loops
+    * dropped, duplicates kept.
+    */
+  private def bothWays(edges: DataFrame, srcCol: String = "src",
+                       dstCol: String = "dst"): DataFrame =
+    edges.select(explode(array(
+        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
+        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .filter(col("src") =!= col("dst"))
+
+  /** The simple undirected graph spanned by `edges`: [[bothWays]], then
+    * dedup, in ONE full-edge exchange. Repartitioning on `by` first
+    * clusters every (src, dst) group into one partition, so the dedup
+    * aggregate and any later window, aggregate or join keyed on `by` plan
+    * without another exchange; distinct() would hash on both columns and
+    * make each of those re-shuffle the edge list.
+    */
+  private def undirected(edges: DataFrame, srcCol: String = "src",
+                         dstCol: String = "dst",
+                         by: String = "src"): DataFrame =
+    bothWays(edges, srcCol, dstCol)
+      .repartition(col(by))
+      .dropDuplicates(Seq("src", "dst"))
+
   /** Run `iters` synchronous PageRank rounds over the UNDIRECTED graph
     * spanned by `edges` (symmetrized + deduplicated here, so every node
     * has in-degree >= 1 and the dangling-mass problem vanishes by
@@ -47,19 +72,7 @@ object Graphs {
     require(iters >= 1, s"iters must be positive, got $iters")
     require(scale >= 1000, s"scale too small for meaningful ranks: $scale")
     require(checkpointEvery >= 1, "checkpointEvery must be positive")
-    // ONE full-edge exchange, not two (r13): repartition on src first,
-    // then dedup — hash(src) clusters every (src, dst) group into one
-    // partition, so the dedup aggregate AND the degree window both plan
-    // without further exchanges (ClusteredDistribution(src, dst) and
-    // (src) are satisfied by hash(src)). The old distinct()-then-window
-    // shape shuffled the full edge relation twice.
-    val sym = edges.select(explode(array(
-        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
-        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .repartition(col("src"))
-      .dropDuplicates(Seq("src", "dst"))
+    val sym = undirected(edges, srcCol, dstCol)
     // degree-annotated adjacency, materialized once — every round joins
     // it. Degree comes from a count window over src rather than a
     // groupBy+join-back: that turns three full-edge shuffles (distinct,
@@ -113,14 +126,7 @@ object Graphs {
                            iters: Int = 10, scale: Long = 1L << 40,
                            checkpointEvery: Int = 10): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
-    // one full-edge exchange, not two — see pageRank's sym note (r13)
-    val sym = edges.select(explode(array(
-        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
-        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .repartition(col("src"))
-      .dropDuplicates(Seq("src", "dst"))
+    val sym = undirected(edges, srcCol, dstCol)
     val adj = Ckpt.cut(sym.withColumn("deg",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("src")))))
@@ -172,10 +178,9 @@ object Graphs {
     // the whole annotate step in ONE plan chain; the groupBy+join-back
     // formulation fed the edge build into three subtrees and needed a
     // second checkpoint to stop re-execution.
-    // one exchange saved (r13): repartition(a) + exchange-free dedup
-    // replaces distinct(), and the `a` window then runs on the existing
-    // hash(a) partitioning — two full-edge exchanges in this build
-    // instead of three (see pageRank's sym note)
+    // the [[undirected]] build under a/b names: the `a` window reuses
+    // its hash(a) partitioning, so the build takes two full-edge
+    // exchanges, not three
     val sym = edges.select(explode(array(
         struct(col(srcCol).as("a"), col(dstCol).as("b")),
         struct(col(dstCol).as("a"), col(srcCol).as("b")))).as("e"))
@@ -266,20 +271,13 @@ object Graphs {
             dstCol: String = "dst", maxRounds: Int = 20): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     val W = org.apache.spark.sql.expressions.Window
-    // one full-edge exchange in the build (see pageRank's sym note, r13),
-    // leaving `cur` hash(src)-partitioned for round 0's src window
-    var cur = Ckpt.cut(edges.select(explode(array(
-        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
-        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .repartition(col("src"))
-      .dropDuplicates(Seq("src", "dst")))
+    // hash(src)-partitioned for round 0's src window
+    var cur = Ckpt.cut(undirected(edges, srcCol, dstCol))
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
       val obs = org.apache.spark.sql.Observation(s"kcore_removed_r$round")
-      // Alternate the window evaluation order per round (r13): the two
+      // Alternate the window evaluation order per round: the two
       // degree windows key on different columns, so one of them always
       // re-shuffles — but the round's OUTPUT keeps the partitioning of
       // whichever window ran last, so evaluating THAT side first next
@@ -338,8 +336,8 @@ object Graphs {
              dstCol: String = "dst", maxRounds: Int = 30): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     val W = org.apache.spark.sql.expressions.Window
-    // one exchange, hash(a)-partitioned (r13): the orientation build's
-    // `a` window below then runs exchange-free (see pageRank's sym note)
+    // one exchange, hash(a)-partitioned: the orientation build's `a`
+    // window below then runs exchange-free (see [[undirected]])
     var cur = Ckpt.cut(edges.select(
         least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
@@ -437,18 +435,12 @@ object Graphs {
                        dstCol: String = "dst", iters: Int = 5,
                        checkpointEvery: Int = 10): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
-    // ONE full-edge exchange, not two (r13): self-loops are unioned in
-    // WITH duplicates (one per incident raw edge — harmless, the dedup
-    // collapses them) so the whole relation takes a single
-    // repartition(src) and one exchange-free dedup aggregate, instead of
-    // distinct() + union + a second full repartition. A self-loop key
-    // (u, u) can never collide with a real edge (src =!= dst is filtered
-    // first), so the dedup is exact.
-    val raw = edges.select(explode(array(
-        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
-        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
+    // ONE full-edge exchange: self-loops are unioned in WITH duplicates
+    // (one per incident raw edge — the dedup collapses them) so the whole
+    // relation takes a single repartition(src) and one exchange-free
+    // dedup aggregate. A self-loop key (u, u) can never collide with a
+    // real edge (bothWays drops src = dst), so the dedup is exact.
+    val raw = bothWays(edges, srcCol, dstCol)
     val adj = Ckpt.cut(raw.unionByName(
         raw.select(col("src"), col("src").as("dst")))
       .repartition(col("src")) // rounds join on src: no re-shuffle
@@ -486,15 +478,7 @@ object Graphs {
   def wlRefinement(edges: DataFrame, srcCol: String = "src",
                    dstCol: String = "dst", rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds must be positive, got $rounds")
-    // one full-edge exchange, not two — see pageRank's sym note (r13)
-    val sym = edges.select(explode(array(
-        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
-        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .repartition(col("src"))
-      .dropDuplicates(Seq("src", "dst"))
-    val adj = Ckpt.cut(sym)
+    val adj = Ckpt.cut(undirected(edges, srcCol, dstCol))
     var colors = adj.groupBy(col("src").as("node"))
       .agg(count(lit(1)).cast("string").as("color"))
     for (_ <- 1 to rounds) {
@@ -656,16 +640,15 @@ object Graphs {
     * a broadcast nested loop of one row. State is one generation of
     * O(nodes) rows, cut every half-step.
     *
-    * Headroom & the ADAPTIVE scale (r12 — the sf10 probe's catch): with
-    * L1 renormalization every half-step, total mass never exceeds
-    * `scale`, so any node's raw push-sum is ≤ scale and the per-node
-    * multiply is ≤ scale² — scale up to 2^31 stays BIGINT-exact
-    * regardless of degree (the old "max-degree·scale" bound was loose).
+    * Headroom & the ADAPTIVE scale: with L1 renormalization every
+    * half-step, total mass never exceeds `scale`, so any node's raw
+    * push-sum is ≤ scale and the per-node multiply is ≤ scale² — scale
+    * up to 2^31 stays BIGINT-exact regardless of degree.
     * The binding constraint is the OTHER direction: the initial state is
     * scale div nh per hub, so a fixed 2^20 scale zeroes the whole state
-    * once the graph exceeds 2^20 hubs — at sf10 the 1.5M-customer trade
-    * graph hit exactly that (v0 = 0 → S = 0 → division by zero on the
-    * first normalize). scale = 0 (the default) now means AUTO:
+    * once the graph exceeds 2^20 hubs — the 1.5M-customer sf10 trade
+    * graph does (v0 = 0 → S = 0 → division by zero on the first
+    * normalize). scale = 0 (the default) therefore means AUTO:
     * min(2^31, max(2^20, nh·2^10)) — ≥ 1024 units of per-node
     * resolution up to 2M hubs, degrading gracefully to 1 unit at 2^31
     * hubs, failing loudly beyond (a 100 TB graph past 2^31 nodes needs
@@ -682,10 +665,9 @@ object Graphs {
     // both orientations materialized once, each partitioned on ITS round
     // join key - the standard store-both-directions trade (2x edge
     // storage buys zero edge shuffles across all 2*iters half-steps).
-    // r13: the forward orientation dedups exchange-free after its single
-    // repartition (see pageRank's sym note) and the backward one derives
-    // from it — two full-edge exchanges + two cuts instead of three of
-    // each (the old shape cut a distinct()'d `e` first).
+    // The forward orientation dedups exchange-free after its single
+    // repartition (see [[undirected]]) and the backward one derives from
+    // it: two full-edge exchanges and two cuts in all.
     val eF = Ckpt.cut(edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
       .repartition(col("s"))
       .dropDuplicates(Seq("s", "d")))
@@ -706,12 +688,11 @@ object Graphs {
     // each half-step references that aggregate twice — the rows and the
     // L1 normalizer built from them — so an uncut chain re-executes the
     // prefix 2^steps times (measured: 34s vs ~1s for 8 half-steps at
-    // sf0.1). r13: the normalizer total
-    // now rides the SAME cut action as an Observation and is folded into
-    // the projection as a LITERAL — the per-half-step scalar-aggregate
-    // job and its broadcast exchange are gone (same exact integer
-    // division; DuckDB's replay already computes the identical per-round
-    // scalar). `prev` is a projection over the PREVIOUS half-step's cut,
+    // sf0.1). The normalizer total rides the SAME cut action as an
+    // Observation and is folded into the projection as a LITERAL, so no
+    // half-step runs a scalar-aggregate job or a broadcast exchange (the
+    // same exact integer division DuckDB's replay computes per round).
+    // `prev` is a projection over the PREVIOUS half-step's cut,
     // so two raw generations stay alive at a time.
     val rawGens = scala.collection.mutable.Queue.empty[DataFrame]
     var half = 0
@@ -760,17 +741,13 @@ object Graphs {
                    srcCol: String = "src", dstCol: String = "dst",
                    iters: Int = 6, checkpointEvery: Int = 6): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
-    // ONE full-edge exchange, not two (r13): symmetrized edges (w=1,
-    // with duplicates) and per-incident-edge self-loops (w=0) union
-    // BEFORE the single repartition(src); the min-w aggregate then runs
-    // exchange-free under hash(src) and collapses both duplicate kinds.
-    // A self-loop key (u, u) can never collide with a real edge (the
-    // src =!= dst filter runs first), so min(w) is a pure dedup.
-    val raw = edges.select(explode(array(
-        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
-        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
+    // ONE full-edge exchange: symmetrized edges (w=1, with duplicates)
+    // and per-incident-edge self-loops (w=0) union BEFORE the single
+    // repartition(src); the min-w aggregate then runs exchange-free under
+    // hash(src) and collapses both duplicate kinds. A self-loop key
+    // (u, u) can never collide with a real edge (bothWays drops
+    // src = dst), so min(w) is a pure dedup.
+    val raw = bothWays(edges, srcCol, dstCol)
     val step = Ckpt.cut(raw.select(col("src"), col("dst"), lit(1L).as("w"))
       .unionByName(raw.select(col("src"), col("src").as("dst"),
         lit(0L).as("w")))
@@ -802,8 +779,8 @@ object Graphs {
                    wCol: String = "w",
                    iters: Int = 6, checkpointEvery: Int = 6): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
-    // one full-edge exchange, not two — the shortestHops step-build
-    // shape (r13): self-loops (w=0) union in pre-dedup, one
+    // one full-edge exchange — the shortestHops step-build shape with a
+    // weight column: self-loops (w=0) union in pre-dedup, one
     // repartition(src), and the min-w aggregate collapses parallel
     // edges AND duplicate self-loops exchange-free.
     val raw = edges.select(explode(array(
@@ -821,8 +798,8 @@ object Graphs {
     // node-set recovery keys on src === dst (exactly the injected
     // self-loops — a real edge can't have src === dst, the filter above
     // removed them), NOT on w === 0: a zero-cost real edge in the input
-    // must not inject duplicate seed rows (r14 guard; with positive
-    // costs the two predicates select the same rows).
+    // must not inject duplicate seed rows (with positive costs the two
+    // predicates select the same rows).
     val d0 = step.filter(col("src") === col("dst") && seedPred(col("src")))
       .select(col("src").as("node"), lit(0L).as("dist"))
     val d = Ckpt.iterate(d0, iters, checkpointEvery)(relaxHops(step, _))
@@ -884,14 +861,8 @@ object Graphs {
                     srcCol: String = "src", dstCol: String = "dst",
                     iters: Int = 6): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
-    // one full-edge exchange, not two — see pageRank's sym note (r13)
-    val sym = Ckpt.cut(edges.select(explode(array(
-        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
-        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .repartition(col("src")) // rounds join on src: no re-shuffle
-      .dropDuplicates(Seq("src", "dst")))
+    // rounds join on src: no re-shuffle
+    val sym = Ckpt.cut(undirected(edges, srcCol, dstCol))
     val seedFrame = sym.select(col("src").as("node")).distinct()
       .filter(seedPred(col("node")))
     val out =
@@ -1027,18 +998,10 @@ object Graphs {
                   maxRounds: Int = 12): DataFrame = {
     // both passes keyed differently: forward probes by src, backward by
     // dst - one orientation each, partitioned on its own join key (the
-    // HITS recipe), so neither pass ever re-shuffles the edge list.
-    // r13: the src orientation dedups exchange-free after its single
-    // repartition (see pageRank's sym note) and the dst orientation
-    // derives from it — two full-edge exchanges total instead of three,
-    // and one fewer checkpoint action.
-    val sym = Ckpt.cut(edges.select(explode(array(
-        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
-        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .repartition(col("src"))
-      .dropDuplicates(Seq("src", "dst")))
+    // HITS recipe), so neither pass ever re-shuffles the edge list. The
+    // dst orientation derives from the src one: two full-edge exchanges
+    // in all.
+    val sym = Ckpt.cut(undirected(edges, srcCol, dstCol))
     val symB = Ckpt.cut(sym.repartition(col("dst")))
     val seeds = sym.select(col("src").as("node")).distinct()
       .filter(seedPred(col("node")))
@@ -1143,12 +1106,7 @@ object Graphs {
                   srcCol: String = "src", dstCol: String = "dst",
                   steps: Int = 8): DataFrame = {
     require(steps >= 1, s"steps must be positive, got $steps")
-    val sym = Ckpt.cut(edges.select(explode(array(
-        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
-        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct())
+    val sym = Ckpt.cut(bothWays(edges, srcCol, dstCol).distinct())
     var state = Ckpt.cut(sym.select(col("src").as("node")).distinct()
       .filter(seedPred(col("node")))
       .select(col("node").as("walk"), lit(0L).as("step"), col("node")))
@@ -1188,9 +1146,8 @@ object Graphs {
     * intra edge can never be a cross pick, and the per-component
     * argmin over per-pair argmins equals the global argmin — while the
     * working relation shrinks geometrically instead of re-joining the
-    * full edge table against the label map every round (the previous
-    * design; graph_mst warm-probed 8.6 s → see commit for the
-    * post-contraction number). Each edge carries its ORIGINAL
+    * full edge table against the label map every round. Each edge
+    * carries its ORIGINAL
     * (src, dst, w) through relabeling, so the output and the tie
     * order never change. Per round: one per-component min-struct
     * aggregate over the CURRENT (contracted) edges, a component merge
@@ -1217,13 +1174,12 @@ object Graphs {
     var done = false
     while (!done && round < maxRounds) {
       val obs = org.apache.spark.sql.Observation(s"msf_cross_$round")
-      // No per-round distinct (r13): both endpoints' components may pick
-      // the same edge, but every consumer tolerates the duplicate row —
-      // the observation only tests n == 0, componentMinLabels dedups its
+      // No per-round distinct: both endpoints' components may pick the
+      // same edge, but every consumer tolerates the duplicate row — the
+      // observation only tests n == 0, componentMinLabels dedups its
       // pair input itself, the contraction relabel is keyed on the label
       // map, and the FINAL distinct() below collapses the chosen set
-      // once. Dropping it removes one exchange + one AQE stage per
-      // Borůvka round.
+      // once, saving one exchange + one AQE stage per Borůvka round.
       val pick = Ckpt.cut(cur.select(
           explode(array(col("ca"), col("cb"))).as("c"),
           struct(col("e").as("e"), col("ca"), col("cb")).as("p"))
@@ -1236,10 +1192,9 @@ object Graphs {
         Ckpt.release(pick)
         done = true
       } else {
-        // Defer the chosen-forest union to the end of the run (r13): the
-        // per-round cut(chosen ∪ pick) materialization bought nothing —
-        // `chosen` is only read once, after convergence — and cost one
-        // action (plus its AQE stages) per round. The per-round pick
+        // The chosen forest is read only once, after convergence, so its
+        // union is deferred to the end of the run rather than cut (one
+        // action plus its AQE stages) every round. The per-round pick
         // checkpoints stay alive until the final union materializes (the
         // maskHops perRound protocol); total footprint is rounds × picked
         // edges, bounded by the forest size.
@@ -1296,14 +1251,8 @@ object Graphs {
     */
   def coreness(edges: DataFrame, srcCol: String = "src",
                dstCol: String = "dst", rounds: Int = 10): DataFrame = {
-    // one full-edge exchange, not two — see pageRank's sym note (r13)
-    val sym = Ckpt.cut(edges.select(explode(array(
-        struct(col(srcCol).as("src"), col(dstCol).as("dst")),
-        struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .repartition(col("dst")) // rounds join on dst: no re-shuffle
-      .dropDuplicates(Seq("src", "dst")))
+    // rounds join on dst: no re-shuffle
+    val sym = Ckpt.cut(undirected(edges, srcCol, dstCol, by = "dst"))
     var c = Ckpt.cut(sym.groupBy(col("src"))
       .agg(count(lit(1)).cast("long").as("c"))
       .withColumnRenamed("src", "node"))
@@ -1338,6 +1287,92 @@ object Graphs {
       |  SELECT p1.s AS a, p2.s AS b
       |  FROM pairs p1 JOIN pairs p2 ON p1.ok = p2.ok AND p1.s < p2.s
       |  GROUP BY 1, 2 HAVING count(*) >= 6)""".stripMargin
+
+  /** Both orientations of e0's co-supplier edges as the CTE `name`. */
+  private def coSupplierSymCte(name: String): String =
+    s"""$name AS (
+       |  SELECT a AS src, b AS dst FROM e0
+       |  UNION ALL SELECT b, a FROM e0)""".stripMargin
+
+  /** DuckDB replay of tradeGraph's distinct (customer, supplier) pairs. */
+  private val tradeRawCte: String =
+    """raw AS (
+      |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
+      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey)""".stripMargin
+
+  /** The simple undirected graph over the CTE `raw`, as the CTE `name`. */
+  private def undirectedCte(name: String): String =
+    s"""$name AS (
+       |  SELECT src, dst FROM raw WHERE src <> dst
+       |  UNION SELECT dst, src FROM raw WHERE src <> dst)""".stripMargin
+
+  /** The undirected trade graph: CTEs `raw` and `edges`. */
+  private val tradeEdgesCte: String =
+    s"$tradeRawCte,\n${undirectedCte("edges")}"
+
+  private val nodesCte: String =
+    "nodes AS (SELECT DISTINCT src AS node FROM edges)"
+
+  /** The undirected trade graph with its degrees and node set: CTEs
+    * `raw`, `edges`, `deg`, `nodes` (the PageRank replays' prologue). */
+  private val tradeDegreeCtes: String =
+    s"""$tradeEdgesCte,
+       |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
+       |$nodesCte""".stripMargin
+
+  /** The BFS relaxation step over `edges`: unit-weight edges plus one
+    * 0-weight self-loop per node, so "keep the current distance" folds
+    * into the same min-aggregate. CTEs `nodes` and `step`. */
+  private val hopStepCtes: String =
+    s"""$nodesCte,
+       |step AS (
+       |  SELECT src, dst, CAST(1 AS BIGINT) AS w FROM edges
+       |  UNION ALL SELECT node, node, 0 FROM nodes)""".stripMargin
+
+  /** DuckDB replay of perSourceHops(tradeGraph, node < 100, iters): the
+    * (s, node, dist) relaxation is the CTE `d`, final at iter = `iters`.
+    */
+  private def perSourceHopsCtes(iters: Int): String =
+    s"""$tradeEdgesCte,
+       |$hopStepCtes,
+       |d AS (
+       |  SELECT 0 AS iter, node AS s, node, CAST(0 AS BIGINT) AS dist
+       |  FROM nodes WHERE node < 100
+       |  UNION ALL
+       |  SELECT d.iter + 1, d.s, st.dst AS node, min(d.dist + st.w)
+       |  FROM d JOIN step st ON st.src = d.node
+       |  WHERE d.iter < $iters
+       |  GROUP BY 1, 2, 3)""".stripMargin
+
+  /** DuckDB replay of five labelPropagation rounds over
+    * tradeGraphWeighted (>= 3 lines): the repeat-trade pairs `raw`, the
+    * symmetric `edges` with one stability self-loop per node, `nodes`,
+    * and the rounds `lp`, final at iter = 5.
+    */
+  private val labelPropCtes: String =
+    s"""raw AS (
+       |  SELECT o_custkey AS src, l_suppkey + 1000000 AS dst
+       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+       |  GROUP BY 1, 2 HAVING count(*) >= 3),
+       |edges AS (
+       |  SELECT src, dst FROM raw WHERE src <> dst
+       |  UNION SELECT dst, src FROM raw WHERE src <> dst
+       |  UNION SELECT node, node FROM (
+       |    SELECT DISTINCT src AS node FROM (
+       |      SELECT src FROM raw UNION ALL SELECT dst FROM raw))),
+       |$nodesCte,
+       |lp(iter, node, label) AS (
+       |  SELECT 0, node, node FROM nodes
+       |  UNION ALL
+       |  SELECT iter + 1, node, label FROM (
+       |    SELECT l.iter AS iter, e.dst AS node, l.label AS label,
+       |           row_number() OVER (PARTITION BY l.iter, e.dst
+       |                              ORDER BY count(*) DESC, l.label)
+       |             AS rn
+       |    FROM lp l JOIN edges e ON e.src = l.node
+       |    WHERE l.iter < 5
+       |    GROUP BY l.iter, e.dst, l.label)
+       |  WHERE rn = 1)""".stripMargin
 
   /** Unrolled k-truss oracle: `rounds` support-then-peel rounds as PLAIN
     * (non-recursive) CTE chains over e0. A recursive CTE cannot express
@@ -1404,11 +1439,10 @@ object Graphs {
     * weighted co-supplier graph by distributed Borůvka. The forest is
     * UNIQUE under the total (weight desc, src, dst) edge order, so any
     * algorithm that respects that order produces the same edge set —
-    * and the oracle now replays BORŮVKA ROUNDS too (r12; the r10
-    * edge-per-recursion-step Kruskal replay was O(|E|) steps × a full
-    * node relabel each and timed out DuckDB's 900 s budget at sf1,
-    * while the engine ran 13.5 s — an oracle-capacity hole, VERDICT
-    * r11 #2). Each recursion step is ONE round: every component label
+    * and the oracle replays BORŮVKA ROUNDS too: O(log V) recursion
+    * steps, where an edge-per-step Kruskal replay takes O(|E|) steps ×
+    * a full node relabel each and outruns DuckDB's 900 s budget at
+    * sf1. Each recursion step is ONE round: every component label
     * picks its minimum-rank crossing edge (per-label min over the
     * crossing-edge census), chosen edges are emitted as kind=1 rows,
     * and the merged components contract by pointer DOUBLING over the
@@ -1419,7 +1453,7 @@ object Graphs {
     * at least halves, so rounds ≤ log2 V). Every per-round CTE is
     * MATERIALIZED — DuckDB inlines plain CTEs per reference, and the
     * doubling chain references each level twice, which would expand
-    * 2^K copies of the census (the graph_wl_refinement lesson).
+    * 2^K copies of the census.
     * Borůvka under a total edge order yields the same unique forest
     * as Kruskal (cut property with all-distinct ranks), so the edge
     * set hash-compares against the engine's contracted Borůvka.
@@ -1494,15 +1528,7 @@ object Graphs {
     // operator gets a full hash compare (r is BIGINT — no float anywhere).
     Op("graph_pagerank",
        s"""WITH RECURSIVE
-          |raw AS (
-          |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-          |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-          |edges AS (
-          |  SELECT src, dst FROM raw WHERE src <> dst
-          |  UNION
-          |  SELECT dst, src FROM raw WHERE src <> dst),
-          |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
-          |nodes AS (SELECT DISTINCT src AS node FROM edges),
+          |$tradeDegreeCtes,
           |nn AS (SELECT count(*) AS n FROM nodes),
           |pr AS (
           |  SELECT 0 AS iter, node, CAST($S // n AS BIGINT) AS r
@@ -1629,9 +1655,7 @@ object Graphs {
     // map hash-compares exactly.
     Op("graph_wcc",
        s"""WITH RECURSIVE $coSupplierCte,
-         |edges AS (
-         |  SELECT a AS src, b AS dst FROM e0
-         |  UNION ALL SELECT b, a FROM e0),
+         |${coSupplierSymCte("edges")},
          |walk(node, reach) AS (
          |  SELECT src, dst FROM edges
          |  UNION
@@ -1652,9 +1676,7 @@ object Graphs {
     // GraphsSpec cross-checks it against graph_kcore's peeling.
     Op("graph_coreness",
        s"""WITH RECURSIVE $coSupplierCte,
-         |e AS (
-         |  SELECT a AS src, b AS dst FROM e0
-         |  UNION ALL SELECT b, a FROM e0),
+         |${coSupplierSymCte("e")},
          |h(it, node, c) AS (
          |  SELECT 0, src, CAST(count(*) AS BIGINT) FROM e GROUP BY 2
          |  UNION ALL
@@ -1673,8 +1695,8 @@ object Graphs {
 
     // Sampled-source betweenness centrality on the co-supplier graph:
     // seeds = supplier nodes with id <= 10 (the pinned-sample
-    // convention of graph_bfs/graph_ppr). ORACLE-EXACT now (r10): δ
-    // ratios are rational, but with BOTH dependency sums folded in a
+    // convention of graph_bfs/graph_ppr). Oracle-exact: δ ratios are
+    // rational, but with BOTH dependency sums folded in a
     // pinned order (per-(s,v) by predecessor node, final bc by seed —
     // see the ordered-fold note in `betweenness`), the whole δ
     // computation is one fixed IEEE sequence, so a recursive CTE
@@ -1756,15 +1778,7 @@ object Graphs {
     Op("graph_ppr", {
       val seed = "node < 100"
       s"""WITH RECURSIVE
-         |raw AS (
-         |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (
-         |  SELECT src, dst FROM raw WHERE src <> dst
-         |  UNION
-         |  SELECT dst, src FROM raw WHERE src <> dst),
-         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
+         |$tradeDegreeCtes,
          |ns AS (SELECT count(*) AS n FROM nodes WHERE $seed),
          |pr AS (
          |  SELECT 0 AS iter, node,
@@ -1799,29 +1813,7 @@ object Graphs {
     // factors land in three regimes (one block / 77 communities / a
     // shattered fringe) and all replay.
     Op("graph_label_prop",
-       """WITH RECURSIVE raw AS (
-         |  SELECT o_custkey AS src, l_suppkey + 1000000 AS dst
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-         |  GROUP BY 1, 2 HAVING count(*) >= 3),
-         |edges AS (
-         |  SELECT src, dst FROM raw WHERE src <> dst
-         |  UNION SELECT dst, src FROM raw WHERE src <> dst
-         |  UNION SELECT node, node FROM (
-         |    SELECT DISTINCT src AS node FROM (
-         |      SELECT src FROM raw UNION ALL SELECT dst FROM raw))),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |lp(iter, node, label) AS (
-         |  SELECT 0, node, node FROM nodes
-         |  UNION ALL
-         |  SELECT iter + 1, node, label FROM (
-         |    SELECT l.iter AS iter, e.dst AS node, l.label AS label,
-         |           row_number() OVER (PARTITION BY l.iter, e.dst
-         |                              ORDER BY count(*) DESC, l.label)
-         |             AS rn
-         |    FROM lp l JOIN edges e ON e.src = l.node
-         |    WHERE l.iter < 5
-         |    GROUP BY l.iter, e.dst, l.label)
-         |  WHERE rn = 1)
+       s"""WITH RECURSIVE $labelPropCtes
          |SELECT node, label FROM lp WHERE iter = 5""".stripMargin) {
       (s, d) =>
         labelPropagation(
@@ -1934,9 +1926,7 @@ object Graphs {
     // hash-compare, converged rounds being no-ops on both sides.
     Op("graph_kcore",
        s"""WITH RECURSIVE $coSupplierCte,
-         |ed AS (
-         |  SELECT a AS src, b AS dst FROM e0
-         |  UNION ALL SELECT b, a FROM e0),
+         |${coSupplierSymCte("ed")},
          |kc(iter, src, dst) AS (
          |  SELECT 0, src, dst FROM ed
          |  UNION ALL
@@ -1968,10 +1958,8 @@ object Graphs {
     // window-sum normalizer — the division order is pinned, so scores
     // hash-compare exactly.
     Op("graph_hits",
-       """WITH RECURSIVE
-         |raw AS (
-         |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+       s"""WITH RECURSIVE
+         |$tradeRawCte,
          |dir AS (
          |  SELECT src AS s, dst AS d, 0 AS par FROM raw
          |  UNION ALL SELECT dst, src, 1 FROM raw),
@@ -2009,21 +1997,12 @@ object Graphs {
     // skew handling, and plain hash joins downstream. Two keyed
     // aggregates, output bounded by the distinct-degree count.
     Op("graph_degree_dist",
-       """WITH raw AS (
-         |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (SELECT src, dst FROM raw WHERE src <> dst
-         |          UNION SELECT dst, src FROM raw WHERE src <> dst),
+       s"""WITH $tradeEdgesCte,
          |degs AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
          |         FROM edges GROUP BY 1)
          |SELECT deg, count(*) AS n_nodes FROM degs GROUP BY 1""".stripMargin) {
       (s, d) =>
-        val raw = tradeGraph(Tables.orders(s, d), Tables.lineitem(s, d))
-        raw.select(explode(array(
-            struct(col("src"), col("dst")),
-            struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-          .select(col("e.src").as("src"), col("e.dst").as("dst"))
-          .filter(col("src") =!= col("dst"))
+        bothWays(tradeGraph(Tables.orders(s, d), Tables.lineitem(s, d)))
           .distinct()
           .groupBy(col("src")).agg(count(lit(1)).as("deg"))
           .groupBy(col("deg")).agg(count(lit(1)).as("n_nodes"))
@@ -2035,17 +2014,9 @@ object Graphs {
     // which is also the only shape a single-reference recursive CTE can
     // express — the oracle replays the relaxation itself.
     Op("graph_bfs",
-       """WITH RECURSIVE
-         |raw AS (
-         |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (
-         |  SELECT src, dst FROM raw WHERE src <> dst
-         |  UNION SELECT dst, src FROM raw WHERE src <> dst),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |step AS (
-         |  SELECT src, dst, CAST(1 AS BIGINT) AS w FROM edges
-         |  UNION ALL SELECT node, node, 0 FROM nodes),
+       s"""WITH RECURSIVE
+         |$tradeEdgesCte,
+         |$hopStepCtes,
          |d AS (
          |  SELECT 0 AS iter, node, CAST(0 AS BIGINT) AS dist
          |  FROM nodes WHERE node < 100
@@ -2065,14 +2036,9 @@ object Graphs {
     // the recursive CTE verbatim (min over (hash, neighbor) structs),
     // so every hop of every walk hash-compares.
     Op("graph_random_walks",
-       """WITH RECURSIVE
-         |raw AS (
-         |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (
-         |  SELECT src, dst FROM raw WHERE src <> dst
-         |  UNION SELECT dst, src FROM raw WHERE src <> dst),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
+       s"""WITH RECURSIVE
+         |$tradeEdgesCte,
+         |$nodesCte,
          |w(walk, step, node) AS (
          |  SELECT node, CAST(0 AS BIGINT), node FROM nodes WHERE node < 100
          |  UNION ALL
@@ -2204,25 +2170,7 @@ object Graphs {
     // fixed-round min-aggregate BFS as graph_bfs, keyed by (source,
     // node), so the recursive CTE replays all seeds at once.
     Op("graph_closeness",
-       """WITH RECURSIVE
-         |raw AS (
-         |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (
-         |  SELECT src, dst FROM raw WHERE src <> dst
-         |  UNION SELECT dst, src FROM raw WHERE src <> dst),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |step AS (
-         |  SELECT src, dst, CAST(1 AS BIGINT) AS w FROM edges
-         |  UNION ALL SELECT node, node, 0 FROM nodes),
-         |d AS (
-         |  SELECT 0 AS iter, node AS s, node, CAST(0 AS BIGINT) AS dist
-         |  FROM nodes WHERE node < 100
-         |  UNION ALL
-         |  SELECT d.iter + 1, d.s, st.dst AS node, min(d.dist + st.w)
-         |  FROM d JOIN step st ON st.src = d.node
-         |  WHERE d.iter < 6
-         |  GROUP BY 1, 2, 3)
+       s"""WITH RECURSIVE ${perSourceHopsCtes(6)}
          |SELECT s AS source, CAST(count(*) - 1 AS BIGINT) AS n_reached,
          |       CAST(sum(dist) AS BIGINT) AS sum_dist,
          |       CAST(count(*) - 1 AS DOUBLE) / CAST(sum(dist) AS DOUBLE)
@@ -2246,25 +2194,7 @@ object Graphs {
     // readout is one integer aggregate of (10^6 div d) truncating
     // reciprocals, so the whole profile hash-compares with no float.
     Op("graph_harmonic",
-       """WITH RECURSIVE
-         |raw AS (
-         |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (
-         |  SELECT src, dst FROM raw WHERE src <> dst
-         |  UNION SELECT dst, src FROM raw WHERE src <> dst),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |step AS (
-         |  SELECT src, dst, CAST(1 AS BIGINT) AS w FROM edges
-         |  UNION ALL SELECT node, node, 0 FROM nodes),
-         |d AS (
-         |  SELECT 0 AS iter, node AS s, node, CAST(0 AS BIGINT) AS dist
-         |  FROM nodes WHERE node < 100
-         |  UNION ALL
-         |  SELECT d.iter + 1, d.s, st.dst AS node, min(d.dist + st.w)
-         |  FROM d JOIN step st ON st.src = d.node
-         |  WHERE d.iter < 6
-         |  GROUP BY 1, 2, 3)
+       s"""WITH RECURSIVE ${perSourceHopsCtes(6)}
          |SELECT s AS source, CAST(count(*) - 1 AS BIGINT) AS n_reached,
          |       CAST(sum(CASE WHEN dist > 0 THEN 1000000 // dist
          |                     ELSE 0 END) AS BIGINT) AS harmonic_ppm
@@ -2286,25 +2216,7 @@ object Graphs {
     // over ≤ iters+1 rows; cum_ppm is a truncating division of exact
     // BIGINTs, so the whole curve hash-compares.
     Op("graph_distance_dist",
-       """WITH RECURSIVE
-         |raw AS (
-         |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (
-         |  SELECT src, dst FROM raw WHERE src <> dst
-         |  UNION SELECT dst, src FROM raw WHERE src <> dst),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |step AS (
-         |  SELECT src, dst, CAST(1 AS BIGINT) AS w FROM edges
-         |  UNION ALL SELECT node, node, 0 FROM nodes),
-         |d AS (
-         |  SELECT 0 AS iter, node AS s, node, CAST(0 AS BIGINT) AS dist
-         |  FROM nodes WHERE node < 100
-         |  UNION ALL
-         |  SELECT d.iter + 1, d.s, st.dst AS node, min(d.dist + st.w)
-         |  FROM d JOIN step st ON st.src = d.node
-         |  WHERE d.iter < 6
-         |  GROUP BY 1, 2, 3),
+       s"""WITH RECURSIVE ${perSourceHopsCtes(6)},
          |h AS (
          |  SELECT dist, CAST(count(*) AS BIGINT) AS n_pairs
          |  FROM d WHERE iter = 6 AND dist > 0 GROUP BY 1)
@@ -2342,25 +2254,7 @@ object Graphs {
     // row: seed count, the diameter bound, min eccentricity (a center
     // candidate), and the eccentricity sum.
     Op("graph_diameter",
-       """WITH RECURSIVE
-         |raw AS (
-         |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (
-         |  SELECT src, dst FROM raw WHERE src <> dst
-         |  UNION SELECT dst, src FROM raw WHERE src <> dst),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |step AS (
-         |  SELECT src, dst, CAST(1 AS BIGINT) AS w FROM edges
-         |  UNION ALL SELECT node, node, 0 FROM nodes),
-         |d AS (
-         |  SELECT 0 AS iter, node AS s, node, CAST(0 AS BIGINT) AS dist
-         |  FROM nodes WHERE node < 100
-         |  UNION ALL
-         |  SELECT d.iter + 1, d.s, st.dst AS node, min(d.dist + st.w)
-         |  FROM d JOIN step st ON st.src = d.node
-         |  WHERE d.iter < 8
-         |  GROUP BY 1, 2, 3),
+       s"""WITH RECURSIVE ${perSourceHopsCtes(8)},
          |ecc AS (
          |  SELECT s, CAST(max(dist) AS BIGINT) AS ecc
          |  FROM d WHERE iter = 8 GROUP BY 1)
@@ -2388,7 +2282,7 @@ object Graphs {
     // (unlike ln/exp), so the double hash-compares without quantization.
     // Moment magnitudes: sum(dx*dy) <= m*degmax^2 — BIGINT-safe through
     // sf100 for this graph family; the FORMULA cross products (m·sxx,
-    // sx²) are not (they passed 2^63 at sf1 — r10 stress) and run
+    // sx²) are not (they pass 2^63 at sf1) and run
     // 128-bit on both engines. A web-scale hub graph would center
     // first (the profile_corr_matrix route).
     //
@@ -2396,12 +2290,8 @@ object Graphs {
     // triangleCounts hub-safe recipe), one map-side moment fold, one
     // single-row reduce. No join beyond the degree attach.
     Op("graph_assortativity",
-       """WITH raw AS (
-         |  SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |sym AS (
-         |  SELECT src, dst FROM raw WHERE src <> dst
-         |  UNION SELECT dst, src FROM raw WHERE src <> dst),
+       s"""WITH $tradeRawCte,
+         |${undirectedCte("sym")},
          |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
          |        FROM sym GROUP BY 1),
          |e AS (
@@ -2444,33 +2334,9 @@ object Graphs {
     // per-community table is |labels|-bounded and the final reduce is
     // one row. Nothing beyond the label_prop cost it audits.
     Op("graph_modularity",
-       """WITH RECURSIVE raw AS (
-         |  SELECT o_custkey AS src, l_suppkey + 1000000 AS dst
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-         |  GROUP BY 1, 2 HAVING count(*) >= 3),
-         |edges AS (
-         |  SELECT src, dst FROM raw WHERE src <> dst
-         |  UNION SELECT dst, src FROM raw WHERE src <> dst
-         |  UNION SELECT node, node FROM (
-         |    SELECT DISTINCT src AS node FROM (
-         |      SELECT src FROM raw UNION ALL SELECT dst FROM raw))),
-         |nodes AS (SELECT DISTINCT src AS node FROM edges),
-         |lp(iter, node, label) AS (
-         |  SELECT 0, node, node FROM nodes
-         |  UNION ALL
-         |  SELECT iter + 1, node, label FROM (
-         |    SELECT l.iter AS iter, e.dst AS node, l.label AS label,
-         |           row_number() OVER (PARTITION BY l.iter, e.dst
-         |                              ORDER BY count(*) DESC, l.label)
-         |             AS rn
-         |    FROM lp l JOIN edges e ON e.src = l.node
-         |    WHERE l.iter < 5
-         |    GROUP BY l.iter, e.dst, l.label)
-         |  WHERE rn = 1),
+       s"""WITH RECURSIVE $labelPropCtes,
          |lab AS (SELECT node, label FROM lp WHERE iter = 5),
-         |sym AS (
-         |  SELECT src, dst FROM raw WHERE src <> dst
-         |  UNION SELECT dst, src FROM raw WHERE src <> dst),
+         |${undirectedCte("sym")},
          |canon AS (SELECT src, dst FROM sym WHERE src < dst),
          |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM canon),
          |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
@@ -2504,13 +2370,7 @@ object Graphs {
     * notes). Returns one row (m, sxy, sx, assortativity).
     */
   def assortativity(edges: DataFrame): DataFrame = {
-    val sym = edges.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .transform(Ckpt.cut(_))
+    val sym = Ckpt.cut(bothWays(edges).distinct())
     val deg = sym.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
     val e = sym
@@ -2519,8 +2379,8 @@ object Graphs {
       .join(deg.select(col("node").as("dst"), col("deg").as("dy")),
         Seq("dst"))
     // the final-formula cross products (m·sxx, sx², …) pass 2^63 around
-    // sf1 for this graph family (m ~ 2×10^6 sym edges × sxx ~ 10^13 —
-    // caught by the r10 full-inventory sf1 stress), so they run in
+    // sf1 for this graph family (m ~ 2×10^6 sym edges × sxx ~ 10^13),
+    // so they run in
     // DECIMAL(38,0); the five moment sums themselves stay BIGINT-safe
     // far longer and keep their output type
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -2546,17 +2406,10 @@ object Graphs {
     * carry a label.
     */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val sym = edges.select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      // one materialization feeding degree, canonical-edge, and m
-      // subtrees — the assignContiguousIds lesson (content here is
-      // deterministic either way, but three re-executions of the
-      // distinct would triple the dominant shuffle)
-      .transform(Ckpt.cut(_))
+    // one materialization feeding degree, canonical-edge, and m subtrees:
+    // three re-executions of the distinct would triple the dominant
+    // shuffle
+    val sym = Ckpt.cut(bothWays(edges).distinct())
     val canon = sym.filter(col("src") < col("dst"))
     val mDf = canon.agg(count(lit(1)).as("m"))
     val deg = sym.groupBy(col("src").as("node"))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Op, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -27,8 +27,63 @@ object Timeseries {
   private val dec = DecimalType(18, 2)
 
   /** Epoch-day of an event timestamp, as BIGINT (DuckDB date_diff parity). */
-  private val day: org.apache.spark.sql.Column =
-    unix_date(to_date(col("ts"))).cast("long")
+  private val day: Column = unix_date(to_date(col("ts"))).cast("long")
+
+  /** [[day]] in the DuckDB oracles. */
+  private val daySql = "date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))"
+
+  /** A group's exact total of `value` in cents, in the DuckDB oracles. */
+  private[operators] val centsSql =
+    "CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)"
+
+  /** Exact total `value` in cents per `keys` and epoch-day:
+    * (keys..., day, cents). The sum stays DECIMAL until the one cast.
+    */
+  private def dailyCents(events: DataFrame, keys: Column*): DataFrame =
+    events.groupBy(keys :+ day.as("day"): _*)
+      .agg(sum(col("value").cast(dec) * 100).cast("long").as("cents"))
+
+  /** DuckDB replay of [[dailyCents]] over `events` keyed by the columns
+    * `keys`, as the CTE `daily`.
+    */
+  private def dailyCentsCte(keys: String*): String = {
+    val groupBy = (1 to keys.size + 1).mkString(", ")
+    s"""daily AS (
+       |  SELECT ${keys.map(_ + ", ").mkString}$daySql AS day,
+       |         $centsSql AS cents
+       |  FROM events GROUP BY $groupBy)""".stripMargin
+  }
+
+  /** Zero-filled daily click counts `x` and purchase cents `y` over every
+    * day with either: (day, x, y).
+    */
+  private def clickPurchaseSeries(events: DataFrame): DataFrame = {
+    val x = events.filter(col("event_type") === "click")
+      .groupBy(day.as("day")).agg(count(lit(1)).as("x"))
+    val y = dailyCents(events.filter(col("event_type") === "purchase"))
+      .withColumnRenamed("cents", "y")
+    val days = x.select("day").unionByName(y.select("day")).distinct()
+    days.join(x, Seq("day"), "left").join(y, Seq("day"), "left")
+      .select(col("day"), coalesce(col("x"), lit(0L)).as("x"),
+        coalesce(col("y"), lit(0L)).as("y"))
+  }
+
+  /** DuckDB replay of [[clickPurchaseSeries]]: CTEs `x`, `y`, `days` and
+    * the series `ser`.
+    */
+  private val clickPurchaseCtes: String =
+    s"""x AS (
+       |  SELECT $daySql AS day,
+       |         CAST(count(*) AS BIGINT) AS x
+       |  FROM events WHERE event_type = 'click' GROUP BY 1),
+       |y AS (
+       |  SELECT $daySql AS day,
+       |         $centsSql AS y
+       |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
+       |days AS (SELECT day FROM x UNION SELECT day FROM y),
+       |ser AS (
+       |  SELECT day, coalesce(x, 0) AS x, coalesce(y, 0) AS y
+       |  FROM days LEFT JOIN x USING (day) LEFT JOIN y USING (day))""".stripMargin
 
   /** Durbin–Levinson PACF (lags 1..4) over the daily-cents series — see
     * the ts_pacf op entry for the numeric contract (exact DECIMAL(38,0)
@@ -36,8 +91,7 @@ object Timeseries {
     */
   def pacf(events: DataFrame): DataFrame = {
     val d38 = DecimalType(38, 0)
-    val daily = events.groupBy(day.as("day"))
-      .agg(sum(col("value").cast(dec) * 100).cast("long").as("cents"))
+    val daily = dailyCents(events)
     val tot = daily.agg(sum(col("cents")).as("t"), count(lit(1)).as("d"))
     val dev = daily.crossJoin(broadcast(tot))
       .select(col("day"), (col("cents") - expr("t div d")).cast(d38).as("dv"))
@@ -134,9 +188,9 @@ object Timeseries {
     // the filled value hashes exactly. The first day of every span is
     // observed by construction, so LOCF never emits NULL.
     Op("ts_gapfill_locf",
-       """WITH daily AS (
+       s"""WITH daily AS (
          |  SELECT user_id,
-         |         date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
+         |         $daySql AS day,
          |         sum(CAST(value AS DECIMAL(18,2))) AS v
          |  FROM events GROUP BY 1, 2),
          |span AS (SELECT user_id, min(day) AS lo, max(day) AS hi
@@ -179,9 +233,9 @@ object Timeseries {
     // plan shape as LOCF: per-user span explode + two framed windows
     // over one (user, day) sort.
     Op("ts_gapfill_interp",
-       """WITH daily AS (
+       s"""WITH daily AS (
          |  SELECT user_id,
-         |         date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
+         |         $daySql AS day,
          |         CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT)
          |           AS vc
          |  FROM events GROUP BY 1, 2),
@@ -247,9 +301,9 @@ object Timeseries {
     // flag replays bit-for-bit. Baseline statistics come from a window
     // over the bounded cell table (|types|·24 groups), not the raw stream.
     Op("ts_anomaly_hours",
-       """WITH cells AS (
+       s"""WITH cells AS (
          |  SELECT event_type,
-         |         date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
+         |         $daySql AS day,
          |         CAST(hour(ts) AS BIGINT) AS hr, count(*) AS n
          |  FROM events GROUP BY 1, 2, 3)
          |SELECT event_type, day, hr, n,
@@ -273,9 +327,9 @@ object Timeseries {
     // a quadratic rescan into two keyed aggregates and a window over the
     // bounded (type, day) table.
     Op("ts_cum_distinct_users",
-       """WITH firsts AS (
+       s"""WITH firsts AS (
          |  SELECT event_type, user_id,
-         |         min(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)))
+         |         min($daySql)
          |           AS day
          |  FROM events GROUP BY 1, 2),
          |news AS (SELECT event_type, day, count(*) AS new_users
@@ -302,9 +356,9 @@ object Timeseries {
     // one double division per group replays; the lead and the aggregate
     // run on one keyed sort.
     Op("ts_twap",
-       """WITH e AS (
+       s"""WITH e AS (
          |  SELECT user_id,
-         |         date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
+         |         $daySql AS day,
          |         epoch_us(ts) AS t,
          |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
          |         event_id
@@ -349,20 +403,12 @@ object Timeseries {
     // needs the previous), parallel across users; group size is bounded
     // by the calendar, not the corpus.
     Op("ts_ema",
-       """WITH daily AS (
-         |  SELECT user_id,
-         |         date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1, 2)
+       s"""WITH ${dailyCentsCte("user_id")}
          |SELECT user_id, CAST(count(*) AS BIGINT) AS n_days,
          |       list_reduce(list(cents ORDER BY day),
          |                   (a, b) -> (a + b) >> 1) AS ema
          |FROM daily GROUP BY 1""".stripMargin) { (s, d) =>
-      Tables.events(s, d)
-        .groupBy(col("user_id"), day.as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"))
+      dailyCents(Tables.events(s, d), col("user_id"))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_days"),
           sort_array(collect_list(struct(col("day"), col("cents"))))
@@ -383,11 +429,7 @@ object Timeseries {
     // headroom; the statistic stays division-free until the ONE double
     // ratio. Runs on the calendar-bounded daily table.
     Op("ts_autocorr",
-       """WITH daily AS (
-         |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1),
+       s"""WITH ${dailyCentsCte()},
          |tot AS (SELECT CAST(sum(cents) AS BIGINT) AS t,
          |               CAST(count(*) AS BIGINT) AS d FROM daily),
          |dev AS (
@@ -400,10 +442,7 @@ object Timeseries {
          |       CAST(sum(CASE WHEN dvn IS NOT NULL THEN dv * dvn END)
          |            AS DOUBLE) / CAST(sum(dv * dv) AS DOUBLE) AS r1
          |FROM dev""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(day.as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"))
+      val daily = dailyCents(Tables.events(s, d))
       val tot = daily.agg(sum(col("cents")).as("t"),
         count(lit(1)).as("d"))
       val dv = col("cents") - expr("t div d")
@@ -422,18 +461,12 @@ object Timeseries {
     // daily-revenue ACF — the AR-order diagnostic next to ts_autocorr.
     // Autocovariance sums are EXACT 128-bit integers (DECIMAL(38,0) /
     // HUGEINT: the lag products square day-level cents, which brushes
-    // BIGINT range at sf1 — the r10 overflow lesson applied up front);
-    // r_k is one division with the DuckDB side routed through VARCHAR
-    // (hugeint→double double-rounds, strtod is correctly rounded — the
-    // r11 sf1 lesson); the DL recursion is a fixed chain of identically
-    // parenthesized IEEE ops on both engines.
+    // BIGINT range at sf1); r_k is one division with the DuckDB side
+    // routed through VARCHAR (hugeint→double double-rounds, strtod is
+    // correctly rounded); the DL recursion is a fixed chain of
+    // identically parenthesized IEEE ops on both engines.
     Op("ts_pacf",
-       """WITH daily AS (
-         |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-         |           AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1),
+       s"""WITH ${dailyCentsCte()},
          |tot AS (SELECT CAST(sum(cents) AS BIGINT) AS t,
          |               CAST(count(*) AS BIGINT) AS d FROM daily),
          |dev AS (
@@ -495,11 +528,7 @@ object Timeseries {
     // engines), so the whole lag table hash-compares. The lag fan-out is
     // 10× the calendar-bounded day table, never the event table.
     Op("ts_ljung_box",
-       """WITH daily AS (
-         |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1),
+       s"""WITH ${dailyCentsCte()},
          |tot AS (SELECT CAST(sum(cents) AS BIGINT) AS t,
          |               CAST(count(*) AS BIGINT) AS n FROM daily),
          |dev AS (SELECT day, cents - (t // n) AS dv FROM daily, tot),
@@ -520,10 +549,7 @@ object Timeseries {
          |         OVER (ORDER BY k ROWS BETWEEN UNBOUNDED PRECEDING
          |               AND CURRENT ROW) AS q_stat
          |FROM r""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(day.as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"))
+      val daily = dailyCents(Tables.events(s, d))
       val tot = daily.agg(sum(col("cents")).as("t"),
         count(lit(1)).as("n"))
       val dev = daily.crossJoin(broadcast(tot))
@@ -567,21 +593,7 @@ object Timeseries {
     // lag join is an equi-join on day+lag. Grand totals attach as 1-row
     // broadcasts.
     Op("ts_cross_corr",
-       """WITH x AS (
-         |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-         |           AS day,
-         |         CAST(count(*) AS BIGINT) AS x
-         |  FROM events WHERE event_type = 'click' GROUP BY 1),
-         |y AS (
-         |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-         |           AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS y
-         |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
-         |days AS (SELECT day FROM x UNION SELECT day FROM y),
-         |ser AS (
-         |  SELECT day, coalesce(x, 0) AS x, coalesce(y, 0) AS y
-         |  FROM days LEFT JOIN x USING (day) LEFT JOIN y USING (day)),
+       s"""WITH $clickPurchaseCtes,
          |tot AS (SELECT CAST(sum(x) AS BIGINT) AS tx,
          |               CAST(sum(y) AS BIGINT) AS ty,
          |               CAST(count(*) AS BIGINT) AS nd FROM ser),
@@ -601,16 +613,7 @@ object Timeseries {
          |       CAST(num AS DOUBLE) /
          |         sqrt(CAST(sxx AS DOUBLE) * CAST(syy AS DOUBLE)) AS r
          |FROM num, den""".stripMargin) { (s, d) =>
-      val ev = Tables.events(s, d)
-      val x = ev.filter(col("event_type") === "click")
-        .groupBy(day.as("day")).agg(count(lit(1)).as("x"))
-      val y = ev.filter(col("event_type") === "purchase")
-        .groupBy(day.as("day"))
-        .agg(sum(col("value").cast(dec) * 100).cast("long").as("y"))
-      val days = x.select("day").unionByName(y.select("day")).distinct()
-      val ser = days.join(x, Seq("day"), "left").join(y, Seq("day"), "left")
-        .select(col("day"), coalesce(col("x"), lit(0L)).as("x"),
-          coalesce(col("y"), lit(0L)).as("y"))
+      val ser = clickPurchaseSeries(Tables.events(s, d))
       val tot = ser.agg(sum(col("x")).as("tx"), sum(col("y")).as("ty"),
         count(lit(1)).as("nd"))
       val dev = ser.crossJoin(broadcast(tot))
@@ -642,9 +645,9 @@ object Timeseries {
     // distinct per reference day. Everything after the first aggregate
     // runs on |users|·|days| cells, never raw events.
     Op("ts_active_users",
-       """WITH cells AS (
+       s"""WITH cells AS (
          |  SELECT DISTINCT user_id,
-         |         date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
+         |         $daySql AS day
          |  FROM events),
          |days AS (SELECT DISTINCT day FROM cells),
          |wau AS (
@@ -684,12 +687,7 @@ object Timeseries {
     // picks the earliest day on magnitude ties. Runs entirely on the
     // bounded (type, day) cell table.
     Op("ts_cusum_changepoint",
-       """WITH daily AS (
-         |  SELECT event_type,
-         |         date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1, 2),
+       s"""WITH ${dailyCentsCte("event_type")},
          |tot AS (
          |  SELECT event_type, CAST(sum(cents) AS BIGINT) AS t,
          |         CAST(count(*) AS BIGINT) AS d
@@ -706,10 +704,7 @@ object Timeseries {
          |         row_number() OVER (PARTITION BY event_type
          |           ORDER BY abs(cusum) DESC, day) AS rn
          |  FROM cs) WHERE rn = 1""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), day.as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"))
+      val daily = dailyCents(Tables.events(s, d), col("event_type"))
       val tot = daily.groupBy(col("event_type"))
         .agg(sum(col("cents")).as("t"), count(lit(1)).as("d"))
       val running = Window.partitionBy(col("event_type")).orderBy(col("day"))
@@ -743,12 +738,7 @@ object Timeseries {
     // mis-evaluate under 1.0.0's lambda CSE, measured here, so the
     // recurrence is re-run row-by-row instead).
     Op("ts_holt_forecast",
-       """WITH RECURSIVE daily AS (
-         |  SELECT user_id,
-         |         date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1, 2),
+       s"""WITH RECURSIVE ${dailyCentsCte("user_id")},
          |s AS (
          |  SELECT user_id, cents,
          |         row_number() OVER (PARTITION BY user_id ORDER BY day) AS rn
@@ -767,10 +757,7 @@ object Timeseries {
          |FROM holt h JOIN n USING (user_id) WHERE h.rn = n.n_days""".stripMargin) {
       (s, d) =>
         val arr = sort_array(collect_list(struct(col("day"), col("cents"))))
-        val st = Tables.events(s, d)
-          .groupBy(col("user_id"), day.as("day"))
-          .agg(sum(col("value").cast(DecimalType(18, 2)) * 100)
-            .cast("long").as("cents"))
+        val st = dailyCents(Tables.events(s, d), col("user_id"))
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_days"), arr.as("arr"))
           .select(col("user_id"), col("n_days"),
@@ -803,12 +790,7 @@ object Timeseries {
     // ts_holt_forecast's point forecasts. Users with one day have no
     // one-step origin and are excluded on both engines.
     Op("ts_holt_backtest",
-       """WITH RECURSIVE daily AS (
-         |  SELECT user_id,
-         |         date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1, 2),
+       s"""WITH RECURSIVE ${dailyCentsCte("user_id")},
          |s AS (
          |  SELECT user_id, cents,
          |         row_number() OVER (PARTITION BY user_id ORDER BY day) AS rn
@@ -830,10 +812,7 @@ object Timeseries {
          |WHERE h.rn = n.n_days AND n.n_days >= 2""".stripMargin) {
       (s, d) =>
         val arr = sort_array(collect_list(struct(col("day"), col("cents"))))
-        Tables.events(s, d)
-          .groupBy(col("user_id"), day.as("day"))
-          .agg(sum(col("value").cast(DecimalType(18, 2)) * 100)
-            .cast("long").as("cents"))
+        dailyCents(Tables.events(s, d), col("user_id"))
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_days"), arr.as("arr"))
           .filter(col("n_days") >= 2)
@@ -865,11 +844,7 @@ object Timeseries {
     // no float enters until never. Two scalar attaches (median, then
     // MAD) are broadcast single rows, the ts_autocorr shape.
     Op("ts_mad_outliers",
-       """WITH daily AS (
-         |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1),
+       s"""WITH ${dailyCentsCte()},
          |med AS (SELECT quantile_disc(cents, 0.5) AS med FROM daily),
          |mad AS (
          |  SELECT quantile_disc(abs(cents - med), 0.5) AS mad
@@ -877,10 +852,7 @@ object Timeseries {
          |SELECT day, cents, cents - med AS dev
          |FROM daily, med, mad
          |WHERE abs(cents - med) > 3 * mad""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(day.as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"))
+      val daily = dailyCents(Tables.events(s, d))
       // percentile_disc picks an actual input datum but Spark TYPES it
       // DOUBLE; the cast back to long is lossless (cents are the data)
       // and keeps the comparison/output columns integer like DuckDB's
@@ -908,11 +880,7 @@ object Timeseries {
     // (1970-01-01); label arithmetic, not locale calendars, on both
     // engines.
     Op("ts_dow_seasonality",
-       """WITH daily AS (
-         |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1),
+       s"""WITH ${dailyCentsCte()},
          |tot AS (SELECT CAST(sum(cents) AS BIGINT) AS t,
          |               CAST(count(*) AS BIGINT) AS d FROM daily)
          |SELECT day % 7 AS dow, CAST(count(*) AS BIGINT) AS n_days,
@@ -922,10 +890,7 @@ object Timeseries {
          |       (CAST(sum(cents) AS DOUBLE) / CAST(count(*) AS DOUBLE))
          |       / (CAST(tot.t AS DOUBLE) / CAST(tot.d AS DOUBLE)) AS index
          |FROM daily, tot GROUP BY 1, tot.t, tot.d""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(day.as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"))
+      val daily = dailyCents(Tables.events(s, d))
       val tot = daily.agg(sum(col("cents")).as("t"),
         count(lit(1)).as("d"))
       daily.crossJoin(broadcast(tot))
@@ -948,22 +913,14 @@ object Timeseries {
     // over the (user, day) cell table with a broadcast horizon scalar,
     // incrementally maintainable by shifting yesterday's score.
     Op("ts_decayed_sum",
-       """WITH daily AS (
-         |  SELECT user_id,
-         |         date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1, 2),
+       s"""WITH ${dailyCentsCte("user_id")},
          |h AS (SELECT max(day) AS today FROM daily)
          |SELECT user_id, CAST(count(*) AS BIGINT) AS n_days,
          |       CAST(sum(cents >> CAST(least((today - day) // 7, 62)
          |                              AS INTEGER)) AS BIGINT)
          |         AS decayed_cents
          |FROM daily, h GROUP BY 1""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(col("user_id"), day.as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"))
+      val daily = dailyCents(Tables.events(s, d), col("user_id"))
       val h = daily.agg(max(col("day")).as("today"))
       daily.crossJoin(broadcast(h))
         .groupBy(col("user_id"))
@@ -982,11 +939,7 @@ object Timeseries {
     // +,-,*,/ and one sqrt — all correctly rounded, so like e_ab_welch
     // the double hash-compares unquantized.
     Op("ts_runs_test",
-       """WITH daily AS (
-         |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1),
+       s"""WITH ${dailyCentsCte()},
          |med AS (SELECT quantile_disc(cents, 0.5) AS med FROM daily),
          |s AS (
          |  SELECT day, cents > med AS up
@@ -1012,10 +965,7 @@ object Timeseries {
          |              / (CAST(n1 + n2 AS DOUBLE) * CAST(n1 + n2 AS DOUBLE)
          |                 * (CAST(n1 + n2 AS DOUBLE) - 1.0))) AS z
          |FROM c""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(day.as("day"))
-        .agg(sum(col("value").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"))
+      val daily = dailyCents(Tables.events(s, d))
       val med = daily.agg(
         expr("CAST(percentile_disc(0.5) WITHIN GROUP (ORDER BY cents)" +
           " AS BIGINT)").as("med"))
@@ -1155,11 +1105,7 @@ object Timeseries {
     // Timeseries contract), then one single-row moment reduce; the
     // forecast is arithmetic on that row. Nothing joins, nothing sorts.
     Op("ts_ols_trend",
-       """WITH daily AS (
-         |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1),
+       s"""WITH ${dailyCentsCte()},
          |m AS (
          |  SELECT CAST(count(*) AS BIGINT) AS n,
          |         CAST(sum(day) AS BIGINT) AS sx,
@@ -1187,9 +1133,7 @@ object Timeseries {
          |          / CAST(NULLIF(n * sxx - sx * sx, 0) AS DOUBLE))
          |         * CAST(last_day + 7 AS DOUBLE) AS fc7_cents
          |FROM m""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(day.as("day"))
-        .agg(sum(col("value").cast(dec) * 100).cast("long").as("cents"))
+      val daily = dailyCents(Tables.events(s, d))
       val m = daily.agg(
         count(lit(1)).as("n"),
         sum(col("day")).as("sx"),
@@ -1230,11 +1174,7 @@ object Timeseries {
     // rows grow with elapsed days, not data volume); the (n, T) totals
     // are a 1-row keyless attach. One row out, hash-compared.
     Op("ts_level_shift",
-       """WITH daily AS (
-         |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1),
+       s"""WITH ${dailyCentsCte()},
          |scored AS (
          |  SELECT day,
          |         row_number() OVER (ORDER BY day) AS t,
@@ -1253,9 +1193,7 @@ object Timeseries {
          |WHERE t < n
          |ORDER BY abs(n * pre - t * total) DESC, day ASC
          |LIMIT 1""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(day.as("day"))
-        .agg(sum(col("value").cast(dec) * 100).cast("long").as("cents"))
+      val daily = dailyCents(Tables.events(s, d))
       val w = Window.orderBy(col("day"))
       val scored = daily
         .withColumn("t", row_number().over(w).cast("long"))
@@ -1295,12 +1233,7 @@ object Timeseries {
     // comes from Mixing.assignContiguousIds over the pair table — no
     // single-partition window even at the decade scale.
     Op("ts_theil_sen",
-       """WITH daily AS (
-         |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-         |           AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1),
+       s"""WITH ${dailyCentsCte()},
          |nn AS (SELECT CAST(count(*) AS BIGINT) AS n_days,
          |              CAST(count(*) * (count(*) - 1) // 2 AS BIGINT) AS m
          |       FROM daily),
@@ -1325,9 +1258,7 @@ object Timeseries {
          |              CAST(dy AS DOUBLE) / CAST(dx AS DOUBLE) END)) / 2
          |         AS slope_cents
          |FROM r, nn GROUP BY 1, 2""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(day.as("day"))
-        .agg(sum(col("value").cast(dec) * 100).cast("long").as("cents"))
+      val daily = dailyCents(Tables.events(s, d))
       val nn = daily.agg(count(lit(1)).as("n_days"),
         expr("count(1) * (count(1) - 1) div 2").as("m"))
       val a = daily.select(col("day").as("d1"), col("cents").as("c1"))
@@ -1362,8 +1293,9 @@ object Timeseries {
     // is an exact BIGINT; the OLS solves (2×2 and 3×3 Cramer), RSS
     // collapses (RSS = Syy − β'X'y, cross terms vanish at the normal
     // equations), and F are ONE shared arithmetic-expression text
-    // interpolated into BOTH plans (grangerFormulas), so both engines
-    // execute the identical IEEE op sequence on identical integers.
+    // interpolated into BOTH plans (grangerDoubles … grangerF), so both
+    // engines execute the identical IEEE op sequence on identical
+    // integers.
     //
     // Scale shape: raw events collapse to the calendar-bounded daily
     // table (two filtered branches of one scan), lag-1 via one ordered
@@ -1371,21 +1303,7 @@ object Timeseries {
     // then scalar arithmetic. Nothing beyond the day table ever
     // shuffles.
     Op("ts_granger",
-       s"""WITH x AS (
-          |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-          |           AS day,
-          |         CAST(count(*) AS BIGINT) AS x
-          |  FROM events WHERE event_type = 'click' GROUP BY 1),
-          |y AS (
-          |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-          |           AS day,
-          |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-          |           AS y
-          |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
-          |days AS (SELECT day FROM x UNION SELECT day FROM y),
-          |ser AS (
-          |  SELECT day, coalesce(x, 0) AS x, coalesce(y, 0) AS y
-          |  FROM days LEFT JOIN x USING (day) LEFT JOIN y USING (day)),
+       s"""WITH $clickPurchaseCtes,
           |lagged AS (
           |  SELECT day, y,
           |         lag(y) OVER (ORDER BY day) AS yl,
@@ -1409,16 +1327,7 @@ object Timeseries {
           |SELECT n, rss_r, rss_u, rss_r - rss_u AS c_gain,
           |       $grangerF AS f_stat
           |FROM rss""".stripMargin) { (s, d) =>
-      val ev = Tables.events(s, d)
-      val x = ev.filter(col("event_type") === "click")
-        .groupBy(day.as("day")).agg(count(lit(1)).as("x"))
-      val y = ev.filter(col("event_type") === "purchase")
-        .groupBy(day.as("day"))
-        .agg(sum(col("value").cast(dec) * 100).cast("long").as("y"))
-      val days = x.select("day").unionByName(y.select("day")).distinct()
-      val ser = days.join(x, Seq("day"), "left").join(y, Seq("day"), "left")
-        .select(col("day"), coalesce(col("x"), lit(0L)).as("x"),
-          coalesce(col("y"), lit(0L)).as("y"))
+      val ser = clickPurchaseSeries(Tables.events(s, d))
       val w = Window.orderBy(col("day"))
       val lagged = ser.select(col("day"), col("y"),
           lag(col("y"), 1).over(w).as("yl"),
@@ -1465,11 +1374,7 @@ object Timeseries {
     // replays the recursion row-by-row with a recursive CTE carrying
     // the 7-element seasonal list.
     Op("ts_holt_winters",
-       """WITH RECURSIVE daily AS (
-         |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-         |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |           AS cents
-         |  FROM events GROUP BY 1),
+       s"""WITH RECURSIVE ${dailyCentsCte()},
          |s AS (SELECT cents,
          |             row_number() OVER (ORDER BY day) AS rn
          |      FROM daily),
@@ -1495,9 +1400,7 @@ object Timeseries {
          |       hw.l + h * hw.b + hw.ss[h] AS fc_cents
          |FROM hw, nn, unnest(range(1, 8)) AS u(h)
          |WHERE hw.rn = nn.n""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(day.as("day"))
-        .agg(sum(col("value").cast(dec) * 100).cast("long").as("cents"))
+      val daily = dailyCents(Tables.events(s, d))
       daily
         .agg(sort_array(collect_list(struct(col("day"), col("cents"))))
           .as("arr"))
@@ -1553,8 +1456,8 @@ object Timeseries {
     // Components are truncated from 2^20 fixed point back to exact cents
     // (truncating division pinned on both engines), variance numerators
     // are the exact n·Σx² − (Σx)² cross-products in 128-bit integers
-    // (DECIMAL(38,0) / HUGEINT — the BIGINT form overflowed at the r10
-    // sf1 stress once daily totals grew 10×), presented as DOUBLE of
+    // (DECIMAL(38,0) / HUGEINT — the BIGINT form overflows at sf1, where
+    // daily totals are 10× sf0.1's), presented as DOUBLE of
     // the exact values, and each strength is one IEEE
     // division+subtraction — so the row hash-compares.
     Op("ts_stl_strength",
@@ -1670,9 +1573,7 @@ object Timeseries {
     */
   private def stlComponents(
       events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val daily = events
-      .groupBy(day.as("day"))
-      .agg(sum(col("value").cast(dec) * 100).cast("long").as("cents"))
+    val daily = dailyCents(events)
     val byDay = Window.orderBy(col("day"))
     val w = daily
       .withColumn("rn", row_number().over(byDay))
@@ -1699,11 +1600,7 @@ object Timeseries {
     * `comp(day, cents, trend_fx, seasonal_fx, residual_fx)`.
     */
   private lazy val stlCtes: String =
-    """daily AS (
-      |  SELECT date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-      |         CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-      |           AS cents
-      |  FROM events GROUP BY 1),
+    s"""${dailyCentsCte()},
       |w AS (
       |  SELECT day, cents,
       |         row_number() OVER (ORDER BY day) AS rn,

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.{Op, Tables}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -23,13 +24,25 @@ object SourceOps {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
+  /** A fresh directory for one build's round-trip files, deleted with
+    * its contents when the JVM exits. The entries' results read these
+    * files lazily, so a directory shared by two builds over one data
+    * dir would let the second build's overwrite delete files the first
+    * result still lists.
+    */
+  private def scratch(s: SparkSession, kind: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_${kind}_")
+    val path = new org.apache.hadoop.fs.Path(dir.toUri)
+    path.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(path)
+    dir.toString
+  }
+
   val ops: Seq[Op] = Seq(
     Op("source_jsonl_ingest",
        """SELECT doc_id, source, lang, text, n_chars,
          |       CAST(1 AS BIGINT) AS n_quarantined
          |FROM documents""".stripMargin) { (s, d) =>
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_jsonl_" +
-        java.lang.Integer.toHexString(d.hashCode)
+      val out = scratch(s, "jsonl")
       Tables.documents(s, d).write.mode("overwrite").json(out)
       // one malformed line alongside the good parts — the quarantine path
       // must observe it without failing the read
@@ -51,8 +64,7 @@ object SourceOps {
     Op("source_xml_ingest",
        "SELECT doc_id, source, lang, text, n_chars FROM documents") {
       (s, d) =>
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_xml_" +
-          java.lang.Integer.toHexString(d.hashCode)
+        val out = scratch(s, "xml")
         Tables.documents(s, d)
           .select(regexp_replace(
             to_xml(struct(col("doc_id"), col("text"), col("lang"),
@@ -75,8 +87,7 @@ object SourceOps {
     Op("source_orc_roundtrip",
        "SELECT doc_id, source, lang, text, n_chars FROM documents") {
       (s, d) =>
-        val out = s"${System.getProperty("java.io.tmpdir")}/graft_orc_" +
-          java.lang.Integer.toHexString(d.hashCode)
+        val out = scratch(s, "orc")
         val cols = Seq("doc_id", "source", "lang", "text", "n_chars")
         Tables.documents(s, d).selectExpr(cols: _*)
           .write.mode("overwrite").orc(out)
@@ -98,8 +109,7 @@ object SourceOps {
          |         CASE WHEN doc_id % 2 = 0 THEN NULL ELSE lang END AS lang
          |  FROM documents)
          |GROUP BY 1""".stripMargin) { (s, d) =>
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_evo_" +
-        java.lang.Integer.toHexString(d.hashCode)
+      val out = scratch(s, "evo")
       val docs = Tables.documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("text"))
@@ -126,8 +136,7 @@ object SourceOps {
     // predicate-pushdown-friendly once the lines are columnar.
     Op("source_fixedwidth_ingest",
        "SELECT doc_id, source, lang, n_chars FROM documents") { (s, d) =>
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_fw_" +
-        java.lang.Integer.toHexString(d.hashCode)
+      val out = scratch(s, "fw")
       Tables.documents(s, d)
         .select(concat(
           rpad(col("doc_id").cast("string"), 12, " "),

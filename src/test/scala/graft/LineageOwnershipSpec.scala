@@ -15,6 +15,8 @@ import scala.jdk.CollectionConverters._
   * code that builds a session. No code case-maps through Spark's
   * `lower`/`upper`/`initcap` (the native `icu_lower`/`icu_upper` give
   * the same bytes without Spark's 1.1M-code-point title-case table).
+  * The trade-graph pair CTE, the daily-cents sum and Graphs' edge
+  * reversal each have one definition.
   * Comments are stripped first, so prose may still name the calls.
   */
 class LineageOwnershipSpec extends AnyFunSuite {
@@ -76,6 +78,30 @@ class LineageOwnershipSpec extends AnyFunSuite {
       "the scan missed the normal form's owner")
     assert(offenders.isEmpty,
       s"use TextFeatures.normSql/toksSql: $offenders")
+  }
+
+  private def occurrences(text: String, fragment: String): Int =
+    Iterator.iterate(text.indexOf(fragment))(i =>
+      text.indexOf(fragment, i + fragment.length)).takeWhile(_ >= 0).size
+
+  for ((fragment, owner) <- Seq(
+      "SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst" ->
+        "Graphs.tradeRawCte",
+      "CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)" ->
+        "Timeseries.centsSql"))
+    test(s"src/main spells $fragment once") {
+      val n = allSources.map(s => occurrences(s._2, fragment)).sum
+      assert(n == 1, s"spelled $n times: use $owner")
+    }
+
+  test("Graphs reverses an edge list in one place") {
+    val graphs = allSources.collectFirst {
+      case (p, c) if p.endsWith("operators/Graphs.scala") => c
+    }
+    assert(graphs.isDefined, "the scan missed Graphs")
+    val pair = """struct(col(dstCol).as("src"), col(srcCol).as("dst"))"""
+    val n = occurrences(graphs.get, pair)
+    assert(n <= 1, s"$n reversals: use bothWays/undirected")
   }
 
   test("no src/main code calls Spark's lower(, upper( or initcap(") {
