@@ -275,4 +275,50 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
+
+  /** `text`, parsed by the session's parser, over `dir`'s tables: the
+    * Spark side of an [[Op.sql]] entry, whose DuckDB oracle is the same
+    * text. Each single-part table name the text reads binds to that
+    * table's read here (`events` through [[events]], any other name
+    * through [[table]]), aliased by the name, so `lineitem.l_x` resolves;
+    * a name of a table the dir lacks raises what [[parquet]] raises. A
+    * CTE shadows a table of its name wherever SQL scopes the CTE: the
+    * WITH clause's query and the definitions after it (its own body
+    * too under RECURSIVE). A multi-part name is rejected. Nothing is
+    * registered in the session, so texts bound to different dirs build
+    * side by side.
+    */
+  def sql(spark: SparkSession, dir: String, text: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+    import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
+      SubqueryAlias, UnresolvedWith}
+    import org.apache.spark.sql.graft.SqlPlans
+    def read(name: String): LogicalPlan = SubqueryAlias(name,
+      (if (name == "events") events(spark, dir) else table(spark, dir, name))
+        .queryExecution.analyzed)
+    def bind(plan: LogicalPlan, ctes: Set[String]): LogicalPlan = plan match {
+      case w: UnresolvedWith =>
+        var scope = ctes
+        val defs = w.cteRelations.map { case (name, body, depth) =>
+          val own = scope + name.toLowerCase(java.util.Locale.ROOT)
+          val bound = bind(body, if (w.allowRecursion) own else scope)
+          scope = own
+          (name, bound.asInstanceOf[SubqueryAlias], depth)
+        }
+        w.copy(child = bind(w.child, scope), cteRelations = defs)
+      case r: UnresolvedRelation =>
+        val parts = r.multipartIdentifier
+        require(parts.size == 1,
+          s"Tables.sql reads single-part table names: ${parts.mkString(".")}")
+        val name = parts.head.toLowerCase(java.util.Locale.ROOT)
+        if (ctes(name)) r else read(name)
+      case p =>
+        p.withNewChildren(p.children.map(bind(_, ctes)))
+          .transformExpressions { case e: SubqueryExpression =>
+            e.withNewPlan(bind(e.plan, ctes))
+          }
+    }
+    SqlPlans.ofRows(spark, bind(SqlPlans.parse(spark, text), Set.empty))
+  }
 }

@@ -2,12 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Aggregates every implemented operator module into the driver's
-  * (queries, oracleSql) maps. Each module exposes `ops: Seq[Op]`; an Op
-  * couples the Spark implementation with its DuckDB oracle SQL so the two
-  * can never drift apart in column naming.
+/** Driver contract (SURVEY.md §7): every operator module's `ops` as two
+  * maps keyed by entry name. [[queries]] holds each entry's Spark query
+  * over a table dir; [[oracleSql]] holds, for the entries that have one,
+  * the DuckDB SQL whose rows the Spark rows must equal. An [[Op]] couples
+  * the two, so they cannot drift apart in naming.
   */
 object SparkEntry {
 

@@ -276,20 +276,12 @@ object Analytics {
     // so ties get identical values on both engines (no row_number
     // arbitrariness), and each is one pinned division; one shuffle on
     // the group key like every window here.
-    Op("w8_percent_rank",
+    Op.sql("w8_percent_rank",
        """SELECT o_orderkey AS order_id, o_orderpriority,
          |       percent_rank() OVER w AS pr,
          |       cume_dist() OVER w AS cd
          |FROM orders
-         |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice)""".stripMargin) {
-      (s, d) =>
-        val w = Window.partitionBy(col("o_orderpriority"))
-          .orderBy(col("o_totalprice"))
-        Tables.orders(s, d)
-          .select(col("o_orderkey").as("order_id"), col("o_orderpriority"),
-            percent_rank().over(w).as("pr"),
-            cume_dist().over(w).as("cd"))
-    },
+         |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice)""".stripMargin),
 
     // Gini coefficient of order-value concentration — the scalar
     // companion to m_pareto_8020's curve, computed EXACTLY from the
@@ -357,24 +349,14 @@ object Analytics {
     // partitionings/retries); the result is presented as DOUBLE — see the
     // Relational.scala numeric-determinism note (a DECIMAL output column
     // fails the oracle hash compare).
-    Op("w2_running_total",
+    Op.sql("w2_running_total",
        """SELECT o_custkey AS customer_id, o_orderkey AS order_id,
          |       count(*) OVER w AS orders_so_far,
          |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE)
          |         AS spend_so_far
          |FROM orders
          |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-         |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin) { (s, d) =>
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.orders(s, d).select(
-        col("o_custkey").as("customer_id"),
-        col("o_orderkey").as("order_id"),
-        count(lit(1)).over(w).as("orders_so_far"),
-        sum(col("o_totalprice").cast(dec)).over(w).cast("double")
-          .as("spend_so_far"))
-    },
+         |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin),
 
     // Lag/lead window: days between consecutive orders of a customer.
     Op("w3_lag_gap",
@@ -429,21 +411,13 @@ object Analytics {
     // WITHIN their market segment. Keyed on purpose: an unpartitioned
     // window is a single-partition global sort — the one window shape that
     // cannot scale (global quantiles belong to approx_percentile instead).
-    Op("w5_ntile",
+    Op.sql("w5_ntile",
        """SELECT c_custkey AS customer_id, c_mktsegment AS segment,
          |       ntile(4) OVER w AS quartile,
          |       percent_rank() OVER w AS pct_rank
          |FROM customer
          |WINDOW w AS (PARTITION BY c_mktsegment
-         |             ORDER BY c_acctbal, c_custkey)""".stripMargin) { (s, d) =>
-      val w = Window.partitionBy(col("c_mktsegment"))
-        .orderBy(col("c_acctbal"), col("c_custkey"))
-      Tables.customer(s, d).select(
-        col("c_custkey").as("customer_id"),
-        col("c_mktsegment").as("segment"),
-        ntile(4).over(w).as("quartile"),
-        percent_rank().over(w).as("pct_rank"))
-    },
+         |             ORDER BY c_acctbal, c_custkey)""".stripMargin),
 
     // first/last value over an ordered frame: each customer's cheapest and
     // priciest order ids.
@@ -465,51 +439,27 @@ object Analytics {
     },
 
     // Set op: EXCEPT (distinct) — segments' customers minus recent buyers.
-    Op("set_except",
+    Op.sql("set_except",
        """SELECT c_custkey AS customer_id FROM customer WHERE c_mktsegment = 'BUILDING'
          |EXCEPT
-         |SELECT o_custkey AS customer_id FROM orders WHERE o_orderstatus = 'F'""".stripMargin) { (s, d) =>
-      val building = Tables.customer(s, d)
-        .filter(col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey").as("customer_id"))
-      val finished = Tables.orders(s, d)
-        .filter(col("o_orderstatus") === "F")
-        .select(col("o_custkey").as("customer_id"))
-      building.except(finished)
-    },
+         |SELECT o_custkey AS customer_id FROM orders WHERE o_orderstatus = 'F'""".stripMargin),
 
     // Set op: INTERSECT (distinct).
-    Op("set_intersect",
+    Op.sql("set_intersect",
        """SELECT c_custkey AS customer_id FROM customer WHERE c_mktsegment = 'BUILDING'
          |INTERSECT
-         |SELECT o_custkey AS customer_id FROM orders WHERE o_orderstatus = 'F'""".stripMargin) { (s, d) =>
-      val building = Tables.customer(s, d)
-        .filter(col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey").as("customer_id"))
-      val finished = Tables.orders(s, d)
-        .filter(col("o_orderstatus") === "F")
-        .select(col("o_custkey").as("customer_id"))
-      building.intersect(finished)
-    },
+         |SELECT o_custkey AS customer_id FROM orders WHERE o_orderstatus = 'F'""".stripMargin),
 
     // Date functions: extract + truncate + group (the README's "date
     // dimension derived from order timestamp" lives downstream of the
     // reference in Power BI — reference: README.md:64 — so the engine provides
     // it natively).
-    Op("f_date_parts",
+    Op.sql("f_date_parts",
        """SELECT CAST(extract(year FROM o_orderdate) AS INT) AS order_year,
          |       CAST(extract(month FROM o_orderdate) AS INT) AS order_month,
          |       count(*) AS n_orders,
          |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-         |FROM orders GROUP BY 1, 2""".stripMargin) { (s, d) =>
-      Tables.orders(s, d)
-        .groupBy(
-          year(col("o_orderdate")).as("order_year"),
-          month(col("o_orderdate")).as("order_month"))
-        .agg(
-          count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast(dec)).cast("double").as("revenue"))
-    },
+         |FROM orders GROUP BY 1, 2""".stripMargin),
 
     // String functions: upper/substr/concat/length/trim.
     Op("f_string_funcs",
@@ -528,87 +478,50 @@ object Analytics {
     },
 
     // CASE expression bucketing + conditional aggregation.
-    Op("f_case_when",
+    Op.sql("f_case_when",
        """SELECT CASE WHEN o_totalprice < 50000 THEN 'small'
          |            WHEN o_totalprice < 200000 THEN 'mid'
          |            ELSE 'large' END AS band,
          |       count(*) AS n,
          |       count(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_finished
-         |FROM orders GROUP BY 1""".stripMargin) { (s, d) =>
-      Tables.orders(s, d)
-        .groupBy(
-          when(col("o_totalprice") < 50000, "small")
-            .when(col("o_totalprice") < 200000, "mid")
-            .otherwise("large").as("band"))
-        .agg(
-          count(lit(1)).as("n"),
-          count(when(col("o_orderstatus") === "F", 1)).as("n_finished"))
-    },
+         |FROM orders GROUP BY 1""".stripMargin),
 
     // Distinct aggregate + multi-table join chain (customer -> nation ->
-    // region), both dims broadcast: zero extra shuffles beyond the
-    // aggregation's own.
-    Op("f_distinct_agg",
-       """SELECT r.r_name AS region_name,
+    // region), both constant-size dims hinted broadcast: zero extra
+    // shuffles beyond the aggregation's own. DuckDB reads the hint as a
+    // comment.
+    Op.sql("f_distinct_agg",
+       """SELECT /*+ BROADCAST(n, r) */ r.r_name AS region_name,
          |       count(DISTINCT c.c_custkey) AS n_customers,
          |       count(*) AS n_rows
          |FROM customer c
          |JOIN nation n ON c.c_nationkey = n.n_nationkey
          |JOIN region r ON n.n_regionkey = r.r_regionkey
-         |GROUP BY r.r_name""".stripMargin) { (s, d) =>
-      val c = Tables.customer(s, d)
-      val n = Tables.nation(s, d)
-      val r = Tables.region(s, d)
-      c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy(r("r_name").as("region_name"))
-        .agg(
-          countDistinct(c("c_custkey")).as("n_customers"),
-          count(lit(1)).as("n_rows"))
-    },
+         |GROUP BY r.r_name""".stripMargin),
 
     // Grouping sets via rollup: (year), (year,status), (grand total).
-    Op("f_rollup",
+    Op.sql("f_rollup",
        """SELECT CAST(extract(year FROM o_orderdate) AS INT) AS order_year,
          |       o_orderstatus AS status, count(*) AS n
-         |FROM orders GROUP BY ROLLUP(1, 2)""".stripMargin) { (s, d) =>
-      Tables.orders(s, d)
-        .rollup(
-          year(col("o_orderdate")).as("order_year"),
-          col("o_orderstatus").as("status"))
-        .agg(count(lit(1)).as("n"))
-    },
+         |FROM orders GROUP BY ROLLUP(1, 2)""".stripMargin),
 
     // CUBE: all four grouping sets of (priority, status). Same single-pass
     // expand+aggregate physical shape as rollup — each input row fans out
     // to its grouping-set rows before the partial aggregate, so the
     // shuffle still carries pre-aggregated groups only.
-    Op("f_cube",
+    Op.sql("f_cube",
        """SELECT o_orderpriority AS priority, o_orderstatus AS status,
          |       count(*) AS n
-         |FROM orders GROUP BY CUBE(1, 2)""".stripMargin) { (s, d) =>
-      Tables.orders(s, d)
-        .cube(col("o_orderpriority").as("priority"),
-          col("o_orderstatus").as("status"))
-        .agg(count(lit(1)).as("n"))
-    },
+         |FROM orders GROUP BY CUBE(1, 2)""".stripMargin),
 
     // Explicit GROUPING SETS — the general form rollup/cube specialize:
     // here (status), (priority) with no cross or grand-total set, which
     // neither rollup nor cube can express.
-    Op("f_grouping_sets",
+    Op.sql("f_grouping_sets",
        """SELECT o_orderpriority AS priority, o_orderstatus AS status,
          |       count(*) AS n
          |FROM orders
-         |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))""".stripMargin) { (s, d) =>
-      val o = Tables.orders(s, d)
-      o.createOrReplaceTempView("gs_orders")
-      o.sparkSession.sql(
-        """SELECT o_orderpriority AS priority, o_orderstatus AS status,
-          |       count(*) AS n
-          |FROM gs_orders
-          |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))""".stripMargin)
-    },
+         |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))""".stripMargin),
 
     // Cohort retention — the product-analytics staple: customers grouped
     // by first-purchase month, tracked by how many are still ordering k
@@ -897,7 +810,7 @@ object Analytics {
     // arithmetic ambiguity); revenue stays in exact cents through the
     // running sum, one presentation division per cell. The cumulative
     // window runs over the bounded (cohort, age) cell table.
-    Op("m_cohort_ltv",
+    Op.sql("m_cohort_ltv",
        """WITH firsts AS (
          |  SELECT o_custkey,
          |         min((year(o_orderdate) * 12 + month(o_orderdate)) - 1)
@@ -918,26 +831,7 @@ object Analytics {
          |       CAST(CAST(sum(rev) OVER (PARTITION BY cohort ORDER BY age
          |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
          |            AS BIGINT) AS DOUBLE) / 100.0 AS cum_revenue
-         |FROM cells""".stripMargin) { (s, d) =>
-      val monthIdx = (c: org.apache.spark.sql.Column) =>
-        year(c) * 12 + month(c) - 1
-      val orders = Tables.orders(s, d)
-      val firsts = orders.groupBy(col("o_custkey"))
-        .agg(min(monthIdx(col("o_orderdate"))).as("cohort"))
-      val cells = orders.join(firsts, "o_custkey")
-        .select(col("cohort"),
-          (monthIdx(col("o_orderdate")) - col("cohort")).as("age"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-        .groupBy(col("cohort"), col("age"))
-        .agg(sum(col("cents")).as("rev"))
-      val running = Window.partitionBy(col("cohort")).orderBy(col("age"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      cells.select(col("cohort"), col("age"),
-        (col("rev").cast("double") / 100.0).as("revenue"),
-        (sum(col("rev")).over(running).cast("double") / 100.0)
-          .as("cum_revenue"))
-    },
+         |FROM cells""".stripMargin),
 
     // RFM quintile segmentation (Hughes, "Strategic Database Marketing"
     // 1994 — the retail-standard customer scoring the reference's
@@ -1103,7 +997,7 @@ object Analytics {
     // 50/50 split? chi2 with 1 df reduces to (n0 − n1)²/(n0 + n1):
     // exact integer numerator, one double division. An SRM flag at
     // |z| > 3 (chi2 > 9) in pure integers via cross-multiplication.
-    Op("e_ab_srm",
+    Op.sql("e_ab_srm",
        """WITH u AS (
          |  SELECT user_id % 2 AS variant FROM events GROUP BY user_id),
          |w AS (
@@ -1117,19 +1011,7 @@ object Analytics {
          |         / CAST(n0 + n1 AS DOUBLE) AS chi2,
          |       CAST((n0 - n1) * (n0 - n1) > 9 * (n0 + n1) AS INT)
          |         AS srm_flag
-         |FROM w""".stripMargin) { (s, d) =>
-      Tables.events(s, d)
-        .select(col("user_id")).distinct()
-        .select((col("user_id") % 2).as("variant"))
-        .agg(sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n0"),
-          sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n1"))
-        .select(col("n0"), col("n1"),
-          (((col("n0") - col("n1")) * (col("n0") - col("n1")))
-            .cast("double") / (col("n0") + col("n1")).cast("double"))
-            .as("chi2"),
-          ((col("n0") - col("n1")) * (col("n0") - col("n1")) >
-            lit(9L) * (col("n0") + col("n1"))).cast("int").as("srm_flag"))
-    },
+         |FROM w""".stripMargin),
 
     // Brown-Forsythe / Levene test: is the spend VARIANCE homogeneous
     // across priorities — the assumption f_anova_oneway's F rests on,

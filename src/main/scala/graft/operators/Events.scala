@@ -257,24 +257,14 @@ object Events {
     // Ordered funnel: users whose first view precedes their first click,
     // which precedes their first purchase. One pivot-style conditional-min
     // aggregate per user — a single shuffle, no joins, no windows.
-    Op("e_funnel",
+    Op.sql("e_funnel",
        """SELECT count(*) AS n_converted FROM (
          |  SELECT user_id,
          |         min(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
          |         min(CASE WHEN event_type = 'click' THEN ts END) AS t_click,
          |         min(CASE WHEN event_type = 'purchase' THEN ts END) AS t_purchase
          |  FROM events GROUP BY user_id)
-         |WHERE t_view < t_click AND t_click < t_purchase""".stripMargin) { (s, d) =>
-      Tables.events(s, d)
-        .groupBy(col("user_id"))
-        .agg(
-          min(when(col("event_type") === "view", col("ts"))).as("t_view"),
-          min(when(col("event_type") === "click", col("ts"))).as("t_click"),
-          min(when(col("event_type") === "purchase", col("ts"))).as("t_purchase"))
-        .filter(col("t_view") < col("t_click") &&
-          col("t_click") < col("t_purchase"))
-        .agg(count(lit(1)).as("n_converted"))
-    },
+         |WHERE t_view < t_click AND t_click < t_purchase""".stripMargin),
 
     // Top-10 full conversion paths: each converting user's complete
     // event-type sequence STRICTLY BEFORE their first purchase,
@@ -429,12 +419,6 @@ object Events {
           sum(col("len")).as("n_events"))
     },
 
-    // Two-proportion A/B read-out: users split by id parity, conversion
-    // = more purchases than clicks (scale-free, so both sf gates split).
-    // The pooled z^2 statistic is assembled from INTEGER cross-products
-    // — (c0*n1 - c1*n0)^2 * (n0+n1) over n0*n1*(c0+c1)*(n-c...) — with
-    // exactly one double division, so the test statistic itself
-    // hash-compares. One keyed aggregate + a 4-value pivot.
     // Welch's unequal-variance t-test on CONTINUOUS per-user spend
     // between the two md5-free cohorts (user_id parity) — the
     // value-metric companion to e_ab_test's two-proportion z. Group
@@ -445,7 +429,7 @@ object Events {
     // is the centered form (Q*n - S^2)/(n*(n-1)) evaluated in double
     // AFTER the integer moments, never a per-row float sum (those are
     // partitioning-dependent).
-    Op("e_ab_welch",
+    Op.sql("e_ab_welch",
        s"""WITH u AS (
          |  SELECT user_id, user_id % 2 AS variant,
          |         ${Timeseries.centsSql} AS cents
@@ -481,39 +465,15 @@ object Events {
          |       (vm0 + vm1) * (vm0 + vm1)
          |       / (vm0 * vm0 / (CAST(n0 AS DOUBLE) - 1.0)
          |          + vm1 * vm1 / (CAST(n1 AS DOUBLE) - 1.0)) AS df
-         |FROM v""".stripMargin) { (s, d) =>
-      val u = Tables.events(s, d)
-        .groupBy(col("user_id"), (col("user_id") % 2).as("variant"))
-        .agg(sum(col("value").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"))
-      val g = u.groupBy(col("variant"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"),
-          sum(col("cents") * col("cents")).as("q"))
-      val w = g.agg(
-        max(when(col("variant") === 0, col("n"))).as("n0"),
-        max(when(col("variant") === 0, col("s"))).as("s0"),
-        max(when(col("variant") === 0, col("q"))).as("q0"),
-        max(when(col("variant") === 1, col("n"))).as("n1"),
-        max(when(col("variant") === 1, col("s"))).as("s1"),
-        max(when(col("variant") === 1, col("q"))).as("q1"))
-      def vm(n: String, ss: String, q: String) =
-        (col(q).cast("double") * col(n).cast("double") -
-          col(ss).cast("double") * col(ss).cast("double")) /
-          (col(n).cast("double") * col(n).cast("double") *
-            (col(n).cast("double") - 1.0))
-      val v = w.select(col("n0"), col("s0"), col("n1"), col("s1"),
-        vm("n0", "s0", "q0").as("vm0"), vm("n1", "s1", "q1").as("vm1"))
-      v.select(col("n0"), col("n1"),
-        ((col("s0").cast("double") / col("n0").cast("double") -
-          col("s1").cast("double") / col("n1").cast("double")) /
-          sqrt(col("vm0") + col("vm1"))).as("t_stat"),
-        ((col("vm0") + col("vm1")) * (col("vm0") + col("vm1")) /
-          (col("vm0") * col("vm0") / (col("n0").cast("double") - 1.0) +
-            col("vm1") * col("vm1") / (col("n1").cast("double") - 1.0)))
-          .as("df"))
-    },
+         |FROM v""".stripMargin),
 
-    Op("e_ab_test",
+    // Two-proportion A/B read-out: users split by id parity, conversion
+    // = more purchases than clicks (scale-free, so both sf gates split).
+    // The pooled z^2 statistic is assembled from INTEGER cross-products
+    // — (c0*n1 - c1*n0)^2 * (n0+n1) over n0*n1*(c0+c1)*(n-c...) — with
+    // exactly one double division, so the test statistic itself
+    // hash-compares. One keyed aggregate + a 4-value pivot.
+    Op.sql("e_ab_test",
        """WITH u AS (
          |  SELECT user_id, user_id % 2 AS variant,
          |         CASE WHEN sum(CASE WHEN event_type = 'purchase'
@@ -537,27 +497,7 @@ object Events {
          |            * (n0 + n1) AS DOUBLE)
          |         / CAST(n0 * n1 * (c0 + c1) * (n0 + n1 - c0 - c1)
          |                AS DOUBLE) AS z2
-         |FROM w""".stripMargin) { (s, d) =>
-      val u = Tables.events(s, d)
-        .groupBy(col("user_id"), (col("user_id") % 2).as("variant"))
-        .agg(when(
-          sum(when(col("event_type") === "purchase", 1).otherwise(0)) >
-            sum(when(col("event_type") === "click", 1).otherwise(0)),
-          1).otherwise(0).as("conv"))
-      val v = u.groupBy(col("variant"))
-        .agg(count(lit(1)).as("n"), sum(col("conv")).as("c"))
-      val w = v.agg(
-        max(when(col("variant") === 0, col("n"))).as("n0"),
-        max(when(col("variant") === 0, col("c"))).as("c0"),
-        max(when(col("variant") === 1, col("n"))).as("n1"),
-        max(when(col("variant") === 1, col("c"))).as("c1"))
-      val dev = col("c0") * col("n1") - col("c1") * col("n0")
-      w.select(col("n0"), col("c0"), col("n1"), col("c1"),
-        ((dev * dev * (col("n0") + col("n1"))).cast("double") /
-          (col("n0") * col("n1") * (col("c0") + col("c1")) *
-            (col("n0") + col("n1") - col("c0") - col("c1")))
-            .cast("double")).as("z2"))
-    },
+         |FROM w""".stripMargin),
 
     // Per-session aggregates on top of the sessionize assignment:
     // length, wall duration, conversion flag — the session-level fact

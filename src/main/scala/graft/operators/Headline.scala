@@ -257,21 +257,14 @@ object Headline {
     // Q6 shape: the forecast-revenue scan-aggregate — every predicate
     // pushes into the parquet scan, no join, no group: the purest test
     // that filters reach the reader and money stays exact.
-    Op("q6_forecast_revenue",
+    Op.sql("q6_forecast_revenue",
        """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
          |           * CAST(l_discount AS DECIMAL(9,2))) AS DOUBLE) AS revenue
          |FROM lineitem
          |WHERE l_shipdate >= TIMESTAMP '1994-01-01 00:00:00'
          |  AND l_shipdate <  TIMESTAMP '1995-01-01 00:00:00'
          |  AND l_discount BETWEEN 0.05 AND 0.07
-         |  AND l_quantity < 24""".stripMargin) { (s, d) =>
-      Tables.lineitem(s, d)
-        .filter(col("l_shipdate") >= lit("1994-01-01 00:00:00").cast("timestamp") &&
-          col("l_shipdate") < lit("1995-01-01 00:00:00").cast("timestamp") &&
-          col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-        .agg(sum(col("l_extendedprice").cast(dec) *
-          col("l_discount").cast(dec92)).cast("double").as("revenue"))
-    },
+         |  AND l_quantity < 24""".stripMargin),
 
     // Q4 shape: priority count gated by an EXISTS — a correlated semi-join
     // with a non-equi term (any line shipped after the order date), which
@@ -328,7 +321,7 @@ object Headline {
     // Q12 shape: conditional counting after a fact⋈fact join — the
     // CASE-in-aggregate idiom (late lines split by order priority),
     // integer-exact on both engines.
-    Op("q12_priority_shipping",
+    Op.sql("q12_priority_shipping",
        """SELECT l_returnflag,
          |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
          |                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -336,22 +329,13 @@ object Headline {
          |                THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
          |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
          |WHERE l_shipdate > o_orderdate
-         |GROUP BY 1""".stripMargin) { (s, d) =>
-      val o = Tables.orders(s, d)
-      val l = Tables.lineitem(s, d)
-      val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      o.join(l, l("l_orderkey") === o("o_orderkey"))
-        .filter(l("l_shipdate") > o("o_orderdate"))
-        .groupBy(col("l_returnflag"))
-        .agg(sum(when(high, 1L).otherwise(0L)).as("high_line_count"),
-          sum(when(high, 0L).otherwise(1L)).as("low_line_count"))
-    },
+         |GROUP BY 1""".stripMargin),
 
     // Q14 shape: promo revenue share — a part-dim join feeding a ratio of
     // two conditional decimal sums (CASE WITHOUT ELSE -> NULLs that both
     // engines' sum skips); one multiply and one divide on the presented
     // doubles, in the same order on both sides.
-    Op("q14_promo_revenue",
+    Op.sql("q14_promo_revenue",
        """SELECT 100.0 * CAST(sum(CASE WHEN p_type = 'PROMO'
          |    THEN CAST(l_extendedprice AS DECIMAL(18,2))
          |         * (1 - CAST(l_discount AS DECIMAL(9,2))) END) AS DOUBLE)
@@ -360,18 +344,7 @@ object Headline {
          |  AS promo_revenue
          |FROM lineitem JOIN part ON p_partkey = l_partkey
          |WHERE l_shipdate >= TIMESTAMP '1995-09-01 00:00:00'
-         |  AND l_shipdate <  TIMESTAMP '1995-10-01 00:00:00'""".stripMargin) { (s, d) =>
-      val l = Tables.lineitem(s, d)
-      val p = Tables.part(s, d)
-      val discPrice = col("l_extendedprice").cast(dec) *
-        (lit(1) - col("l_discount").cast(dec92))
-      l.filter(col("l_shipdate") >= lit("1995-09-01 00:00:00").cast("timestamp") &&
-          col("l_shipdate") < lit("1995-10-01 00:00:00").cast("timestamp"))
-        .join(p, p("p_partkey") === l("l_partkey"))
-        .agg((lit(100.0) *
-          sum(when(col("p_type") === "PROMO", discPrice)).cast("double") /
-          sum(discPrice).cast("double")).as("promo_revenue"))
-    },
+         |  AND l_shipdate <  TIMESTAMP '1995-10-01 00:00:00'""".stripMargin),
 
     // Q17 shape: small-quantity revenue against a per-part average — the
     // "aggregate then join back to the detail" decorrelation of a
@@ -648,23 +621,14 @@ object Headline {
     // (count per customer, then histogram of counts). The excluded-order
     // predicate touches only the right side, so it pre-filters orders
     // before the join — same rows, smaller shuffle.
-    Op("q13_order_distribution",
+    Op.sql("q13_order_distribution",
        """WITH co AS (
          |  SELECT c_custkey, count(o_orderkey) AS c_count
          |  FROM customer LEFT JOIN orders
          |    ON o_custkey = c_custkey AND o_orderpriority <> '1-URGENT'
          |  GROUP BY 1)
          |SELECT c_count, count(*) AS custdist
-         |FROM co GROUP BY 1""".stripMargin) { (s, d) =>
-      val c = Tables.customer(s, d)
-      val o = Tables.orders(s, d)
-        .filter(col("o_orderpriority") =!= "1-URGENT")
-      c.join(o, o("o_custkey") === c("c_custkey"), "left_outer")
-        .groupBy(c("c_custkey"))
-        .agg(count(o("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-    },
+         |FROM co GROUP BY 1""".stripMargin),
 
     // Q15 shape: top supplier — a keyed revenue aggregate compared against
     // its own MAX (the classic view-reused-twice query). The 1-row max is

@@ -598,7 +598,7 @@ object Profiling {
     // McNemar's paired-binary test over per-user outcome flags (clicked
     // vs purchased): the 2×2 discordant-cell statistic (b−c)²/(b+c).
     // Two hash aggregates, exact integers, ONE double division.
-    Op("f_mcnemar_test",
+    Op.sql("f_mcnemar_test",
        """WITH u AS (
          |  SELECT user_id,
          |    max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS r1,
@@ -621,27 +621,7 @@ object Profiling {
          |         * (n_click_only - n_purchase_only) AS DOUBLE)
          |      / CAST(n_click_only + n_purchase_only AS DOUBLE)
          |  END AS mcnemar_chi2
-         |FROM cnt""".stripMargin) { (s, d) =>
-      val u = Tables.events(s, d).groupBy(col("user_id")).agg(
-        max(when(col("event_type") === "click", 1).otherwise(0)).as("r1"),
-        max(when(col("event_type") === "purchase", 1).otherwise(0)).as("r2"))
-      u.agg(
-        count(lit(1)).as("n_users"),
-        sum(when(col("r1") === 1 && col("r2") === 1, 1L).otherwise(0L))
-          .as("n_both"),
-        sum(when(col("r1") === 1 && col("r2") === 0, 1L).otherwise(0L))
-          .as("n_click_only"),
-        sum(when(col("r1") === 0 && col("r2") === 1, 1L).otherwise(0L))
-          .as("n_purchase_only"),
-        sum(when(col("r1") === 0 && col("r2") === 0, 1L).otherwise(0L))
-          .as("n_neither"))
-        .withColumn("mcnemar_chi2",
-          when(col("n_click_only") + col("n_purchase_only") > 0,
-            ((col("n_click_only") - col("n_purchase_only")) *
-              (col("n_click_only") - col("n_purchase_only"))).cast("double")
-              / (col("n_click_only") + col("n_purchase_only"))
-                .cast("double")))
-    },
+         |FROM cnt""".stripMargin),
 
     // Cohen's kappa between two deterministic "raters" (high-value flag
     // vs conversion-type flag) in the EXACT integer rearrangement
@@ -708,6 +688,13 @@ object Profiling {
               (col("n2") - col("pe_n")).cast("double")).as("kappa"))
     },
 
+    // Benford first-digit audit (Newcomb 1881; Benford 1938; the
+    // Nigrini forensic-accounting screen): the leading significant
+    // digit of genuine transaction amounts follows log10(1 + 1/d), and
+    // a book-cooked ledger doesn't. The digit comes from exact cents
+    // (leading significant digit is invariant under the ×100 shift), so
+    // the whole test is integer: per-digit counts, observed share in
+    // truncating ppm against the 1-row total attach, and the χ²-style
     // deviation term (obs−exp)² div exp in the SAME ppm domain — the
     // expected shares are the nine pinned log10 constants, not runtime
     // ln calls, so nothing transcendental touches a compared column.
@@ -746,7 +733,7 @@ object Profiling {
           (3L, 124939L), (4L, 96910L), (5L, 79181L), (6L, 66947L),
           (7L, 57992L), (8L, 51153L), (9L, 45757L)))
         .toDF("digit", "exp_ppm")
-      broadcast(e).join(o, Seq("digit"), "left")
+      e.join(o, Seq("digit"), "left")
         .na.fill(0L, Seq("n"))
         .crossJoin(broadcast(nn))
         .select(col("digit"), col("n"),
@@ -1198,10 +1185,9 @@ object Profiling {
     // joined back on the value: the quantity side broadcasts (50 keys),
     // the price side is an ordinary keyed join that scales with distinct
     // prices. Moment sums are 128-bit on both engines (DECIMAL(38,0) /
-    // HUGEINT; 4n³ passes 2^63 already at ~1.3M rows — the r10 sf1
-    // stress caught the BIGINT formulation overflowing at 6M); per-row
-    // products still fit BIGINT to ~10^9 rows, and the exact sums
-    // present as DOUBLE.
+    // HUGEINT; 4n³ passes 2^63 already at ~1.3M rows, so a BIGINT sum
+    // overflows at sf1); per-row products still fit BIGINT to ~10^9
+    // rows, and the exact sums present as DOUBLE.
     Op("profile_spearman",
        """WITH c AS (
          |  SELECT CAST(l_quantity AS BIGINT) AS q,
@@ -1227,10 +1213,9 @@ object Profiling {
          |              * CAST(CAST(sum(dp * dp) AS VARCHAR) AS DOUBLE)),
          |           0.0) AS rho
          |FROM dev GROUP BY 1""".stripMargin) { (s, d) =>
-      // r14 shape: ONE full-data shuffle (the groupBy(p) below), not
-      // three. The old plan shuffled the whole row set BY p to attach
-      // rp, then aggregated the per-row products; but every moment sum
-      // is computable from GROUPED integers: sxx from the q histogram
+      // ONE full-data shuffle (the groupBy(p) below): the rows are never
+      // shuffled by p to attach rp, because every moment sum is
+      // computable from GROUPED integers: sxx from the q histogram
       // alone, syy from the p histogram alone, and sxy = Σ_p dp·(Σ_{rows
       // with p} rq − cnt_p·(n+1)) — so the rows only ever fold into the
       // per-p aggregate (map-side-combined), and the rank attach joins
@@ -1452,13 +1437,12 @@ object Profiling {
          |FROM pairs p JOIN nd n ON n.c = p.lhs
          |WHERE p.n_shared = n.n""".stripMargin
     }) { (s, d) =>
-      // r14 shape: the 13 per-column `.distinct()` exchanges are gone —
-      // collect_set dedups (c, v) inside the ONE groupBy(v) aggregate
-      // (partial sets collapse map-side), which is where the old plan's
-      // distinct output landed anyway. The per-column distinct counts
-      // come off the same grouped frame (a column appears in a v-group's
-      // set exactly once per distinct value), so `nd` no longer needs
-      // its own pass over the union.
+      // No per-column `.distinct()` exchange: collect_set dedups (c, v)
+      // inside the ONE groupBy(v) aggregate (partial sets collapse
+      // map-side). The per-column distinct counts come off the same
+      // grouped frame (a column appears in a v-group's set exactly once
+      // per distinct value), so `nd` needs no pass of its own over the
+      // union.
       val vals = IndColumns.map { case (id, table, c) =>
         Tables.table(s, d, table)
           .select(lit(id).as("c"), col(c).cast("long").as("v"))

@@ -11,79 +11,61 @@ import org.apache.spark.sql.types.DecimalType
   * The reference is a dbt+Snowflake ELT pipeline (reference:
   * models/marts/fct_orders.sql, models/staging/stg_*.sql, tests/,
   * dbt generic-test macros). Each operator below maps one row of the SURVEY §2
-  * inventory to an idiomatic DataFrame plan; the oracle string is the ANSI-SQL
-  * equivalent the driver runs in DuckDB.
+  * inventory to a query. A plain query is one SQL text that Spark and the
+  * DuckDB oracle both run (`Op.sql`); a DataFrame plan remains where the
+  * entry exercises a mechanism the text does not have, with the text as
+  * its oracle.
   *
-  * Numeric-determinism rule (r02, after the r01 hash-fail audit): money
-  * aggregates are computed in the exact decimal domain — raw 2-decimal doubles
-  * are cast to DECIMAL *inputs* (tie-free, the raw values are within 1e-9 of a
-  * 2-decimal value so no rounding ambiguity exists), all arithmetic happens
-  * decimal×decimal (exact, order-independent across any partitioning — at
-  * 100 TB the same plan stays exact no matter how AQE re-splits the shuffle) —
-  * and then *presented* as DOUBLE. Never cast a *computed* double to decimal
-  * (Spark HALF_UP vs DuckDB tie-handling diverge on per-row ties — the r01
-  * bug), and never ship DECIMAL output columns (all four r01 hash-fails were
-  * exactly the DECIMAL-emitting queries; the final exact-decimal → double
-  * conversion is correctly rounded and bit-identical in both engines because
-  * every unscaled sum stays below 2^53 at verify scale).
+  * Numeric-determinism rule: money aggregates are computed in the exact
+  * decimal domain — raw 2-decimal doubles are cast to DECIMAL *inputs*
+  * (tie-free, the raw values are within 1e-9 of a 2-decimal value so no
+  * rounding ambiguity exists), all arithmetic happens decimal×decimal
+  * (exact, order-independent across any partitioning — at 100 TB the same
+  * plan stays exact no matter how AQE re-splits the shuffle) — and then
+  * *presented* as DOUBLE. Never cast a *computed* double to decimal (Spark
+  * HALF_UP and DuckDB tie-handling diverge on per-row ties), and never
+  * ship DECIMAL output columns (the driver's compare fails them even when
+  * the values match); the final exact-decimal → double conversion is
+  * correctly rounded and bit-identical in both engines because every
+  * unscaled sum stays below 2^53 at verify scale.
   */
 object Relational {
 
   private val dec = DecimalType(18, 2)
-  private val dec92 = DecimalType(9, 2)
 
   val ops: Seq[Op] = Seq(
 
     // S2/P1: table scan + passthrough projection (reference:
     // models/staging/stg_*.sql:2 `select * from {{ ref(...) }}`).
     // Catalyst turns this into a bare columnar parquet scan; nothing to tune.
-    Op("s2_scan_passthrough",
-       "SELECT r_regionkey, r_name FROM region") { (s, d) =>
-      Tables.region(s, d).select("r_regionkey", "r_name")
-    },
+    Op.sql("s2_scan_passthrough",
+       "SELECT r_regionkey, r_name FROM region"),
 
     // P2: column projection + rename (reference: models/staging/stg_items.sql:5-10
     // narrows 7 cols to 5 and renames freight_value -> shipping_cost).
     // The select drives column pruning into the scan: ReadSchema carries only
     // 3 of orders' 6 columns.
-    Op("p2_project_rename",
+    Op.sql("p2_project_rename",
        """SELECT o_orderkey AS order_id, o_orderstatus AS status,
          |       o_orderpriority AS priority
-         |FROM orders""".stripMargin) { (s, d) =>
-      Tables.orders(s, d).select(
-        col("o_orderkey").as("order_id"),
-        col("o_orderstatus").as("status"),
-        col("o_orderpriority").as("priority"))
-    },
+         |FROM orders""".stripMargin),
 
     // P4: comparison predicate in WHERE (reference:
     // tests/assert_revenue_is_positive.sql:7 `where total_order_value < 0`).
     // Filter is pushed into the parquet scan (PushedFilters: LessThan).
-    Op("p4_filter_predicate",
+    Op.sql("p4_filter_predicate",
        """SELECT l_orderkey, l_linenumber, l_quantity
-         |FROM lineitem WHERE l_quantity < 3""".stripMargin) { (s, d) =>
-      Tables.lineitem(s, d)
-        .filter(col("l_quantity") < 3)
-        .select("l_orderkey", "l_linenumber", "l_quantity")
-    },
+         |FROM lineitem WHERE l_quantity < 3""".stripMargin),
 
     // P5 + J2: IS NULL after a left join (reference: the item-less-orders
     // case of models/marts/fct_orders.sql:30 — orders keeping NULL revenue).
-    Op("p5_null_predicate",
+    Op.sql("p5_null_predicate",
        """SELECT o.o_orderkey AS order_id
          |FROM orders o
          |LEFT JOIN (SELECT l_orderkey, sum(l_quantity) AS q
          |           FROM lineitem GROUP BY l_orderkey) i
          |  ON o.o_orderkey = i.l_orderkey
-         |WHERE i.q IS NULL""".stripMargin) { (s, d) =>
-      val items = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(sum("l_quantity").as("q"))
-      Tables.orders(s, d)
-        .join(items, col("o_orderkey") === col("l_orderkey"), "left")
-        .filter(col("q").isNull)
-        .select(col("o_orderkey").as("order_id"))
-    },
+         |WHERE i.q IS NULL""".stripMargin),
 
     // J1: left outer equi-join, 1:1 dim join (reference:
     // models/marts/fct_orders.sql:29 orders LEFT JOIN customers).
@@ -92,19 +74,10 @@ object Relational {
     // the dim is small and sort-merge once it isn't — the only strategy that
     // is correct at every SF. (Forced broadcast is reserved for genuinely
     // constant-size dims: nation/region, see Analytics.f_distinct_agg.)
-    Op("j1_left_join_dim",
+    Op.sql("j1_left_join_dim",
        """SELECT o.o_orderkey AS order_id, o.o_orderstatus AS status,
          |       c.c_name AS customer_name, c.c_mktsegment AS segment
-         |FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey""".stripMargin) { (s, d) =>
-      val o = Tables.orders(s, d)
-      val c = Tables.customer(s, d)
-      o.join(c, o("o_custkey") === c("c_custkey"), "left")
-        .select(
-          o("o_orderkey").as("order_id"),
-          o("o_orderstatus").as("status"),
-          c("c_name").as("customer_name"),
-          c("c_mktsegment").as("segment"))
-    },
+         |FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey""".stripMargin),
 
     // J2 + A1 + E1: the flagship fct_orders shape (reference:
     // models/marts/fct_orders.sql:9-30) — per-order aggregation of items,
@@ -114,7 +87,7 @@ object Relational {
     // Scale: both sides shuffle on the same key (orderkey); at 100 TB this is
     // one co-partitioned sort-merge join, and the aggregation is partial
     // (map-side) before the shuffle.
-    Op("j2_fct_orders",
+    Op.sql("j2_fct_orders",
        """SELECT o.o_orderkey AS order_id, o.o_orderstatus AS order_status,
          |       i.total_item_revenue, i.total_shipping_revenue,
          |       i.total_item_revenue + i.total_shipping_revenue AS total_order_value
@@ -126,24 +99,7 @@ object Relational {
          |         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(9,2))) AS DOUBLE)
          |           AS total_shipping_revenue
          |  FROM lineitem GROUP BY l_orderkey) i
-         |ON o.o_orderkey = i.l_orderkey""".stripMargin) { (s, d) =>
-      val items = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(
-          sum(col("l_extendedprice").cast(dec)).cast("double")
-            .as("total_item_revenue"),
-          sum(col("l_extendedprice").cast(dec) * col("l_discount").cast(dec92))
-            .cast("double").as("total_shipping_revenue"))
-      val o = Tables.orders(s, d)
-      o.join(items, o("o_orderkey") === items("l_orderkey"), "left")
-        .select(
-          o("o_orderkey").as("order_id"),
-          o("o_orderstatus").as("order_status"),
-          col("total_item_revenue"),
-          col("total_shipping_revenue"),
-          (col("total_item_revenue") + col("total_shipping_revenue"))
-            .as("total_order_value"))
-    },
+         |ON o.o_orderkey = i.l_orderkey""".stripMargin),
 
     // J3: anti-join (reference: relationships generic test,
     // dbt/include/global_project/macros/generic_test_sql/relationships.sql:1-22
@@ -161,36 +117,20 @@ object Relational {
     // A1: hash aggregate, sum x2 by key (reference: models/marts/fct_orders.sql:9-16,
     // `group by 1` ordinal). TPC-H Q1 shape; partial aggregation happens
     // map-side so the shuffle carries one row per (flag,status) per partition.
-    Op("a1_group_agg",
+    Op.sql("a1_group_agg",
        """SELECT l_returnflag, l_linestatus,
          |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
          |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
          |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(9,2)))) AS DOUBLE) AS sum_disc_price,
          |       count(*) AS n_rows
-         |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin) { (s, d) =>
-      Tables.lineitem(s, d)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(col("l_quantity").cast(dec)).cast("double").as("sum_qty"),
-          sum(col("l_extendedprice").cast(dec)).cast("double").as("sum_price"),
-          sum(col("l_extendedprice").cast(dec) *
-              (lit(1) - col("l_discount").cast(dec92)))
-            .cast("double").as("sum_disc_price"),
-          count(lit(1)).as("n_rows"))
-    },
+         |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin),
 
     // A2: uniqueness check body (reference: generic_test_sql/unique.sql:1-12 —
     // group by key, having count > 1, null keys excluded).
-    Op("a2_unique_check",
+    Op.sql("a2_unique_check",
        """SELECT l_orderkey AS dup_key, count(*) AS n
          |FROM lineitem WHERE l_orderkey IS NOT NULL
-         |GROUP BY l_orderkey HAVING count(*) > 1""".stripMargin) { (s, d) =>
-      Tables.lineitem(s, d)
-        .filter(col("l_orderkey").isNotNull)
-        .groupBy(col("l_orderkey").as("dup_key"))
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") > 1)
-    },
+         |GROUP BY l_orderkey HAVING count(*) > 1""".stripMargin),
 
     // A3 + E2: the dbt test harness wrapper (reference:
     // macros/materializations/tests/helpers.sql:5-14 — `select count(*) as
@@ -219,19 +159,12 @@ object Relational {
 
     // U1: UNION ALL with a discriminator label (reference:
     // tests/helpers.sql:23-44, dbt unit-test fixture compare).
-    Op("u1_union_all",
+    Op.sql("u1_union_all",
        """SELECT 'urgent' AS which, o_orderkey AS order_id FROM orders
          |WHERE o_orderpriority = '1-URGENT'
          |UNION ALL
          |SELECT 'open' AS which, o_orderkey AS order_id FROM orders
-         |WHERE o_orderstatus = 'O'""".stripMargin) { (s, d) =>
-      val o = Tables.orders(s, d)
-      val urgent = o.filter(col("o_orderpriority") === "1-URGENT")
-        .select(lit("urgent").as("which"), col("o_orderkey").as("order_id"))
-      val open = o.filter(col("o_orderstatus") === "O")
-        .select(lit("open").as("which"), col("o_orderkey").as("order_id"))
-      urgent.unionByName(open)
-    },
+         |WHERE o_orderstatus = 'O'""".stripMargin),
 
     // J5: FULL OUTER equi-join — the reconciliation shape (which
     // customers have no orders, which orders have no surviving customer

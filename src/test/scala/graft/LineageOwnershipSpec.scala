@@ -16,7 +16,8 @@ import scala.jdk.CollectionConverters._
   * `lower`/`upper`/`initcap` (the native `icu_lower`/`icu_upper` give
   * the same bytes without Spark's 1.1M-code-point title-case table).
   * The trade-graph pair CTE, the daily-cents sum and Graphs' edge
-  * reversal each have one definition.
+  * reversal each have one definition. Only Catalog registers temp views
+  * (its models); a query over the tables binds them through Tables.sql.
   * Comments are stripped first, so prose may still name the calls.
   */
 class LineageOwnershipSpec extends AnyFunSuite {
@@ -141,5 +142,17 @@ class LineageOwnershipSpec extends AnyFunSuite {
     assert(allSources.exists(c => c._1.endsWith("graft/Engine.scala") &&
       build.findFirstIn(c._2).isDefined), "the scan missed the factory")
     assert(offenders.isEmpty, s"create sessions with Engine.local: $offenders")
+  }
+
+  test("no src/main file outside Catalog registers a temp view") {
+    val register =
+      """\.(createOrReplaceTempView|createTempView|createGlobalTempView|createOrReplaceGlobalTempView|registerTempTable)\(""".r
+    val offenders = allSources.collect {
+      case (p, c) if register.findFirstIn(c).isDefined &&
+          p.getFileName.toString != "Catalog.scala" => p.toString
+    }
+    assert(allSources.exists(c => c._1.endsWith("olist/Catalog.scala") &&
+      register.findFirstIn(c._2).isDefined), "the scan missed Catalog")
+    assert(offenders.isEmpty, s"bind tables with Tables.sql: $offenders")
   }
 }

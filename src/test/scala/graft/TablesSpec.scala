@@ -12,6 +12,8 @@ import scala.concurrent.duration.Duration
 /** `Tables.parquet` resolves a table dir once per session and conf and
   * reuses the relation while the dir's file listing is unchanged; every
   * answer must equal a plain `spark.read.parquet` of the same dir.
+  * `Tables.sql` binds a text's table names to those reads under SQL
+  * scoping and registers nothing in the session.
   */
 class TablesSpec extends SparkSpec {
 
@@ -109,5 +111,74 @@ class TablesSpec extends SparkSpec {
     val counts = Await.result(Future.sequence((0 until 8).map(i =>
       Future(Tables.parquet(spark, dirs(i % 2)).count()))), Duration.Inf)
     assert(counts == (0 until 8).map(i => 50L * (i % 2 + 1)))
+  }
+
+  /** A table dir holding `orders` (keys `keys`, custkey = key % 3) and a
+    * three-row `customer`.
+    */
+  private def fixture(prefix: String, keys: Seq[Long]): String = {
+    import spark.implicits._
+    val dir = tmp(prefix)
+    write(keys.map(k => (k, k % 3)).toDF("o_orderkey", "o_custkey"),
+      s"$dir/orders.parquet")
+    write(Seq((0L, "c0"), (1L, "c1"), (2L, "c2")).toDF("c_custkey", "c_name"),
+      s"$dir/customer.parquet")
+    dir
+  }
+
+  test("Tables.sql resolves table-qualified columns") {
+    val dir = fixture("sql_qualified", Seq(1L, 2L, 4L))
+    val df = Tables.sql(spark, dir,
+      """SELECT orders.o_orderkey, c.c_name
+        |FROM orders JOIN customer c ON orders.o_custkey = c.c_custkey
+        |WHERE EXISTS (SELECT 1 FROM customer
+        |              WHERE customer.c_custkey = orders.o_custkey)""".stripMargin)
+    assert(rows(df) == Seq(Row(1L, "c1"), Row(2L, "c2"), Row(4L, "c1")))
+  }
+
+  test("Tables.sql: a CTE named like a table shadows it in the CTE's " +
+       "scope, and a non-recursive CTE's own body reads the table") {
+    val dir = fixture("sql_cte", Seq(1L, 2L))
+    assert(rows(Tables.sql(spark, dir,
+      "WITH orders AS (SELECT 42L AS o_orderkey) SELECT o_orderkey FROM orders"))
+      == Seq(Row(42L)))
+    assert(rows(Tables.sql(spark, dir,
+      """WITH orders AS (SELECT o_orderkey + 10 AS k FROM orders),
+        |     c AS (SELECT k FROM orders)
+        |SELECT k FROM c""".stripMargin)) == Seq(Row(11L), Row(12L)))
+    // a CTE inside a subquery is out of scope for the outer FROM
+    assert(rows(Tables.sql(spark, dir,
+      """SELECT o_orderkey FROM orders
+        |WHERE o_orderkey IN (WITH orders AS (SELECT 2L AS k)
+        |                     SELECT k FROM orders)""".stripMargin))
+      == Seq(Row(2L)))
+  }
+
+  test("Tables.sql names an unknown table in its error") {
+    val dir = fixture("sql_unknown", Seq(1L))
+    val e = intercept[Exception](
+      Tables.sql(spark, dir, "SELECT * FROM orders JOIN no_such_table"))
+    assert(e.getMessage.contains("no_such_table"), e.getMessage)
+    val multi = intercept[IllegalArgumentException](
+      Tables.sql(spark, dir, "SELECT * FROM spark_catalog.default.orders"))
+    assert(multi.getMessage.contains("spark_catalog.default.orders"))
+  }
+
+  test("one text bound to two dirs in one session returns each dir's rows") {
+    val a = fixture("sql_dir_a", Seq(1L, 2L))
+    val b = fixture("sql_dir_b", Seq(3L, 4L, 5L))
+    val text = "SELECT o_orderkey FROM orders"
+    val (dfA, dfB) = (Tables.sql(spark, a, text), Tables.sql(spark, b, text))
+    assert(rows(dfA) == Seq(Row(1L), Row(2L)))
+    assert(rows(dfB) == Seq(Row(3L), Row(4L), Row(5L)))
+  }
+
+  test("building every Op.sql entry registers no table or view") {
+    def names = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = names
+    val sqlEntries = SparkEntry.queries.values.collect { case q: Op.Sql => q }
+    assert(sqlEntries.size >= 30, sqlEntries.size)
+    sqlEntries.foreach(_(spark, "/root/testdata/sf0.001"))
+    assert(names == before)
   }
 }

@@ -459,4 +459,22 @@ class ProfilingSpec extends SparkSpec {
       (n * math.min(rt.size - 1, ct.size - 1)).toDouble))
     assert(v >= 0.0 && v <= 1.0)
   }
+
+  test("f_benford_chi hints no preserved side of an outer join") {
+    import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftOuter,
+      RightOuter}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    // Spark cannot build a preserved side, so such a hint is dropped
+    // with a HintErrorLogger warning at every planning
+    val plan = graft.SparkEntry.queries("f_benford_chi")(spark, sf)
+      .queryExecution.optimizedPlan
+    val outer = plan.collect { case j: Join if j.joinType == LeftOuter ||
+        j.joinType == RightOuter || j.joinType == FullOuter => j }
+    assert(outer.nonEmpty, plan)
+    val dead = outer.filter { j =>
+      (j.joinType != RightOuter && j.hint.leftHint.isDefined) ||
+        (j.joinType != LeftOuter && j.hint.rightHint.isDefined)
+    }
+    assert(dead.isEmpty, dead.map(_.hint))
+  }
 }

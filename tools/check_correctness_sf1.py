@@ -33,11 +33,7 @@ def compare_one(outdir, name, sfdir, sql, result_path):
     dump, write a small result dict as JSON."""
     import duckdb
     import pandas as pd
-    import pandas.util
-
-    def canon(df):
-        df = df[sorted(df.columns)]
-        return df.sort_values(by=list(df.columns)).reset_index(drop=True)
+    from check_correctness import compare
 
     res = {}
     try:
@@ -62,29 +58,16 @@ def compare_one(outdir, name, sfdir, sql, result_path):
             src = f"{p}/*.parquet" if os.path.isdir(p) else p
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
         odf = con.execute(sql).df()
-        s, o = canon(spark), canon(odf)
-        ok_rows = len(s) == len(o)
-        ok_schema = list(s.columns) == list(o.columns)
-        ok_vals = False
-        if ok_rows and ok_schema:
-            try:
-                pd.testing.assert_frame_equal(s, o, check_dtype=False,
-                                              check_exact=True)
-                ok_vals = True
-            except AssertionError:
-                ok_vals = False
-        hs = pandas.util.hash_pandas_object(s.astype(str)).sum() \
-            if ok_rows else -1
-        ho = pandas.util.hash_pandas_object(o.astype(str)).sum() \
-            if ok_rows else -2
-        ok = ok_rows and ok_schema and ok_vals and hs == ho
+        c = compare(spark, odf)
+        s, o = c.s, c.o
+        ok = c.ok_rows and c.ok_schema and c.ok_vals and c.hash_eq
         res = {
             "status": "pass" if ok else "FAIL",
-            "rows_match": ok_rows, "schema_match": ok_schema,
-            "hash_match": bool(hs == ho) if ok_rows else False,
+            "rows_match": c.ok_rows, "schema_match": c.ok_schema,
+            "hash_match": bool(c.hash_eq) if c.ok_rows else False,
             "spark_rows": len(s), "oracle_rows": len(o),
         }
-        if not ok and ok_rows and ok_schema:
+        if not ok and c.ok_rows and c.ok_schema:
             try:
                 cmp = s.compare(o)
                 res["first_diffs"] = cmp.head(3).to_string()
