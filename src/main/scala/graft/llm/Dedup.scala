@@ -318,6 +318,35 @@ object Dedup {
       .filter(col("containment") >= threshold)
   }
 
+  /** DuckDB CTE `walk(node, reach)` inside WITH RECURSIVE: every node
+    * reachable from `node` over an `edges(src, dst)` CTE.
+    */
+  val walkCte: String =
+    """walk(node, reach) AS (
+      |  SELECT src, dst FROM edges
+      |  UNION
+      |  SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach)"""
+      .stripMargin
+
+  /** [[walkCte]] over `edges`, each pair of a `pairs(id_a, id_b)` CTE
+    * both ways.
+    */
+  val componentWalkCtes: String =
+    s"""edges AS (
+       |  SELECT id_a AS src, id_b AS dst FROM pairs
+       |  UNION ALL SELECT id_b, id_a FROM pairs),
+       |$walkCte""".stripMargin
+
+  /** The oracle twin of [[componentMinLabels]]: [[componentWalkCtes]]
+    * then `labels(node, label)`, the least id `node` reaches or itself —
+    * the fixpoint's label by definition.
+    */
+  val componentLabelsCtes: String =
+    s"""$componentWalkCtes,
+       |labels AS (
+       |  SELECT node, least(node, min(reach)) AS label
+       |  FROM walk GROUP BY node)""".stripMargin
+
   /** Component-minimum label for every node of the verified near-dup pair
     * graph: (node, label) where label is the smallest id reachable from
     * `node` over pair edges — the canonical one-survivor-per-cluster rule

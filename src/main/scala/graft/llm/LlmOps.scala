@@ -1210,13 +1210,7 @@ object LlmOps {
        |  SELECT id_a, id_b FROM (
        |    ${minhashOracleSql(bands = 8, rows = 4, threshold = 0.8,
               from = "base").linesIterator.mkString("\n    ")})),
-       |edges AS (
-       |  SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION ALL SELECT id_b, id_a FROM pairs),
-       |walk(node, reach) AS (
-       |  SELECT src, dst FROM edges
-       |  UNION
-       |  SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach),
+       |${Dedup.componentWalkCtes},
        |losers AS (SELECT DISTINCT node AS doc_id FROM walk
        |           WHERE reach < node),
        |nr AS (SELECT * FROM base
@@ -1641,13 +1635,7 @@ object LlmOps {
          |  SELECT id_a, id_b FROM (
          |    ${minhashOracleSql(bands = 8, rows = 4, threshold = 0.8,
                 from = "base").linesIterator.mkString("\n    ")})),
-         |edges AS (
-         |  SELECT id_a AS src, id_b AS dst FROM pairs
-         |  UNION ALL SELECT id_b, id_a FROM pairs),
-         |walk(node, reach) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach),
+         |${Dedup.componentWalkCtes},
          |losers AS (SELECT DISTINCT node AS doc_id FROM walk WHERE reach < node)
          |SELECT doc_id, source, CAST(length(text) AS BIGINT) AS n_chars
          |FROM base WHERE doc_id NOT IN (SELECT doc_id FROM losers)""".stripMargin
@@ -1675,16 +1663,7 @@ object LlmOps {
           |  SELECT id_a, id_b FROM (
           |    ${minhashOracleSql(bands = 8, rows = 4, threshold = 0.8)
                  .linesIterator.mkString("\n    ")})),
-          |edges AS (
-          |  SELECT id_a AS src, id_b AS dst FROM pairs
-          |  UNION ALL SELECT id_b, id_a FROM pairs),
-          |walk(node, reach) AS (
-          |  SELECT src, dst FROM edges
-          |  UNION
-          |  SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach),
-          |labels AS (
-          |  SELECT node, least(node, min(reach)) AS label
-          |  FROM walk GROUP BY node),
+          |${Dedup.componentLabelsCtes},
           |sizes AS (
           |  SELECT label, count(*) AS cluster_size FROM labels GROUP BY 1)
           |SELECT cluster_size, count(*) AS n_clusters
@@ -1711,16 +1690,7 @@ object LlmOps {
           |  SELECT id_a, id_b FROM (
           |    ${minhashOracleSql(bands = 8, rows = 4, threshold = 0.8)
                  .linesIterator.mkString("\n    ")})),
-          |edges AS (
-          |  SELECT id_a AS src, id_b AS dst FROM pairs
-          |  UNION ALL SELECT id_b, id_a FROM pairs),
-          |walk(node, reach) AS (
-          |  SELECT src, dst FROM edges
-          |  UNION
-          |  SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach),
-          |labels AS (
-          |  SELECT node, least(node, min(reach)) AS label
-          |  FROM walk GROUP BY node),
+          |${Dedup.componentLabelsCtes},
           |clustered AS (
           |  SELECT d.doc_id, d.n_chars,
           |         coalesce(l.label, d.doc_id) AS cluster
@@ -2488,10 +2458,7 @@ object LlmOps {
           |edges AS MATERIALIZED (
           |  SELECT id_a AS src, id_b AS dst FROM pairs
           |  UNION ALL SELECT id_b, id_a FROM pairs),
-          |walk(node, reach) AS (
-          |  SELECT src, dst FROM edges
-          |  UNION
-          |  SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach),
+          |${Dedup.walkCte},
           |lab AS (
           |  SELECT node, least(node, min(reach)) AS label FROM walk
           |  GROUP BY node),
@@ -3804,16 +3771,7 @@ object LlmOps {
           |  SELECT id_a, id_b FROM (
           |    ${minhashOracleSql(bands = 8, rows = 4, threshold = 0.8)
                  .linesIterator.mkString("\n    ")})),
-          |edges AS (
-          |  SELECT id_a AS src, id_b AS dst FROM pairs
-          |  UNION ALL SELECT id_b, id_a FROM pairs),
-          |walk(node, reach) AS (
-          |  SELECT src, dst FROM edges
-          |  UNION
-          |  SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach),
-          |labels AS (
-          |  SELECT node, least(node, min(reach)) AS label
-          |  FROM walk GROUP BY node),
+          |${Dedup.componentLabelsCtes},
           |clustered AS (
           |  SELECT d.doc_id, d.source,
           |         coalesce(l.label, d.doc_id) AS cluster
@@ -3845,16 +3803,7 @@ object LlmOps {
           |  SELECT id_a, id_b FROM (
           |    ${minhashOracleSql(bands = 8, rows = 4, threshold = 0.8)
                  .linesIterator.mkString("\n    ")})),
-          |edges AS (
-          |  SELECT id_a AS src, id_b AS dst FROM pairs
-          |  UNION ALL SELECT id_b, id_a FROM pairs),
-          |walk(node, reach) AS (
-          |  SELECT src, dst FROM edges
-          |  UNION
-          |  SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach),
-          |labels AS (
-          |  SELECT node, least(node, min(reach)) AS label
-          |  FROM walk GROUP BY node),
+          |${Dedup.componentLabelsCtes},
           |clustered AS (
           |  SELECT d.doc_id, d.source,
           |         coalesce(l.label, d.doc_id) AS cluster
@@ -4022,7 +3971,7 @@ object LlmOps {
     // + lead over the same sort — a single shuffle and sort, groups are
     // prompt-sized); all columns integer/string so the table
     // hash-compares.
-    Op("mix_best_of_n",
+    Op.sql("mix_best_of_n",
        """WITH r AS (
          |  SELECT lang, source, doc_id, CAST(n_chars AS BIGINT) AS reward,
          |         row_number() OVER (PARTITION BY lang, source
@@ -4036,21 +3985,7 @@ object LlmOps {
          |SELECT lang, source, n_candidates, doc_id AS best_id,
          |       reward AS best_reward,
          |       reward - runner_up AS margin
-         |FROM r WHERE rk = 1""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("lang"), col("source"))
-      val ord = w.orderBy(col("n_chars").desc, col("doc_id"))
-      Tables.documents(s, d)
-        .select(col("lang"), col("source"), col("doc_id"),
-          col("n_chars").cast("long").as("reward"),
-          row_number().over(ord).as("rk"),
-          lead(col("n_chars").cast("long"), 1).over(ord).as("runner_up"),
-          count(lit(1)).over(w).as("n_candidates"))
-        .filter(col("rk") === 1)
-        .select(col("lang"), col("source"), col("n_candidates"),
-          col("doc_id").as("best_id"), col("reward").as("best_reward"),
-          (col("reward") - col("runner_up")).as("margin"))
-    },
+         |FROM r WHERE rk = 1""".stripMargin),
 
     // GRPO group-relative advantage (Shao et al. 2024 "DeepSeekMath"):
     // the PPO-free policy-gradient weight — each sample's reward
@@ -4065,7 +4000,7 @@ object LlmOps {
     // Scale shape: one keyed window computes (n, S, Q) alongside the
     // rows — a single shuffle on the prompt key, no join-back; groups
     // are prompt-sized so no window ever exceeds a prompt's samples.
-    Op("mix_grpo_advantage",
+    Op.sql("mix_grpo_advantage",
        """WITH g AS (
          |  SELECT lang, source, doc_id, CAST(n_chars AS BIGINT) AS reward,
          |         CAST(count(*) OVER (PARTITION BY lang, source)
@@ -4081,21 +4016,7 @@ object LlmOps {
          |         CAST(n * reward - s AS DOUBLE) /
          |           sqrt(CAST(n * q - s * s AS DOUBLE))
          |       END AS advantage
-         |FROM g""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("lang"), col("source"))
-      val r = col("n_chars").cast("long")
-      Tables.documents(s, d)
-        .select(col("lang"), col("source"), col("doc_id"),
-          r.as("reward"), count(lit(1)).over(w).as("n"),
-          sum(r).over(w).as("s"), sum(r * r).over(w).as("q"))
-        .select(col("lang"), col("source"), col("doc_id"), col("reward"),
-          col("n"), (col("n") * col("reward") - col("s")).as("adv_num"),
-          when(col("n") * col("q") - col("s") * col("s") > 0,
-            (col("n") * col("reward") - col("s")).cast("double") /
-              sqrt((col("n") * col("q") - col("s") * col("s"))
-                .cast("double"))).as("advantage"))
-    },
+         |FROM g""".stripMargin),
 
     // PII redaction: the scrub every public-corpus pipeline runs before
     // training. Synthetic PII (email/IP/phone/SSN derived from doc_id) is

@@ -326,23 +326,13 @@ object Analytics {
 
     // Ranking window: top-1 order per customer. Spark plans a single shuffle
     // on the partition key; the rank filter is applied streaming per group.
-    Op("w1_rank_per_group",
+    Op.sql("w1_rank_per_group",
        """SELECT o_custkey AS customer_id, o_orderkey AS order_id,
          |       o_totalprice AS total
          |FROM (SELECT o_custkey, o_orderkey, o_totalprice,
          |             row_number() OVER (PARTITION BY o_custkey
          |               ORDER BY o_totalprice DESC, o_orderkey) AS rn
-         |      FROM orders) WHERE rn = 1""".stripMargin) { (s, d) =>
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      Tables.orders(s, d)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(
-          col("o_custkey").as("customer_id"),
-          col("o_orderkey").as("order_id"),
-          col("o_totalprice").as("total"))
-    },
+         |      FROM orders) WHERE rn = 1""".stripMargin),
 
     // Analytic window: running order count + running spend per customer.
     // The accumulator is exact decimal (order-independent across
@@ -421,22 +411,13 @@ object Analytics {
 
     // first/last value over an ordered frame: each customer's cheapest and
     // priciest order ids.
-    Op("w6_first_last",
+    Op.sql("w6_first_last",
        """SELECT DISTINCT o_custkey AS customer_id,
          |       first_value(o_orderkey) OVER w AS cheapest_order,
          |       last_value(o_orderkey) OVER w AS priciest_order
          |FROM orders
          |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey
-         |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin) { (s, d) =>
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice"), col("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      Tables.orders(s, d).select(
-        col("o_custkey").as("customer_id"),
-        first(col("o_orderkey")).over(w).as("cheapest_order"),
-        last(col("o_orderkey")).over(w).as("priciest_order"))
-        .distinct()
-    },
+         |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin),
 
     // Set op: EXCEPT (distinct) — segments' customers minus recent buyers.
     Op.sql("set_except",
@@ -461,10 +442,12 @@ object Analytics {
          |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
          |FROM orders GROUP BY 1, 2""".stripMargin),
 
-    // String functions: upper/substr/concat/length/trim.
+    // String functions: upper/substr/concat/length/trim. The engine
+    // upper-cases with ICU full case mapping (ß -> SS, CaseMapSpec); DuckDB's
+    // upper maps ß to ẞ, so the oracle spells the expansion out.
     Op("f_string_funcs",
        """SELECT c_custkey AS customer_id,
-         |       upper(c_name) AS name_upper,
+         |       upper(replace(c_name, 'ß', 'ss')) AS name_upper,
          |       substr(c_name, 1, 8) AS name_prefix,
          |       c_mktsegment || '#' || c_name AS tagged,
          |       length(c_name) AS name_len
@@ -699,7 +682,7 @@ object Analytics {
     // Top-3 parts per supplier by exact revenue — the general top-k-per-
     // group window (w1 is its k=1 special case): one shuffle keyed by
     // the group, rank filter applied streaming per sorted run.
-    Op("w7_topk_per_group",
+    Op.sql("w7_topk_per_group",
        """WITH rev AS (
          |  SELECT l_suppkey, l_partkey,
          |         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)
@@ -711,38 +694,17 @@ object Analytics {
          |  SELECT l_suppkey, l_partkey, cents,
          |         CAST(row_number() OVER (PARTITION BY l_suppkey
          |           ORDER BY cents DESC, l_partkey) AS INTEGER) AS rk
-         |  FROM rev) WHERE rk <= 3""".stripMargin) { (s, d) =>
-      val w = Window.partitionBy(col("l_suppkey"))
-        .orderBy(col("cents").desc, col("l_partkey"))
-      Tables.lineitem(s, d)
-        .groupBy(col("l_suppkey"), col("l_partkey"))
-        .agg(sum(col("l_extendedprice").cast(dec) * 100).cast("long")
-          .as("cents"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        .select(col("l_suppkey"), col("l_partkey"),
-          (col("cents").cast("double") / 100.0).as("revenue"), col("rk"))
-    },
+         |  FROM rev) WHERE rk <= 3""".stripMargin),
 
     // Exact per-group mode with a deterministic tiebreak — the
     // categorical summary statistic (most frequent status per priority).
-    Op("f_mode",
+    Op.sql("f_mode",
        """SELECT o_orderpriority, status_mode, n FROM (
          |  SELECT o_orderpriority, o_orderstatus AS status_mode,
          |         CAST(count(*) AS BIGINT) AS n,
          |         row_number() OVER (PARTITION BY o_orderpriority
          |           ORDER BY count(*) DESC, o_orderstatus) AS rn
-         |  FROM orders GROUP BY 1, 2) WHERE rn = 1""".stripMargin) {
-      (s, d) =>
-        Tables.orders(s, d)
-          .groupBy(col("o_orderpriority"),
-            col("o_orderstatus").as("status_mode"))
-          .agg(count(lit(1)).as("n"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("o_orderpriority"))
-              .orderBy(col("n").desc, col("status_mode"))))
-          .filter(col("rn") === 1).drop("rn")
-    },
+         |  FROM orders GROUP BY 1, 2) WHERE rn = 1""".stripMargin),
 
     // 80/20 concentration: how many top customers cover 80% of revenue.
     // The revenue-desc running sum uses the range-partitioned prefix

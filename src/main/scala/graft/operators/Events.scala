@@ -114,7 +114,7 @@ object Events {
     // aggregate over the BOUNDED type-pair space; the per-row probability
     // is one exact integer division, and the normalizing window runs over
     // at most |types| partitions of |types| rows.
-    Op("e_transition_matrix",
+    Op.sql("e_transition_matrix",
        """WITH steps AS (
          |  SELECT event_type AS from_type,
          |         lead(event_type) OVER (PARTITION BY user_id
@@ -125,18 +125,7 @@ object Events {
          |         CAST(sum(count(*)) OVER (PARTITION BY from_type)
          |              AS BIGINT) AS p
          |FROM steps WHERE to_type IS NOT NULL
-         |GROUP BY 1, 2""".stripMargin) { (s, d) =>
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      Tables.events(s, d)
-        .select(col("event_type").as("from_type"),
-          lead(col("event_type"), 1).over(byUser).as("to_type"))
-        .filter(col("to_type").isNotNull)
-        .groupBy(col("from_type"), col("to_type"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("p", col("n").cast("double") /
-          sum(col("n")).over(Window.partitionBy(col("from_type"))))
-    },
+         |GROUP BY 1, 2""".stripMargin),
 
     // Stationary distribution of the event-type Markov chain — where
     // does a user's behavior settle if the observed transition matrix
@@ -379,7 +368,7 @@ object Events {
     // same-type runs (the repetition/liveness signal — "how long do
     // error bursts last?"). The run flag is lag-based on the sessionize
     // window shape; per-type run census output is |types| rows.
-    Op("e_event_runs",
+    Op.sql("e_event_runs",
        """WITH flagged AS (
          |  SELECT event_type, user_id, ts, event_id,
          |         CASE WHEN event_type IS DISTINCT FROM
@@ -399,25 +388,7 @@ object Events {
          |  FROM runid GROUP BY event_type, user_id, rid)
          |SELECT event_type, count(*) AS n_runs, max(len) AS max_run,
          |       CAST(sum(len) AS BIGINT) AS n_events
-         |FROM runs GROUP BY 1""".stripMargin) { (s, d) =>
-      val byUser = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val running = byUser
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val newRun = when(not(col("event_type") <=>
-        lag(col("event_type"), 1).over(byUser)), 1).otherwise(0)
-      Tables.events(s, d)
-        .select(col("event_type"), col("user_id"), col("ts"),
-          col("event_id"))
-        .withColumn("new_run", newRun)
-        .select(col("event_type"), col("user_id"),
-          sum(col("new_run")).over(running).as("rid"))
-        .groupBy(col("event_type"), col("user_id"), col("rid"))
-        .agg(count(lit(1)).as("len"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_runs"), max(col("len")).as("max_run"),
-          sum(col("len")).as("n_events"))
-    },
+         |FROM runs GROUP BY 1""".stripMargin),
 
     // Welch's unequal-variance t-test on CONTINUOUS per-user spend
     // between the two md5-free cohorts (user_id parity) — the
@@ -586,7 +557,7 @@ object Events {
     // quadratic witness search never materializes. The oracle replays
     // the same reduction; correctness of the reduction itself (vs a
     // brute exists-ordered-triple scan) is EventsSpec's job.
-    Op("e_seq_patterns",
+    Op.sql("e_seq_patterns",
        """WITH f AS (
          |  SELECT user_id, event_type AS a, min(ts) AS first_ts
          |  FROM events GROUP BY 1, 2),
@@ -602,22 +573,7 @@ object Events {
          |       CAST(count(*) AS BIGINT) AS n_users
          |FROM tab JOIN l
          |  ON l.user_id = tab.user_id AND l.last_ts > tab.t_ab
-         |GROUP BY 1, 2, 3""".stripMargin) { (s, d) =>
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), col("event_type"), col("ts"))
-      val firsts = ev.groupBy(col("user_id"), col("event_type").as("a"))
-        .agg(min(col("ts")).as("first_ts"))
-      val lasts = ev.groupBy(col("user_id"), col("event_type").as("c"))
-        .agg(max(col("ts")).as("last_ts"))
-      val tab = ev.join(firsts, Seq("user_id"))
-        .filter(col("ts") > col("first_ts"))
-        .groupBy(col("user_id"), col("a"), col("event_type").as("b"))
-        .agg(min(col("ts")).as("t_ab"))
-      tab.join(lasts, Seq("user_id"))
-        .filter(col("last_ts") > col("t_ab"))
-        .groupBy(col("a").as("t1"), col("b").as("t2"), col("c").as("t3"))
-        .agg(count(lit(1)).as("n_users"))
-    },
+         |GROUP BY 1, 2, 3""".stripMargin),
 
     // Linear multi-touch attribution: every purchase splits one unit of
     // credit EQUALLY over the same user's view/click touches in the 7

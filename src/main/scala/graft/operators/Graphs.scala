@@ -1656,10 +1656,7 @@ object Graphs {
     Op("graph_wcc",
        s"""WITH RECURSIVE $coSupplierCte,
          |${coSupplierSymCte("edges")},
-         |walk(node, reach) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach)
+         |${graft.llm.Dedup.walkCte}
          |SELECT node, least(node, min(reach)) AS component
          |FROM walk GROUP BY node""".stripMargin) { (s, d) =>
       graft.llm.Dedup.componentMinLabels(

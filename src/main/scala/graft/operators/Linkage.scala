@@ -246,16 +246,7 @@ object Linkage {
       |  WHERE a.c_nationkey = b.c_nationkey
       |    AND a.c_mktsegment = b.c_mktsegment
       |    AND levenshtein(c.na, c.nb) <= 1),
-      |edges AS (
-      |  SELECT id_a AS src, id_b AS dst FROM pairs
-      |  UNION ALL SELECT id_b, id_a FROM pairs),
-      |walk(node, reach) AS (
-      |  SELECT src, dst FROM edges
-      |  UNION
-      |  SELECT w.node, e.dst FROM walk w JOIN edges e ON e.src = w.reach),
-      |labels AS (
-      |  SELECT node, least(node, min(reach)) AS label
-      |  FROM walk GROUP BY node)""".stripMargin
+      |${Dedup.componentLabelsCtes}""".stripMargin
 
   private val linkOracle: String =
     s"""$linkCte

@@ -435,35 +435,21 @@ object Profiling {
     // table: per-cell observed count and chi-square term, computed as
     // (O*N - rt*ct)^2 / (N*rt*ct) — integer numerator and denominator,
     // ONE double division per cell, so the statistic replays exactly.
-    // The contingency table is bounded (|langs| x |sources|); margins
-    // are two tiny aggregates broadcast back onto it.
-    Op("f_chi_square",
+    // The contingency table is bounded (|langs| x |sources|); the two
+    // margins and N are tiny aggregates hinted broadcast back onto it
+    // (DuckDB reads the hint as a comment).
+    Op.sql("f_chi_square",
        """WITH o AS (
          |  SELECT lang, source, count(*) AS o
          |  FROM documents GROUP BY 1, 2),
          |rt AS (SELECT lang, CAST(sum(o) AS BIGINT) AS rt FROM o GROUP BY 1),
          |ct AS (SELECT source, CAST(sum(o) AS BIGINT) AS ct FROM o GROUP BY 1),
          |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents)
-         |SELECT o.lang, o.source, o.o,
+         |SELECT /*+ BROADCAST(rt, ct, n) */ o.lang, o.source, o.o,
          |       CAST((o.o * n.n - rt.rt * ct.ct)
          |            * (o.o * n.n - rt.rt * ct.ct) AS DOUBLE)
          |         / CAST(n.n * rt.rt * ct.ct AS DOUBLE) AS chi_term
-         |FROM o JOIN rt USING (lang) JOIN ct USING (source), nn n""".stripMargin) {
-      (s, d) =>
-        val docs = Tables.documents(s, d)
-        val o = docs.groupBy(col("lang"), col("source"))
-          .agg(count(lit(1)).as("o"))
-        val rt = o.groupBy(col("lang")).agg(sum(col("o")).as("rt"))
-        val ct = o.groupBy(col("source")).agg(sum(col("o")).as("ct"))
-        val nn = docs.agg(count(lit(1)).as("n"))
-        val dev = col("o") * col("n") - col("rt") * col("ct")
-        o.join(broadcast(rt), "lang").join(broadcast(ct), "source")
-          .crossJoin(broadcast(nn))
-          .select(col("lang"), col("source"), col("o"),
-            ((dev * dev).cast("double") /
-              (col("n") * col("rt") * col("ct")).cast("double"))
-              .as("chi_term"))
-    },
+         |FROM o JOIN rt USING (lang) JOIN ct USING (source), nn n""".stripMargin),
 
     // Cramér's V (Cramér 1946): the [0,1] effect-size normalization of
     // f_chi_square's statistic — V = sqrt(χ² / (N·min(r−1, c−1))) —
@@ -1151,9 +1137,10 @@ object Profiling {
         org.apache.spark.sql.expressions.Window
           .orderBy(abs(col("z")).desc_nulls_last, col("nation")))
         .cast("long"))
+      import scala.jdk.CollectionConverters._
       val th = s.createDataFrame(
-        s.sparkContext.parallelize(bhThresholds.map {
-          case (k, zs) => org.apache.spark.sql.Row(k, zs) }, 1),
+        bhThresholds.map { case (k, zs) => org.apache.spark.sql.Row(k, zs) }
+          .asJava,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("k",
             org.apache.spark.sql.types.LongType, nullable = false),

@@ -15,9 +15,10 @@ import scala.jdk.CollectionConverters._
   * code that builds a session. No code case-maps through Spark's
   * `lower`/`upper`/`initcap` (the native `icu_lower`/`icu_upper` give
   * the same bytes without Spark's 1.1M-code-point title-case table).
-  * The trade-graph pair CTE, the daily-cents sum and Graphs' edge
-  * reversal each have one definition. Only Catalog registers temp views
-  * (its models); a query over the tables binds them through Tables.sql.
+  * The trade-graph pair CTE, the daily-cents sum, the component walk
+  * CTE and Graphs' edge reversal each have one definition. Only Catalog
+  * registers temp views (its models); a query over the tables binds them
+  * through Tables.sql.
   * Comments are stripped first, so prose may still name the calls.
   */
 class LineageOwnershipSpec extends AnyFunSuite {
@@ -89,7 +90,8 @@ class LineageOwnershipSpec extends AnyFunSuite {
       "SELECT DISTINCT o_custkey AS src, l_suppkey + 1000000 AS dst" ->
         "Graphs.tradeRawCte",
       "CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)" ->
-        "Timeseries.centsSql"))
+        "Timeseries.centsSql",
+      "walk(node, reach) AS (" -> "Dedup.walkCte"))
     test(s"src/main spells $fragment once") {
       val n = allSources.map(s => occurrences(s._2, fragment)).sum
       assert(n == 1, s"spelled $n times: use $owner")

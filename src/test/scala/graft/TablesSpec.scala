@@ -181,4 +181,64 @@ class TablesSpec extends SparkSpec {
     sqlEntries.foreach(_(spark, "/root/testdata/sf0.001"))
     assert(names == before)
   }
+
+  /** Entries whose DataFrame body plans like its text but carries a
+    * mechanism the text lacks.
+    */
+  private val keepDataFrame = Map(
+    "m_revenue_monthly" -> "built by Metrics, the semantic-layer compiler",
+    "m_avg_order_value" -> "built by Metrics, the semantic-layer compiler",
+    "t_accepted_range" -> "built by Checks, the dbt generic-test compiler",
+    "t_exclusive_ranges" -> "built by Checks, the dbt generic-test compiler",
+    "f_string_funcs" -> "upper-cases through the icuUpper kernel",
+    "cdc_table_diff" -> ("Analytics.tableDiff, which Snapshots." +
+      "changedBetween runs"))
+
+  /** The physical plan as Spark would run it, without the names Spark
+    * generates: each operator's name, each exchange's partitioning, each
+    * join's type and each scan's table and pushed filters, subqueries
+    * included.
+    */
+  private def shape(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter,
+      SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def walk(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case _: WholeStageCodegenExec | _: InputAdapter =>
+        p.children.flatMap(walk)
+      case _ =>
+        val node = p match {
+          case e: ShuffleExchangeExec =>
+            s"Exchange ${e.outputPartitioning.getClass.getSimpleName}"
+          case j: BaseJoinExec => s"${j.nodeName} ${j.joinType}"
+          case f: FileSourceScanExec =>
+            val table = f.relation.location.rootPaths.map(_.getName)
+              .mkString(",")
+            s"Scan $table ${f.metadata.getOrElse("PushedFilters", "")}"
+          case _ => p.nodeName
+        }
+        node +: (p.children ++ p.subqueries).flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  test("no oracle entry keeps a DataFrame body whose text plans to the " +
+       "same physical operators on Spark") {
+    val dir = "/root/testdata/sf0.001"
+    assert(keepDataFrame.keySet.subsetOf(SparkEntry.queries.keySet))
+    val twins = SparkEntry.queries.toSeq.sortBy(_._1).collect {
+      case (name, body) if !body.isInstanceOf[Op.Sql] &&
+          !keepDataFrame.contains(name) &&
+          SparkEntry.oracleSql.contains(name) =>
+        scala.util.Try(Tables.sql(spark, dir, SparkEntry.oracleSql(name)))
+          .toOption.filter(text => shape(text) == shape(body(spark, dir)))
+          .map(_ => name)
+    }.flatten
+    assert(twins.isEmpty, s"make these Op.sql: ${twins.mkString(", ")}")
+  }
 }

@@ -322,6 +322,20 @@ class ProfilingSpec extends SparkSpec {
     assert(math.abs(rows.last._3 - 1.959963984540054) < 1e-6)
   }
 
+  test("bh-fdr: the 25 thresholds are a local relation, not an RDD scan") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    val qe = graft.SparkEntry.queries("f_bh_fdr")(spark, sf).queryExecution
+    val plan = qe.optimizedPlan
+    assert(plan.collect { case r: LogicalRDD => r }.isEmpty, plan)
+    // the table is read twice: by the ranks and by the step-up cut
+    val local = plan.collect { case r: LocalRelation => r.data.size }
+    assert(local.nonEmpty && local.forall(_ == 25), plan)
+    val physical = qe.executedPlan.toString
+    assert(physical.contains("LocalTableScan") &&
+      !physical.contains("ExistingRDD"), physical)
+  }
+
   test("spearman: moment sums match a sequential doubled-midrank replay " +
        "and rho is the exact quotient within [-1, 1]") {
     val Array(row) = graft.SparkEntry.queries("profile_spearman")(spark, sf)

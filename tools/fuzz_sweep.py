@@ -42,7 +42,8 @@ ENTRIES = [
     "a1_group_agg", "a2_unique_check", "j1_left_join_dim", "j3_anti_join",
     "j5_full_outer", "u1_union_all", "l1_order_limit", "p4_filter_predicate",
     "w1_rank_per_group", "w2_running_total", "w4_range_frame", "w5_ntile",
-    "w8_percent_rank",
+    "w8_percent_rank", "w6_first_last", "w7_topk_per_group", "j6_semi_join",
+    "f_string_funcs",
     # stats
     "f_entropy", "f_mann_whitney", "f_ks_test", "f_chi_square",
     "f_percentile_cont", "f_mode", "f_winsorize", "f_histogram", "f_bh_fdr",
@@ -63,7 +64,8 @@ ENTRIES = [
     "llm_unigram_token_counts", "llm_bpe_byte_counts",
     # mixing
     "mix_temperature_sample", "mix_token_budget", "mix_pack_sequences",
-    "mix_kfold", "mix_stratified_sample", "mix_bt_ratings",
+    "mix_kfold", "mix_stratified_sample", "mix_bt_ratings", "mix_best_of_n",
+    "mix_grpo_advantage",
     # retrieval + embeddings
     "text_bm25_topk", "hybrid_rrf", "knn_cosine", "embed_kmeans",
     "embed_quantize_int8", "embed_near_dup",
@@ -74,7 +76,8 @@ ENTRIES = [
     # empty/one-edge forest), adaptive-scale HITS, and the two
     # newly-oracle-backed ingest entries
     "graph_mst", "graph_hits", "source_jsonl_ingest", "olist_seed_ingest",
-    "e_sessionize", "e_funnel", "ts_ema", "ts_mad_outliers", "ts_ols_trend",
+    "e_sessionize", "e_funnel", "e_event_runs", "e_seq_patterns",
+    "e_transition_matrix", "ts_ema", "ts_mad_outliers", "ts_ols_trend",
     # multimodal metadata + dbt-style tests
     "multimodal_features_meta", "t_accepted_values",
     # eval metrics
